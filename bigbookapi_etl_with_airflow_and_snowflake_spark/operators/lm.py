@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .neardup import materialize
+
 __all__ = [
     "doc_bigrams",
     "train_bigram_lm",
@@ -75,9 +77,13 @@ def train_bigram_lm(
     vocab_size)`` where ``bigrams`` = (a, b, c_ab), ``contexts`` =
     (a, c_a) (the per-context rollup of the same counts), and
     ``vocab_size`` = distinct context tokens — the V in add-one
-    smoothing. One corpus pass; the rollup and the distinct both read
-    the already-aggregated bigram table."""
-    bigrams = (
+    smoothing. One corpus pass: the bigram table is pinned
+    (``neardup.materialize``, eager, so training launches Spark jobs),
+    and the rollup, the distinct count and both scoring joins read the
+    pinned table instead of re-tokenizing the reference slice (the two
+    join branches carry different inferred filters, so Spark would not
+    reuse one exchange for them)."""
+    bigrams = materialize(
         doc_bigrams(ref, text_col, id_col)
         .groupBy("a", "b")
         .agg(F.count("*").alias("c_ab"))

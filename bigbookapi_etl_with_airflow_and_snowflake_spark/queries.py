@@ -2376,8 +2376,9 @@ def q_heavy_hitter_words(spark, sf):
     word explode moved INSIDE the summary kernel (``split=" "``), so
     document rows, not word rows, cross JVM→Python. Same per-partition
     word multiset, identical output (A/B'd at 100×: 20 rows equal);
-    12.0 s → measured post-change below, the explode+transfer was
-    ~6.7 s of the 7.2 s operator time."""
+    12.0 s → 2.63 s at 100×, the explode+transfer was ~6.7 s of the
+    7.2 s operator time. The delimiter is literal (operators/sketch.py
+    heavy_hitters), which for ``" "`` is DuckDB's ``string_split``."""
     from .operators.sketch import heavy_hitters
 
     docs = _t(spark, sf, "documents").select("text")
@@ -2562,14 +2563,14 @@ REGISTRY.update(OPS_REGISTRY)
 #       optimization pass (VERDICT r14 item 1: they rotated out of the
 #       r14 window before being rewritten, so the driver's DuckDB
 #       oracle has not yet seen the new implementations), plus the
-#       three entries this round's optimization work touches
-#       (jaccard_pairs, simhash_pairs, heavy_hitter_words) so their
+#       entries later optimization work touches (jaccard_pairs,
+#       simhash_pairs, heavy_hitter_words, lm_quality) so their
 #       post-change implementations get a driver row in the SAME round
 #       they change;
-#   (2) the 39 STALEST remaining oracled entries by the deterministic
+#   (2) the 38 STALEST remaining oracled entries by the deterministic
 #       criterion of r12-r14 ((last green round, penultimate green
 #       round, total green rows) ascending, then alphabetical): the 28
-#       remaining r10-last rows, then 11 of the r11 group.
+#       remaining r10-last rows, then 10 of the r11 group.
 # The eight no-oracle entries (approx/seeded/iterative by design) are
 # EXCLUDED from the first 50 — they can only ever produce a rows-only
 # row; their hard-oracled exact twins carry the signal
@@ -2590,7 +2591,8 @@ _DRIVER_PRIORITY = [
     "jaccard_pairs",
     "simhash_pairs",
     "heavy_hitter_words",
-    # -- (2) the 39 stalest remaining oracled rows (28 r10-last, 11 r11) -------
+    "lm_quality",
+    # -- (2) the 38 stalest remaining oracled rows (28 r10-last, 10 r11) -------
     "parquet_stats_events",
     "pps_sample_orders",
     "rest_pages_distributed",
@@ -2629,7 +2631,6 @@ _DRIVER_PRIORITY = [
     "image_dhash",
     "image_dhash_pairs",
     "image_neardup_keep",
-    "jaccard_pairs_capped",
 ]
 
 REGISTRY = {name: REGISTRY[name] for name in _DRIVER_PRIORITY} | {

@@ -212,3 +212,31 @@ def test_heavy_hitters_split_matches_jvm_explode(spark):
     via_split = heavy_hitters(df, "text", k=50, capacity=1000, split=" ").collect()
     assert [tuple(r) for r in via_jvm] == [tuple(r) for r in via_split]
     assert any(r["item"] == "" for r in via_split)  # "" items preserved
+
+
+@pytest.mark.parametrize("delim", [".", "|", ".|"])
+def test_heavy_hitters_split_is_literal(spark, delim):
+    """``split`` is a literal delimiter (Python ``str.split``), not a
+    regex: ``"."``, ``"|"`` and ``".|"`` split on those characters
+    only. Items ordered (count desc, item asc)."""
+    from collections import Counter
+
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.sketch import (
+        heavy_hitters,
+    )
+
+    rows = [
+        f"a{delim}b{delim}a",
+        f"b{delim}{delim}c",  # adjacent delimiters: one "" item
+        f"{delim}a",  # leading delimiter: one "" item
+        "a.b|c",  # both characters, a literal ".|" absent
+        "",
+        None,
+    ]
+    df = spark.createDataFrame([(r,) for r in rows], ["text"]).repartition(3)
+    got = heavy_hitters(df, "text", k=50, capacity=1000, split=delim).collect()
+    want = Counter(w for r in rows if r is not None for w in r.split(delim))
+    assert [(r["item"], r["est_count"]) for r in got] == sorted(
+        want.items(), key=lambda kv: (-kv[1], kv[0])
+    )
+    assert all(r["max_undercount"] == 0 for r in got)

@@ -55,6 +55,14 @@ def test_groupby_has_partial_aggregation(spark, sf_dir):
     assert shuffle_count(df) == 1  # one shuffle: the groupBy keys
 
 
+def test_heavy_hitter_words_runs_kernel_once(spark, sf_dir):
+    """The Misra-Gries kernel runs once: the top-k items and the
+    undercount bound come from ONE aggregation of the partition
+    summaries, not from two branches that each rerun the kernel."""
+    plan = explain_str(Q.q_heavy_hitter_words(spark, sf_dir), "simple")
+    assert plan.count("MapInPandas") == 1, plan
+
+
 def test_pricing_summary_codegen(spark, sf_dir):
     plan = explain_str(Q.q_pricing_summary(spark, sf_dir), "codegen")
     assert "WholeStageCodegen" in plan
