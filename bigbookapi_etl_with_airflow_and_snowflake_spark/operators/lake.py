@@ -7,7 +7,11 @@ operators/zorder.py), null densities, row-group sizing (too-small row
 groups kill scan throughput; too-large defeat predicate pushdown).
 ``parquet_footer_stats`` reads ONLY footers, distributed: the file
 list is parallelized and each executor opens its files with pyarrow —
-O(files) work, zero data pages touched.
+O(files) work, zero data pages touched. That distributed reader serves
+table-wide audits (``verify_table``, ``prune_manifest_files``). A
+versioned commit instead reads the footers of the few files it just
+staged on the DRIVER, with the same per-file kernel
+(:func:`footer_kernel`), so describing a commit costs no Spark job.
 
 The same statistics parquet readers use for pruning are what this
 reports, so the operator doubles as a data-skipping audit: run it
@@ -43,8 +47,8 @@ def parquet_footer_stats(
     path form and are not range-prunable here.
 
     The driver only LISTS file names (what any parquet reader does);
-    footers are read on executors via pyarrow, ``files_per_task``
-    names per task. ``path`` is a directory, a single file, or an
+    footers are read on executors via pyarrow (:func:`footer_kernel`),
+    ``files_per_task`` names per task. ``path`` is a directory, a single file, or an
     explicit file list (a versioned table's manifest). Local paths
     here; object-store URIs ride pyarrow's filesystems at the same
     call site.
@@ -91,8 +95,58 @@ def parquet_footer_stats(
     files_df = spark.createDataFrame(
         [(n,) for n in names], "file string"
     ).repartition(max(1, len(names) // files_per_task))
+    read_footer = footer_kernel(cols, strict)
 
     def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (fname, *r)
+                for fname in pdf["file"]
+                for r in read_footer(os.path.join(base, fname))[1]
+            ]
+            res = pd.DataFrame(
+                rows,
+                columns=[
+                    "file", "column", "n_values", "null_count",
+                    "min_val", "max_val",
+                ],
+            )
+            res["n_values"] = pd.array(
+                [r[2] for r in rows], dtype="Int64"
+            )
+            res["null_count"] = pd.array(
+                [r[3] for r in rows], dtype="Int64"
+            )
+            yield res
+
+    return files_df.mapInPandas(
+        read_footers,
+        schema=(
+            "file string, column string, n_values long, null_count long, "
+            "min_val double, max_val double"
+        ),
+    )
+
+
+def footer_kernel(columns: Sequence[str], strict: bool = True):
+    """The per-file footer reader behind :func:`parquet_footer_stats`,
+    returned as a closure: ``read(path) -> (num_rows, rows)`` with one
+    ``(column, n_values, null_count, min_val, max_val)`` tuple per
+    requested column, under exactly the operator's contract (dotted
+    leaf paths, ``strict``, outward rounding, unknown envelopes).
+
+    Two callers share it. The distributed operator ships it to
+    executors for table-wide audits; a versioned commit calls it on
+    the driver over the few files it just staged, which is how a
+    commit learns its row count and envelopes without another Spark
+    job. It is built by this factory, with its helpers and imports
+    nested inside, so cloudpickle ships it BY VALUE: a module-level
+    kernel would pickle by reference and make every executor import
+    this package, which fails when the driver runs outside the
+    package's root."""
+    cols = list(columns)
+
+    def read(path: str) -> tuple[int, list[tuple]]:
         import math
 
         import pyarrow.parquet as pq
@@ -124,88 +178,71 @@ def parquet_footer_stats(
             except TypeError:
                 return f
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "file": [], "column": [], "n_values": [],
-                "null_count": [], "min_val": [], "max_val": [],
-            }
-            for fname in pdf["file"]:
-                md = pq.ParquetFile(os.path.join(base, fname)).metadata
-                idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
-                for c in cols:
-                    if c not in idx:
-                        if strict:
-                            raise ValueError(f"column {c!r} not in {fname}")
-                        # older-schema file (column added by a later
-                        # commit): unknown envelope, unknown counts
-                        out["file"].append(fname)
-                        out["column"].append(c)
-                        out["n_values"].append(None)
-                        out["null_count"].append(None)
-                        out["min_val"].append(None)
-                        out["max_val"].append(None)
-                        continue
-                    nv = 0
-                    nulls = 0
-                    mn = mx = None
-                    unknown = False
-                    counts_exact = True
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx[c]).statistics
-                        if st is None or st.min is None or st.max is None:
-                            if strict:
-                                raise ValueError(
-                                    f"no statistics for {c!r} in {fname} rg{rg}"
-                                )
-                            unknown = True
-                            if st is not None:
-                                nv += st.num_values
-                                nulls += st.null_count
-                            else:
-                                # no statistics object at all: this row
-                                # group contributed nothing — the totals
-                                # are partial, not exact
-                                counts_exact = False
-                            continue
-                        lo, hi = to_lo(st.min), to_hi(st.max)
-                        if lo is None or hi is None:
-                            # stats exist but aren't float-convertible
-                            # (true text columns): unusable envelope
-                            if strict:
-                                raise ValueError(
-                                    f"non-numeric statistics for {c!r} in "
-                                    f"{fname} rg{rg}"
-                                )
-                            unknown = True
-                            nv += st.num_values
-                            nulls += st.null_count
-                            continue
+        fname = os.path.basename(path)
+        md = pq.ParquetFile(path).metadata
+        idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        rows: list[tuple] = []
+        for c in cols:
+            if c not in idx:
+                if strict:
+                    raise ValueError(f"column {c!r} not in {fname}")
+                # older-schema file (column added by a later commit):
+                # unknown envelope, unknown counts
+                rows.append((c, None, None, None, None))
+                continue
+            nv = 0
+            nulls = 0
+            mn = mx = None
+            unknown = False
+            counts_exact = True
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx[c]).statistics
+                if st is None or st.min is None or st.max is None:
+                    if strict:
+                        raise ValueError(
+                            f"no statistics for {c!r} in {fname} rg{rg}"
+                        )
+                    unknown = True
+                    if st is not None:
                         nv += st.num_values
                         nulls += st.null_count
-                        mn = lo if mn is None else min(mn, lo)
-                        mx = hi if mx is None else max(mx, hi)
-                    if unknown:
-                        # a single stat-less row group poisons the whole
-                        # file's envelope: the file may hold anything
-                        mn = mx = None
-                    out["file"].append(fname)
-                    out["column"].append(c)
-                    out["n_values"].append(nv if counts_exact else None)
-                    out["null_count"].append(nulls if counts_exact else None)
-                    out["min_val"].append(mn)
-                    out["max_val"].append(mx)
-            res = pd.DataFrame(out)
-            res["n_values"] = pd.array(out["n_values"], dtype="Int64")
-            res["null_count"] = pd.array(out["null_count"], dtype="Int64")
-            yield res
+                    else:
+                        # no statistics object at all: this row group
+                        # contributed nothing — the totals are
+                        # partial, not exact
+                        counts_exact = False
+                    continue
+                lo, hi = to_lo(st.min), to_hi(st.max)
+                if lo is None or hi is None:
+                    # stats exist but aren't float-convertible (true
+                    # text columns): unusable envelope
+                    if strict:
+                        raise ValueError(
+                            f"non-numeric statistics for {c!r} in "
+                            f"{fname} rg{rg}"
+                        )
+                    unknown = True
+                    nv += st.num_values
+                    nulls += st.null_count
+                    continue
+                nv += st.num_values
+                nulls += st.null_count
+                mn = lo if mn is None else min(mn, lo)
+                mx = hi if mx is None else max(mx, hi)
+            if unknown:
+                # a single stat-less row group poisons the whole file's
+                # envelope: the file may hold anything
+                mn = mx = None
+            rows.append((
+                c,
+                nv if counts_exact else None,
+                nulls if counts_exact else None,
+                mn,
+                mx,
+            ))
+        return md.num_rows, rows
 
-    return files_df.mapInPandas(
-        read_footers,
-        schema=(
-            "file string, column string, n_values long, null_count long, "
-            "min_val double, max_val double"
-        ),
-    )
+    return read
 
 
 def compact_small_files(

@@ -1047,6 +1047,8 @@ def _rebuild_mapping(prior_map: dict, schema, prior_schema=None) -> dict:
 
 
 _DV_DIR = "_dv"
+# every deletion-vector sidecar holds exactly these columns
+_DV_SCHEMA = "file string, pos long"
 _DV_FILE, _DV_POS = "__dv_file", "__dv_pos"
 
 _CHANGE_DIR = "_change_data"
@@ -1117,11 +1119,13 @@ def _identity_cols(df: DataFrame) -> DataFrame:
 
 def _dv_frame(spark: SparkSession, m: dict) -> DataFrame | None:
     """The snapshot's deletion vectors as a (file, pos) DataFrame, or
-    None when the manifest carries none."""
+    None when the manifest carries none. Read under the sidecars' one
+    fixed schema: parquet schema inference would launch a Spark job on
+    every DV-applying scan."""
     dvs = m.get("dv_files") or []
     if not dvs:
         return None
-    return spark.read.parquet(*dvs).select("file", "pos")
+    return spark.read.schema(_DV_SCHEMA).parquet(*dvs)
 
 
 def _live_scan(
@@ -1215,11 +1219,13 @@ def _last_txn_version(
 def _stats_for_files(
     spark: SparkSession, files: Sequence[str], cols: Sequence[str]
 ) -> dict:
-    """Per-file ``{col: [min, max]}`` envelopes for ``files`` (footer
-    reads, executor-side — called at COMMIT time over the commit's NEW
-    files only, which is what makes recorded stats O(increment) to
-    maintain). Unknown envelopes are omitted — the pruning reader
-    treats a missing entry as "cannot skip"."""
+    """Per-file ``{col: [min, max]}`` envelopes for ``files``, read by
+    the DISTRIBUTED footer operator (``parquet_footer_stats``,
+    non-strict) — the table-wide audit path (:func:`verify_table`
+    re-derives every recorded envelope through it). Commits never call
+    this: they describe their own staged files on the driver
+    (:func:`_staged_footers`). Unknown envelopes are omitted — the
+    pruning reader treats a missing entry as "cannot skip"."""
     from ..operators.lake import parquet_footer_stats
 
     if not files or not cols:
@@ -1237,17 +1243,42 @@ def _stats_for_files(
     return out
 
 
+def _staged_footers(
+    files: Sequence[str], cols: Sequence[str] = ()
+) -> tuple[int, dict]:
+    """``(row count, {file: {col: [min, max]}})`` of a commit's freshly
+    STAGED files, read from their parquet footers on the driver with
+    the same kernel the distributed operator runs
+    (``operators.lake.footer_kernel``, non-strict) — no Spark job. A
+    commit stages O(output partitions) files, so this is O(increment)
+    metadata reads; only committed task attempts' files exist under
+    the staging dir, so a retried task is never counted twice.
+    Unknown envelopes are omitted, exactly as in
+    :func:`_stats_for_files`."""
+    from ..operators.lake import footer_kernel
+
+    read = footer_kernel(list(cols), strict=False)
+    n = 0
+    stats: dict[str, dict] = {}
+    for f in files:
+        n_f, rows = read(f)
+        n += n_f
+        for c, _nv, _nulls, lo, hi in rows:
+            if lo is not None and hi is not None:
+                stats.setdefault(_canon(f), {})[c] = [lo, hi]
+    return n, stats
+
+
 def _carried_stats(
-    spark: SparkSession,
     base: dict | None,
     files: Sequence[str],
     new_files: Sequence[str] = (),
 ) -> dict:
     """Manifest stats fields for a child commit that carries prior
     files: prior entries for SURVIVING files ride by value, and the
-    commit's new files get fresh envelopes (one footer pass over the
-    increment — the same O(increment) cost the commit already pays to
-    stage them). Empty dict when the table records no stats."""
+    commit's new files get fresh envelopes from their own footers
+    (:func:`_staged_footers`, driver-side over the increment only).
+    Empty dict when the table records no stats."""
     if not base or not base.get("stats_cols"):
         return {}
     cols = base["stats_cols"]
@@ -1261,9 +1292,7 @@ def _carried_stats(
     # (top-level or dotted struct leaf) and translates here
     cm = _col_mapping(base)
     stats.update(
-        _stats_for_files(
-            spark, list(new_files), [_phys_path(cm, c) for c in cols]
-        )
+        _staged_footers(new_files, [_phys_path(cm, c) for c in cols])[1]
     )
     return {"stats_cols": cols, "stats": stats}
 
@@ -1923,15 +1952,37 @@ def write_version(
             if f.endswith(".parquet")
         )
         new_parts = {}
-    if new_files:
+    # stats columns: explicit, else inherited from the table's latest
+    # recorded list (coverage must not decay because one writer forgot)
+    eff_stats_cols = list(stats_cols)
+    if not eff_stats_cols:
+        nums_sc = _version_numbers(table_dir, branch)
+        if nums_sc:
+            eff_stats_cols = list(
+                _load_manifest(table_dir, nums_sc[-1], branch).get(
+                    "stats_cols"
+                )
+                or []
+            )
+    # the row count and the footer envelopes both come from the staged
+    # files' own footers, read on the driver — no Spark job. Envelopes
+    # are recorded under PHYSICAL names/dotted paths (staged files
+    # store physicals, and the keys stay valid across any number of
+    # renames); a dotted stats col addresses a struct LEAF
+    # (``rating.average``)
+    n_new, new_stats = _staged_footers(
+        new_files, [_phys_path(eff_map, c) for c in eff_stats_cols]
+    )
+    cc_items = sorted(eff_cc.items())
+    if new_files and (cc_items or gen_validate):
         from pyspark.sql import functions as F
 
-        # constraint enforcement rides the row-count pass: ONE
-        # aggregation over the staged increment yields n_new and every
-        # per-constraint violation count (FALSE **or NULL** violates —
-        # SQL CHECK semantics)
-        cc_items = sorted(eff_cc.items())
-        aggs = [F.count(F.lit(1)).alias("__n")] + [
+        # constraint enforcement is ONE aggregation over the staged
+        # increment: every per-constraint violation count (FALSE **or
+        # NULL** violates — SQL CHECK semantics) and, in the same pass,
+        # every caller-supplied generated column's mismatch count (a
+        # wrong dt would silently corrupt partition pruning)
+        aggs = [
             F.sum(
                 F.when(F.coalesce(F.expr(cexpr), F.lit(False)), 0).otherwise(1)
             )
@@ -1939,8 +1990,6 @@ def write_version(
             .alias(f"__viol_{i}")
             for i, (_, cexpr) in enumerate(cc_items)
         ]
-        # caller-supplied generated columns validate in the same pass
-        # (a wrong dt would silently corrupt partition pruning)
         aggs += [
             F.sum(
                 F.when(F.col(gname).eqNullSafe(F.expr(gexpr)), 0).otherwise(1)
@@ -1960,7 +2009,6 @@ def write_version(
             else spark.read
         )
         row = staged_reader.parquet(*new_files).agg(*aggs).first()
-        n_new = row["__n"]
         bad = {
             cname: int(row[f"__viol_{i}"])
             for i, (cname, _) in enumerate(cc_items)
@@ -1987,8 +2035,6 @@ def write_version(
             raise ValueError(
                 "commit refused, nothing staged — " + "; ".join(msgs)
             )
-    else:
-        n_new = 0
     staged_cf: list[str] | None = None
     if record_changes:
         from pyspark.sql import functions as F
@@ -2034,25 +2080,6 @@ def write_version(
         else:
             staged_cf = []
     schema_json = df.schema.json()
-    # stats columns: explicit, else inherited from the table's latest
-    # recorded list (coverage must not decay because one writer forgot)
-    eff_stats_cols = list(stats_cols)
-    if not eff_stats_cols:
-        nums_sc = _version_numbers(table_dir, branch)
-        if nums_sc:
-            eff_stats_cols = list(
-                _load_manifest(table_dir, nums_sc[-1], branch).get(
-                    "stats_cols"
-                )
-                or []
-            )
-    # footer envelopes are computed (and recorded) under PHYSICAL
-    # names/dotted paths — staged files store physicals, and the keys
-    # stay valid across any number of renames (physicals are frozen);
-    # a dotted stats col addresses a struct LEAF (``rating.average``)
-    new_stats = _stats_for_files(
-        spark, new_files, [_phys_path(eff_map, c) for c in eff_stats_cols]
-    )
 
     def build(prior: dict | None) -> dict:
         if txn_app is not None:
@@ -2232,14 +2259,16 @@ def _discard_staged(files: Sequence[str]) -> None:
 
 
 def _write_data_files(
-    spark: SparkSession,
     df: DataFrame,
     table_dir: str,
     mapping: dict | None = None,
 ) -> tuple[list[str], int]:
-    """Stage ``df`` under a fresh immutable commit subdirectory; return
-    (file list, row count). ``mapping``: stage under PHYSICAL names
-    (column mapping — see :func:`_to_physical`).
+    """Stage ``df`` under a fresh immutable commit subdirectory in ONE
+    write job; return (file list, row count). The row count is the sum
+    of the staged files' footer ``num_rows``, read on the driver
+    (:func:`_staged_footers`) — the write job is the only Spark job.
+    ``mapping``: stage under PHYSICAL names (column mapping — see
+    :func:`_to_physical`).
 
     A ZERO-row frame stages nothing: Spark emits one empty part file
     to carry the schema, but recording it would cost a dead file in
@@ -2257,7 +2286,7 @@ def _write_data_files(
         for f in os.listdir(data_dir)
         if f.endswith(".parquet")
     )
-    n = spark.read.parquet(data_dir).count() if files else 0
+    n = _staged_footers(files)[0]
     if files and n == 0:
         import shutil
 
@@ -2434,22 +2463,34 @@ def merge_version(
         # must neither mark its file touched nor resurrect in the
         # rewrite. identity=True keeps the canonical file path.
         cur = _live_scan(spark, base, identity=True)
-        # Files holding a matched key. AQE broadcasts the key side when
-        # the increment is small (the common CDC case); the collect is
-        # bounded by the table's FILE count, not its rows.
-        touched = {
-            r[_DV_FILE]
-            for r in cur.join(
-                incoming.select(*key_cols).distinct(), key_cols, "left_semi"
+        # ONE aggregation finds the files holding a matched key AND
+        # counts their live rows (the rows the rewrite replaces): a
+        # left join against the distinct incoming keys marks hits, and
+        # the per-file group keeps count + max(hit). AQE broadcasts the
+        # key side when the increment is small (the common CDC case);
+        # the collect is bounded by the table's FILE count, not rows.
+        per_file = (
+            cur.join(
+                incoming.select(*key_cols)
+                .distinct()
+                .withColumn("__merge_hit", F.lit(1)),
+                key_cols,
+                "left",
             )
-            .select(_DV_FILE)
-            .distinct()
+            .groupBy(_DV_FILE)
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.max("__merge_hit").alias("__hit"),
+            )
+            .filter(F.col("__hit").isNotNull())
             .collect()
-        }
+        )
+        touched = {r[_DV_FILE] for r in per_file}
+        n_touched = sum(r["__n"] for r in per_file)
     else:
         # already-empty snapshot (a delete removed every row and staged
         # no part files): the merge is a pure insert against zero rows
-        touched = set()
+        touched, n_touched = set(), 0
     carried = _carried_files(base["files"], touched)
     if rank_attached:
         inc = incoming.withColumnRenamed("__cdc_rank", "__src")
@@ -2459,11 +2500,9 @@ def merge_version(
     if touched:
         ex = _live_scan(spark, base, files=sorted(touched))
         old_rows = conform(ex) if conform is not None else ex.select(*data_cols)
-        existing = old_rows.withColumn("__src", F.lit(2))
-        unioned = inc.unionByName(existing)
-        n_touched = existing.count()
+        unioned = inc.unionByName(old_rows.withColumn("__src", F.lit(2)))
     else:
-        unioned, n_touched = inc, 0
+        unioned = inc
     # incoming data (0) beats a same-key delete directive (1) beats
     # existing rows (2); order_by still takes precedence for the
     # last-writer-wins use case
@@ -2484,7 +2523,7 @@ def merge_version(
         # ties (row_number nondeterminism) must not let them diverge
         merged = merged.persist()
     try:
-        new_files, n_new = _write_data_files(spark, merged, table_dir, eff_map)
+        new_files, n_new = _write_data_files(merged, table_dir, eff_map)
         if change_files:
             # the commit's exact change set = NET multiset diff of the
             # touched files' old live rows vs their merged replacement
@@ -2519,7 +2558,7 @@ def merge_version(
             "n_rows": base["n_rows"] - n_touched + n_new,
             "schema": schema_json,
             **({"column_mapping": eff_map} if eff_map else {}),
-            **_carried_stats(spark, base, carried + new_files, new_files),
+            **_carried_stats(base, carried + new_files, new_files),
             **_carried_partitions(base, carried + new_files),
             **_carried_constraints(base),
             **_carried_generated(base),
@@ -2648,21 +2687,31 @@ def delete_version(
         schema_json = base.get("schema") or _recorded_reader(
             spark, base
         ).parquet(*base["files"]).schema.json()
-        touched = {
-            r[_DV_FILE]
-            for r in cur.filter(cond).select(_DV_FILE).distinct().collect()
-        }
+        # ONE aggregation finds the touched files (≥1 matching live
+        # row) and counts each one's live rows — the rows the rewrite
+        # replaces; the collect is bounded by the scanned FILE count
+        per_file = (
+            cur.groupBy(_DV_FILE)
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.count_if(F.coalesce(cond, F.lit(False))).alias("__hit"),
+            )
+            .filter(F.col("__hit") > 0)
+            .collect()
+        )
+        touched = {r[_DV_FILE] for r in per_file}
+        n_touched = sum(r["__n"] for r in per_file)
     elif base["files"]:
         # every file is out of scope: no row can match — no-op commit
         schema_json = base.get("schema") or _recorded_reader(
             spark, base
         ).parquet(*base["files"]).schema.json()
-        touched = set()
+        touched, n_touched = set(), 0
     else:
         # already-empty snapshot (a prior delete removed every row and
         # staged no part files): the delete is a no-op commit
         schema_json = base.get("schema")
-        touched = set()
+        touched, n_touched = set(), 0
     carried = _carried_files(base["files"], touched)
     cf: list[str] | None = None
     if change_files:
@@ -2682,10 +2731,9 @@ def delete_version(
             "__del_match", F.coalesce(cond, F.lit(False))
         ).persist()
         try:
-            n_touched = scope.count()
             kept = scope.filter(~F.col("__del_match")).drop("__del_match")
             new_files, n_new = _write_data_files(
-                spark, kept, table_dir, _col_mapping(base)
+                kept, table_dir, _col_mapping(base)
             )
             deleted_rows = (
                 scope.filter(F.col("__del_match"))
@@ -2699,13 +2747,12 @@ def delete_version(
             scope.unpersist()
     elif touched:
         scope = _live_scan(spark, base, files=sorted(touched))
-        n_touched = scope.count()
         kept = scope.filter(~F.coalesce(cond, F.lit(False)))
         new_files, n_new = _write_data_files(
-            spark, kept, table_dir, _col_mapping(base)
+            kept, table_dir, _col_mapping(base)
         )
     else:
-        n_touched, new_files, n_new = 0, [], 0
+        new_files, n_new = [], 0
 
     def build(prior: dict | None) -> dict:
         if prior is None or prior["version"] != base["version"]:
@@ -2719,7 +2766,7 @@ def delete_version(
             "n_rows": base["n_rows"] - n_touched + n_new,
             "schema": schema_json,
             **_carried_mapping(base),
-            **_carried_stats(spark, base, carried + new_files, new_files),
+            **_carried_stats(base, carried + new_files, new_files),
             **_carried_partitions(base, carried + new_files),
             **_carried_constraints(base),
             **_carried_generated(base),
@@ -2920,7 +2967,7 @@ def overwrite_partitions(
         n_unmapped_live = um.count()
         keep = um.filter(~F.coalesce(scope_cond, F.lit(False)))
         rw_files, rw_n = _write_data_files(
-            spark, keep, table_dir, _col_mapping(base)
+            keep, table_dir, _col_mapping(base)
         )
         n_replaced += n_unmapped_live - rw_n
     # stage the replacement through the partitioned writer (map entries
@@ -3032,7 +3079,7 @@ def overwrite_partitions(
             # dropped/rewritten files go stale-but-harmless
             "dv_files": base.get("dv_files") or [],
             **_carried_mapping(base),
-            **_carried_stats(spark, base, files, rw_files + new_files),
+            **_carried_stats(base, files, rw_files + new_files),
             **_carried_constraints(base),
             **_carried_generated(base),
         }
@@ -3136,7 +3183,7 @@ def _delete_version_mor(
                 for f in os.listdir(dv_dir)
                 if f.endswith(".parquet")
             )
-            n_deleted = spark.read.parquet(dv_dir).count()
+            n_deleted = _staged_footers(dv_new)[0]
             if n_deleted == 0:
                 # nothing matched: drop the staged empty sidecar so reads
                 # never pay an anti-join for a no-op delete
@@ -3168,7 +3215,7 @@ def _delete_version_mor(
             "schema": base.get("schema"),
             "dv_files": (base.get("dv_files") or []) + dv_new,
             **_carried_mapping(base),
-            **_carried_stats(spark, base, base["files"]),
+            **_carried_stats(base, base["files"]),
             **_carried_partitions(base, base["files"]),
             **_carried_constraints(base),
             **_carried_generated(base),
@@ -3332,7 +3379,7 @@ def update_version(
                 for f in os.listdir(dv_dir)
                 if f.endswith(".parquet")
             )
-            n_updated = spark.read.parquet(dv_dir).count()
+            n_updated = _staged_footers(dv_new)[0]
             if n_updated == 0:
                 shutil.rmtree(dv_dir, ignore_errors=True)
                 dv_new, new_files = [], []
@@ -3347,7 +3394,7 @@ def update_version(
                     updated = updated.persist()
                 try:
                     new_files, _ = _write_data_files(
-                        spark, updated, table_dir, _col_mapping(base)
+                        updated, table_dir, _col_mapping(base)
                     )
                     if change_files:
                         cf = _write_change_files(
@@ -3381,7 +3428,7 @@ def update_version(
                 "dv_files": (base.get("dv_files") or []) + dv_new,
                 **_carried_mapping(base),
                 **_carried_stats(
-                    spark, base, base["files"] + new_files, new_files
+                    base, base["files"] + new_files, new_files
                 ),
                 **_carried_partitions(base, base["files"] + new_files),
                 **_carried_constraints(base),
@@ -3421,13 +3468,15 @@ def update_version(
 
     if scan_files:
         cur = _live_scan(spark, base, files=sorted(scan_files), identity=True)
-        touched = {
-            r[_DV_FILE]
-            for r in cur.filter(cond).select(_DV_FILE).distinct().collect()
-        }
+        # ONE aggregation finds the touched files and counts each one's
+        # matching rows (a NULL predicate matches nothing); the collect
+        # is bounded by the scanned FILE count
+        per_file = cur.filter(cond).groupBy(_DV_FILE).count().collect()
+        touched = {r[_DV_FILE] for r in per_file}
+        n_updated = sum(r["count"] for r in per_file)
     else:
         # every file is out of scope: no row can match — no-op commit
-        touched = set()
+        touched, n_updated = set(), 0
     carried = _carried_files(base["files"], touched)
     if touched and change_files:
         # one evaluation of the updated images, PERSISTED, feeds both
@@ -3444,7 +3493,6 @@ def update_version(
                 _DV_FILE, _DV_POS
             )
             new_files, n_new = _write_data_files(
-                spark,
                 kept.unionByName(new_images),
                 table_dir,
                 _col_mapping(base),
@@ -3463,15 +3511,14 @@ def update_version(
             new_images.unpersist()
     elif touched:
         scope = _live_scan(spark, base, files=sorted(touched), identity=True)
-        n_updated = scope.filter(cond).count()
         rewritten = apply_assignments(
             scope, F.coalesce(cond, F.lit(False))
         ).drop(_DV_FILE, _DV_POS)
         new_files, n_new = _write_data_files(
-            spark, rewritten, table_dir, _col_mapping(base)
+            rewritten, table_dir, _col_mapping(base)
         )
     else:
-        n_updated, new_files = 0, []
+        new_files = []
 
     def build(prior: dict | None) -> dict:
         if prior is None or prior["version"] != base["version"]:
@@ -3485,7 +3532,7 @@ def update_version(
             "schema": schema_json,
             "dv_files": base.get("dv_files") or [],
             **_carried_mapping(base),
-            **_carried_stats(spark, base, carried + new_files, new_files),
+            **_carried_stats(base, carried + new_files, new_files),
             **_carried_partitions(base, carried + new_files),
             **_carried_constraints(base),
             **_carried_generated(base),
@@ -3778,6 +3825,14 @@ def optimize_table(
     layout changes, which is what makes OPTIMIZE safe to run from a
     maintenance cron forever.
 
+    The ``cluster_by`` range boundaries are sampled, and Spark seeds
+    ``RangePartitioner``'s sample with the RDD's id. The same table
+    content can therefore get different boundaries, and so different
+    file counts and envelopes, depending on how many RDDs the session
+    built earlier: any change in the number of jobs a session runs
+    before an optimize moves the layout (files rewritten later, head
+    and DV file counts, write amplification), never the rows.
+
     ``change_files=True`` records an explicit EMPTY change set in the
     commit (OPTIMIZE changes layout, never content — the Delta CDF
     convention): the streaming change feed then passes the commit with
@@ -3941,7 +3996,7 @@ def _optimize_incremental(
     live = _live_scan(spark, m, files=selected)
     rewritten = live.repartitionByRange(n_out, F.col(col))
     new_files, _n_new = _write_data_files(
-        spark, rewritten, table_dir, _col_mapping(m)
+        rewritten, table_dir, _col_mapping(m)
     )
     cf: list[str] | None = [] if change_files else None
 
@@ -3959,7 +4014,7 @@ def _optimize_incremental(
             "schema": m.get("schema"),
             "dv_files": m.get("dv_files") or [],
             **_carried_mapping(m),
-            **_carried_stats(spark, m, carried + new_files, new_files),
+            **_carried_stats(m, carried + new_files, new_files),
             **_carried_partitions(m, carried + new_files),
             **_carried_constraints(m),
             **_carried_generated(m),
