@@ -2560,14 +2560,16 @@ REGISTRY.update(OPS_REGISTRY)
 # regenerates between rounds, so green rows age. Round 16 spends the
 # budget, in order, on:
 #   (1) RE-CERTIFICATION of every entry whose commit path round 16
-#       changed: each versioned-table entry that runs a MERGE, DELETE,
-#       UPDATE, OPTIMIZE, replaceWhere or CHECK/generated-column commit
+#       changed: every oracled entry that commits to a versioned table
+#       — a MERGE, DELETE, UPDATE, OPTIMIZE, replaceWhere or
+#       CHECK/generated-column commit (touched files from one
+#       aggregation) or a plain append/overwrite through write_version
 #       (row counts and recorded envelopes now come from the staged
-#       files' footers, touched files from one aggregation), plus
-#       parquet_stats_events, which runs the refactored distributed
-#       footer reader, so the post-change implementations get a driver
-#       row in the SAME round they change;
-#   (2) the 22 STALEST remaining oracled entries by the deterministic
+#       files' footers for all of them) — plus parquet_stats_events,
+#       which runs the refactored distributed footer reader, so the
+#       post-change implementations get a driver row in the SAME round
+#       they change;
+#   (2) the 8 STALEST remaining oracled entries by the deterministic
 #       criterion of r12-r15 ((last green round, penultimate green
 #       round, total green rows) ascending over CORRECTNESS_r*.json,
 #       then alphabetical).
@@ -2607,8 +2609,22 @@ _DRIVER_PRIORITY = [
     "streaming_cdf_rewrites",
     "streaming_merge_cdf",
     "streaming_versioned_changes",
+    "versioned_pruned_read",
+    "versioned_time_travel",
+    "versioned_branch_publish",
+    "versioned_stats_skip",
+    "versioned_index_compaction",
+    "versioned_tag_read",
+    "versioned_schema_evolution",
+    "versioned_nested_mapping",
+    "streaming_curated_ingest",
+    "streaming_exactly_once_ingest",
+    "streaming_quarantine_ingest",
+    "rollup_from_changes",
+    "expectations_quarantine",
+    "wap_drift_gate",
     "parquet_stats_events",
-    # -- (2) the 22 stalest remaining oracled rows -------------------------------
+    # -- (2) the 8 stalest remaining oracled rows --------------------------------
     "lm_quality",
     "mp4_samples",
     "ohlc_daily",
@@ -2617,20 +2633,6 @@ _DRIVER_PRIORITY = [
     "embedding_quantize",
     "excess_supply",
     "idle_customers",
-    "large_orders",
-    "length_histogram",
-    "near_dedup_keep",
-    "pii_scrub",
-    "priority_line_counts",
-    "product_profit",
-    "region_nation_matrix",
-    "repetition_stats",
-    "returned_vs_kept_custkeys",
-    "small_qty_revenue",
-    "streaming_session",
-    "supplier_part_counts",
-    "top_revenue_supplier",
-    "vocab_coverage",
 ]
 
 REGISTRY = {name: REGISTRY[name] for name in _DRIVER_PRIORITY} | {

@@ -1216,6 +1216,18 @@ def _last_txn_version(
     return None
 
 
+def _envelopes(rows) -> dict:
+    """``{file: {col: [min, max]}}`` from ``(file, col, min, max)``
+    footer rows — the one shape both footer readers record. Unknown
+    envelopes are omitted: the pruning reader treats a missing entry
+    as "cannot skip"."""
+    out: dict[str, dict] = {}
+    for f, c, lo, hi in rows:
+        if lo is not None and hi is not None:
+            out.setdefault(_canon(f), {})[c] = [lo, hi]
+    return out
+
+
 def _stats_for_files(
     spark: SparkSession, files: Sequence[str], cols: Sequence[str]
 ) -> dict:
@@ -1224,23 +1236,17 @@ def _stats_for_files(
     non-strict) — the table-wide audit path (:func:`verify_table`
     re-derives every recorded envelope through it). Commits never call
     this: they describe their own staged files on the driver
-    (:func:`_staged_footers`). Unknown envelopes are omitted — the
-    pruning reader treats a missing entry as "cannot skip"."""
+    (:func:`_staged_footers`)."""
     from ..operators.lake import parquet_footer_stats
 
     if not files or not cols:
         return {}
-    out: dict[str, dict] = {}
-    for r in parquet_footer_stats(
-        spark, list(files), list(cols), strict=False
-    ).collect():
-        if r["min_val"] is None or r["max_val"] is None:
-            continue
-        out.setdefault(_canon(r["file"]), {})[r["column"]] = [
-            r["min_val"],
-            r["max_val"],
-        ]
-    return out
+    return _envelopes(
+        (r["file"], r["column"], r["min_val"], r["max_val"])
+        for r in parquet_footer_stats(
+            spark, list(files), list(cols), strict=False
+        ).collect()
+    )
 
 
 def _staged_footers(
@@ -1249,52 +1255,51 @@ def _staged_footers(
     """``(row count, {file: {col: [min, max]}})`` of a commit's freshly
     STAGED files, read from their parquet footers on the driver with
     the same kernel the distributed operator runs
-    (``operators.lake.footer_kernel``, non-strict) — no Spark job. A
-    commit stages O(output partitions) files, so this is O(increment)
-    metadata reads; only committed task attempts' files exist under
-    the staging dir, so a retried task is never counted twice.
-    Unknown envelopes are omitted, exactly as in
-    :func:`_stats_for_files`."""
+    (``operators.lake.footer_kernel``, non-strict) — no Spark job, one
+    footer read per file. A commit stages O(output partitions) files,
+    so this is O(increment) metadata reads; only committed task
+    attempts' files exist under the staging dir, so a retried task is
+    never counted twice."""
     from ..operators.lake import footer_kernel
 
     read = footer_kernel(list(cols), strict=False)
-    n = 0
-    stats: dict[str, dict] = {}
-    for f in files:
-        n_f, rows = read(f)
-        n += n_f
-        for c, _nv, _nulls, lo, hi in rows:
-            if lo is not None and hi is not None:
-                stats.setdefault(_canon(f), {})[c] = [lo, hi]
-    return n, stats
+    footers = {f: read(f) for f in files}
+    return sum(n for n, _ in footers.values()), _envelopes(
+        (f, c, lo, hi)
+        for f, (_, rows) in footers.items()
+        for c, _nv, _nulls, lo, hi in rows
+    )
+
+
+def _phys_stats_cols(m: dict | None) -> list[str]:
+    """A manifest's ``stats_cols`` as the PHYSICAL names/dotted paths
+    its staged files store. Recorded envelopes are keyed by them
+    (frozen across renames, so rename_column never invalidates them);
+    ``stats_cols`` itself stays logical (top-level or dotted struct
+    leaf) and translates here."""
+    if not m or not m.get("stats_cols"):
+        return []
+    cm = _col_mapping(m)
+    return [_phys_path(cm, c) for c in m["stats_cols"]]
 
 
 def _carried_stats(
-    base: dict | None,
-    files: Sequence[str],
-    new_files: Sequence[str] = (),
+    base: dict | None, files: Sequence[str], new_stats: dict | None = None
 ) -> dict:
     """Manifest stats fields for a child commit that carries prior
     files: prior entries for SURVIVING files ride by value, and the
-    commit's new files get fresh envelopes from their own footers
-    (:func:`_staged_footers`, driver-side over the increment only).
-    Empty dict when the table records no stats."""
+    commit's new files add ``new_stats`` — the envelopes their writer
+    read from their own footers (:func:`_write_data_files`, under
+    :func:`_phys_stats_cols`). Empty dict when the table records no
+    stats."""
     if not base or not base.get("stats_cols"):
         return {}
-    cols = base["stats_cols"]
     keep = set(files)
     stats = {
         f: e for f, e in (base.get("stats") or {}).items() if f in keep
     }
-    # recorded envelopes are keyed by PHYSICAL column name/dotted path
-    # (what the staged files store — frozen across renames, so
-    # rename_column never invalidates them); stats_cols stays logical
-    # (top-level or dotted struct leaf) and translates here
-    cm = _col_mapping(base)
-    stats.update(
-        _staged_footers(new_files, [_phys_path(cm, c) for c in cols])[1]
-    )
-    return {"stats_cols": cols, "stats": stats}
+    stats.update(new_stats or {})
+    return {"stats_cols": base["stats_cols"], "stats": stats}
 
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -2262,10 +2267,12 @@ def _write_data_files(
     df: DataFrame,
     table_dir: str,
     mapping: dict | None = None,
-) -> tuple[list[str], int]:
+    stats_cols: Sequence[str] = (),
+) -> tuple[list[str], int, dict]:
     """Stage ``df`` under a fresh immutable commit subdirectory in ONE
-    write job; return (file list, row count). The row count is the sum
-    of the staged files' footer ``num_rows``, read on the driver
+    write job; return (file list, row count, ``{file: {col: [min,
+    max]}}`` over the PHYSICAL ``stats_cols``). Both come from one
+    driver-side read of the staged files' footers
     (:func:`_staged_footers`) — the write job is the only Spark job.
     ``mapping``: stage under PHYSICAL names (column mapping — see
     :func:`_to_physical`).
@@ -2286,13 +2293,13 @@ def _write_data_files(
         for f in os.listdir(data_dir)
         if f.endswith(".parquet")
     )
-    n = _staged_footers(files)[0]
+    n, stats = _staged_footers(files, stats_cols)
     if files and n == 0:
         import shutil
 
         shutil.rmtree(data_dir, ignore_errors=True)
-        return [], 0
-    return files, n
+        return [], 0, {}
+    return files, n, stats
 
 
 def merge_version(
@@ -2523,7 +2530,9 @@ def merge_version(
         # ties (row_number nondeterminism) must not let them diverge
         merged = merged.persist()
     try:
-        new_files, n_new = _write_data_files(merged, table_dir, eff_map)
+        new_files, n_new, new_stats = _write_data_files(
+            merged, table_dir, eff_map, _phys_stats_cols(base)
+        )
         if change_files:
             # the commit's exact change set = NET multiset diff of the
             # touched files' old live rows vs their merged replacement
@@ -2558,7 +2567,7 @@ def merge_version(
             "n_rows": base["n_rows"] - n_touched + n_new,
             "schema": schema_json,
             **({"column_mapping": eff_map} if eff_map else {}),
-            **_carried_stats(base, carried + new_files, new_files),
+            **_carried_stats(base, carried + new_files, new_stats),
             **_carried_partitions(base, carried + new_files),
             **_carried_constraints(base),
             **_carried_generated(base),
@@ -2687,31 +2696,25 @@ def delete_version(
         schema_json = base.get("schema") or _recorded_reader(
             spark, base
         ).parquet(*base["files"]).schema.json()
-        # ONE aggregation finds the touched files (≥1 matching live
-        # row) and counts each one's live rows — the rows the rewrite
-        # replaces; the collect is bounded by the scanned FILE count
-        per_file = (
-            cur.groupBy(_DV_FILE)
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.count_if(F.coalesce(cond, F.lit(False))).alias("__hit"),
-            )
-            .filter(F.col("__hit") > 0)
-            .collect()
-        )
+        # ONE aggregation finds the touched files and counts each
+        # one's matching live rows (a NULL predicate matches nothing).
+        # Filtering first keeps the predicate pushdown: only row groups
+        # whose stats can match are decoded. The collect is bounded by
+        # the scanned FILE count
+        per_file = cur.filter(cond).groupBy(_DV_FILE).count().collect()
         touched = {r[_DV_FILE] for r in per_file}
-        n_touched = sum(r["__n"] for r in per_file)
+        n_deleted = sum(r["count"] for r in per_file)
     elif base["files"]:
         # every file is out of scope: no row can match — no-op commit
         schema_json = base.get("schema") or _recorded_reader(
             spark, base
         ).parquet(*base["files"]).schema.json()
-        touched, n_touched = set(), 0
+        touched, n_deleted = set(), 0
     else:
         # already-empty snapshot (a prior delete removed every row and
         # staged no part files): the delete is a no-op commit
         schema_json = base.get("schema")
-        touched, n_touched = set(), 0
+        touched, n_deleted = set(), 0
     carried = _carried_files(base["files"], touched)
     cf: list[str] | None = None
     if change_files:
@@ -2732,8 +2735,8 @@ def delete_version(
         ).persist()
         try:
             kept = scope.filter(~F.col("__del_match")).drop("__del_match")
-            new_files, n_new = _write_data_files(
-                kept, table_dir, _col_mapping(base)
+            new_files, _, new_stats = _write_data_files(
+                kept, table_dir, _col_mapping(base), _phys_stats_cols(base)
             )
             deleted_rows = (
                 scope.filter(F.col("__del_match"))
@@ -2743,16 +2746,22 @@ def delete_version(
             cf = _write_change_files(
                 spark, deleted_rows, table_dir, _col_mapping(base)
             )
+            # the recorded delete set IS the deleted rows of this one
+            # evaluation: its footers give the exact count
+            n_deleted = _staged_footers(cf)[0]
         finally:
             scope.unpersist()
     elif touched:
+        # the rewrite evaluates the predicate again, so the count above
+        # holds for a deterministic predicate (the change_files path
+        # persists one evaluation instead)
         scope = _live_scan(spark, base, files=sorted(touched))
         kept = scope.filter(~F.coalesce(cond, F.lit(False)))
-        new_files, n_new = _write_data_files(
-            kept, table_dir, _col_mapping(base)
+        new_files, _, new_stats = _write_data_files(
+            kept, table_dir, _col_mapping(base), _phys_stats_cols(base)
         )
     else:
-        new_files, n_new = [], 0
+        new_files, new_stats = [], {}
 
     def build(prior: dict | None) -> dict:
         if prior is None or prior["version"] != base["version"]:
@@ -2763,10 +2772,10 @@ def delete_version(
         body = {
             "mode": "delete",
             "files": carried + new_files,
-            "n_rows": base["n_rows"] - n_touched + n_new,
+            "n_rows": base["n_rows"] - n_deleted,
             "schema": schema_json,
             **_carried_mapping(base),
-            **_carried_stats(base, carried + new_files, new_files),
+            **_carried_stats(base, carried + new_files, new_stats),
             **_carried_partitions(base, carried + new_files),
             **_carried_constraints(base),
             **_carried_generated(base),
@@ -2799,8 +2808,8 @@ def delete_version(
         "files_rewritten": len(touched),
         "files_carried": len(carried),
         "files_scanned": len(scan_files),
-        "n_deleted": n_touched - n_new,
-        "n_rows": base["n_rows"] - n_touched + n_new,
+        "n_deleted": n_deleted,
+        "n_rows": base["n_rows"] - n_deleted,
     }
     if cf is not None:
         result["change_files_added"] = len(cf)
@@ -2961,13 +2970,14 @@ def overwrite_partitions(
     )
     rw_files: list[str] = []
     rw_n = 0
+    rw_stats: dict = {}
     n_unmapped_live = 0
     if unmapped:
         um = _live_scan(spark, base, files=sorted(unmapped))
         n_unmapped_live = um.count()
         keep = um.filter(~F.coalesce(scope_cond, F.lit(False)))
-        rw_files, rw_n = _write_data_files(
-            keep, table_dir, _col_mapping(base)
+        rw_files, rw_n, rw_stats = _write_data_files(
+            keep, table_dir, _col_mapping(base), _phys_stats_cols(base)
         )
         n_replaced += n_unmapped_live - rw_n
     # stage the replacement through the partitioned writer (map entries
@@ -3030,6 +3040,13 @@ def overwrite_partitions(
                 f"violations: { {**bad, **gen_bad} }"
             )
     files = carried + rw_files + new_files
+    # the partitioned writer's files describe themselves here; the
+    # unmapped rewrite's envelopes came back from its own writer
+    sc = _phys_stats_cols(base)
+    new_stats = {
+        **rw_stats,
+        **(_staged_footers(new_files, sc)[1] if sc else {}),
+    }
     cf: list[str] | None = None
     if change_files:
         cf = []
@@ -3079,7 +3096,7 @@ def overwrite_partitions(
             # dropped/rewritten files go stale-but-harmless
             "dv_files": base.get("dv_files") or [],
             **_carried_mapping(base),
-            **_carried_stats(base, files, rw_files + new_files),
+            **_carried_stats(base, files, new_stats),
             **_carried_constraints(base),
             **_carried_generated(base),
         }
@@ -3382,7 +3399,7 @@ def update_version(
             n_updated = _staged_footers(dv_new)[0]
             if n_updated == 0:
                 shutil.rmtree(dv_dir, ignore_errors=True)
-                dv_new, new_files = [], []
+                dv_new, new_files, new_stats = [], [], {}
             else:
                 updated = apply_assignments(
                     matched.drop(_DV_FILE, _DV_POS), F.lit(True)
@@ -3393,8 +3410,11 @@ def update_version(
                     # under a nondeterministic assignment expression
                     updated = updated.persist()
                 try:
-                    new_files, _ = _write_data_files(
-                        updated, table_dir, _col_mapping(base)
+                    new_files, _, new_stats = _write_data_files(
+                        updated,
+                        table_dir,
+                        _col_mapping(base),
+                        _phys_stats_cols(base),
                     )
                     if change_files:
                         cf = _write_change_files(
@@ -3428,7 +3448,7 @@ def update_version(
                 "dv_files": (base.get("dv_files") or []) + dv_new,
                 **_carried_mapping(base),
                 **_carried_stats(
-                    base, base["files"] + new_files, new_files
+                    base, base["files"] + new_files, new_stats
                 ),
                 **_carried_partitions(base, base["files"] + new_files),
                 **_carried_constraints(base),
@@ -3492,10 +3512,11 @@ def update_version(
             kept = scope.filter(~F.coalesce(cond, F.lit(False))).drop(
                 _DV_FILE, _DV_POS
             )
-            new_files, n_new = _write_data_files(
+            new_files, _, new_stats = _write_data_files(
                 kept.unionByName(new_images),
                 table_dir,
                 _col_mapping(base),
+                _phys_stats_cols(base),
             )
             cf = _write_change_files(
                 spark,
@@ -3514,11 +3535,11 @@ def update_version(
         rewritten = apply_assignments(
             scope, F.coalesce(cond, F.lit(False))
         ).drop(_DV_FILE, _DV_POS)
-        new_files, n_new = _write_data_files(
-            rewritten, table_dir, _col_mapping(base)
+        new_files, _, new_stats = _write_data_files(
+            rewritten, table_dir, _col_mapping(base), _phys_stats_cols(base)
         )
     else:
-        new_files = []
+        new_files, new_stats = [], {}
 
     def build(prior: dict | None) -> dict:
         if prior is None or prior["version"] != base["version"]:
@@ -3532,7 +3553,7 @@ def update_version(
             "schema": schema_json,
             "dv_files": base.get("dv_files") or [],
             **_carried_mapping(base),
-            **_carried_stats(base, carried + new_files, new_files),
+            **_carried_stats(base, carried + new_files, new_stats),
             **_carried_partitions(base, carried + new_files),
             **_carried_constraints(base),
             **_carried_generated(base),
@@ -3995,8 +4016,8 @@ def _optimize_incremental(
     n_out = max(1, -(-bytes_sel // int(target_file_bytes)))
     live = _live_scan(spark, m, files=selected)
     rewritten = live.repartitionByRange(n_out, F.col(col))
-    new_files, _n_new = _write_data_files(
-        rewritten, table_dir, _col_mapping(m)
+    new_files, _n_new, new_stats = _write_data_files(
+        rewritten, table_dir, _col_mapping(m), _phys_stats_cols(m)
     )
     cf: list[str] | None = [] if change_files else None
 
@@ -4014,7 +4035,7 @@ def _optimize_incremental(
             "schema": m.get("schema"),
             "dv_files": m.get("dv_files") or [],
             **_carried_mapping(m),
-            **_carried_stats(m, carried + new_files, new_files),
+            **_carried_stats(m, carried + new_files, new_stats),
             **_carried_partitions(m, carried + new_files),
             **_carried_constraints(m),
             **_carried_generated(m),

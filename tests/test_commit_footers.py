@@ -58,8 +58,11 @@ def _rows(spark, lo, hi, tag="x"):
     )
 
 
-def _jobs(spark, name, fn, *args, **kwargs) -> int:
-    """Spark jobs ``fn`` launched, counted through a job group."""
+def _jobs(spark, name, fn, *args, **kwargs) -> tuple[int, set[str]]:
+    """Spark jobs ``fn`` launched, counted through a job group, and the
+    distinct Python call sites of the actions behind them (``collect at
+    versioned.py:<line>``). A write job and the AQE query-stage and
+    broadcast jobs of a plan carry JVM call sites, so they add none."""
     sc = spark.sparkContext
     group = f"commit-budget-{name}-{uuid.uuid4().hex}"
     sc.setJobGroup(group, name)
@@ -68,7 +71,16 @@ def _jobs(spark, name, fn, *args, **kwargs) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    st = sc.statusTracker()
+    ids = st.getJobIdsForGroup(group)
+    sites = set()
+    for j in ids:
+        for sid in st.getJobInfo(j).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None and ".py:" in info.name:
+                action, where = info.name.split(" at ", 1)
+                sites.add(f"{action} at {os.path.basename(where)}")
+    return len(ids), sites
 
 
 def _consistent(spark, table):
@@ -83,12 +95,28 @@ def _consistent(spark, table):
 
 def test_commit_job_budget(spark, table):
     """Jobs per DML on a 4-file, 3k-row table with ``stats_cols``
-    (4 cores, 4 shuffle partitions). Before commits read their own
-    footers, the same sequence launched append 6, merge 14, MOR delete
-    4, update 15 and optimize 10 jobs: a re-read to count the staged
-    rows, a distributed footer job for their envelopes, a second scan
-    of the touched files to count them, and a schema-inference job on
-    every deletion-vector read."""
+    (4 shuffle partitions).
+
+    Structure: a commit takes its row count and envelopes from the
+    footers it just wrote, so the only Python-side action a DML runs
+    is the ONE aggregation that finds its touched files (merge, update,
+    COW delete); append, MOR delete and optimize run none. Jobs: the
+    minimum is one write job, plus that aggregation's collect, plus
+    optimize's range-boundary sample. AQE adds one job per query stage
+    and per broadcast (the deletion-vector side of every scan after the
+    MOR delete), which depends on runtime sizes. Observed here: append
+    1, merge 7 (5 for the aggregation's stages, 2 for the write), MOR
+    delete 1, update 5, COW delete 5, optimize 4. Append and MOR delete
+    shuffle nothing, so their budget is exact; the others allow two
+    more AQE stages.
+
+    Before commits read their own footers, the same sequence launched
+    append 6, merge 14, MOR delete 4, update 15, COW delete 15 and
+    optimize 10 jobs: a re-read to count the staged rows, a
+    distributed footer job (``collect at versioned.py`` in
+    ``_stats_for_files``) for their envelopes, a second scan of the
+    touched files to count them, and a schema-inference job on every
+    deletion-vector read."""
     write_version(
         spark, _rows(spark, 0, 3000).repartitionByRange(4, "k"), table,
         stats_cols=["k"],
@@ -115,15 +143,30 @@ def test_commit_job_budget(spark, table):
             predicate=F.col("k").between(100, 200),
             assignments={"s": F.lit("U")},
         ),
+        "delete_cow": _jobs(
+            spark, "delete_cow", delete_version, spark, table,
+            predicate=F.col("k").between(2500, 2520),
+        ),
         "optimize": _jobs(
             spark, "optimize", optimize_table, spark, table,
             cluster_by=["k"], target_file_bytes=16 * 1024,
         ),
     }
-    budget = {"append": 1, "merge": 7, "delete_mor": 1, "update": 5, "optimize": 4}
-    assert not {k: n for k, n in got.items() if n > budget[k]}, got
+    aggregations = {
+        k: len(s) for k, (_, s) in got.items()
+        if all(x.startswith("collect at versioned.py:") for x in s)
+    }
+    assert aggregations == {
+        "append": 0, "merge": 1, "delete_mor": 0,
+        "update": 1, "delete_cow": 1, "optimize": 0,
+    }, got
+    budget = {
+        "append": 1, "merge": 7 + 2, "delete_mor": 1,
+        "update": 5 + 2, "delete_cow": 5 + 2, "optimize": 4 + 2,
+    }
+    assert not {k: n for k, (n, _) in got.items() if n > budget[k]}, got
     m = _consistent(spark, table)
-    assert m["n_rows"] == 3000 + 100 + 20 - 4
+    assert m["n_rows"] == 3000 + 100 + 20 - 4 - 21
 
 
 # ------------------------------------------------- footer kernel equivalence
@@ -333,13 +376,13 @@ def flaky_frame(df):
 
 
 @F.udf(BooleanType())
-def flaky_hit(k):
+def flaky_hit(k, m):
     from pyspark import TaskContext
 
     tc = TaskContext.get()
     if tc.partitionId() == 0 and tc.attemptNumber() == 0:
         raise RuntimeError("injected first-attempt failure")
-    return k % 50 == 0
+    return k % m == 0
 
 
 def rows(lo, hi):
@@ -385,8 +428,16 @@ b = dirs("data")
 V.merge_version(spark, flaky_frame(rows(350, 450)), table, keys=["k"])
 report("merge", new_dirs("data", b))
 b = dirs("_dv")
-V.delete_version(spark, table, predicate=flaky_hit(F.col("k")), mode="mor")
+V.delete_version(spark, table, predicate=flaky_hit(F.col("k"), F.lit(50)),
+                 mode="mor")
 report("delete_mor", new_dirs("_dv", b))
+b = dirs("data")
+V.update_version(spark, table, predicate=flaky_hit(F.col("k"), F.lit(7)),
+                 assignments={{"v": F.lit(-1)}})
+report("update_cow", new_dirs("data", b))
+b = dirs("data")
+V.delete_version(spark, table, predicate=flaky_hit(F.col("k"), F.lit(11)))
+report("delete_cow", new_dirs("data", b))
 spark.stop()
 """
 
@@ -395,7 +446,8 @@ def test_footer_counts_survive_task_retries(tmp_path):
     """A failed first attempt of partition 0 (after writing its rows)
     must not leak into the footer-derived counts: only committed
     attempts' files exist in the staging dir the footers are read
-    from."""
+    from. The COW update and delete fail the first attempt of both
+    their touched-files aggregation and their rewrite."""
     table = str(tmp_path / "tbl")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
@@ -415,7 +467,9 @@ def test_footer_counts_survive_task_retries(tmp_path):
             if line.startswith("RESULT ")
         )
     }
-    assert set(res) == {"append", "merge", "delete_mor"}
+    assert set(res) == {
+        "append", "merge", "delete_mor", "update_cow", "delete_cow"
+    }
     for op, r in res.items():
         assert r["n_rows"] == r["read"], (op, r)
         assert r["unlisted"] == [] and r["staged"] > 0, (op, r)
@@ -423,3 +477,6 @@ def test_footer_counts_survive_task_retries(tmp_path):
     assert res["append"]["n_rows"] == 600
     assert res["merge"]["n_rows"] == 600
     assert res["delete_mor"]["n_rows"] == 600 - 12
+    assert res["update_cow"]["n_rows"] == 600 - 12
+    # k % 11 == 0 in [0, 600): 55 keys, 2 of them (0, 550) already gone
+    assert res["delete_cow"]["n_rows"] == 600 - 12 - 53
