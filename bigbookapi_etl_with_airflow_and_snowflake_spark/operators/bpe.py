@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 __all__ = ["word_freq_table", "pair_counts", "bpe_train", "bpe_encode"]
 
 END = "</w>"
@@ -134,7 +136,7 @@ def bpe_train(
     """
     if batch_k < 1:
         raise ValueError(f"batch_k must be >= 1, got {batch_k}")
-    words = word_freq_table(df, text_col).localCheckpoint(eager=True)
+    words = materialize(word_freq_table(df, text_col))
     merges: list[tuple[int, str, str, int]] = []
     rounds = 0
     saturated = False
@@ -174,7 +176,7 @@ def bpe_train(
         syms = F.col("syms")
         for a, b, _cnt in batch:
             syms = _apply_merge(syms, a, b)
-        words = words.withColumn("syms", syms).localCheckpoint(eager=True)
+        words = materialize(words.withColumn("syms", syms))
         for a, b, cnt in batch:
             merges.append((len(merges), a, b, cnt))
     if stats is not None:

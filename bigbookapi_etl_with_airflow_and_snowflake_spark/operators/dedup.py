@@ -214,7 +214,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over an undirected pair list by iterative
     min-label propagation: every node ends up labeled with the smallest
@@ -225,8 +224,8 @@ def connected_components(
     Scale: each iteration is one join + one partial-agg groupBy on the
     node key; iterations needed = component diameter (near-dup graphs
     are shallow — dup clusters are cliques or stars, so 2-4 rounds
-    typical). Lineage is truncated per round (``localCheckpoint``) so
-    the plan doesn't grow with iterations, and the loop exits early on
+    typical). Lineage is truncated per round (``session.materialize``)
+    so the plan doesn't grow with iterations, and the loop exits early on
     a converged round (label-change count == 0 — one count per round,
     no driver-side data). At 100 TB diameter can't exceed ``max_iter``
     for dedup graphs; for general graphs swap in large-star/small-star
@@ -241,24 +240,23 @@ def connected_components(
 
     Execution notes: this operator is inherently ITERATIVE — it runs
     Spark jobs at call time (per-round counts + eager materialization),
-    not lazily at first action like plain registry queries.
-    ``checkpoint_dir`` selects the lineage-truncation tier (see
-    neardup._materialize): None → executor-local localCheckpoint (fast,
-    NOT fault-tolerant — an executor loss mid-run fails the job); a
-    path → reliable ``.checkpoint()``, the cluster-scale setting. Raises ``RuntimeError`` if ``max_iter`` rounds pass
-    without a converged (zero-label-change) round — silently returning
-    partial labels would hand callers wrong clusters with no signal.
+    not lazily at first action like plain registry queries. Each
+    materialization takes the session's tier: executor-local by default
+    (fast, NOT fault-tolerant — an executor loss mid-run fails the
+    job), the reliable checkpoint when the session has
+    ``spark.checkpoint.dir``. Raises ``RuntimeError`` if ``max_iter``
+    rounds pass without a converged (zero-label-change) round —
+    silently returning partial labels would hand callers wrong clusters
+    with no signal.
     """
     # Materialize the pair list ONCE, before the self-union: `edges`
     # appears in both union branches and Spark does not share subplans
     # across branches, so an un-materialized union executes the
     # (possibly expensive) upstream pair generation twice — and the
     # un-checkpointed loop would re-execute it every round on top.
-    from .neardup import _materialize
+    from ..session import materialize
 
-    edges = _materialize(
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")), checkpoint_dir
-    )
+    edges = materialize(pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")))
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -271,7 +269,7 @@ def connected_components(
     npart = min(
         sym.sparkSession.sparkContext.defaultParallelism, n_edges // 250_000 + 1
     )
-    sym = _materialize(sym.repartition(npart, "b"), checkpoint_dir)
+    sym = materialize(sym.repartition(npart, "b"))
     labels = None
     for it in range(max_iter):
         if it == 0:
@@ -309,7 +307,7 @@ def connected_components(
                 F.least(F.col("label"), F.coalesce("pl", F.col("label"))).alias("label"),
             )
         )
-        upd = _materialize(upd, checkpoint_dir)
+        upd = materialize(upd)
         # convergence is a filter on the materialized update — no extra
         # old⋈new join per round
         changed = upd.filter(F.col("label") != F.col("old_label")).count()

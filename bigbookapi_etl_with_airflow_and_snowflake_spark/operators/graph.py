@@ -19,7 +19,8 @@ Design constraints, in order:
    standard message-passing plan. Edges are hash-partitioned on ``src``
    once and persisted; every iteration's join then shuffles only the
    rank table (N rows, not E). Lineage is truncated per iteration
-   (localCheckpoint) so the plan doesn't grow with iteration count.
+   (``session.materialize``) so the plan doesn't grow with iteration
+   count.
 3. **Mass accounting.** Every node in the edge list has outdegree ≥ 1
    by construction (nodes are *defined* as edge endpoints; callers with
    dangling nodes add self-loops or reverse edges first — documented,
@@ -33,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 __all__ = ["pagerank_fixed"]
 
@@ -67,13 +70,12 @@ def pagerank_fixed(
     ).distinct()
     # Partition the (big) edge table once on the join key; every
     # iteration's join reuses this layout and shuffles only ranks.
-    e = e.repartition("src").localCheckpoint(eager=True)
+    e = materialize(e.repartition("src"))
     deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
@@ -93,7 +95,7 @@ def pagerank_fixed(
             .groupBy("dst")
             .agg(F.sum("contrib").alias("s"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(inflow.withColumnRenamed("dst", "node"), "node", "left")
             .select(
                 "node",
@@ -105,6 +107,5 @@ def pagerank_fixed(
                     )
                 ).cast("long").alias("rank_fp"),
             )
-            .localCheckpoint(eager=True)
         )
     return ranks

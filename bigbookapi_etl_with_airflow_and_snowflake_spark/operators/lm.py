@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .neardup import materialize
+from ..session import materialize
 
 __all__ = [
     "doc_bigrams",
@@ -78,7 +78,7 @@ def train_bigram_lm(
     (a, c_a) (the per-context rollup of the same counts), and
     ``vocab_size`` = distinct context tokens — the V in add-one
     smoothing. One corpus pass: the bigram table is pinned
-    (``neardup.materialize``, eager, so training launches Spark jobs),
+    (``session.materialize``, eager, so training launches Spark jobs),
     and the rollup, the distinct count and both scoring joins read the
     pinned table instead of re-tokenizing the reference slice (the two
     join branches carry different inferred filters, so Spark would not

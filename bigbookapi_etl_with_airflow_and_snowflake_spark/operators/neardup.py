@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bind
+from ..session import materialize
 from .text import tokens, word_shingles
 
 
@@ -43,66 +44,6 @@ def _threshold_dec(threshold: float) -> Column:
     """
     t = Decimal(threshold).quantize(Decimal("1e-12"), rounding=ROUND_FLOOR)
     return F.lit(str(t)).cast("decimal(14,12)")
-
-
-def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Truncate lineage so every downstream branch reuses ONE computed
-    table instead of compounding re-scans (round-1's un-truncated form
-    held 28 scans of the source; AQE exchange reuse collapsed none).
-
-    ``checkpoint_dir=None`` → ``localCheckpoint(eager=True)``: fast
-    (executor-local block storage) but NOT fault-tolerant — an executor
-    loss mid-query recomputes nothing and fails the job; rerun it.
-    A path → reliable ``.checkpoint()`` written under that directory
-    (HDFS/S3 at scale): survives executor loss, the 100 TB default.
-    Both run the upstream jobs at DataFrame-construction time (eager):
-    **building a plan that contains a materialization point launches
-    Spark jobs immediately** — that is the documented contract of every
-    ``checkpoint_dir``-accepting operator here (jaccard_pairs,
-    minhash_band_pairs, hamming_bits_pairs/simhash_pairs) and of the
-    q_* registry entries built on them. Public since round 15 so
-    callers outside this module select the tier instead of reaching
-    into a private helper (ADVICE r14).
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=True)
-    # setCheckpointDir is SparkContext-global: re-pointing it while
-    # another operator checkpoints concurrently would scatter their
-    # files across directories (and a later cleanup of either directory
-    # races the other). Set once; on conflict keep the FIRST directory
-    # (checkpoints stay reliable — just under the session's dir) and
-    # warn so the caller knows where their files actually are.
-    sc = df.sparkSession.sparkContext
-    current = sc.getCheckpointDir()
-    if current is None:
-        sc.setCheckpointDir(checkpoint_dir)
-    elif not _same_checkpoint_dir(current, checkpoint_dir):
-        import warnings
-
-        warnings.warn(
-            f"SparkContext checkpoint dir is already {current!r}; keeping it "
-            f"(requested {checkpoint_dir!r} ignored — session-global state)",
-            stacklevel=3,
-        )
-    return df.checkpoint(eager=True)
-
-
-# internal alias, kept so in-module call sites and existing tests read
-# unchanged; the public name is ``materialize``
-_materialize = materialize
-
-
-def _same_checkpoint_dir(current: str, requested: str) -> bool:
-    """Compare the context's (possibly scheme-qualified, e.g.
-    ``file:/tmp/x``) checkpoint dir against a requested plain path."""
-
-    def norm(p: str) -> str:
-        scheme, sep, rest = p.partition(":")
-        if sep and "/" not in scheme:
-            p = rest
-        return "/" + p.strip("/")
-
-    return norm(current) == norm(requested)
 
 
 def _bucket_pairs(keyed: DataFrame, key_col: str, id_col: str) -> DataFrame:
@@ -143,15 +84,14 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    checkpoint_dir: str | None = None,
     hot_bucket_cap: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity, prefix-filtered: keeps pairs
     with J ≥ threshold — identical results to the naive
     every-pair-sharing-a-shingle join, at a fraction of the pair volume.
-    ``checkpoint_dir`` selects the lineage-truncation tier (see
-    :func:`_materialize`): None → fast executor-local localCheckpoint;
-    a path → reliable fault-tolerant checkpoint, the 100 TB setting.
+    Its one materialization point takes the session's tier (see
+    ``session.materialize``): executor-local by default, the reliable
+    checkpoint when the session has ``spark.checkpoint.dir``.
 
     Plan: rarity-ordered shingle arrays per doc → inverted index over
     each doc's *prefix* (the |S| − ⌈t·|S|⌉ + 1 rarest shingles; by the
@@ -224,21 +164,19 @@ def jaccard_pairs(
     # One aggregation carries everything downstream needs — the rep id,
     # the sorted member list, and the (identical-across-members) shingle
     # array — so the whole query hangs off a single materialized table.
-    # Lineage is truncated here via _materialize (see its docstring for
-    # the localCheckpoint-vs-reliable-checkpoint trade); pass
-    # checkpoint_dir for the fault-tolerant tier at 100 TB.
+    # Lineage is truncated here via materialize (see its docstring for
+    # the localCheckpoint-vs-reliable-checkpoint trade); a session with
+    # spark.checkpoint.dir gets the fault-tolerant tier at 100 TB.
     # group key = the sorted shingle-hash array itself (arrays are
     # hashable shuffle keys; ~400 B vs a 32-B md5, immaterial at one row
     # per doc, and it drops an md5-over-concat projection per row)
-    groups = _materialize(
-        docs.groupBy("__sh")
-        .agg(
+    groups = materialize(
+        docs.groupBy("__sh").agg(
             F.min(id_col).alias("__rep"),
             F.sort_array(F.collect_list(id_col)).alias("__members"),
             F.first("__s").alias("__s"),
             F.first("n_sh").alias("n_sh"),
-        ),
-        checkpoint_dir,
+        )
     )
     rep_docs = groups.select("__rep", "__sh", "n_sh")
 
@@ -532,24 +470,23 @@ def minhash_band_pairs(
     num_hashes: int = 4,
     rows_per_band: int = 2,
     n: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """LSH banding over MinHash signatures → candidate near-dup pairs.
 
     Band keys come from the fused shuffle-free
     :func:`band_keys_from_text` (round 14 — the signature aggregate's
     SortAggregate/Exchange pair is gone). The band table is
-    MATERIALIZED once before the self-join (same `_materialize` tier
-    selection as jaccard_pairs): the aggregate form's exchange was
-    implicitly reused across the two join sides, and a pure map has no
-    exchange to reuse — without the checkpoint both sides re-shingle
-    and re-hash the corpus (measured at the 100× sweep: 13.7 s vs the
-    old form's 7.9 s; with it the fused path wins at both scales).
+    MATERIALIZED once before the self-join (the session's
+    ``session.materialize`` tier, as in jaccard_pairs): the aggregate
+    form's exchange was implicitly reused across the two join sides,
+    and a pure map has no exchange to reuse — without the checkpoint
+    both sides re-shingle and re-hash the corpus (measured at the 100×
+    sweep: 13.7 s vs the old form's 7.9 s; with it the fused path wins
+    at both scales).
     Output: distinct (id_a, id_b), id_a < id_b.
     """
-    bands = _materialize(
-        band_keys_from_text(df, text_col, id_col, num_hashes, rows_per_band, n),
-        checkpoint_dir,
+    bands = materialize(
+        band_keys_from_text(df, text_col, id_col, num_hashes, rows_per_band, n)
     )
     return _bucket_pairs(bands, "band_key", id_col).distinct()
 
@@ -734,7 +671,6 @@ def simhash_pairs(
     bits: int = 32,
     bands: int = 4,
     max_hamming: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """N2 (SimHash variant): near-dup pairs by Hamming distance over
     portable SimHash signatures.
@@ -749,8 +685,7 @@ def simhash_pairs(
 
     Scale: same shape as the other bucket joins here — one shuffle on
     the band key, pair volume = actual collisions, no n² anywhere.
-    ``checkpoint_dir`` selects the lineage-truncation tier (see
-    :func:`_materialize`). Output: (id_a, id_b, hamming), id_a < id_b.
+    Output: (id_a, id_b, hamming), id_a < id_b.
 
     Round 15: the signature table is no longer checkpointed here — the
     dup-collapse inside :func:`hamming_bits_pairs` is now the (single)
@@ -766,7 +701,6 @@ def simhash_pairs(
         bands,
         max_hamming,
         bits=bits,
-        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -778,7 +712,6 @@ def hamming_bits_pairs(
     max_hamming: int = 3,
     bits: int | None = None,
     max_group_size: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance over ANY '0'/'1' bit-string
     signature column — the banded candidate machinery behind
@@ -817,12 +750,11 @@ def hamming_bits_pairs(
     Round 15 (optimization guide §2.4 / §1.2 step 1; VERDICT r14 item
     3). Two structural changes, output-identical:
 
-    - The ``groups`` collapse is MATERIALIZED once (``checkpoint_dir``
-      selects the tier, same contract as :func:`jaccard_pairs` —
-      None → eager ``localCheckpoint`` at DataFrame-construction time,
-      a path → reliable ``.checkpoint()``). The old plan re-ran the
-      signature aggregation per consumer — the 100× decomposition
-      showed EIGHT scans of the signature table and six
+    - The ``groups`` collapse is MATERIALIZED once (the session's
+      ``session.materialize`` tier, eager at DataFrame-construction
+      time, same contract as :func:`jaccard_pairs`). The old plan
+      re-ran the signature aggregation per consumer — the 100×
+      decomposition showed EIGHT scans of the signature table and six
       collect_list/min aggregations (≈60 s of the 121 s total) because
       the reps/verify/expansion branches each rebuilt it.
     - Member expansion runs through hash-JOIN fanout on an exploded
@@ -895,7 +827,7 @@ def hamming_bits_pairs(
     # one aggregation feeds five consumers (banding, both verify sides,
     # both expansion sides) — truncate lineage here so they all read
     # one computed table (round 15; see docstring)
-    groups = _materialize(groups, checkpoint_dir)
+    groups = materialize(groups)
     reps = groups.select(F.col("__rep").alias(id_col), F.col(bits_col))
     banded = reps.select(
         F.col(id_col),

@@ -18,7 +18,7 @@ into fixed-length model inputs. Two canonical shapes:
   BY doc)`` — a global window that collapses Spark to one task. Here
   they come from ``distributed_prefix_sum`` (two narrow passes over a
   (doc_id, n_tokens) projection — the text column never enters the
-  prefix-sum machinery, so its localCheckpoint pins two longs per doc,
+  prefix-sum machinery, so its materialization pins two longs per doc,
   not the corpus), joined back and exploded JVM-side. Everything after
   the offsets is one posexplode + one groupBy(seq_id): tokens shuffle
   once, per-group state is bounded by ``seq_len``, and seq_ids are

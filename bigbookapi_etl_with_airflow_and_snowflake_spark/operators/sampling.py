@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 __all__ = [
     "distributed_prefix_sum",
     "assign_stable_ids",
@@ -75,8 +77,8 @@ def distributed_prefix_sum(
 
     1. ``repartitionByRange(order_col).sortWithinPartitions(order_col)``
        gives a globally ordered partitioning (partition *i* holds keys
-       strictly below partition *i+1*). ``localCheckpoint`` pins it so
-       pass 1 and pass 2 see the SAME sampled range boundaries.
+       strictly below partition *i+1*). ``session.materialize`` pins it
+       so pass 1 and pass 2 see the SAME sampled range boundaries.
     2. Pass 1 aggregates one ``(partition_id, sum)`` row per partition —
        the driver collects #partitions rows, never data.
     3. Pass 2 streams each partition once (``mapInPandas``, Arrow
@@ -91,11 +93,10 @@ def distributed_prefix_sum(
     """
     _check_collisions(df, [_PID, out_col])
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = (
+    parted = materialize(
         df.repartitionByRange(n, F.col(order_col))
         .sortWithinPartitions(order_col)
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     partials = parted.groupBy(_PID).agg(
         F.sum(F.col(value_col).cast("long")).alias("s")
@@ -184,9 +185,11 @@ def pps_systematic_sample(
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    cum = distributed_prefix_sum(
-        df, order_col, weight_col, out_col="__cum", num_partitions=num_partitions
-    ).localCheckpoint(eager=True)
+    cum = materialize(
+        distributed_prefix_sum(
+            df, order_col, weight_col, out_col="__cum", num_partitions=num_partitions
+        )
+    )
     row = cum.agg(F.max("__cum").alias("t"), F.min(weight_col).alias("w")).first()
     total = row["t"] or 0
     if row["w"] is not None and row["w"] <= 0:

@@ -135,7 +135,6 @@ def semantic_dedup(
     iters: int = 0,
     threshold: float = 0.95,
     round_to: int = 6,
-    checkpoint_dir: str | None = None,
     target_cluster_size: int | None = None,
     info: dict | None = None,
     n_rows: int | None = None,
@@ -180,9 +179,9 @@ def semantic_dedup(
     fully SQL-replayable (the oracle's hard row); real runs raise
     ``iters``.
 
-    Output: one row per input — (id, cluster, keep boolean).
-    ``checkpoint_dir`` selects the lineage-truncation tier for the
-    assignment table; see neardup._materialize.
+    Output: one row per input — (id, cluster, keep boolean). The
+    assignment table is materialized at the session's tier (see
+    ``session.materialize``).
 
     ``info``: optional caller-supplied dict filled with how k was
     resolved — ``n`` (corpus size, only counted when the target path
@@ -208,7 +207,7 @@ def semantic_dedup(
     import pandas as pd
 
     from .clustering import assign_clusters, kmeans_lloyd
-    from .neardup import _materialize
+    from ..session import materialize
 
     # multi-action shape (optional count, k-means init + per-iteration
     # collects, the final assignment the caller consumes): persist the
@@ -243,7 +242,7 @@ def semantic_dedup(
     _, centroids = kmeans_lloyd(
         src, k=k, iters=iters, id_col=id_col, vec_col=vec_col, persist=False
     )
-    assigned = _materialize(assign_clusters(src, centroids, vec_col), checkpoint_dir)
+    assigned = materialize(assign_clusters(src, centroids, vec_col))
     # the materialization severed lineage, and src is local — without
     # this, every call leaks one cached copy of the full embedding
     # projection for the session lifetime (nobody can unpersist it)

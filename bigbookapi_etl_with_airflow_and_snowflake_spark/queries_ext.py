@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .functions.splits import SPLIT_SALT, TRAIN_UPPER_HEX, VAL_UPPER_HEX
 from .operators import neardup
+from .session import materialize
 from .sources.files import read_table
 
 _t = read_table
@@ -1549,13 +1550,12 @@ def q_incremental_dedup(spark, sf):
     join itself — small side broadcast by AQE, collision-proportional
     output — is the production plan."""
     # bands feed BOTH join sides; the r14 fused signature is a pure map
-    # with no exchange to reuse, so materialize once (jaccard_pairs'
-    # _materialize tier) instead of re-signing the corpus per side
-    bands = neardup.materialize(
+    # with no exchange to reuse, so materialize once instead of
+    # re-signing the corpus per side
+    bands = materialize(
         neardup.minhash_band_keys(
             neardup.minhash_signatures(_t(spark, sf, "documents"))
-        ),
-        None,
+        )
     )
     newb = bands.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("new_id"), "band_key"
@@ -1607,9 +1607,7 @@ def q_minhash_jaccard_est(spark, sf):
     aggregate exchange for Spark to reuse across them, so materialize
     it once (measured at 100×: 31.9 s un-materialized vs 17.2 s for the
     old exchange-reusing form; materialized, the fused form wins)."""
-    sig = neardup.materialize(
-        neardup.minhash_signatures(_t(spark, sf, "documents")), None
-    )
+    sig = materialize(neardup.minhash_signatures(_t(spark, sf, "documents")))
     bands = neardup.minhash_band_keys(sig)
     a = bands.select(F.col("doc_id").alias("id_a"), "band_key")
     b = bands.select(F.col("doc_id").alias("id_b"), "band_key")

@@ -6,10 +6,12 @@ pytest-checked.
 
 Each query here composes a real operator with a deterministic scenario
 built from the driver corpus (TESTDATA.md tables only). Materializing
-operators (rollup refresh, merge) write to a per-call temp directory,
-fold through their real write path, then return the final table as an
-eagerly-checkpointed DataFrame (the temp dir is deleted before return —
-nothing leaks).
+operators (rollup refresh, merge, the versioned lake) write inside one
+``queries.scratch_dir`` block per call, fold through their real write
+path, and return ``materialize(final table)`` from inside the block:
+the result is pinned at the session's tier (``session.materialize``)
+before the block deletes the directory, so nothing leaks and nothing
+reads a deleted file.
 
 Value-parity rules follow queries.py: decimal-exact money sums, integer
 microsecond time arithmetic, identical aliases both dialects.
@@ -18,8 +20,6 @@ microsecond time arithmetic, identical aliases both dialects.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -28,7 +28,8 @@ from .operators.grouped import user_behavior_features
 from .operators.multimodal import audio_stats, image_stats
 from .operators.rollup import refresh_rollup
 from .operators.skew import salted_agg
-from .queries import _dec, _t
+from .queries import _dec, _t, scratch_dir
+from .session import materialize
 from .sinks.merge import merge_parquet
 
 
@@ -51,9 +52,8 @@ def q_rollup_refresh(spark, sf):
         ("min", "value", "min_value"),
         ("max", "value", "max_value"),
     ]
-    d = tempfile.mkdtemp(prefix="q_rollup_")
-    path = os.path.join(d, "rollup")
-    try:
+    with scratch_dir("q_rollup_") as d:
+        path = os.path.join(d, "rollup")
         refresh_rollup(
             spark, e.filter(F.dayofmonth("ts") <= 15), path, "ts", "hour",
             ["event_type"], aggs,
@@ -62,12 +62,11 @@ def q_rollup_refresh(spark, sf):
             spark, e.filter(F.dayofmonth("ts") > 15), path, "ts", "hour",
             ["event_type"], aggs,
         )
-        out = spark.read.parquet(path).select(
-            "bucket_start", "event_type", "n_events", "min_value", "max_value"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        return materialize(
+            spark.read.parquet(path).select(
+                "bucket_start", "event_type", "n_events", "min_value", "max_value"
+            )
+        )
 
 
 SQL_ROLLUP_REFRESH = """
@@ -159,21 +158,19 @@ def q_merge_upsert_orders(spark, sf):
     untouched keys must survive — the oracle states the end table
     directly."""
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_merge_")
-    path = os.path.join(d, "orders_merged")
-    try:
+    with scratch_dir("q_merge_") as d:
+        path = os.path.join(d, "orders_merged")
         merge_parquet(spark, o, path, keys=["o_orderkey"])
         increment = o.filter(F.col("o_orderkey") % 2 == 0).withColumn(
             "o_totalprice",
             (_dec("o_totalprice") * 2).cast("double"),
         )
         merge_parquet(spark, increment, path, keys=["o_orderkey"])
-        out = spark.read.parquet(path).select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        return materialize(
+            spark.read.parquet(path).select(
+                "o_orderkey", "o_orderstatus", "o_totalprice"
+            )
+        )
 
 
 SQL_MERGE_UPSERT_ORDERS = """
@@ -199,9 +196,8 @@ def q_scd2_customer_history(spark, sf):
     c = _t(spark, sf, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
-    d = tempfile.mkdtemp(prefix="q_scd2_")
-    path = os.path.join(d, "dim_customer")
-    try:
+    with scratch_dir("q_scd2_") as d:
+        path = os.path.join(d, "dim_customer")
         scd2_merge(spark, c, path, ["c_custkey"],
                    ["c_mktsegment", "c_nationkey"], "2024-01-01")
         b2 = c.withColumn(
@@ -220,13 +216,12 @@ def q_scd2_customer_history(spark, sf):
         )
         scd2_merge(spark, b3, path, ["c_custkey"],
                    ["c_mktsegment", "c_nationkey"], "2024-03-01")
-        out = spark.read.parquet(path).select(
-            "c_custkey", "c_mktsegment", "c_nationkey",
-            "valid_from", "valid_to", "is_current",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        return materialize(
+            spark.read.parquet(path).select(
+                "c_custkey", "c_mktsegment", "c_nationkey",
+                "valid_from", "valid_to", "is_current",
+            )
+        )
 
 
 SQL_SCD2_CUSTOMER_HISTORY = """
@@ -261,46 +256,43 @@ def q_bucketed_join_revenue(spark, sf):
     key every day. Oracle states the plain join+agg result."""
     import uuid
 
-    tag = uuid.uuid4().hex[:8]
-    d = tempfile.mkdtemp(prefix="q_bucketed_")
-    t_orders, t_li = f"q_bkt_orders_{tag}", f"q_bkt_lineitem_{tag}"
-    try:
-        from .sinks.bucketed import read_bucketed, write_bucketed
+    from .sinks.bucketed import read_bucketed, write_bucketed
 
-        write_bucketed(
-            _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus"),
-            t_orders,
-            bucket_by=["o_orderkey"],
-            num_buckets=8,
-            path=os.path.join(d, "orders"),
-            sort_by=["o_orderkey"],
-        )
-        write_bucketed(
-            _t(spark, sf, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            t_li,
-            bucket_by=["l_orderkey"],
-            num_buckets=8,
-            path=os.path.join(d, "lineitem"),
-            sort_by=["l_orderkey"],
-        )
-        o, li = read_bucketed(spark, t_orders), read_bucketed(spark, t_li)
-        rev = _dec("l_extendedprice") * (1 - _dec("l_discount", "decimal(4,2)"))
-        out = (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n_lines"),
-                F.sum(rev).cast("double").alias("revenue"),
+    tag = uuid.uuid4().hex[:8]
+    t_orders, t_li = f"q_bkt_orders_{tag}", f"q_bkt_lineitem_{tag}"
+    with scratch_dir("q_bucketed_") as d:
+        try:
+            write_bucketed(
+                _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus"),
+                t_orders,
+                bucket_by=["o_orderkey"],
+                num_buckets=8,
+                path=os.path.join(d, "orders"),
+                sort_by=["o_orderkey"],
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_orders}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_li}")
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+            write_bucketed(
+                _t(spark, sf, "lineitem").select(
+                    "l_orderkey", "l_extendedprice", "l_discount"
+                ),
+                t_li,
+                bucket_by=["l_orderkey"],
+                num_buckets=8,
+                path=os.path.join(d, "lineitem"),
+                sort_by=["l_orderkey"],
+            )
+            o, li = read_bucketed(spark, t_orders), read_bucketed(spark, t_li)
+            rev = _dec("l_extendedprice") * (1 - _dec("l_discount", "decimal(4,2)"))
+            return materialize(
+                o.join(li, o.o_orderkey == li.l_orderkey)
+                .groupBy("o_orderstatus")
+                .agg(
+                    F.count("*").alias("n_lines"),
+                    F.sum(rev).cast("double").alias("revenue"),
+                )
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_orders}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_li}")
 
 
 SQL_BUCKETED_JOIN_REVENUE = """
@@ -1365,14 +1357,10 @@ def q_orc_roundtrip(spark, sf):
     o = _t(spark, sf, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    d = tempfile.mkdtemp(prefix="q_orc_")
-    path = os.path.join(d, "orders_orc")
-    try:
+    with scratch_dir("q_orc_") as d:
+        path = os.path.join(d, "orders_orc")
         o.write.mode("overwrite").orc(path)
-        out = spark.read.orc(path).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        return materialize(spark.read.orc(path))
 
 
 SQL_ORC_ROUNDTRIP = """
@@ -1392,9 +1380,8 @@ def q_csv_tolerant_read(spark, sf):
     c = _t(spark, sf, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
-    d = tempfile.mkdtemp(prefix="q_csv_")
-    path = os.path.join(d, "customers_csv")
-    try:
+    with scratch_dir("q_csv_") as d:
+        path = os.path.join(d, "customers_csv")
         (
             c.select(
                 F.col("c_custkey").cast("string"),
@@ -1407,7 +1394,7 @@ def q_csv_tolerant_read(spark, sf):
             .option("header", "false")
             .csv(path)
         )
-        out = (
+        return materialize(
             spark.read.schema(
                 "c_custkey long, c_name string, c_acctbal double, _bad string"
             )
@@ -1418,11 +1405,7 @@ def q_csv_tolerant_read(spark, sf):
                 "c_custkey", "c_name", "c_acctbal",
                 F.col("_bad").isNotNull().alias("quarantined"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_CSV_TOLERANT_READ = """
@@ -1495,8 +1478,7 @@ def q_parquet_stats_events(spark, sf):
     from .operators.lake import parquet_footer_stats
 
     ev = _t(spark, sf, "events").select("event_id", "value")
-    d = tempfile.mkdtemp(prefix="q_pqstats_")
-    try:
+    with scratch_dir("q_pqstats_") as d:
         parts = []
         for b in range(4):
             sub = os.path.join(d, f"b{b}")
@@ -1508,7 +1490,7 @@ def q_parquet_stats_events(spark, sf):
         import functools
 
         stats = functools.reduce(lambda a, c: a.unionByName(c), parts)
-        out = (
+        return materialize(
             stats.groupBy("bucket", "column")
             .agg(
                 F.sum("n_values").alias("n_values"),
@@ -1516,11 +1498,7 @@ def q_parquet_stats_events(spark, sf):
                 F.min("min_val").alias("min_val"),
                 F.max("max_val").alias("max_val"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_PARQUET_STATS_EVENTS = """
@@ -1919,9 +1897,8 @@ def q_versioned_time_travel(spark, sf):
     from .sinks.versioned import read_version, write_version
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(spark, o, t)
         v2 = o.withColumn(
             "o_totalprice",
@@ -1943,15 +1920,11 @@ def q_versioned_time_travel(spark, sf):
                 ),
             )
 
-        out = (
+        return materialize(
             agg(read_version(spark, t, version=1), "v1")
             .unionByName(agg(read_version(spark, t, version=3), "v3"))
             .select("snapshot", "o_orderstatus", "n", "cents")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_TIME_TRAVEL = """
@@ -2078,7 +2051,9 @@ def q_image_dhash_pairs(spark, sf):
         sf,
         pre_filter=(F.col("doc_id") % 20 == 0) & (F.col("doc_id") < 20000),
     )
-    sig = dhash_images(pngs, "payload", "doc_id").localCheckpoint(eager=True)
+    # unpinned: with ``bits`` given, hamming_bits_pairs reads the
+    # signatures once, inside its own materialized collapse
+    sig = dhash_images(pngs, "payload", "doc_id")
     return hamming_bits_pairs(
         sig, "doc_id", "dhash_bits", bands=4, max_hamming=3, bits=64
     )
@@ -2114,7 +2089,8 @@ def q_image_neardup_keep(spark, sf):
         sf,
         pre_filter=(F.col("doc_id") % 20 == 0) & (F.col("doc_id") < 20000),
     )
-    sig = dhash_images(pngs, "payload", "doc_id").localCheckpoint(eager=True)
+    # pinned: sig feeds both the pair search and the labeled universe
+    sig = materialize(dhash_images(pngs, "payload", "doc_id"))
     pairs = hamming_bits_pairs(
         sig, "doc_id", "dhash_bits", bands=4, max_hamming=3, bits=64
     )
@@ -2180,17 +2156,19 @@ def q_image_corpus_manifest(spark, sf):
         pre_filter=(F.col("doc_id") % 20 == 0) & (F.col("doc_id") < 20000),
     )
     corrupt = F.col("doc_id") % 60 == 0
-    imgs = pngs.select(
-        "doc_id",
-        F.when(
-            corrupt,
-            F.expr("substring(payload, 1, CAST(length(payload) / 2 AS INT))"),
+    imgs = materialize(
+        pngs.select(
+            "doc_id",
+            F.when(
+                corrupt,
+                F.expr("substring(payload, 1, CAST(length(payload) / 2 AS INT))"),
+            )
+            .otherwise(F.col("payload"))
+            .alias("payload"),
         )
-        .otherwise(F.col("payload"))
-        .alias("payload"),
-    ).localCheckpoint(eager=True)
+    )
     stats = image_stats(imgs, "payload", "doc_id")
-    sig = dhash_images(imgs, "payload", "doc_id").localCheckpoint(eager=True)
+    sig = materialize(dhash_images(imgs, "payload", "doc_id"))
     pairs = hamming_bits_pairs(
         sig, "doc_id", "dhash_bits", bands=4, max_hamming=3, bits=64
     )
@@ -2268,9 +2246,8 @@ def q_bloom_file_lookup(spark, sf):
     from .operators.lake import bloom_file_lookup, build_file_bloom_index
 
     e = _t(spark, sf, "events").select("event_id", "user_id", "event_type", "value")
-    d = tempfile.mkdtemp(prefix="q_bloom_idx_")
-    lay = os.path.join(d, "events_lay")
-    try:
+    with scratch_dir("q_bloom_idx_") as d:
+        lay = os.path.join(d, "events_lay")
         e.repartitionByRange(16, "user_id").write.parquet(lay)
         files = sorted(
             os.path.join(lay, f) for f in os.listdir(lay) if f.endswith(".parquet")
@@ -2284,12 +2261,7 @@ def q_bloom_file_lookup(spark, sf):
         if not files or not keys:
             return e.filter(F.lit(False))
         idx = build_file_bloom_index(spark, files, "event_id")
-        out = bloom_file_lookup(spark, files, idx, "event_id", keys).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        return materialize(bloom_file_lookup(spark, files, idx, "event_id", keys))
 
 
 SQL_BLOOM_FILE_LOOKUP = """
@@ -2317,9 +2289,8 @@ def q_versioned_merge_delete(spark, sf):
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_cow_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_cow_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(spark, o.repartitionByRange(8, "o_orderkey"), t)
         upd = o.filter(F.col("o_orderkey") % 5 == 0).withColumn(
             "o_totalprice", (_dec("o_totalprice") * 2).cast("double")
@@ -2347,15 +2318,11 @@ def q_versioned_merge_delete(spark, sf):
                 ),
             )
 
-        out = (
+        return materialize(
             agg(read_version(spark, t, version=2), "v2")
             .unionByName(agg(read_version(spark, t, version=3), "v3"))
             .select("snapshot", "o_orderstatus", "n", "key_sum", "cents")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_MERGE_DELETE = """
@@ -2408,16 +2375,15 @@ def q_versioned_mor_delete(spark, sf):
     anti-join that dropped a live row or resurrected a deleted one also
     fails the value hash."""
     from .sinks.versioned import (
-        _load_manifest,
         delete_version,
+        load_manifest,
         read_version,
         write_version,
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_mor_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_mor_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(spark, o.repartitionByRange(8, "o_orderkey"), t)
         r2 = delete_version(
             spark,
@@ -2435,7 +2401,7 @@ def q_versioned_mor_delete(spark, sf):
             and r3["dv_files_added"] >= 1
         )
         write_version(spark, read_version(spark, t, version=3), t, mode="overwrite")
-        dv_folded = bool(_load_manifest(t, 3).get("dv_files")) and not _load_manifest(
+        dv_folded = bool(load_manifest(t, 3).get("dv_files")) and not load_manifest(
             t, 4
         ).get("dv_files")
 
@@ -2449,18 +2415,14 @@ def q_versioned_mor_delete(spark, sf):
                 ),
             )
 
-        out = (
+        return materialize(
             agg(read_version(spark, t, version=2), "v2")
             .unionByName(agg(read_version(spark, t, version=3), "v3"))
             .unionByName(agg(read_version(spark, t, version=4), "v4"))
             .select("snapshot", "o_orderstatus", "n", "key_sum", "cents")
             .withColumn("mor_zero_rewrite", F.lit(mor_zero_rewrite))
             .withColumn("dv_folded", F.lit(dv_folded))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_MOR_DELETE = """
@@ -2509,9 +2471,8 @@ def q_versioned_changes(spark, sf):
     from .sinks.versioned import delete_version, read_changes, write_version
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_cdf_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_cdf_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(spark, o.repartitionByRange(8, "o_orderkey"), t)
         inc = o.filter(F.col("o_orderkey") % 13 == 0).withColumn(
             "o_orderkey", -F.col("o_orderkey") - 1
@@ -2535,7 +2496,7 @@ def q_versioned_changes(spark, sf):
         )
         info: dict = {}
         ch = read_changes(spark, t, 1, 4, info=info)
-        out = (
+        return materialize(
             ch.groupBy("_change_type", "o_orderstatus")
             .agg(
                 F.count("*").alias("n"),
@@ -2555,11 +2516,7 @@ def q_versioned_changes(spark, sf):
                 "scoped",
                 F.lit(info["files_scanned_before"] < info["files_before"]),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_CHANGES = """
@@ -2605,8 +2562,8 @@ def q_versioned_restore(spark, sf):
     real reads, so a restore that resurrected too much or too little
     also fails the value hash."""
     from .sinks.versioned import (
-        _load_manifest,
         delete_version,
+        load_manifest,
         read_changes,
         read_version,
         read_version_pruned,
@@ -2615,9 +2572,8 @@ def q_versioned_restore(spark, sf):
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_restore_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_restore_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(
             spark,
             o.repartitionByRange(8, "o_orderkey"),
@@ -2635,7 +2591,7 @@ def q_versioned_restore(spark, sf):
             index_cols=["o_orderkey"],
         )
         r = restore_version(spark, t, 1, index_cols=["o_orderkey"])
-        m1, m4 = _load_manifest(t, 1), _load_manifest(t, 4)
+        m1, m4 = load_manifest(t, 1), load_manifest(t, 4)
         restore_zero_copy = (
             r["data_files_written"] == 0 and m4["files"] == m1["files"]
         )
@@ -2644,7 +2600,7 @@ def q_versioned_restore(spark, sf):
         n_undone = undo.groupBy("_change_type").count().collect()
         cdf_undo_ok = len(n_undone) == 1 and n_undone[0]["_change_type"] == (
             "insert"
-        ) and n_undone[0]["count"] == m1["n_rows"] - _load_manifest(t, 3)["n_rows"]
+        ) and n_undone[0]["count"] == m1["n_rows"] - load_manifest(t, 3)["n_rows"]
         # a key that v3's MOR delete removed and the restore
         # resurrected (derived from the data — synthetic orderkeys are
         # sparse); the clustered layout puts it in one file, the
@@ -2667,7 +2623,7 @@ def q_versioned_restore(spark, sf):
                 ),
             )
 
-        out = (
+        return materialize(
             agg(read_version(spark, t, version=3), "v3")
             .unionByName(agg(read_version(spark, t, version=4), "v4"))
             .select("snapshot", "o_orderstatus", "n", "key_sum", "cents")
@@ -2675,11 +2631,7 @@ def q_versioned_restore(spark, sf):
             .withColumn("index_chained", F.lit(index_chained))
             .withColumn("cdf_undo_ok", F.lit(cdf_undo_ok))
             .withColumn("probe_scoped", F.lit(probe_scoped))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_RESTORE = """
@@ -2730,9 +2682,8 @@ def q_versioned_update(spark, sf):
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_update_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_update_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(spark, o.repartitionByRange(8, "o_orderkey"), t)
         r2 = update_version(
             spark,
@@ -2767,18 +2718,14 @@ def q_versioned_update(spark, sf):
                 ),
             )
 
-        out = (
+        return materialize(
             agg(read_version(spark, t, version=2), "v2")
             .unionByName(agg(read_version(spark, t, version=3), "v3"))
             .select("snapshot", "o_orderstatus", "n", "key_sum", "cents")
             .withColumn("cow_scoped", F.lit(cow_scoped))
             .withColumn("mor_zero_rewrite", F.lit(mor_zero_rewrite))
             .withColumn("asof_ok", F.lit(asof_ok))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_UPDATE = """
@@ -2836,9 +2783,8 @@ def q_cdc_replicate(spark, sf):
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_cdc_replicate_")
-    src, dst = os.path.join(d, "src"), os.path.join(d, "dst")
-    try:
+    with scratch_dir("q_cdc_replicate_") as d:
+        src, dst = os.path.join(d, "src"), os.path.join(d, "dst")
         write_version(spark, o.repartitionByRange(8, "o_orderkey"), src)
         r1 = replicate_changes(
             spark, src, dst, keys=["o_orderkey"],
@@ -2870,14 +2816,14 @@ def q_cdc_replicate(spark, sf):
             and r2["applied_from"] == 1
             and r2["applied_to"] == 4
         )
-        from .sinks.versioned import _load_manifest
+        from .sinks.versioned import load_manifest
 
-        m_dst = _load_manifest(dst, r2["dst_version"])
-        m_dst_prev = _load_manifest(dst, r2["dst_version"] - 1)
+        m_dst = load_manifest(dst, r2["dst_version"])
+        m_dst_prev = load_manifest(dst, r2["dst_version"] - 1)
         carried = len(set(m_dst["files"]) & set(m_dst_prev["files"]))
         replica_scoped = carried > 0  # range-scoped changes skip files
 
-        out = (
+        return materialize(
             read_version(spark, dst)
             .groupBy("o_orderstatus")
             .agg(
@@ -2890,11 +2836,7 @@ def q_cdc_replicate(spark, sf):
             .withColumn("feed_incremental", F.lit(feed_incremental))
             .withColumn("cursor_ok", F.lit(cursor_ok))
             .withColumn("replica_scoped", F.lit(replica_scoped))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_CDC_REPLICATE = """
@@ -2940,8 +2882,8 @@ def q_versioned_optimize(spark, sf):
     probe). Time travel to the pre-optimize versions is exercised by
     the unit tests; here the literals pin the maintenance contract."""
     from .sinks.versioned import (
-        _load_manifest,
         delete_version,
+        load_manifest,
         optimize_table,
         read_version,
         read_version_pruned,
@@ -2949,16 +2891,15 @@ def q_versioned_optimize(spark, sf):
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_optimize_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_optimize_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(spark, o.repartition(32), t, index_cols=["o_orderkey"])
         delete_version(
             spark, t, F.col("o_orderkey") % 7 == 0, mode="mor",
             index_cols=["o_orderkey"],
         )
         bytes_now = sum(
-            os.path.getsize(f) for f in _load_manifest(t, 2)["files"]
+            os.path.getsize(f) for f in load_manifest(t, 2)["files"]
         )
         r = optimize_table(
             spark,
@@ -2968,7 +2909,7 @@ def q_versioned_optimize(spark, sf):
             index_cols=["o_orderkey"],
         )
         compacted = r["files_after"] < r["files_before"] == 32
-        dvs_folded = r["dv_files_folded"] >= 1 and not _load_manifest(
+        dvs_folded = r["dv_files_folded"] >= 1 and not load_manifest(
             t, r["version"]
         ).get("dv_files")
         lo = o.agg(F.min("o_orderkey")).first()[0]
@@ -2984,7 +2925,7 @@ def q_versioned_optimize(spark, sf):
             probe.count() == 1 and info_k["files_read"] < info_k["files_total"]
         )
 
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy("o_orderstatus")
             .agg(
@@ -2998,11 +2939,7 @@ def q_versioned_optimize(spark, sf):
             .withColumn("dvs_folded", F.lit(dvs_folded))
             .withColumn("range_skips", F.lit(range_skips))
             .withColumn("key_probe_skips", F.lit(key_probe_skips))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_OPTIMIZE = """
@@ -3032,15 +2969,14 @@ def q_versioned_stats_skip(spark, sf):
     ``full_coverage`` (every manifest file has a recorded entry after
     the inheriting append)."""
     from .sinks.versioned import (
-        _load_manifest,
+        load_manifest,
         read_version_pruned,
         write_version,
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_versioned_stats_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_versioned_stats_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(
             spark,
             o.repartitionByRange(8, "o_orderkey"),
@@ -3051,14 +2987,14 @@ def q_versioned_stats_skip(spark, sf):
         write_version(
             spark, inc.repartitionByRange(2, "o_orderkey"), t, mode="append"
         )
-        m = _load_manifest(t, 2)
+        m = load_manifest(t, 2)
         full_coverage = set(m.get("stats") or {}) == set(m["files"])
         df, info = read_version_pruned(
             spark, t, ranges={"o_orderkey": (0, 1000)}
         )
         zero_footer = info["footer_files"] == 0
         pruned = info["files_read"] < info["files_total"]
-        out = (
+        return materialize(
             df.groupBy("o_orderstatus")
             .agg(
                 F.count("*").alias("n"),
@@ -3067,11 +3003,7 @@ def q_versioned_stats_skip(spark, sf):
             .withColumn("zero_footer", F.lit(zero_footer))
             .withColumn("pruned", F.lit(pruned))
             .withColumn("full_coverage", F.lit(full_coverage))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_STATS_SKIP = """
@@ -3103,9 +3035,8 @@ def q_maintenance_advisor(spark, sf):
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    d = tempfile.mkdtemp(prefix="q_maint_advisor_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_maint_advisor_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(
             spark, o.repartition(32), t, stats_cols=["o_orderkey"]
         )
@@ -3133,18 +3064,14 @@ def q_maintenance_advisor(spark, sf):
                 )
             )
 
-        out = (
+        return materialize(
             phase("before", before)
             .unionByName(phase("after", after))
             .select(
                 "phase", "n", "key_sum", "fragmented", "dv_heavy",
                 "declustered", "recommend_optimize",
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_MAINTENANCE_ADVISOR = """
@@ -3187,9 +3114,8 @@ def q_scd2_from_changes(spark, sf):
     c = _t(spark, sf, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
-    d = tempfile.mkdtemp(prefix="q_scd2_cdf_")
-    src, dim = os.path.join(d, "src"), os.path.join(d, "dim")
-    try:
+    with scratch_dir("q_scd2_cdf_") as d:
+        src, dim = os.path.join(d, "src"), os.path.join(d, "dim")
         write_version(spark, c.repartitionByRange(4, "c_custkey"), src)
         r1 = scd2_apply_changes(spark, src, dim, ["c_custkey"], "2024-01-01")
         update_version(
@@ -3203,7 +3129,7 @@ def q_scd2_from_changes(spark, sf):
         retired_closed = r3["n_opened"] == 0 and r3["n_closed"] > 0
         from .sinks.versioned import read_version
 
-        out = (
+        return materialize(
             read_version(spark, dim)
             .select(
                 "c_custkey", "c_mktsegment", "c_nationkey",
@@ -3211,11 +3137,7 @@ def q_scd2_from_changes(spark, sf):
             )
             .withColumn("incremental", F.lit(incremental))
             .withColumn("retired_closed", F.lit(retired_closed))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_SCD2_FROM_CHANGES = """
@@ -3268,9 +3190,8 @@ def q_expectations_quarantine(spark, sf):
         ).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
     )
     rules = [not_null("o_orderstatus"), in_range("o_totalprice", 0, 10**9)]
-    d = tempfile.mkdtemp(prefix="q_expectations_")
-    t_main, t_quar = os.path.join(d, "main"), os.path.join(d, "quarantine")
-    try:
+    with scratch_dir("q_expectations_") as d:
+        t_main, t_quar = os.path.join(d, "main"), os.path.join(d, "quarantine")
         r = write_with_expectations(spark, src, rules, t_main, t_quar)
         main = read_version(spark, t_main)
         if r["quarantine_version"] is None:
@@ -3308,15 +3229,11 @@ def q_expectations_quarantine(spark, sf):
                 ).alias("cents"),
             )
 
-        out = (
+        return materialize(
             agg(main, F.lit("valid"))
             .unionByName(agg(quar, F.array_join("_violations", ",")))
             .withColumn("counts_match", F.lit(counts_match))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_EXPECTATIONS_QUARANTINE = """
@@ -3600,9 +3517,8 @@ def q_compaction_roundtrip(spark, sf):
     re-layout, checked by the oracle on the original."""
     from .operators.lake import compact_small_files
 
-    d = tempfile.mkdtemp(prefix="q_compact_")
-    frag, packed = os.path.join(d, "frag"), os.path.join(d, "packed")
-    try:
+    with scratch_dir("q_compact_") as d:
+        frag, packed = os.path.join(d, "frag"), os.path.join(d, "packed")
         _t(spark, sf, "events").repartition(48).write.parquet(frag)
         stats = compact_small_files(
             spark, frag, packed, target_file_bytes=64 * 1024 * 1024,
@@ -3612,7 +3528,7 @@ def q_compaction_roundtrip(spark, sf):
         # empty/tiny input already sits in one file)
         if stats["n_files_in"] > 1:
             assert stats["n_files_out"] < stats["n_files_in"], stats
-        out = (
+        return materialize(
             spark.read.parquet(packed)
             .groupBy("event_type")
             .agg(
@@ -3623,11 +3539,7 @@ def q_compaction_roundtrip(spark, sf):
                 F.min("event_id").alias("min_id"),
                 F.max("event_id").alias("max_id"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_COMPACTION_ROUNDTRIP = """
@@ -3678,12 +3590,11 @@ def q_versioned_pruned_read(spark, sf):
     from .sinks.versioned import read_version_pruned, write_version
 
     e = _t(spark, sf, "events").select("event_id", "event_type", "user_id")
-    d = tempfile.mkdtemp(prefix="q_vpruned_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vpruned_") as d:
+        t = os.path.join(d, "events_v")
         write_version(spark, e.repartitionByRange(8, "event_id"), t)
         df, info = read_version_pruned(spark, t, ranges={"event_id": (100, 199)})
-        out = (
+        return materialize(
             df.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
@@ -3692,11 +3603,7 @@ def q_versioned_pruned_read(spark, sf):
             )
             .withColumn("pruned", F.lit(info["files_read"] < info["files_total"]))
             .select("event_type", "n", "sum_id", "sum_user", "pruned")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_PRUNED_READ = """
@@ -3748,10 +3655,8 @@ def q_streaming_curated_ingest(spark, sf):
     )
     from .streaming import read_documents_stream
 
-    stage = tempfile.mkdtemp(prefix="q_stream_curate_src_")
-    tbl_root = tempfile.mkdtemp(prefix="q_stream_curate_tbl_")
-    tdir = os.path.join(tbl_root, "curated")
-    try:
+    with scratch_dir("q_stream_curate_") as d:
+        stage, tdir = os.path.join(d, "src"), os.path.join(d, "curated")
         _t(spark, sf, "documents").repartitionByRange(4, "doc_id").write.mode(
             "overwrite"
         ).parquet(stage)
@@ -3798,7 +3703,7 @@ def q_streaming_curated_ingest(spark, sf):
         df, info = read_version_pruned(
             spark, tdir, keys={"doc_id": list(range(120))}
         )
-        out = (
+        return materialize(
             df.groupBy("source")
             .agg(
                 F.count("*").alias("n_docs"),
@@ -3809,12 +3714,7 @@ def q_streaming_curated_ingest(spark, sf):
                 "pruned", F.lit(info["files_read"] < info["files_total"])
             )
             .withColumn("chained", F.lit(chained))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(tbl_root, ignore_errors=True)
-    return out
 
 
 def q_streaming_quarantine_ingest(spark, sf):
@@ -3843,12 +3743,11 @@ def q_streaming_quarantine_ingest(spark, sf):
 
     from .streaming import read_documents_stream
 
-    stage = tempfile.mkdtemp(prefix="q_stream_quar_src_")
-    tbl_root = tempfile.mkdtemp(prefix="q_stream_quar_tbl_")
-    t_main = os.path.join(tbl_root, "curated")
-    t_quar = os.path.join(tbl_root, "quarantine")
     metrics: list[dict] = []
-    try:
+    with scratch_dir("q_stream_quar_") as d:
+        stage = os.path.join(d, "src")
+        t_main = os.path.join(d, "curated")
+        t_quar = os.path.join(d, "quarantine")
         _t(spark, sf, "documents").repartitionByRange(4, "doc_id").write.mode(
             "overwrite"
         ).parquet(stage)
@@ -3905,18 +3804,13 @@ def q_streaming_quarantine_ingest(spark, sf):
                 F.sum("doc_id").cast("long").alias("id_sum"),
             )
 
-        out = (
+        return materialize(
             agg(main, F.lit("valid"))
             .unionByName(agg(quar, F.array_join("_violations", ",")))
             .withColumn("multi_batch", F.lit(multi_batch))
             .withColumn("metrics_consistent", F.lit(metrics_consistent))
             .withColumn("labels_intact", F.lit(labels_intact))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(tbl_root, ignore_errors=True)
-    return out
 
 
 def q_streaming_exactly_once_ingest(spark, sf):
@@ -3939,11 +3833,9 @@ def q_streaming_exactly_once_ingest(spark, sf):
     from .sinks.versioned import read_version, versions, write_version
     from .streaming import read_documents_stream
 
-    stage = tempfile.mkdtemp(prefix="q_stream_eo_src_")
-    tbl_root = tempfile.mkdtemp(prefix="q_stream_eo_tbl_")
-    tdir = os.path.join(tbl_root, "ingested")
     pairs: list[tuple[int, int]] = []
-    try:
+    with scratch_dir("q_stream_eo_") as d:
+        stage, tdir = os.path.join(d, "src"), os.path.join(d, "ingested")
         _t(spark, sf, "documents").repartitionByRange(4, "doc_id").write.mode(
             "overwrite"
         ).parquet(stage)
@@ -3979,7 +3871,7 @@ def q_streaming_exactly_once_ingest(spark, sf):
             )
         exactly_once = len(versions(tdir)) == len(pairs)
         replays_skipped = all(a == b for a, b in pairs)
-        out = (
+        return materialize(
             read_version(spark, tdir)
             .groupBy("source")
             .agg(
@@ -3988,12 +3880,7 @@ def q_streaming_exactly_once_ingest(spark, sf):
             )
             .withColumn("exactly_once", F.lit(exactly_once))
             .withColumn("replays_skipped", F.lit(replays_skipped))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(tbl_root, ignore_errors=True)
-    return out
 
 
 SQL_STREAMING_EXACTLY_ONCE_INGEST = """
@@ -4067,9 +3954,8 @@ def q_versioned_index_compaction(spark, sf):
 
     e = _t(spark, sf, "events").select("event_id", "event_type", "user_id")
     geo = (1 << 20, 5)
-    d = tempfile.mkdtemp(prefix="q_vidx_compact_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vidx_compact_") as d:
+        t = os.path.join(d, "events_v")
         write_version(
             spark,
             e.filter(F.col("event_id") % 6 == 0).repartition(2),
@@ -4098,7 +3984,7 @@ def q_versioned_index_compaction(spark, sf):
         )
         probe_keys = list(range(0, 120, 6))  # all ≡ 0 (mod 6): v1's commit
         df, info = read_version_pruned(spark, t, keys={"event_id": probe_keys})
-        out = (
+        return materialize(
             df.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
@@ -4111,11 +3997,7 @@ def q_versioned_index_compaction(spark, sf):
             .withColumn(
                 "pruned", F.lit(info["files_read"] < info["files_total"])
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_INDEX_COMPACTION = """
@@ -4151,9 +4033,8 @@ def q_versioned_tag_read(spark, sf):
     )
 
     e = _t(spark, sf, "events").select("event_id", "event_type", "user_id")
-    d = tempfile.mkdtemp(prefix="q_vtag_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vtag_") as d:
+        t = os.path.join(d, "events_v")
         write_version(spark, e.repartition(2), t)
         tag_version(t, "baseline")
         # two destructive overwrites: latest no longer resembles v1
@@ -4164,7 +4045,7 @@ def q_versioned_tag_read(spark, sf):
         tag_survived = 1 in live
         v2_dropped = 2 not in live and res["versions_dropped"] >= 1
         df = read_version(spark, t, tag="baseline")
-        out = (
+        return materialize(
             df.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
@@ -4173,11 +4054,7 @@ def q_versioned_tag_read(spark, sf):
             )
             .withColumn("tag_survived_vacuum", F.lit(tag_survived))
             .withColumn("v2_dropped", F.lit(v2_dropped))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_TAG_READ = """
@@ -4205,9 +4082,8 @@ def q_versioned_schema_evolution(spark, sf):
     from .sinks.versioned import read_version, write_version
 
     e = _t(spark, sf, "events").select("event_id", "event_type", "user_id")
-    d = tempfile.mkdtemp(prefix="q_vschema_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vschema_") as d:
+        t = os.path.join(d, "events_v")
         write_version(spark, e.filter(F.col("event_id") % 2 == 0), t)
         write_version(
             spark,
@@ -4223,7 +4099,7 @@ def q_versioned_schema_evolution(spark, sf):
             "event_type",
             "user_id",
         ]
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy("event_type")
             .agg(
@@ -4235,11 +4111,7 @@ def q_versioned_schema_evolution(spark, sf):
                 ),
             )
             .withColumn("v1_schema_stable", F.lit(v1_stable))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_SCHEMA_EVOLUTION = """
@@ -4337,9 +4209,8 @@ def q_versioned_branch_publish(spark, sf):
     e = _t(spark, sf, "events").select("event_id", "event_type", "user_id")
     even = e.filter(F.col("event_id") % 2 == 0)
     odd = e.filter(F.col("event_id") % 2 == 1)
-    d = tempfile.mkdtemp(prefix="q_vbranch_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vbranch_") as d:
+        t = os.path.join(d, "events_v")
         write_version(spark, even.repartition(2), t)
         n_even = read_version(spark, t).count()
 
@@ -4372,7 +4243,7 @@ def q_versioned_branch_publish(spark, sf):
             ff_refused = False
         except CommitConflict:
             ff_refused = True
-        out = (
+        return materialize(
             published.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
@@ -4383,11 +4254,7 @@ def q_versioned_branch_publish(spark, sf):
             .withColumn("staged_invisible", F.lit(staged_invisible))
             .withColumn("publish_is_branch_head", F.lit(publish_is_branch_head))
             .withColumn("ff_refused", F.lit(ff_refused))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_BRANCH_PUBLISH = """
@@ -4528,9 +4395,8 @@ def q_versioned_partition_prune(spark, sf):
     )
 
     e = _t(spark, sf, "events").select("event_id", "event_type", "user_id")
-    d = tempfile.mkdtemp(prefix="q_vpart_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vpart_") as d:
+        t = os.path.join(d, "events_v")
         write_version(
             spark,
             e.filter(F.col("event_id") % 2 == 0).repartition("event_type"),
@@ -4555,7 +4421,7 @@ def q_versioned_partition_prune(spark, sf):
             info["files_read"] + info["partition_skipped"]
             == info["files_total"]
         )
-        out = (
+        return materialize(
             df.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
@@ -4564,11 +4430,7 @@ def q_versioned_partition_prune(spark, sf):
             )
             .withColumn("zero_io_prune", F.lit(zero_io_prune))
             .withColumn("exact_map", F.lit(exact_map))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_PARTITION_PRUNE = """
@@ -4598,7 +4460,7 @@ def q_versioned_clone(spark, sf):
     one version with the full row count (divergence never leaks back).
     """
     from .sinks.versioned import (
-        _load_manifest,
+        load_manifest,
         clone_table,
         delete_version,
         read_version,
@@ -4609,15 +4471,14 @@ def q_versioned_clone(spark, sf):
     o = _t(spark, sf, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    d = tempfile.mkdtemp(prefix="q_vclone_")
-    src, dst = os.path.join(d, "src"), os.path.join(d, "dst")
-    try:
+    with scratch_dir("q_vclone_") as d:
+        src, dst = os.path.join(d, "src"), os.path.join(d, "dst")
         write_version(spark, o.repartition(4), src, stats_cols=["o_orderkey"])
         r = clone_table(src, dst)
         clone_zero_copy = (
             r["data_files_written"] == 0
-            and _load_manifest(dst, 1)["files"]
-            == _load_manifest(src, 1)["files"]
+            and load_manifest(dst, 1)["files"]
+            == load_manifest(src, 1)["files"]
         )
         delete_version(spark, dst, F.col("o_orderkey") % 3 == 0)
         write_version(
@@ -4646,17 +4507,13 @@ def q_versioned_clone(spark, sf):
                 ).alias("cents"),
             )
 
-        out = (
+        return materialize(
             agg(read_version(spark, src), "src")
             .unionByName(agg(read_version(spark, dst), "clone"))
             .select("snapshot", "o_orderstatus", "n", "key_sum", "cents")
             .withColumn("clone_zero_copy", F.lit(clone_zero_copy))
             .withColumn("src_isolated", F.lit(src_isolated))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_CLONE = """
@@ -4696,8 +4553,8 @@ def q_table_fsck(spark, sf):
     ``files_exist`` specifically). The aggregate reads the audited
     head, so the audit's subject is also value-hashed."""
     from .sinks.versioned import (
-        _load_manifest,
         delete_version,
+        load_manifest,
         verify_table,
         write_version,
     )
@@ -4705,9 +4562,8 @@ def q_table_fsck(spark, sf):
     o = _t(spark, sf, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    d = tempfile.mkdtemp(prefix="q_fsck_")
-    t1, t2 = os.path.join(d, "clean"), os.path.join(d, "broken")
-    try:
+    with scratch_dir("q_fsck_") as d:
+        t1, t2 = os.path.join(d, "clean"), os.path.join(d, "broken")
         write_version(
             spark,
             o.filter(F.col("o_orderkey") % 2 == 0).repartition(
@@ -4735,7 +4591,7 @@ def q_table_fsck(spark, sf):
         n_checks = len(rep["checks"])
         n = _t(spark, sf, "nation").select("n_nationkey", "n_name")
         write_version(spark, n.repartition(2), t2)
-        m2 = _load_manifest(t2, None)
+        m2 = load_manifest(t2, None)
         if m2["files"]:
             os.remove(m2["files"][0])
         rep2 = verify_table(spark, t2, deep=True)
@@ -4744,7 +4600,7 @@ def q_table_fsck(spark, sf):
         )
         from .sinks.versioned import read_version
 
-        out = (
+        return materialize(
             read_version(spark, t1)
             .groupBy("o_orderstatus")
             .agg(
@@ -4757,11 +4613,7 @@ def q_table_fsck(spark, sf):
             .withColumn("clean_ok", F.lit(clean_ok))
             .withColumn("n_checks", F.lit(n_checks).cast("int"))
             .withColumn("corruption_detected", F.lit(corruption_detected))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_TABLE_FSCK = """
@@ -4807,9 +4659,8 @@ def q_versioned_concurrent(spark, sf):
     o = _t(spark, sf, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    d = tempfile.mkdtemp(prefix="q_vconc_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_vconc_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(
             spark, o.filter(F.col("o_orderkey") % 2 == 0).repartition(2), t
         )
@@ -4851,7 +4702,7 @@ def q_versioned_concurrent(spark, sf):
             len(table_versions(t)) == 3
             and read_version(spark, t).count() == n_all
         )
-        out = (
+        return materialize(
             head.groupBy("o_orderstatus")
             .agg(
                 F.count("*").alias("n"),
@@ -4863,11 +4714,7 @@ def q_versioned_concurrent(spark, sf):
             .withColumn("both_landed", F.lit(both_landed))
             .withColumn("stale_cow_refused", F.lit(stale_cow_refused))
             .withColumn("no_partial", F.lit(no_partial))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_CONCURRENT = """
@@ -4898,8 +4745,8 @@ def q_versioned_scoped_dml(spark, sf):
     rewrote zero files. The aggregate reads the final head, so a scope
     that skipped a file it shouldn't have fails the value hash."""
     from .sinks.versioned import (
-        _load_manifest,
         delete_version,
+        load_manifest,
         read_version,
         update_version,
         write_version,
@@ -4908,21 +4755,20 @@ def q_versioned_scoped_dml(spark, sf):
     e = _t(spark, sf, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    d = tempfile.mkdtemp(prefix="q_vscope_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vscope_") as d:
+        t = os.path.join(d, "events_v")
         write_version(
             spark,
             e.repartition("event_type"),
             t,
             partition_by=["event_type"],
         )
-        n1 = len(_load_manifest(t, 1)["files"])
+        n1 = len(load_manifest(t, 1)["files"])
         r1 = delete_version(
             spark, t, partition_scope={"event_type": ["view"]}
         )
         delete_scoped = 0 < r1["files_scanned"] < n1
-        n2 = len(_load_manifest(t, None)["files"])
+        n2 = len(load_manifest(t, None)["files"])
         r2 = update_version(
             spark,
             t,
@@ -4933,7 +4779,7 @@ def q_versioned_scoped_dml(spark, sf):
         )
         update_scoped = 0 < r2["files_scanned"] < n2
         mor_zero_rewrite = r2["files_rewritten"] == 0
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy("event_type")
             .agg(
@@ -4945,11 +4791,7 @@ def q_versioned_scoped_dml(spark, sf):
             .withColumn("delete_scoped", F.lit(delete_scoped))
             .withColumn("update_scoped", F.lit(update_scoped))
             .withColumn("mor_zero_rewrite", F.lit(mor_zero_rewrite))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_SCOPED_DML = """
@@ -5001,9 +4843,8 @@ def q_table_constraints(spark, sf):
     o = _t(spark, sf, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    d = tempfile.mkdtemp(prefix="q_tcc_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_tcc_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(
             spark,
             o.filter(F.col("o_orderkey") % 2 == 0).repartition(2),
@@ -5054,7 +4895,7 @@ def q_table_constraints(spark, sf):
             grown_enforced = True
         rep = verify_table(spark, t, deep=True)
         fsck_holds = rep["ok"] and rep["checks"]["constraints_hold"]["ok"]
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy("o_orderstatus")
             .agg(
@@ -5069,11 +4910,7 @@ def q_table_constraints(spark, sf):
             .withColumn("bad_add_refused", F.lit(bad_add_refused))
             .withColumn("grown_enforced", F.lit(grown_enforced))
             .withColumn("fsck_holds", F.lit(fsck_holds))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_TABLE_CONSTRAINTS = """
@@ -5106,7 +4943,7 @@ def q_versioned_replace_where(spark, sf):
     aggregate reads the final head: original non-click rows ∪ the
     doubled click rows."""
     from .sinks.versioned import (
-        _load_manifest,
+        load_manifest,
         overwrite_partitions,
         read_version,
         write_version,
@@ -5115,16 +4952,15 @@ def q_versioned_replace_where(spark, sf):
     e = _t(spark, sf, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    d = tempfile.mkdtemp(prefix="q_vrw_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vrw_") as d:
+        t = os.path.join(d, "events_v")
         write_version(
             spark,
             e.repartition("event_type"),
             t,
             partition_by=["event_type"],
         )
-        m1 = _load_manifest(t, 1)
+        m1 = load_manifest(t, 1)
         backfill = (
             e.filter(F.col("event_type") == "click")
             .withColumn("value", F.col("value") * 2)
@@ -5136,7 +4972,7 @@ def q_versioned_replace_where(spark, sf):
             and r["files_rewritten"] == 0
             and r["files_replaced"] + r["files_carried"] == len(m1["files"])
         )
-        m2 = _load_manifest(t, 2)
+        m2 = load_manifest(t, 2)
         click_files = {
             f
             for f in m1["files"]
@@ -5155,7 +4991,7 @@ def q_versioned_replace_where(spark, sf):
             out_of_scope_refused = False
         except ValueError:
             out_of_scope_refused = True
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy("event_type")
             .agg(
@@ -5167,11 +5003,7 @@ def q_versioned_replace_where(spark, sf):
             .withColumn("swap_scoped", F.lit(swap_scoped))
             .withColumn("carried_identity", F.lit(carried_identity))
             .withColumn("out_of_scope_refused", F.lit(out_of_scope_refused))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_REPLACE_WHERE = """
@@ -5208,7 +5040,7 @@ def q_versioned_generated_partition(spark, sf):
     pruned minimum-date slice; the oracle recomputes the same date
     arithmetic from raw ts."""
     from .sinks.versioned import (
-        _load_manifest,
+        load_manifest,
         read_version_pruned,
         write_version,
     )
@@ -5217,9 +5049,8 @@ def q_versioned_generated_partition(spark, sf):
     e = _t(spark, sf, "events").select(
         "event_id", "ts", "event_type", "user_id"
     )
-    d = tempfile.mkdtemp(prefix="q_vgen_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_vgen_") as d:
+        t = os.path.join(d, "events_v")
         write_version(
             spark,
             e.filter(F.col("event_id") % 2 == 0).repartition(
@@ -5237,7 +5068,7 @@ def q_versioned_generated_partition(spark, sf):
             t,
             mode="append",  # derivation + layout both inherit
         )
-        m = _load_manifest(t, 2)
+        m = load_manifest(t, 2)
         derived_inherited = m.get("generated_cols") == GEN and set(
             m["partitions"]
         ) == {os.path.realpath(f) for f in m["files"]}
@@ -5260,7 +5091,7 @@ def q_versioned_generated_partition(spark, sf):
             mismatch_refused = False
         except ValueError:
             mismatch_refused = True
-        out = (
+        return materialize(
             df.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
@@ -5270,11 +5101,7 @@ def q_versioned_generated_partition(spark, sf):
             .withColumn("derived_inherited", F.lit(derived_inherited))
             .withColumn("zero_io_prune", F.lit(zero_io_prune))
             .withColumn("mismatch_refused", F.lit(mismatch_refused))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_GENERATED_PARTITION = """
@@ -5314,9 +5141,8 @@ def q_rollup_from_changes(spark, sf):
         ("min", "value", "min_value"),
         ("max", "value", "max_value"),
     ]
-    d = tempfile.mkdtemp(prefix="q_rollchg_")
-    t, roll = os.path.join(d, "events_v"), os.path.join(d, "rollup")
-    try:
+    with scratch_dir("q_rollchg_") as d:
+        t, roll = os.path.join(d, "events_v"), os.path.join(d, "rollup")
         cursor = 0
         scoped = []
         for mod in (0, 1, 2):
@@ -5339,18 +5165,14 @@ def q_rollup_from_changes(spark, sf):
                 == info["files_after"] - info["files_before"]
             )
             cursor = v
-        out = (
+        return materialize(
             spark.read.parquet(roll)
             .select(
                 "bucket_start", "event_type", "n_events",
                 "min_value", "max_value",
             )
             .withColumn("incremental_scoped", F.lit(all(scoped)))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_ROLLUP_FROM_CHANGES = """
@@ -5372,16 +5194,15 @@ def q_table_history(spark, sf):
     row count from the source table, so a bookkeeping drift anywhere in
     the commit paths fails the hash."""
     from .sinks.versioned import (
-        _load_manifest,
         delete_version,
+        load_manifest,
         versions as table_versions,
         write_version,
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus")
-    d = tempfile.mkdtemp(prefix="q_thist_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_thist_") as d:
+        t = os.path.join(d, "orders_v")
         write_version(
             spark, o.filter(F.col("o_orderkey") % 2 == 0).repartition(2), t
         )
@@ -5398,16 +5219,15 @@ def q_table_history(spark, sf):
                 h["version"],
                 h["mode"],
                 h["n_rows"],
-                bool(_load_manifest(t, h["version"]).get("dv_files")),
+                bool(load_manifest(t, h["version"]).get("dv_files")),
             )
             for h in table_versions(t)
         ]
-        out = spark.createDataFrame(
-            rows, "version int, mode string, n_rows long, has_dv boolean"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        return materialize(
+            spark.createDataFrame(
+                rows, "version int, mode string, n_rows long, has_dv boolean"
+            )
+        )
 
 
 SQL_TABLE_HISTORY = """
@@ -5466,9 +5286,8 @@ def q_wap_drift_gate(spark, sf):
         .withColumn("value_cents", F.col("value_cents") * 5)
         .withColumn("event_type", F.lit("error"))
     )
-    d = tempfile.mkdtemp(prefix="q_wap_drift_")
-    t = os.path.join(d, "events_v")
-    try:
+    with scratch_dir("q_wap_drift_") as d:
+        t = os.path.join(d, "events_v")
         write_version(spark, base.repartition(2), t)
 
         def stage_and_audit(name, inc):
@@ -5488,7 +5307,7 @@ def q_wap_drift_gate(spark, sf):
 
         tv_good = stage_and_audit("ingest_good", inc_good)
         tv_bad = stage_and_audit("ingest_bad", inc_bad)
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy("event_type")
             .agg(
@@ -5498,11 +5317,7 @@ def q_wap_drift_gate(spark, sf):
             )
             .withColumn("tv_good", F.lit(int(tv_good)).cast("long"))
             .withColumn("tv_bad", F.lit(int(tv_bad)).cast("long"))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 def _sql_tv_max(ref_where: str, cur_select: str, n_bins: int) -> str:
@@ -5659,11 +5474,10 @@ def q_streaming_versioned_changes(spark, sf):
     from .sinks.versioned import delete_version, write_version
     from .sources.versioned_stream import read_changes_stream
 
-    d = tempfile.mkdtemp(prefix="q_vstream_")
-    t = os.path.join(d, "orders_v")
-    sink = os.path.join(d, "changes_out")
-    ckpt = os.path.join(d, "ckpt")
-    try:
+    with scratch_dir("q_vstream_") as d:
+        t = os.path.join(d, "orders_v")
+        sink = os.path.join(d, "changes_out")
+        ckpt = os.path.join(d, "ckpt")
         o = _t(spark, sf, "orders").select("o_orderkey", "o_custkey")
         write_version(spark, o.filter(F.col("o_orderkey") % 2 == 0).repartition(2), t)
         write_version(
@@ -5687,7 +5501,7 @@ def q_streaming_versioned_changes(spark, sf):
         finally:
             q.stop()
             q.awaitTermination()
-        out = (
+        return materialize(
             spark.read.parquet(sink)
             .groupBy(
                 F.col("_commit_version").alias("commit_version"),
@@ -5698,11 +5512,7 @@ def q_streaming_versioned_changes(spark, sf):
                 F.sum("o_orderkey").alias("sum_key"),
                 F.countDistinct("o_custkey").alias("n_cust"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_STREAMING_VERSIONED_CHANGES = """
@@ -5746,9 +5556,8 @@ def q_versioned_changes_recorded(spark, sf):
         write_version,
     )
 
-    d = tempfile.mkdtemp(prefix="q_cfbatch_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_cfbatch_") as d:
+        t = os.path.join(d, "orders_v")
         o = _t(spark, sf, "orders").select("o_orderkey", "o_custkey")
         write_version(
             spark, o.filter(F.col("o_orderkey") % 2 == 0).repartition(2), t
@@ -5767,23 +5576,21 @@ def q_versioned_changes_recorded(spark, sf):
 
         info: dict = {}
         feed = read_changes(spark, t, 1, 4, info=info)
-        agg = feed.groupBy("_change_type").agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_orderkey").alias("key_sum"),
-            F.sum("o_custkey").alias("cust_sum"),
-        ).localCheckpoint(eager=True)
+        agg = materialize(
+            feed.groupBy("_change_type").agg(
+                F.count("*").alias("n_rows"),
+                F.sum("o_orderkey").alias("key_sum"),
+                F.sum("o_custkey").alias("cust_sum"),
+            )
+        )
         recorded_fast_path = (
             info.get("change_files_used", 0) >= 2
             and info["files_scanned_before"] == 0
             and info["files_scanned_after"] == 0
         )
-        out = (
+        return materialize(
             agg.withColumn("recorded_fast_path", F.lit(recorded_fast_path))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_CHANGES_RECORDED = """
@@ -5825,9 +5632,8 @@ def q_versioned_optimize_incremental(spark, sf):
         write_version,
     )
 
-    d = tempfile.mkdtemp(prefix="q_incopt_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_incopt_") as d:
+        t = os.path.join(d, "orders_v")
         o = _t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
         write_version(
             spark,
@@ -5857,7 +5663,7 @@ def q_versioned_optimize_incremental(spark, sf):
             info_after["files_read"] < info_before["files_read"]
             and info_after["footer_files"] == 0
         )
-        out = (
+        return materialize(
             df_after.agg(
                 F.count("*").alias("n_rows"),
                 F.sum("o_orderkey").alias("key_sum"),
@@ -5868,11 +5674,7 @@ def q_versioned_optimize_incremental(spark, sf):
             .withColumn("partial", F.lit(partial))
             .withColumn("layout_improved", F.lit(layout_improved))
             .withColumn("probe_tightened", F.lit(probe_tightened))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_OPTIMIZE_INCREMENTAL = """
@@ -5902,17 +5704,16 @@ def q_versioned_column_mapping(spark, sf):
     field ids); ``time_travel_names`` — v1 still reads under its own
     original column names while the head reads under the new ones."""
     from .sinks.versioned import (
-        _load_manifest,
         delete_version,
         drop_column,
+        load_manifest,
         read_version,
         rename_column,
         write_version,
     )
 
-    d = tempfile.mkdtemp(prefix="q_colmap_")
-    t = os.path.join(d, "orders_v")
-    try:
+    with scratch_dir("q_colmap_") as d:
+        t = os.path.join(d, "orders_v")
         o = _t(spark, sf, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -5931,7 +5732,7 @@ def q_versioned_column_mapping(spark, sf):
         )
         delete_version(spark, t, F.col("o_orderkey") % 7 == 0)
 
-        m1, m2, m3 = (_load_manifest(t, v) for v in (1, 2, 3))
+        m1, m2, m3 = (load_manifest(t, v) for v in (1, 2, 3))
         metadata_only = (
             m2["files"] == m1["files"] and m3["files"] == m1["files"]
         )
@@ -5939,7 +5740,7 @@ def q_versioned_column_mapping(spark, sf):
             "o_orderkey", "o_custkey", "o_totalprice"
         ] and read_version(spark, t).columns == ["o_orderkey", "price"]
 
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy((F.col("o_orderkey") % 5).alias("bucket"))
             .agg(
@@ -5951,11 +5752,7 @@ def q_versioned_column_mapping(spark, sf):
             )
             .withColumn("metadata_only", F.lit(metadata_only))
             .withColumn("time_travel_names", F.lit(time_travel_names))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_COLUMN_MAPPING = """
@@ -6003,11 +5800,10 @@ def q_streaming_cdf_rewrites(spark, sf):
         read_changes_stream,
     )
 
-    d = tempfile.mkdtemp(prefix="q_cfstream_")
-    t = os.path.join(d, "orders_v")
-    sink = os.path.join(d, "changes_out")
-    ckpt = os.path.join(d, "ckpt")
-    try:
+    with scratch_dir("q_cfstream_") as d:
+        t = os.path.join(d, "orders_v")
+        sink = os.path.join(d, "changes_out")
+        ckpt = os.path.join(d, "ckpt")
         o = _t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
         evens = o.filter(F.col("o_orderkey") % 2 == 0)
         write_version(
@@ -6055,7 +5851,7 @@ def q_streaming_cdf_rewrites(spark, sf):
         finally:
             q.stop()
             q.awaitTermination()
-        out = (
+        return materialize(
             spark.read.parquet(sink)
             .groupBy(
                 F.col("_commit_version").alias("commit_version"),
@@ -6072,11 +5868,7 @@ def q_streaming_cdf_rewrites(spark, sf):
                 "carried_never_scanned", F.lit(carried_never_scanned)
             )
             .withColumn("optimize_zero_tasks", F.lit(optimize_zero_tasks))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_STREAMING_CDF_REWRITES = """
@@ -6145,11 +5937,10 @@ def q_streaming_merge_cdf(spark, sf):
         read_changes_stream,
     )
 
-    d = tempfile.mkdtemp(prefix="q_mergecdf_")
-    t = os.path.join(d, "orders_v")
-    sink = os.path.join(d, "changes_out")
-    ckpt = os.path.join(d, "ckpt")
-    try:
+    with scratch_dir("q_mergecdf_") as d:
+        t = os.path.join(d, "orders_v")
+        sink = os.path.join(d, "changes_out")
+        ckpt = os.path.join(d, "ckpt")
         o = _t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
         evens = o.filter(F.col("o_orderkey") % 2 == 0)
         res10 = F.col("o_orderkey") % 10
@@ -6212,7 +6003,7 @@ def q_streaming_merge_cdf(spark, sf):
             ).count()
             == 0
         )
-        out = (
+        return materialize(
             drained.groupBy(
                 F.col("_commit_version").alias("commit_version"),
                 F.col("_change_type").alias("change_type"),
@@ -6231,11 +6022,7 @@ def q_streaming_merge_cdf(spark, sf):
             .withColumn(
                 "identity_rows_net_out", F.lit(identity_rows_net_out)
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_STREAMING_MERGE_CDF = """
@@ -6290,16 +6077,15 @@ def q_versioned_nested_mapping(spark, sf):
     aggregate from orders ⋈ lineitem, so a mis-projected nested byte
     anywhere fails the value hash."""
     from .sinks.versioned import (
-        _load_manifest,
         drop_column,
+        load_manifest,
         read_version,
         rename_column,
         write_version,
     )
 
-    d = tempfile.mkdtemp(prefix="q_nestmap_")
-    t = os.path.join(d, "orders_nested")
-    try:
+    with scratch_dir("q_nestmap_") as d:
+        t = os.path.join(d, "orders_nested")
         o = _t(spark, sf, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -6352,10 +6138,10 @@ def q_versioned_nested_mapping(spark, sf):
             spark, shaped(odds, "part_id", False).coalesce(2), t,
             mode="append",
         )  # v4
-        f1 = _load_manifest(t, 1)["files"]
+        f1 = load_manifest(t, 1)["files"]
         metadata_only = (
-            _load_manifest(t, v2)["files"] == f1
-            and _load_manifest(t, v3)["files"] == f1
+            load_manifest(t, v2)["files"] == f1
+            and load_manifest(t, v3)["files"] == f1
         )
         old = read_version(spark, t, version=1)
         head = read_version(spark, t)
@@ -6379,7 +6165,7 @@ def q_versioned_nested_mapping(spark, sf):
                 F.floor(F.col("item.qty") * 100 + 0.5).cast("long")
             ).alias("qty_cents"),
         )
-        out = (
+        return materialize(
             a1.join(a2, "grp", "left")
             .select(
                 "grp",
@@ -6391,11 +6177,7 @@ def q_versioned_nested_mapping(spark, sf):
             )
             .withColumn("metadata_only", F.lit(metadata_only))
             .withColumn("time_travel_names", F.lit(time_travel_names))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_NESTED_MAPPING = """
@@ -6454,9 +6236,8 @@ def q_versioned_rename_stats(spark, sf):
         write_version,
     )
 
-    d = tempfile.mkdtemp(prefix="q_renstats_")
-    t = os.path.join(d, "orders_ren")
-    try:
+    with scratch_dir("q_renstats_") as d:
+        t = os.path.join(d, "orders_ren")
         o = _t(spark, sf, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -6515,7 +6296,7 @@ def q_versioned_rename_stats(spark, sf):
                     F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
                 ).alias("cents"),
             )
-        out = (
+        return materialize(
             summarize(r_df, "range")
             .unionByName(summarize(b_df, "bloom"))
             .withColumn(
@@ -6524,11 +6305,7 @@ def q_versioned_rename_stats(spark, sf):
             )
             .withColumn("bloom_pruned", F.lit(bloom_pruned))
             .withColumn("optimize_partial", F.lit(optimize_partial))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_RENAME_STATS = """
@@ -6588,9 +6365,8 @@ def q_versioned_partition_rename(spark, sf):
         write_version,
     )
 
-    d = tempfile.mkdtemp(prefix="q_partren_")
-    t = os.path.join(d, "orders_part")
-    try:
+    with scratch_dir("q_partren_") as d:
+        t = os.path.join(d, "orders_part")
         o = _t(spark, sf, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
         )
@@ -6641,7 +6417,7 @@ def q_versioned_partition_rename(spark, sf):
             spark, t, None, partition_scope={"status": ["P"]}
         )  # v5 — partition-DML form under the new name
         delete_scanned_scope_only = res["files_scanned"] < m_files
-        out = (
+        return materialize(
             read_version(spark, t)
             .groupBy("status")
             .agg(
@@ -6661,11 +6437,7 @@ def q_versioned_partition_rename(spark, sf):
                 "delete_scanned_scope_only",
                 F.lit(delete_scanned_scope_only),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_PARTITION_RENAME = """
@@ -6718,9 +6490,8 @@ def q_versioned_nested_stats(spark, sf):
         write_version,
     )
 
-    d = tempfile.mkdtemp(prefix="q_neststats_")
-    t = os.path.join(d, "orders_nested")
-    try:
+    with scratch_dir("q_neststats_") as d:
+        t = os.path.join(d, "orders_nested")
         o = _t(spark, sf, "orders").select(
             "o_orderkey",
             F.struct(
@@ -6763,7 +6534,7 @@ def q_versioned_nested_stats(spark, sf):
             p_info["files_read"] < p_info["files_total"]
             and p_info["footer_files"] == 0
         )
-        out = (
+        return materialize(
             p_df.agg(
                 F.count("*").alias("n_rows"),
                 F.sum("o_orderkey").alias("sum_key"),
@@ -6777,11 +6548,7 @@ def q_versioned_nested_stats(spark, sf):
                 F.lit(range_pruned_zero_footers),
             )
             .withColumn("optimize_partial", F.lit(optimize_partial))
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 SQL_VERSIONED_NESTED_STATS = """

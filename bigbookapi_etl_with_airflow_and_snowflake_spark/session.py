@@ -12,6 +12,8 @@ chosen so the same code runs unchanged on a multi-executor cluster:
 - Arrow enabled for any pandas interchange (vectorized UDF path)
 - generated-code cache sized to the workloads' working set, so a query
   that runs again reuses its compiled classes (below)
+- one materialization tier per session (:func:`materialize`), chosen by
+  Spark's own ``spark.checkpoint.dir``
 
 Codegen cache. Spark caches each generated Java source's compiled
 class in one JVM-wide LRU of ``spark.sql.codegen.cache.maxEntries``
@@ -36,7 +38,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -50,6 +52,14 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]`` so tests and
     bench share one code path; on a cluster, pass ``master=None`` with
     ``spark.master`` preset in the environment, or an explicit URL.
+
+    Every eager materialization point (:func:`materialize`) uses the
+    fast executor-local tier unless the session has a checkpoint
+    directory. To opt in to the reliable, fault-tolerant tier, pass
+    ``extra_conf={"spark.checkpoint.dir": path}`` (a shared filesystem
+    such as HDFS or S3 on a cluster) when this call creates the
+    session. The setting is session-wide: every operator and registry
+    entry of the session then checkpoints reliably.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -80,3 +90,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df`` now and return it with its lineage cut, so every
+    downstream branch reuses ONE computed table instead of re-running
+    the plan above it, and so a temp directory the plan read can be
+    deleted once this returns.
+
+    The tier comes from the session. With no checkpoint directory (the
+    default) it is ``localCheckpoint(eager=True)``: fast executor-local
+    block storage, but NOT fault-tolerant; an executor lost mid-query
+    fails the job. When ``sparkContext.getCheckpointDir()`` is set (by
+    ``spark.checkpoint.dir``, see :func:`get_spark`) it is the reliable
+    ``checkpoint(eager=True)``, written under that directory, which
+    survives executor loss. Both are eager: **building a plan that
+    contains a materialization point launches Spark jobs at once.**
+    That is the documented contract of every operator and registry
+    entry that calls this.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

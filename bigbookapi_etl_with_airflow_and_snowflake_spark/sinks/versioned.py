@@ -49,6 +49,7 @@ __all__ = [
     "read_changes",
     "read_version",
     "read_version_pruned",
+    "load_manifest",
     "prune_manifest_files",
     "write_bloom_index",
     "maintain_bloom_index",
@@ -343,7 +344,7 @@ def create_branch(table_dir: str, name: str, version: int | None = None) -> int:
             f"branch name must match [A-Za-z0-9][A-Za-z0-9._-]{{0,63}}, "
             f"got {name!r}"
         )
-    m = _load_manifest(table_dir, version)
+    m = load_manifest(table_dir, version)
     root = _manifest_root(table_dir, name)
     os.makedirs(root, exist_ok=True)
     manifest = {
@@ -387,8 +388,8 @@ def branches(table_dir: str) -> dict[str, dict]:
         vs = _version_numbers(table_dir, nm)
         if not vs:
             continue
-        fork = _load_manifest(table_dir, vs[0], nm)
-        head = fork if len(vs) == 1 else _load_manifest(table_dir, vs[-1], nm)
+        fork = load_manifest(table_dir, vs[0], nm)
+        head = fork if len(vs) == 1 else load_manifest(table_dir, vs[-1], nm)
         out[nm] = {
             "head": vs[-1],
             "forked_from": fork.get("forked_from"),
@@ -418,8 +419,8 @@ def publish_branch(table_dir: str, name: str) -> int:
         raise ValueError(
             f"branch {name!r} not found (have {sorted(branches(table_dir))})"
         )
-    head = _load_manifest(table_dir, bvs[-1], name)
-    fork = _load_manifest(table_dir, bvs[0], name)
+    head = load_manifest(table_dir, bvs[-1], name)
+    fork = load_manifest(table_dir, bvs[0], name)
     base, fork_id = fork["forked_from"], fork.get("fork_id")
     pub = _published_path(table_dir, name)
     if os.path.exists(pub):
@@ -482,13 +483,13 @@ def delete_branch(table_dir: str, name: str) -> dict:
         )
     mine: set[str] = set()
     for v in _version_numbers(table_dir, name):
-        m = _load_manifest(table_dir, v, name)
+        m = load_manifest(table_dir, v, name)
         mine.update(m["files"])
         mine.update(m.get("dv_files") or [])
         mine.update(m.get("change_files") or [])
     others: set[str] = set()
     for v in _version_numbers(table_dir):
-        m = _load_manifest(table_dir, v)
+        m = load_manifest(table_dir, v)
         others.update(m["files"])
         others.update(m.get("dv_files") or [])
         others.update(m.get("change_files") or [])
@@ -525,16 +526,23 @@ def _branch_referenced(
             ):
                 continue
             for v in _version_numbers(table_dir, nm):
-                m = _load_manifest(table_dir, v, nm)
+                m = load_manifest(table_dir, v, nm)
                 files.update(m["files"])
                 dvs.update(m.get("dv_files") or [])
                 changes.update(m.get("change_files") or [])
     return files, dvs, changes
 
 
-def _load_manifest(
+def load_manifest(
     table_dir: str, version: int | None, branch: str | None = None
 ) -> dict:
+    """The manifest of ``version`` (the head when None) on ``branch``
+    (the main chain when None): the JSON dict its commit wrote, with
+    ``version``, ``committed_at``, ``mode``, ``files`` and ``n_rows``
+    plus whatever else that commit recorded (``dv_files``,
+    ``change_files``, ``stats``, ``column_mapping``, ``txn``, ...).
+    Raises ``ValueError`` if the table has no commits or the version
+    does not exist."""
     where = f"{table_dir!r}" + (f" branch {branch!r}" if branch else "")
     vs = _version_numbers(table_dir, branch)
     if not vs:
@@ -1210,7 +1218,7 @@ def _last_txn_version(
     the retention window longer than the longest possible replay gap
     (the same caveat Delta documents for its txn retention)."""
     for v in reversed(_version_numbers(table_dir, branch)):
-        t = _load_manifest(table_dir, v, branch).get("txn")
+        t = load_manifest(table_dir, v, branch).get("txn")
         if t and t.get("app") == app:
             return int(t["version"])
     return None
@@ -1724,7 +1732,7 @@ def write_version(
     nums_g = _version_numbers(table_dir, branch)
     recorded_gen = dict(
         (
-            _load_manifest(table_dir, nums_g[-1], branch).get(
+            load_manifest(table_dir, nums_g[-1], branch).get(
                 "generated_cols"
             )
             if nums_g
@@ -1768,7 +1776,7 @@ def write_version(
         # data stages; build() re-derives against the commit-time prior
         nums = _version_numbers(table_dir, branch)
         if nums:
-            prior_schema = _load_manifest(table_dir, nums[-1], branch).get(
+            prior_schema = load_manifest(table_dir, nums[-1], branch).get(
                 "schema"
             )
             if prior_schema is not None:
@@ -1778,7 +1786,7 @@ def write_version(
     # appends may not silently re-partition the table
     eff_part_by = list(partition_by) if partition_by else []
     nums_pc = _version_numbers(table_dir, branch)
-    pc_m = _load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
+    pc_m = load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
     recorded_pc = list((pc_m or {}).get("partition_cols") or [])
     # the recorded layout (partition_cols + per-file value maps) is
     # keyed by frozen PHYSICAL names — rename_column never touches it;
@@ -1807,7 +1815,7 @@ def write_version(
     # overwrites must not silently shed the table's invariants)
     recorded_cc = dict(
         (
-            _load_manifest(table_dir, nums_pc[-1], branch).get("constraints")
+            load_manifest(table_dir, nums_pc[-1], branch).get("constraints")
             if nums_pc
             else None
         )
@@ -1828,7 +1836,7 @@ def write_version(
     # extend it (new columns get fresh field ids), overwrites rebuild
     # it carrying ids for persisting logical names; staged data files
     # store PHYSICAL names either way
-    head_m = _load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
+    head_m = load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
     if record_changes and mode == "overwrite" and head_m is not None:
         # pin the base: the recorded delete set is computed against it,
         # so a racing commit must CommitConflict, not rebase — and a
@@ -1964,7 +1972,7 @@ def write_version(
         nums_sc = _version_numbers(table_dir, branch)
         if nums_sc:
             eff_stats_cols = list(
-                _load_manifest(table_dir, nums_sc[-1], branch).get(
+                load_manifest(table_dir, nums_sc[-1], branch).get(
                     "stats_cols"
                 )
                 or []
@@ -2094,7 +2102,7 @@ def write_version(
             for rv in _version_numbers(table_dir, branch):
                 if rv <= head0:
                     continue
-                t = _load_manifest(table_dir, rv, branch).get("txn")
+                t = load_manifest(table_dir, rv, branch).get("txn")
                 if (
                     t
                     and t.get("app") == txn_app
@@ -2219,7 +2227,7 @@ def _commit(
     os.makedirs(_manifest_root(table_dir, branch), exist_ok=True)
     while True:
         nums = _version_numbers(table_dir, branch)
-        prior = _load_manifest(table_dir, nums[-1], branch) if nums else None
+        prior = load_manifest(table_dir, nums[-1], branch) if nums else None
         body = build(prior)
         next_v = (prior["version"] + 1) if prior else 1
         manifest = {"version": next_v, "committed_at": time.time(), **body}
@@ -2417,7 +2425,7 @@ def merge_version(
             index_geometry=index_geometry, index_max_chain=index_max_chain,
             record_changes=change_files,
         )
-        m = _load_manifest(table_dir, v)
+        m = load_manifest(table_dir, v)
         result = {
             "version": v,
             "files_rewritten": 0,
@@ -2427,7 +2435,7 @@ def merge_version(
         if change_files:
             result["change_files_added"] = len(m.get("change_files") or [])
         return result
-    base = _load_manifest(table_dir, base_version)
+    base = load_manifest(table_dir, base_version)
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     # schema-on-write (same gate as write_version's append): refuse a
     # divergent increment unless merge_schema=True, then conform BOTH
@@ -2675,7 +2683,7 @@ def delete_version(
     if mode not in ("cow", "mor"):
         raise ValueError(f"mode must be cow|mor, got {mode!r}")
     cond = _scoped_cond(predicate, partition_scope)
-    base = _load_manifest(table_dir, base_version)
+    base = load_manifest(table_dir, base_version)
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     cand = _partition_candidates(base, partition_scope)
     scan_files = base["files"] if cand is None else cand
@@ -2869,7 +2877,7 @@ def overwrite_partitions(
     ``"change_files_added"`` when ``change_files=True``)."""
     from pyspark.sql import functions as F
 
-    base = _load_manifest(table_dir, base_version)
+    base = load_manifest(table_dir, base_version)
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     pcols = list(base.get("partition_cols") or [])
     if not pcols:
@@ -3332,7 +3340,7 @@ def update_version(
     if not assignments:
         raise ValueError("update_version: empty assignments")
     cond = _scoped_cond(predicate, partition_scope)
-    base = _load_manifest(table_dir, base_version)
+    base = load_manifest(table_dir, base_version)
     _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     cand = _partition_candidates(base, partition_scope)
     scan_files = base["files"] if cand is None else cand
@@ -3882,7 +3890,7 @@ def optimize_table(
     "bytes_before", "dv_files_folded", "n_rows"}``."""
     from pyspark.sql import functions as F
 
-    m = _load_manifest(table_dir, None)
+    m = load_manifest(table_dir, None)
     _refuse_repeated_leaf_m(m, index_cols, "index_cols")
     if not m["files"] or not m["n_rows"]:
         raise ValueError("optimize on an empty snapshot — nothing to pack")
@@ -3902,7 +3910,7 @@ def optimize_table(
         spark, live, table_dir, mode="overwrite", index_cols=index_cols,
         change_files=[] if change_files else None,
     )
-    m2 = _load_manifest(table_dir, v)
+    m2 = load_manifest(table_dir, v)
     return {
         "version": v,
         "files_before": len(m["files"]),
@@ -4082,7 +4090,7 @@ def layout_report(table_dir: str, col: str, version: int | None = None) -> dict:
 
     This is what tells a maintenance cron WHEN :func:`optimize_table`
     is worth its rewrite — see :func:`maintenance_plan`."""
-    m = _load_manifest(table_dir, version)
+    m = load_manifest(table_dir, version)
     stats = m.get("stats") or {}
     col = _phys_path(_col_mapping(m), col)  # physical-keyed (dotted too)
     envs = [
@@ -4133,7 +4141,7 @@ def maintenance_plan(
     point probe to read more than ``max_point_reads`` files —
     skipping has stopped working). ``recommend_optimize`` is their OR;
     run :func:`optimize_table` and all three reset."""
-    m = _load_manifest(table_dir, None)
+    m = load_manifest(table_dir, None)
     sizes = [os.path.getsize(f) for f in m["files"] if os.path.exists(f)]
     n_small = sum(1 for s in sizes if s < small_file_bytes)
     n_dvs = len(m.get("dv_files") or [])
@@ -4175,13 +4183,13 @@ def version_as_of(table_dir: str, ts: float, branch: str | None = None) -> int:
         raise ValueError(f"no committed versions under {table_dir!r}")
     best = None
     for v in vs:
-        m = _load_manifest(table_dir, v, branch)
+        m = load_manifest(table_dir, v, branch)
         if m["committed_at"] <= ts:
             best = v
     if best is None:
         raise ValueError(
             f"timestamp {ts} predates the first commit "
-            f"({_load_manifest(table_dir, vs[0], branch)['committed_at']})"
+            f"({load_manifest(table_dir, vs[0], branch)['committed_at']})"
         )
     return best
 
@@ -4266,7 +4274,7 @@ def restore_version(
                 f"tag {tag!r} not found (have {sorted(pinned)})"
             )
         version = pinned[tag]
-    target = _load_manifest(table_dir, version, branch)
+    target = load_manifest(table_dir, version, branch)
     _refuse_repeated_leaf_m(target, index_cols, "index_cols")
     cf: list[str] | None = None
     if change_files:
@@ -4301,7 +4309,7 @@ def restore_version(
         # lookup knows (silent NULL-fill downstream) — so physicalize
         # through target ∪ head, head names winning; physical names are
         # id-frozen, so both mappings agree wherever they overlap.
-        head_map = _col_mapping(_load_manifest(table_dir, head))
+        head_map = _col_mapping(load_manifest(table_dir, head))
         syn_fields: dict[str, dict] = {}
         for src_map in (_col_mapping(target), head_map):
             if src_map:
@@ -4435,7 +4443,7 @@ def add_constraint(
     O(increment) cost. Returns the new version number."""
     from pyspark.sql import functions as F
 
-    m = _load_manifest(table_dir, None)
+    m = load_manifest(table_dir, None)
     cc = dict(m.get("constraints") or {})
     if name in cc:
         raise ValueError(
@@ -4473,7 +4481,7 @@ def drop_constraint(table_dir: str, name: str) -> int:
     """DROP a recorded CHECK constraint — a metadata-only commit (the
     deliberate contract-shrink path; loud on an unknown name). Returns
     the new version number."""
-    m = _load_manifest(table_dir, None)
+    m = load_manifest(table_dir, None)
     cc = dict(m.get("constraints") or {})
     if name not in cc:
         raise ValueError(
@@ -4550,7 +4558,7 @@ def enable_column_mapping(table_dir: str) -> int:
     an already-mapped table returns its current version untouched."""
     from pyspark.sql.types import StructType
 
-    m = _load_manifest(table_dir, None)
+    m = load_manifest(table_dir, None)
     if _col_mapping(m):
         return m["version"]
     if not m.get("schema"):
@@ -4771,7 +4779,7 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
     Returns the new version number."""
     from pyspark.sql.types import StructField, StructType
 
-    m = _load_manifest(table_dir, None)
+    m = load_manifest(table_dir, None)
     if not m.get("schema"):
         raise ValueError(f"{table_dir!r} has no recorded schema")
     schema = StructType.fromJson(json.loads(m["schema"]))
@@ -4957,7 +4965,7 @@ def drop_column(table_dir: str, name: str) -> int:
     the column itself. Returns the new version number."""
     from pyspark.sql.types import StructType
 
-    m = _load_manifest(table_dir, None)
+    m = load_manifest(table_dir, None)
     if not m.get("schema"):
         raise ValueError(f"{table_dir!r} has no recorded schema")
     schema = StructType.fromJson(json.loads(m["schema"]))
@@ -5069,7 +5077,7 @@ def clone_table(
             f"{dst_dir!r} is already a versioned table — clone creates a "
             "new table; point it at an empty directory"
         )
-    src = _load_manifest(src_dir, version)
+    src = load_manifest(src_dir, version)
 
     def build(prior: dict | None) -> dict:
         body = {
@@ -5144,7 +5152,7 @@ def read_version(
         if tag not in all_tags:
             raise ValueError(f"tag {tag!r} not found (have {sorted(all_tags)})")
         version = all_tags[tag]
-    m = _load_manifest(table_dir, version, branch)
+    m = load_manifest(table_dir, version, branch)
     if not m["files"]:
         return _empty_snapshot(spark, m)
     return _live_scan(spark, m)
@@ -5222,8 +5230,8 @@ def read_changes(
     if from_version == 0:
         m_from: dict = {"files": [], "n_rows": 0, "schema": None, "dv_files": []}
     else:
-        m_from = _load_manifest(table_dir, from_version)
-    m_to = _load_manifest(table_dir, to_version)
+        m_from = load_manifest(table_dir, from_version)
+    m_to = load_manifest(table_dir, to_version)
     if from_version > to_version:
         raise ValueError(
             f"from_version {from_version} > to_version {to_version} — the "
@@ -5384,7 +5392,7 @@ def read_changes(
         # instead of paying O(range) manifest loads before falling back
         range_mans: list[dict] | None = []
         for v in range(from_version + 1, to_version + 1):
-            mm = _load_manifest(table_dir, v)
+            mm = load_manifest(table_dir, v)
             if "change_files" not in mm:
                 range_mans = None
                 break
@@ -5720,7 +5728,7 @@ def _resolve_probe_index(
     files = set(m["files"])
     for pv in range(v - 1, 0, -1):
         try:
-            pm = _load_manifest(table_dir, pv)
+            pm = load_manifest(table_dir, pv)
         except ValueError:
             return None  # vacuumed past — cannot prove file-set equality
         if set(pm["files"]) != files:
@@ -5767,7 +5775,7 @@ def index_params(
         if not vs:
             raise ValueError(f"no committed versions under {table_dir!r}")
         version = vs[-1]
-    m = _load_manifest(table_dir, version)
+    m = load_manifest(table_dir, version)
     kphys = _phys_path(_col_mapping(m), key_col)
     hit = _resolve_probe_index(table_dir, m, kphys)
     return hit[1] if hit is not None else None
@@ -5805,7 +5813,7 @@ def write_bloom_index(
     """
     from ..operators.lake import build_file_bloom_index
 
-    m = _load_manifest(table_dir, version)
+    m = load_manifest(table_dir, version)
     v = m["version"]
     _refuse_repeated_leaf_m(m, [key_col], "index_cols")
     key_col = _phys_path(_col_mapping(m), key_col)
@@ -5905,13 +5913,13 @@ def maintain_bloom_index(
     """
     from ..operators.lake import build_file_bloom_index
 
-    _m_here = _load_manifest(table_dir, version)
+    _m_here = load_manifest(table_dir, version)
     _refuse_repeated_leaf_m(_m_here, [key_col], "index_cols")
     kphys = _phys_path(_col_mapping(_m_here), key_col)
     # resolve the prior link through metadata-only commits (a rename /
     # constraint commit between two appends must not force a rebuild)
     hit = _resolve_probe_index(
-        table_dir, _load_manifest(table_dir, prior_version), kphys
+        table_dir, load_manifest(table_dir, prior_version), kphys
     )
     link_v, params = hit if hit is not None else (prior_version, None)
     if params is None:
@@ -6004,7 +6012,7 @@ def read_version_pruned(
 
     ranges = ranges or {}
     keys = keys or {}
-    m = _load_manifest(table_dir, version)
+    m = load_manifest(table_dir, version)
     v = m["version"]
     if not m["files"]:
         df = _empty_snapshot(spark, m)
@@ -6205,7 +6213,7 @@ def verify_table(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    m = _load_manifest(table_dir, version)
+    m = load_manifest(table_dir, version)
     checks: dict[str, dict] = {}
     errors: list[str] = []
 
@@ -6317,7 +6325,7 @@ def verify_table(
     for rv in _version_numbers(table_dir):
         if rv > m["version"]:
             break
-        t = _load_manifest(table_dir, rv).get("txn")
+        t = load_manifest(table_dir, rv).get("txn")
         if not t:
             continue
         app, tv = t["app"], int(t["version"])
@@ -6557,13 +6565,13 @@ def vacuum(
         recent = {
             v
             for v in vs
-            if _load_manifest(table_dir, v).get("committed_at", 0) >= cutoff
+            if load_manifest(table_dir, v).get("committed_at", 0) >= cutoff
         }
     keep = sorted(set(vs[-keep_last:]) | (tagged & set(vs)) | recent)
     drop = [v for v in vs if v not in set(keep)]
     keep_files = set()
     for v in keep:
-        keep_files.update(_load_manifest(table_dir, v)["files"])
+        keep_files.update(load_manifest(table_dir, v)["files"])
     # tagger-race re-check: a tag_version() that landed between the
     # first tag read and here (the manifest loads above take real time
     # on a long-retained table) is honored — its version moves from
@@ -6573,7 +6581,7 @@ def vacuum(
         drop = [v for v in drop if v not in late]
         keep = sorted(set(keep) | late)
         for v in late:
-            keep_files.update(_load_manifest(table_dir, v)["files"])
+            keep_files.update(load_manifest(table_dir, v)["files"])
     # branch retention: every file/DV any branch manifest references
     # stays until delete_branch — a dropped MAIN version's files may be
     # exactly what a fork carried (see create_branch)
@@ -6604,7 +6612,7 @@ def vacuum(
                     continue
                 try:
                     hit = _resolve_probe_index(
-                        table_dir, _load_manifest(table_dir, v), col
+                        table_dir, load_manifest(table_dir, v), col
                     )
                 except ValueError:
                     hit = None
@@ -6638,7 +6646,7 @@ def vacuum(
     # caveat on clone_table: the source's vacuum has no back-references.
     own_root = _canon(table_dir) + os.sep
     for v in drop:
-        m = _load_manifest(table_dir, v)
+        m = load_manifest(table_dir, v)
         for f in m["files"]:
             if (
                 f not in keep_files
@@ -6678,7 +6686,7 @@ def vacuum(
     # of ANY file in the retained set means the dir is live.
     keep_dv: set[str] = set(branch_dv)
     for v in keep:
-        keep_dv.update(_load_manifest(table_dir, v).get("dv_files") or [])
+        keep_dv.update(load_manifest(table_dir, v).get("dv_files") or [])
     dv_root = os.path.join(table_dir, _DV_DIR)
     dv_dirs_dropped = 0
     if os.path.isdir(dv_root):
@@ -6701,7 +6709,7 @@ def vacuum(
     # so only a namespace walk reclaims every orphan.
     keep_cf: set[str] = set(branch_cf)
     for v in keep:
-        keep_cf.update(_load_manifest(table_dir, v).get("change_files") or [])
+        keep_cf.update(load_manifest(table_dir, v).get("change_files") or [])
     cf_root = os.path.join(table_dir, _CHANGE_DIR)
     change_dirs_dropped = 0
     if os.path.isdir(cf_root):

@@ -87,9 +87,9 @@ from pyspark.sql.types import StructType
 
 
 def _manifest(table_dir: str, version: int, branch: str | None = None) -> dict:
-    from ..sinks.versioned import _load_manifest
+    from ..sinks.versioned import load_manifest
 
-    return _load_manifest(table_dir, version, branch)
+    return load_manifest(table_dir, version, branch)
 
 
 def _latest_version(table_dir: str, branch: str | None = None) -> int:

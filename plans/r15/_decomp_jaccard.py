@@ -54,14 +54,13 @@ def build_pre(spark, corpus):
             F.size("__s").alias("n_sh"),
         )
     )
-    groups = neardup._materialize(
+    groups = neardup.materialize(
         docs.groupBy("__sh").agg(
             F.min("doc_id").alias("__rep"),
             F.sort_array(F.collect_list("doc_id")).alias("__members"),
             F.first("__s").alias("__s"),
             F.first("n_sh").alias("n_sh"),
-        ),
-        None,
+        )
     )
     return hashed, with_df, docs, groups
 
@@ -220,7 +219,7 @@ def main() -> None:
         )
 
     hashed, with_df, docs, groups = build_pre(spark, corpus)
-    cand = neardup._materialize(cand_of(groups), None)
+    cand = neardup.materialize(cand_of(groups))
     n_cand = cand.count()
     print(f"candidates (collapsed reps): {n_cand}", flush=True)
 
@@ -241,7 +240,7 @@ def main() -> None:
     # REP_FACTOR x (disjoint id spaces per copy via offset) so the
     # kernel does rep_factor * n_cand intersections of REAL arrays.
     off = F.lit(10_000_000)
-    cand_big = neardup._materialize(
+    cand_big = neardup.materialize(
         cand.select(
             "ra", "rb", F.explode(F.sequence(F.lit(0), F.lit(rep_factor - 1))).alias("__c")
         ).select(
@@ -249,17 +248,15 @@ def main() -> None:
             (F.col("rb") + F.col("__c") * off).alias("rb"),
             F.col("ra").alias("ra0"),
             F.col("rb").alias("rb0"),
-        ),
-        None,
+        )
     )
-    rep_big = neardup._materialize(
+    rep_big = neardup.materialize(
         rep_docs.select(
             "__rep", "__sh", "n_sh",
             F.explode(F.sequence(F.lit(0), F.lit(rep_factor - 1))).alias("__c"),
         ).select(
             (F.col("__rep") + F.col("__c") * off).alias("__rep"), "__sh", "n_sh"
-        ),
-        None,
+        )
     )
     groups_big = rep_big.withColumnRenamed("n_sh", "n_sh")  # same cols needed
     cand_big2 = cand_big.select("ra", "rb")

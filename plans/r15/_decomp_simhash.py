@@ -31,8 +31,8 @@ def main() -> None:
     width = bits // bands
 
     def sig():
-        return neardup._materialize(
-            neardup.portable_simhash(docs(), "text", "doc_id", bits), None
+        return neardup.materialize(
+            neardup.portable_simhash(docs(), "text", "doc_id", bits)
         )
 
     def groups_of(s):

@@ -35,12 +35,11 @@ def main() -> None:
     width = bits // bands
 
     sig = neardup.portable_simhash(docs, "text", "doc_id", bits)
-    groups = neardup._materialize(
+    groups = neardup.materialize(
         sig.groupBy("simhash_bits").agg(
             F.min("doc_id").alias("__rep"),
             F.sort_array(F.collect_list("doc_id")).alias("__members"),
-        ),
-        None,
+        )
     )
     reps = groups.select(F.col("__rep").alias("doc_id"), "simhash_bits")
     banded = reps.select(
@@ -70,12 +69,11 @@ def main() -> None:
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    rep_pairs = neardup._materialize(
+    rep_pairs = neardup.materialize(
         cand.join(a, "id_a")
         .join(b, "id_b")
         .select("id_a", "id_b", hamming.cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming),
-        None,
+        .filter(F.col("hamming") <= max_hamming)
     )
     n_rp = rep_pairs.count()
     n_g = groups.count()

@@ -265,10 +265,10 @@ def test_fsck_audits_change_files(spark, table):
     assert rep["checks"]["change_files_exist"]["ok"]
     # corrupt: remove a recorded change file out-of-band
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        _load_manifest,
+        load_manifest,
     )
 
-    os.remove(_load_manifest(table, None)["change_files"][0])
+    os.remove(load_manifest(table, None)["change_files"][0])
     rep2 = verify_table(spark, table)
     assert not rep2["ok"]
     assert not rep2["checks"]["change_files_exist"]["ok"]
@@ -289,10 +289,10 @@ def test_vacuum_sweeps_unreferenced_change_dirs(spark, table):
     assert len(os.listdir(cf_root)) == 1
     # the retained version's recorded change files survived the sweep
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        _load_manifest,
+        load_manifest,
     )
 
-    kept = _load_manifest(table, 3)["change_files"]
+    kept = load_manifest(table, 3)["change_files"]
     assert kept and all(os.path.exists(p) for p in kept)
 
 
@@ -420,7 +420,7 @@ def test_stream_still_refuses_unrecorded_merge(spark, table):
 
 def test_bootstrap_merge_records_inserts(spark, table):
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        _load_manifest,
+        load_manifest,
         merge_version,
     )
 
@@ -431,7 +431,7 @@ def test_bootstrap_merge_records_inserts(spark, table):
         spark, inc, table, keys=["id"], delete_col="_del", change_files=True
     )
     assert res["version"] == 1 and res["change_files_added"] >= 1
-    m = _load_manifest(table, 1)
+    m = load_manifest(table, 1)
     assert m["change_files"]
     got = _drain(spark, read_changes_stream(spark, table))
     # the directive against the not-yet-existing key is a no-op
@@ -537,7 +537,7 @@ def test_overwrite_record_changes_pure_rename(spark, table):
     the commit."""
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         _col_mapping,
-        _load_manifest,
+        load_manifest,
         read_version,
     )
 
@@ -550,7 +550,7 @@ def test_overwrite_record_changes_pure_rename(spark, table):
     write_version(
         spark, nxt, table, mode="overwrite", record_changes=True
     )  # v2 — rename v -> val inside the overwrite
-    m2 = _load_manifest(table, None)
+    m2 = load_manifest(table, None)
     cm = _col_mapping(m2)
     assert cm is not None
     assert cm["fields"]["val"]["physical"] == "v"  # id + physical carried

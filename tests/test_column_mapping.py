@@ -12,11 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-    _load_manifest,
     clone_table,
     delete_version,
     drop_column,
     enable_column_mapping,
+    load_manifest,
     merge_version,
     optimize_table,
     read_changes,
@@ -52,9 +52,9 @@ def _rows(df, *cols):
 
 def test_rename_is_metadata_only_and_reads_correctly(spark, table):
     write_version(spark, _df(spark).repartition(3), table)
-    files_before = list(_load_manifest(table, None)["files"])
+    files_before = list(load_manifest(table, None)["files"])
     v = rename_column(table, "v", "value")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["files"] == files_before  # zero files touched
     got = read_version(spark, table)
     assert got.columns == ["id", "g", "value"]
@@ -81,9 +81,9 @@ def test_double_rename_and_rename_back(spark, table):
 
 def test_drop_is_metadata_only_and_time_travel_keeps_it(spark, table):
     write_version(spark, _df(spark).coalesce(2), table)
-    files_before = list(_load_manifest(table, None)["files"])
+    files_before = list(load_manifest(table, None)["files"])
     v = drop_column(table, "g")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["files"] == files_before
     assert read_version(spark, table).columns == ["id", "v"]
     assert read_version(spark, table, version=1).columns == ["id", "g", "v"]
@@ -121,7 +121,7 @@ def test_append_after_rename_mixes_old_and_new_files(spark, table):
         (5, 10), (105, 210)
     ]
     # new files store the PHYSICAL name (creation-time name 'v')
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert m["column_mapping"]["fields"]["value"]["physical"] == "v"
 
 
@@ -160,7 +160,7 @@ def test_optimize_preserves_mapping(spark, table):
     got = read_version(spark, table)
     assert got.columns == ["id", "g", "value"]
     assert got.count() == 100
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     # ids carried across the overwrite; physical resets are refused by
     # design, the persisting logical keeps its frozen physical
     assert m["column_mapping"]["fields"]["value"]["physical"] == "v"
@@ -377,7 +377,7 @@ def test_stats_covered_column_renames_and_prunes(spark, table):
         stats_cols=["id"],
     )
     v = rename_column(table, "id", "key")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["stats_cols"] == ["key"]  # logical list follows the rename
     df, info = read_version_pruned(spark, table, ranges={"key": (0, 10)})
     assert info["files_read"] < info["files_total"]
@@ -454,7 +454,7 @@ def test_drop_of_stats_column_scrubs_envelopes(spark, table):
         stats_cols=["id", "v"],
     )
     v = drop_column(table, "v")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["stats_cols"] == ["id"]
     assert all("v" not in e for e in m["stats"].values())
     rep = verify_table(spark, table, deep=True)
@@ -514,7 +514,7 @@ def test_partition_column_renames_and_prunes(spark, table):
         partition_by=["region"],
     )  # v1
     v = rename_column(table, "region", "zone")  # v2, metadata-only
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["partition_cols"] == ["region"]  # frozen physical key
     assert m["mode"] == "rename_column"  # zero data files staged
     # pruning under the NEW logical name: manifest-only, no footer I/O
@@ -530,7 +530,7 @@ def test_partition_column_renames_and_prunes(spark, table):
         .repartition("zone"),
         table, mode="append",
     )  # v3
-    m3 = _load_manifest(table, None)
+    m3 = load_manifest(table, None)
     assert m3["partition_cols"] == ["region"]
     out3, info3 = read_version_pruned(spark, table, keys={"zone": ["2"]})
     assert info3["partition_skipped"] > 0
@@ -659,9 +659,9 @@ def test_stream_does_not_resurrect_reused_physical(spark, table):
 
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         _col_mapping,
-        _load_manifest,
         _rebuild_mapping,
         _write_change_files,
+        load_manifest,
     )
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sources.versioned_stream import (
         read_changes_stream,
@@ -681,7 +681,7 @@ def test_stream_does_not_resurrect_reused_physical(spark, table):
     )
     cur = read_version(spark, table)  # (id)
     eff_map = _rebuild_mapping(
-        _col_mapping(_load_manifest(table, None)), new.schema
+        _col_mapping(load_manifest(table, None)), new.schema
     )
     changes = cur.withColumn("_change_type", F.lit("delete")).unionByName(
         new.withColumn("_change_type", F.lit("insert")),
@@ -800,9 +800,9 @@ def test_randomized_mapping_lifecycle_vs_model(spark, tmp_path):
             )
             assert have == want, f"seed {seed}: mismatch after {op}"
             from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-                _load_manifest,
+                load_manifest,
             )
-            history[_load_manifest(t, None)["version"]] = list(order)
+            history[load_manifest(t, None)["version"]] = list(order)
         # every historical version replays under its own names
         for v, names in history.items():
             assert read_version(spark, t, version=v).columns == names
@@ -842,9 +842,9 @@ def _nested_df(spark):
 
 def test_nested_rename_is_metadata_only(spark, table):
     write_version(spark, _nested_df(spark).coalesce(1), table)
-    files_before = list(_load_manifest(table, None)["files"])
+    files_before = list(load_manifest(table, None)["files"])
     v = rename_column(table, "items.i", "part_id")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["files"] == files_before  # zero files touched
     e = m["column_mapping"]["fields"]["items"]
     assert e["nested"]["part_id"]["physical"] == "i"
@@ -863,7 +863,7 @@ def test_nested_rename_deep_and_null_struct(spark, table):
     write_version(spark, df.coalesce(1), table)
     rename_column(table, "nest.outer.x", "y")
     rename_column(table, "nest.outer", "inner")  # intermediate rename
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     nested = m["column_mapping"]["fields"]["nest"]["nested"]
     # descendant key rode the prefix rewrite; physicals stay frozen
     assert nested["inner"]["physical"] == "outer"
@@ -935,9 +935,9 @@ def test_change_files_fast_path_under_nested_rename(spark, table):
 
 def test_nested_drop_is_metadata_only(spark, table):
     write_version(spark, _nested_df(spark).coalesce(1), table)
-    files_before = list(_load_manifest(table, None)["files"])
+    files_before = list(load_manifest(table, None)["files"])
     v = drop_column(table, "meta.b")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["files"] == files_before
     assert m["column_mapping"]["fields"]["meta"]["nested_dropped"] == ["b"]
     got = read_version(spark, table)
@@ -1139,7 +1139,7 @@ def test_overwrite_restructure_resets_nested_state(spark, table):
         "k int, meta struct<z:double>, items array<struct<q:int>>",
     )
     v = write_version(spark, new.coalesce(1), table, mode="overwrite")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     e_items = m["column_mapping"]["fields"]["items"]
     e_meta = m["column_mapping"]["fields"]["meta"]
     assert not e_items.get("nested") and not e_items.get("nested_dropped")
@@ -1179,7 +1179,7 @@ def test_overwrite_halfmatching_restructure_resets_nested(spark, table):
         "k int, items array<struct<part_id:int,i:string>>",
     )
     v = write_version(spark, new.coalesce(1), table, mode="overwrite")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     e = m["column_mapping"]["fields"]["items"]
     assert not e.get("nested")  # reset, no stale entry survived
     got = read_version(spark, table).collect()
@@ -1204,7 +1204,7 @@ def test_record_changes_overwrite_refuses_type_reshape(spark, table):
 
     assert not _os.path.isdir(_os.path.join(table, "_change_data"))
     # and no orphan staging beyond v1's own data
-    m = _load_manifest(table, 1)
+    m = load_manifest(table, 1)
     data_root = _os.path.join(table, "data")
     staged_dirs = set(_os.listdir(data_root))
     referenced = {
@@ -1313,7 +1313,7 @@ def test_literal_dotted_toplevel_column_still_renames(spark, table):
     )
     write_version(spark, df.coalesce(1), table)
     v = rename_column(table, "a.b", "ab")
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert "ab" in m["column_mapping"]["fields"]
     got = read_version(spark, table)
     assert got.columns == ["id", "ab"]
@@ -1361,7 +1361,7 @@ def test_round14_features_compose_in_one_lifecycle(spark, table):
     rename_column(table, "cat", "category")          # v2 metadata-only
     rename_column(table, "meta.price", "cost")       # v3 metadata-only
     rename_column(table, "meta", "info")             # v4 enclosing
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert m["stats_cols"] == ["info.cost"]
     assert m["partition_cols"] == ["cat"]  # frozen physical key
     write_version(
@@ -1418,7 +1418,7 @@ def test_round14_features_compose_in_one_lifecycle(spark, table):
     # LEAVE (200 each — the appended c1/c2 rows entered AND left
     # inside the range, so the net diff correctly drops them), the 50
     # replacements and the 100 appended c0 rows ARRIVE
-    ch = read_changes(spark, table, 1, _load_manifest(table, None)["version"])
+    ch = read_changes(spark, table, 1, load_manifest(table, None)["version"])
     assert set(ch.columns) == {"id", "category", "info", "_change_type"}
     byt = {
         (r["_change_type"], r["category"]): r["cnt"]

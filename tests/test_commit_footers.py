@@ -28,11 +28,11 @@ from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.lake import (
     parquet_footer_stats,
 )
 from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-    _load_manifest,
     _staged_footers,
     _stats_for_files,
     delete_version,
     enable_column_mapping,
+    load_manifest,
     merge_version,
     optimize_table,
     read_version,
@@ -84,7 +84,7 @@ def _jobs(spark, name, fn, *args, **kwargs) -> tuple[int, set[str]]:
 
 
 def _consistent(spark, table):
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert m["n_rows"] == read_version(spark, table).count()
     assert verify_table(spark, table, deep=True)["ok"]
     return m
@@ -233,7 +233,7 @@ def test_commit_stats_match_operator_under_column_mapping(spark, table):
     )
     enable_column_mapping(table)
     rename_column(table, "k", "key")
-    v0 = _load_manifest(table, None)
+    v0 = load_manifest(table, None)
     write_version(
         spark,
         _rows(spark, 400, 600).withColumnRenamed("k", "key").withColumn(
@@ -241,7 +241,7 @@ def test_commit_stats_match_operator_under_column_mapping(spark, table):
         ),
         table, mode="append", merge_schema=True,
     )
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     new_files = [f for f in m["files"] if f not in v0["files"]]
     phys = [m["column_mapping"]["fields"][c]["physical"] for c in ("key", "v")]
     assert phys[0] == "k"  # frozen physical name of the renamed column
@@ -335,7 +335,7 @@ def test_cow_delete_emptying_a_file_stages_nothing(spark, table):
         spark, _rows(spark, 0, 300).repartitionByRange(3, "k"), table,
         stats_cols=["k"],
     )
-    first = _load_manifest(table, None)["files"][0]
+    first = load_manifest(table, None)["files"][0]
     ks = [r["k"] for r in spark.read.parquet(first).collect()]
     data_dirs = set(os.listdir(os.path.join(table, "data")))
     res = delete_version(spark, table, predicate=F.col("k").isin(ks))
@@ -392,7 +392,7 @@ def rows(lo, hi):
 
 
 def report(name, staged_dirs):
-    m = V._load_manifest(table, None)
+    m = V.load_manifest(table, None)
     listed = set(m["files"]) | set(m.get("dv_files") or [])
     on_disk = {{
         os.path.realpath(f)

@@ -212,31 +212,6 @@ def test_connected_components_matches_union_find(spark, seed):
     assert got == want
 
 
-def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
-    """checkpoint_dir flips every per-round materialization to reliable
-    .checkpoint(); labels must be identical to the local tier."""
-    import os
-
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.dedup import (
-        connected_components,
-    )
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], ["id_a", "id_b"]
-    )
-    ckpt = str(tmp_path / "cc_ckpt")
-    local = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
-    reliable = {
-        r["node"]: r["label"]
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
-    }
-    assert local == reliable
-    # setCheckpointDir is session-global and first-caller-wins: files
-    # land under the SESSION's dir (ours, unless an earlier test set it)
-    session_dir = spark.sparkContext.getCheckpointDir().removeprefix("file:")
-    assert any(os.scandir(session_dir))
-
-
 def test_passage_dedup_matches_naive(spark):
     """passage_dedup must equal the obvious single-threaded keep-first
     over k-word windows: global first occurrence survives, later ones

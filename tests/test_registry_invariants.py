@@ -67,3 +67,52 @@ def test_every_query_has_registry_shape():
     for name, (fn, sql) in REGISTRY.items():
         assert callable(fn), name
         assert sql is None or isinstance(sql, str), name
+
+
+def test_one_scratch_helper_one_pin_one_manifest_reader():
+    """Registry entries stage through ``queries.scratch_dir`` and pin
+    through ``session.materialize``, whose tier comes from the session
+    (``spark.checkpoint.dir``), not from a per-call argument; the lake's
+    manifest reader is the public ``load_manifest``. A raw pin, a raw
+    temp dir in a registry module, or a private reach-in fails here."""
+    import ast
+    import pathlib
+
+    import bigbookapi_etl_with_airflow_and_snowflake_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    banned = re.compile(r"\b(_load_manifest|_materialize|checkpoint_dir)\b")
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        offenders += [
+            f"{rel}:{n}: {m.group(0)}"
+            for n, line in enumerate(src.splitlines(), 1)
+            for m in [banned.search(line)]
+            if m
+        ]
+
+        def scan(node, owner):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    scan(child, child.name if owner is None else owner)
+                    continue
+                if isinstance(child, ast.Call) and isinstance(
+                    child.func, ast.Attribute
+                ):
+                    attr = child.func.attr
+                    if attr in ("localCheckpoint", "checkpoint") and not (
+                        rel == "session.py" and owner == "materialize"
+                    ):
+                        offenders.append(f"{rel}:{child.lineno}: .{attr}(")
+                    if (
+                        attr == "mkdtemp"
+                        and rel.startswith("queries")
+                        and owner != "scratch_dir"
+                    ):
+                        offenders.append(f"{rel}:{child.lineno}: mkdtemp")
+                scan(child, owner)
+
+        scan(ast.parse(src), None)
+    assert not offenders, offenders

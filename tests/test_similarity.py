@@ -355,63 +355,6 @@ def test_ivf_training_sample_partition_invariant(emb, spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_jaccard_pairs_reliable_checkpoint_path(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation to the fault-tolerant
-    reliable .checkpoint(); results must be identical and checkpoint
-    files must actually land under the directory."""
-    import os
-
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators import neardup
-
-    docs = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "the quick brown fox jumps over the lazy dog again and again"),
-        (3, "a completely different document about spark query planning"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    ckpt = str(tmp_path / "ckpt")
-    local = sorted(map(tuple, neardup.jaccard_pairs(df).collect()))
-    reliable = sorted(
-        map(tuple, neardup.jaccard_pairs(df, checkpoint_dir=ckpt).collect())
-    )
-    assert local == reliable and local
-    # first-caller-wins: files land under the SESSION's checkpoint dir
-    session_dir = spark.sparkContext.getCheckpointDir().removeprefix("file:")
-    assert any(os.scandir(session_dir))
-    sp = sorted(map(tuple, neardup.simhash_pairs(df, checkpoint_dir=ckpt).collect()))
-    assert sp == sorted(map(tuple, neardup.simhash_pairs(df).collect()))
-
-
-def test_checkpoint_dir_is_set_once_and_conflicts_warn(spark, tmp_path):
-    """setCheckpointDir is session-global: the first reliable-checkpoint
-    caller wins, a conflicting later dir warns and is ignored (the
-    checkpoint still happens, under the session's dir)."""
-    import warnings
-
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.neardup import (
-        _materialize,
-        _same_checkpoint_dir,
-    )
-
-    df = spark.range(5)
-    first = str(tmp_path / "ckpt_a")
-    _materialize(df, first)
-    current = spark.sparkContext.getCheckpointDir()
-    assert current is not None  # set by us, or by an earlier test (kept)
-    # same dir again: silent
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        if _same_checkpoint_dir(current, first):
-            _materialize(df, first)
-    # different dir: warns, keeps the session dir, still checkpoints
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = _materialize(df, str(tmp_path / "ckpt_b"))
-        assert out.count() == 5
-        assert any("checkpoint dir is already" in str(x.message) for x in w)
-    assert spark.sparkContext.getCheckpointDir() == current
-
-
 def test_semantic_dedup_matches_bruteforce(spark):
     """semantic_dedup == the naive per-cluster pairwise prune computed
     in numpy from the operator's own assignments: planted near-copies

@@ -732,10 +732,10 @@ def test_merge_delete_index_maintenance_is_incremental_and_equivalent(
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         _bloom_index_dir,
         _index_chain_dirs,
-        _load_manifest,
         _local_path,
         _usable_index_params,
         delete_version,
+        load_manifest,
         merge_version,
         read_version_pruned,
         write_bloom_index,
@@ -767,7 +767,7 @@ def test_merge_delete_index_maintenance_is_incremental_and_equivalent(
         params = _usable_index_params(table, "tag", v)
         assert params["chain"], f"v{v} should chain, not rebuild"
         dirs = _index_chain_dirs(table, "tag", v, params)
-        live = set(_load_manifest(table, v)["files"])
+        live = set(load_manifest(table, v)["files"])
         chained_live[v] = sorted(
             (r["file"], r["word"], r["bits"])
             for r in spark.read.parquet(*dirs).collect()

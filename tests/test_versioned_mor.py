@@ -189,7 +189,7 @@ def test_mor_commit_conflict_discards_staged_sidecar(spark, table):
             versioned as V,
         )
 
-        base = V._load_manifest(table, 1)
+        base = V.load_manifest(table, 1)
         write_version(spark, _df(spark, 10), table)  # v2 wins the race
         V._delete_version_mor(
             spark, table, F.expr("id < 5"), base, (), None, 8

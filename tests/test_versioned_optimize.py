@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-    _load_manifest,
     delete_version,
+    load_manifest,
     optimize_table,
     read_version,
     read_version_pruned,
@@ -37,7 +37,7 @@ def test_optimize_packs_folds_and_preserves_rows(spark, table):
     r = optimize_table(spark, table, cluster_by=["id"])
     assert r["files_after"] < r["files_before"] == 32
     assert r["dv_files_folded"] >= 1
-    assert not _load_manifest(table, r["version"]).get("dv_files")
+    assert not load_manifest(table, r["version"]).get("dv_files")
     got = sorted(x["id"] for x in read_version(spark, table).collect())
     assert got == want
     # time travel to the fragmented MOR version still works
@@ -132,8 +132,8 @@ def test_incremental_optimize_rewrites_only_scattered(spark, table):
     got = sorted(x["id"] for x in read_version(spark, table).collect())
     assert got == want
     # carried files are literally v2's (identity, not rewritten)
-    m2 = _load_manifest(table, 2)
-    m3 = _load_manifest(table, r["version"])
+    m2 = load_manifest(table, 2)
+    m3 = load_manifest(table, r["version"])
     assert set(m3["files"]) & set(m2["files"])
 
 
@@ -145,7 +145,7 @@ def test_incremental_optimize_noop_when_clustered(spark, table):
         table,
         stats_cols=["id"],
     )
-    head = _load_manifest(table, None)["version"]
+    head = load_manifest(table, None)["version"]
     r = optimize_table(spark, table, cluster_by=["id"], incremental=True)
     assert r["files_rewritten"] == 0
     assert r["version"] == head  # no commit happened

@@ -21,15 +21,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-    _load_manifest,
     _manifest_path,
     clone_table,
     delete_version,
+    load_manifest,
     optimize_table,
     read_version,
     read_version_pruned,
-    verify_table,
     vacuum,
+    verify_table,
     write_version,
 )
 
@@ -58,7 +58,7 @@ def test_partitioned_write_records_exact_map(spark, sf_dir, table):
         table,
         partition_by=["event_type"],
     )
-    m = _load_manifest(table, v)
+    m = load_manifest(table, v)
     assert m["partition_cols"] == ["event_type"]
     # every file mapped, and the map is exact (one value per file)
     assert set(m["partitions"]) == {os.path.realpath(f) for f in m["files"]}
@@ -89,7 +89,7 @@ def test_append_inherits_and_refuses_relayout(spark, sf_dir, table):
     write_version(
         spark, e.limit(40).repartition("event_type"), table, mode="append"
     )
-    m = _load_manifest(table, 2)
+    m = load_manifest(table, 2)
     assert m["partition_cols"] == ["event_type"]
     assert set(m["partitions"]) == {os.path.realpath(f) for f in m["files"]}
     with pytest.raises(ValueError, match="layout property"):
@@ -132,7 +132,7 @@ def test_cow_rewrite_degrades_conservatively(spark, sf_dir, table):
         table,
         (F.col("event_type") == "view") & (F.col("event_id") % 2 == 0),
     )
-    m = _load_manifest(table, 2)
+    m = load_manifest(table, 2)
     assert m["partition_cols"] == ["event_type"]
     assert len(m["partitions"]) < len(m["files"])  # rewritten files unmapped
     df, info = read_version_pruned(spark, table, keys={"event_type": ["click"]})
@@ -142,7 +142,7 @@ def test_cow_rewrite_degrades_conservatively(spark, sf_dir, table):
     # all (zero-row staging is dropped), so every remaining file keeps
     # its map entry and pruning stays exact — no unmapped degradation
     delete_version(spark, table, F.col("event_type") == "view")
-    m3 = _load_manifest(table, 3)
+    m3 = load_manifest(table, 3)
     assert set(m3["partitions"]) == set(m3["files"])  # fully mapped again
     assert read_version(spark, table).filter(
         F.col("event_type") == "view"
@@ -176,7 +176,7 @@ def test_null_partition_values(spark, table):
         ).alias("g"),
     )
     write_version(spark, df.repartition("g"), table, partition_by=["g"])
-    m = _load_manifest(table, 1)
+    m = load_manifest(table, 1)
     assert None in {v["g"] for v in m["partitions"].values()}
     got, info = read_version_pruned(spark, table, keys={"g": ["g1"]})
     assert got.count() == 7 and info["partition_skipped"] > 0
@@ -190,11 +190,11 @@ def test_departition_via_overwrite_none(spark, sf_dir, table):
         spark, e.repartition("event_type"), table, partition_by=["event_type"]
     )
     write_version(spark, e, table, mode="overwrite", partition_by=None)
-    m = _load_manifest(table, 2)
+    m = load_manifest(table, 2)
     assert "partition_cols" not in m
     # and inheritance stops: a further append stays unpartitioned
     write_version(spark, e.limit(5), table, mode="append")
-    assert "partition_cols" not in _load_manifest(table, 3)
+    assert "partition_cols" not in load_manifest(table, 3)
 
 
 def test_optimize_rerecords_partition_map(spark, sf_dir, table):
@@ -204,7 +204,7 @@ def test_optimize_rerecords_partition_map(spark, sf_dir, table):
     )
     delete_version(spark, table, F.col("event_type") == "view")  # unmaps files
     optimize_table(spark, table, cluster_by=["event_type"])
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert set(m["partitions"]) == {os.path.realpath(f) for f in m["files"]}
     df, info = read_version_pruned(spark, table, keys={"event_type": ["click"]})
     assert info["partition_skipped"] > 0 and info["footer_files"] == 0
@@ -228,7 +228,7 @@ def test_clone_zero_copy_and_equal(spark, sf_dir, tmp_path):
     )
     r = clone_table(src, dst)
     assert r["data_files_written"] == 0
-    ms, md = _load_manifest(src, 1), _load_manifest(dst, 1)
+    ms, md = load_manifest(src, 1), load_manifest(dst, 1)
     assert md["files"] == ms["files"]  # byte-sharing, not copying
     assert md.get("stats") == ms.get("stats")  # pruning works day one
     assert md.get("partitions") == ms.get("partitions")
@@ -292,7 +292,7 @@ def test_clone_materializes_via_optimize(spark, sf_dir, tmp_path):
     write_version(spark, e, src)
     clone_table(src, dst)
     optimize_table(spark, dst)
-    m = _load_manifest(dst, None)
+    m = load_manifest(dst, None)
     root = os.path.realpath(dst) + os.sep
     assert all(os.path.realpath(f).startswith(root) for f in m["files"])
     assert read_version(spark, dst).count() == e.count()
@@ -338,7 +338,7 @@ def test_fsck_green(spark, sf_dir, table):
 
 def test_fsck_detects_missing_file(spark, sf_dir, table):
     _green_table(spark, sf_dir, table)
-    os.remove(_load_manifest(table, None)["files"][0])
+    os.remove(load_manifest(table, None)["files"][0])
     rep = verify_table(spark, table, deep=True)
     assert not rep["ok"]
     assert not rep["checks"]["files_exist"]["ok"]
@@ -356,7 +356,7 @@ def _tamper(table, version, fn):
 
 def test_fsck_detects_tampered_metadata(spark, sf_dir, table):
     _green_table(spark, sf_dir, table)
-    head = _load_manifest(table, None)["version"]
+    head = load_manifest(table, None)["version"]
 
     _tamper(table, head, lambda m: m.__setitem__("n_rows", m["n_rows"] + 1))
     rep = verify_table(spark, table, deep=True)
@@ -402,7 +402,7 @@ def test_scoped_delete_skips_unscoped_files(spark, sf_dir, table):
     write_version(
         spark, e.repartition("event_type"), table, partition_by=["event_type"]
     )
-    n_files = len(_load_manifest(table, 1)["files"])
+    n_files = len(load_manifest(table, 1)["files"])
     # scope-only delete (predicate=None): the Delta partition-DELETE form
     r = delete_version(spark, table, partition_scope={"event_type": ["view"]})
     assert r["files_scanned"] == 1 < n_files
@@ -418,7 +418,7 @@ def test_scoped_delete_skips_unscoped_files(spark, sf_dir, table):
         partition_scope={"event_type": ["click"]},
     )
     assert r2["files_rewritten"] == 0  # MOR stays zero-rewrite
-    assert r2["files_scanned"] < len(_load_manifest(table, None)["files"])
+    assert r2["files_scanned"] < len(load_manifest(table, None)["files"])
     want2 = e.filter(
         (F.col("event_type") != "view")
         & ~((F.col("event_type") == "click") & (F.col("event_id") % 2 == 0))
@@ -433,7 +433,7 @@ def test_scoped_delete_skips_unscoped_files(spark, sf_dir, table):
         {"value": F.lit(0.0)},
         partition_scope={"event_type": ["signup"]},
     )
-    assert r3["files_scanned"] < len(_load_manifest(table, None)["files"])
+    assert r3["files_scanned"] < len(load_manifest(table, None)["files"])
     assert (
         read_version(spark, table)
         .filter((F.col("event_type") == "signup") & (F.col("value") != 0.0))
@@ -502,7 +502,7 @@ def test_constraints_enforced_on_append(spark, sf_dir, table):
         )
     # the refused commit left no orphan bytes and no version
     assert set(glob.glob(os.path.join(table, "data", "*", "*.parquet"))) == staged
-    assert _load_manifest(table, None)["version"] == 1
+    assert load_manifest(table, None)["version"] == 1
     # NULL violates (SQL CHECK semantics)
     with pytest.raises(ValueError, match="CHECK constraint violation"):
         write_version(
@@ -513,7 +513,7 @@ def test_constraints_enforced_on_append(spark, sf_dir, table):
         )
     # a clean append inherits and lands with the contract carried
     v = write_version(spark, o.limit(5), table, mode="append")
-    assert _load_manifest(table, v)["constraints"] == {
+    assert load_manifest(table, v)["constraints"] == {
         "price_pos": "o_totalprice > 0"
     }
 
@@ -541,11 +541,11 @@ def test_add_constraint_validates_history(spark, sf_dir, table):
 
     o = _orders(spark, sf_dir)
     write_version(spark, o, table)
-    m1 = _load_manifest(table, 1)
+    m1 = load_manifest(table, 1)
     v = add_constraint(
         spark, table, "status_valid", "o_orderstatus IN ('F','O','P')"
     )
-    m2 = _load_manifest(table, v)
+    m2 = load_manifest(table, v)
     assert m2["mode"] == "add_constraint"
     assert m2["files"] == m1["files"]  # metadata-only commit
     with pytest.raises(ValueError, match="existing rows violate"):
@@ -561,7 +561,7 @@ def test_add_constraint_validates_history(spark, sf_dir, table):
             mode="append",
         )
     v3 = drop_constraint(table, "status_valid")
-    assert "constraints" not in _load_manifest(table, v3)
+    assert "constraints" not in load_manifest(table, v3)
     with pytest.raises(ValueError, match="not recorded"):
         drop_constraint(table, "status_valid")
     # contract gone: the formerly-violating append now lands
@@ -589,7 +589,7 @@ def test_fsck_backstops_dml_constraint_break(spark, sf_dir, table):
         spark, table, F.col("o_orderkey") % 97 == 0,
         {"o_totalprice": F.lit(-5.0)},
     )
-    assert _load_manifest(table, None)["constraints"]
+    assert load_manifest(table, None)["constraints"]
     rep2 = verify_table(spark, table, deep=True)
     assert not rep2["ok"]
     assert rep2["checks"]["constraints_hold"]["violations"]["price_pos"] > 0
@@ -606,9 +606,9 @@ def test_restore_rolls_contract_back(spark, sf_dir, table):
         spark, o, table, check_constraints={"price_pos": "o_totalprice > 0"}
     )
     drop_constraint(table, "price_pos")
-    assert "constraints" not in _load_manifest(table, None)
+    assert "constraints" not in load_manifest(table, None)
     restore_version(spark, table, 1)
-    assert _load_manifest(table, None)["constraints"] == {
+    assert load_manifest(table, None)["constraints"] == {
         "price_pos": "o_totalprice > 0"
     }
 
@@ -627,7 +627,7 @@ def test_replace_where_swaps_only_scoped_partitions(spark, sf_dir, table):
     write_version(
         spark, e.repartition("event_type"), table, partition_by=["event_type"]
     )
-    m1 = _load_manifest(table, 1)
+    m1 = load_manifest(table, 1)
     backfill = (
         e.filter(F.col("event_type") == "click")
         .withColumn("value", F.col("value") * 2)
@@ -639,7 +639,7 @@ def test_replace_where_swaps_only_scoped_partitions(spark, sf_dir, table):
     want = e.filter(F.col("event_type") != "click").unionByName(backfill)
     assert got.count() == want.count() and got.exceptAll(want).isEmpty()
     # out-of-scope partitions carried by FILE IDENTITY, not rewritten
-    m2 = _load_manifest(table, 2)
+    m2 = load_manifest(table, 2)
     click_files = {
         f for f in m1["files"] if m1["partitions"][f]["event_type"] == "click"
     }
@@ -720,7 +720,7 @@ def test_replace_where_scans_unmapped_and_keeps_dvs(spark, sf_dir, table):
         .unionByName(backfill)
     )
     assert got.count() == want.count() and got.exceptAll(want).isEmpty()
-    assert _load_manifest(table, None)["n_rows"] == got.count()
+    assert load_manifest(table, None)["n_rows"] == got.count()
 
 
 def test_shadow_prefix_collision_refused(spark, table):
@@ -738,7 +738,7 @@ def test_fsck_stray_partition_entry_does_not_crash_deep(spark, sf_dir, table):
     write_version(
         spark, e.repartition("event_type"), table, partition_by=["event_type"]
     )
-    head = _load_manifest(table, None)["version"]
+    head = load_manifest(table, None)["version"]
     _tamper(
         table,
         head,
@@ -780,7 +780,7 @@ def test_generated_column_derives_and_inherits(spark, sf_dir, table):
         table,
         mode="append",
     )
-    m = _load_manifest(table, 2)
+    m = load_manifest(table, 2)
     assert m["generated_cols"] == GEN_DT
     assert set(m["partitions"]) == {os.path.realpath(f) for f in m["files"]}
     import datetime
@@ -826,7 +826,7 @@ def test_generated_column_fsck_backstop_and_clone_carry(spark, sf_dir, tmp_path)
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     write_version(spark, e, src, generated_cols=GEN_DT, partition_by=["dt"])
     clone_table(src, dst)
-    assert _load_manifest(dst, 1)["generated_cols"] == GEN_DT
+    assert load_manifest(dst, 1)["generated_cols"] == GEN_DT
     rep = verify_table(spark, src, deep=True)
     assert rep["checks"]["generated_match"]["ok"]
     update_version(
@@ -922,7 +922,7 @@ def test_multi_column_partition_layout(spark, sf_dir, table):
         table,
         partition_by=["event_type", "half"],
     )
-    m = _load_manifest(table, 1)
+    m = load_manifest(table, 1)
     assert set(m["partition_cols"]) == {"event_type", "half"}
     # pruning composes across both columns
     df, info = read_version_pruned(
@@ -960,7 +960,7 @@ def test_partition_value_special_chars_round_trip(spark, table):
         [(i, v) for i, v in enumerate(vals * 3)], "k long, g string"
     )
     write_version(spark, df.repartition("g"), table, partition_by=["g"])
-    m = _load_manifest(table, 1)
+    m = load_manifest(table, 1)
     recorded = {p["g"] for p in m["partitions"].values()}
     assert recorded == set(vals)
     for v in vals:
@@ -986,7 +986,7 @@ def test_fsck_deep_on_clone_and_scoped_dml_on_clone(spark, sf_dir, tmp_path):
     rep = verify_table(spark, dst, deep=True)
     assert rep["ok"], rep["errors"]
     r = delete_version(spark, dst, partition_scope={"event_type": ["view"]})
-    assert r["files_scanned"] < len(_load_manifest(src, 1)["files"])
+    assert r["files_scanned"] < len(load_manifest(src, 1)["files"])
     assert (
         read_version(spark, dst).count()
         == e.filter(F.col("event_type") != "view").count()
@@ -1020,7 +1020,7 @@ def test_norm_part_value_matches_spark_dir_encoding(spark, tmp_path):
             [(i, v) for i, v in enumerate(values)], f"k long, g {typ}"
         )
         write_version(spark, df.repartition("g"), t, partition_by=["g"])
-        m = _load_manifest(t, 1)
+        m = load_manifest(t, 1)
         recorded = {p["g"] for p in m["partitions"].values()}
         for v in values:
             if v == "":

@@ -162,7 +162,7 @@ def test_replicate_mor_deletes_flow_through(spark, src, dst):
 
 def test_clustered_bootstrap_scopes_later_applies(spark, src, dst):
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        _load_manifest,
+        load_manifest,
     )
 
     write_version(spark, _df(spark, 1000).repartitionByRange(4, "id"), src)
@@ -171,7 +171,7 @@ def test_clustered_bootstrap_scopes_later_applies(spark, src, dst):
     )
     delete_version(spark, src, "id < 10")  # range-scoped change
     r = replicate_changes(spark, src, dst, keys=["id"])
-    m, prev = _load_manifest(dst, r["dst_version"]), _load_manifest(dst, 1)
+    m, prev = load_manifest(dst, r["dst_version"]), load_manifest(dst, 1)
     carried = set(m["files"]) & set(prev["files"])
     assert len(carried) > 0  # untouched range files rode along
     assert _rows(spark, dst) == _rows(spark, src)

@@ -11,8 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-    _load_manifest,
     delete_version,
+    load_manifest,
     merge_version,
     optimize_table,
     read_version,
@@ -59,7 +59,7 @@ def test_stats_cols_inherit_across_appends(spark, table):
         spark, _df(spark, 500, 1000).repartitionByRange(2, "id"), table,
         mode="append",  # no stats_cols passed: inherited
     )
-    m = _load_manifest(table, 2)
+    m = load_manifest(table, 2)
     assert m["stats_cols"] == ["id"]
     assert len(m["stats"]) == len(m["files"])  # every file has an entry
     ids, info = _probe(spark, table, 700, 710)
@@ -82,7 +82,7 @@ def test_dml_paths_carry_and_record(spark, table):
         F.col("id"), (F.col("id") % 7).alias("g"), (F.col("id") * 2).alias("v")
     )
     merge_version(spark, inc, table, keys=["id"])
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert m["stats_cols"] == ["id"]
     assert set(m["stats"]) == set(m["files"])  # full coverage after 5 DMLs
     ids, info = _probe(spark, table, 2050, 2060)
@@ -97,7 +97,7 @@ def test_restore_copies_stats(spark, table):
     )
     delete_version(spark, table, "id >= 500")
     restore_version(spark, table, 1)
-    m = _load_manifest(table, 3)
+    m = load_manifest(table, 3)
     assert set(m["stats"]) == set(m["files"])
     _, info = _probe(spark, table, 900, 910)
     assert info["footer_files"] == 0
@@ -108,7 +108,7 @@ def test_optimize_overwrite_inherits_stats(spark, table):
         spark, _df(spark).repartition(8), table, stats_cols=["id"]
     )
     optimize_table(spark, table, cluster_by=["id"], target_file_bytes=4096)
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert m["stats_cols"] == ["id"]
     assert set(m["stats"]) == set(m["files"])
     _, info = _probe(spark, table, 10, 20)
@@ -174,7 +174,7 @@ def test_nested_leaf_stats_prune_zero_footers(spark, table):
         table,
         stats_cols=["rating.average"],
     )
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert all("rating.average" in e for e in m["stats"].values())
     df, info = read_version_pruned(
         spark, table, ranges={"rating.average": (0.0, 10.0)}
@@ -200,7 +200,7 @@ def test_nested_leaf_stats_survive_nested_rename(spark, table):
         stats_cols=["rating.average"],
     )
     rename_column(table, "rating.average", "avg")
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert m["stats_cols"] == ["rating.avg"]
     df, info = read_version_pruned(
         spark, table, ranges={"rating.avg": (50.0, 60.0)}
@@ -210,7 +210,7 @@ def test_nested_leaf_stats_survive_nested_rename(spark, table):
     assert df.count() == 101
     # renaming the ENCLOSING column rewrites the dotted prefix too
     rename_column(table, "rating", "score")
-    m2 = _load_manifest(table, None)
+    m2 = load_manifest(table, None)
     assert m2["stats_cols"] == ["score.avg"]
     df2, info2 = read_version_pruned(
         spark, table, ranges={"score.avg": (50.0, 60.0)}
@@ -237,7 +237,7 @@ def test_nested_leaf_stats_append_and_incremental_optimize(spark, table):
         table,
         mode="append",
     )
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert all("rating.average" in e for e in m["stats"].values())
     opt = optimize_table(
         spark, table, cluster_by=["rating.average"], incremental=True
@@ -267,7 +267,7 @@ def test_nested_leaf_stats_drop_scrubs(spark, table):
         stats_cols=["rating.average", "id"],
     )
     drop_column(table, "rating.average")
-    m = _load_manifest(table, None)
+    m = load_manifest(table, None)
     assert m["stats_cols"] == ["id"]
     assert all("rating.average" not in e for e in m["stats"].values())
     rep = verify_table(spark, table, deep=True)
@@ -352,12 +352,12 @@ def test_repeated_leaf_paths_refuse_loud_early(spark, table):
     # (an index raise after commit would strand the chain)
     with pytest.raises(ValueError, match="crosses a repeated level"):
         write_bloom_index(spark, table, "authors.aid")
-    v_before = _load_manifest(table, None)["version"]
+    v_before = load_manifest(table, None)["version"]
     with pytest.raises(ValueError, match="crosses a repeated level"):
         delete_version(
             spark, table, F.col("id") < 5, index_cols=["authors.aid"]
         )
-    assert _load_manifest(table, None)["version"] == v_before
+    assert load_manifest(table, None)["version"] == v_before
     # the valid dotted leaf records and probes fine alongside
     _, info = read_version_pruned(
         spark, table, ranges={"meta.sku": (0.0, 1.0)}

@@ -170,10 +170,10 @@ def test_partitions_plan_one_task_per_file(spark, sf_dir, tdir):
     assert len(inserts) == 5  # one executor task per added data file
     # one task per DV sidecar part file, covering the commit's whole DV set
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        _load_manifest,
+        load_manifest,
     )
 
-    dv_set = set(_load_manifest(tdir, 2)["dv_files"])
+    dv_set = set(load_manifest(tdir, 2)["dv_files"])
     assert deletes and all(len(p.dv_files) == 1 for p in deletes)
     assert {p.dv_files[0] for p in deletes} == dv_set
     assert r.latestOffset() == {"version": 2}

@@ -106,11 +106,11 @@ def test_mor_update_then_compaction_folds_dvs(spark, table):
     write_version(spark, read_version(spark, table), table, mode="overwrite")
     assert _rows(spark, table) == want
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        _load_manifest,
+        load_manifest,
     )
 
-    assert _load_manifest(table, 2).get("dv_files")
-    assert not _load_manifest(table, 3).get("dv_files")
+    assert load_manifest(table, 2).get("dv_files")
+    assert not load_manifest(table, 3).get("dv_files")
 
 
 def test_update_honors_prior_mor_delete(spark, table):
