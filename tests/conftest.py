@@ -23,3 +23,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def reliable_tier_run(sf_dir, tmp_path_factory):
+    """The ``reliable_tier.py`` cases computed once in a child session
+    built with ``spark.checkpoint.dir`` (see that module)."""
+    from reliable_tier import run_child
+
+    return run_child(tmp_path_factory.mktemp("reliable_tier"), sf_dir)

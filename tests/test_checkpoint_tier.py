@@ -1,156 +1,28 @@
-"""The reliable materialization tier, chosen by configuration.
-
-``session.materialize`` takes its tier from the session: a session
-built with ``spark.checkpoint.dir`` pins every materialization point
-with the reliable ``checkpoint(eager=True)``, and one without it uses
-``localCheckpoint(eager=True)``. A checkpoint directory cannot be unset
-on a running session, and setting one on the shared pytest session
-would move every later test to the reliable tier, so the reliable side
-runs in a child process: this file run as a script. The child builds
-its own session with the checkpoint directory and master ``local[2,2]``
-(task retries on), computes the cases below, and writes their rows as
-JSON. The test compares them with the same cases on the shared
-(executor-local tier) session.
-
-Run the child by hand with
-``python tests/test_checkpoint_tier.py <ckpt_dir> <fault_dir> <sf_dir> <out.json>``.
-"""
+"""The reliable materialization tier, chosen by configuration: every case
+in ``reliable_tier.py`` gives the same rows on a child session built
+with ``spark.checkpoint.dir`` as on the shared (executor-local tier)
+session, including under a first-attempt task fault."""
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
-import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from reliable_tier import cases, checkpoint_files
 
 
-def _rows(df) -> list[list[str]]:
-    return sorted([str(v) for v in r] for r in df.collect())
-
-
-def _cases(spark, sf: str) -> dict[str, list[list[str]]]:
-    """Every operator with a materialization point that used to take a
-    per-call tier argument, plus two registry entries: one that pins its
-    result before deleting its scratch dir, and one near-dup query."""
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators import neardup
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.dedup import (
-        connected_components,
-    )
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.similarity import (
-        semantic_dedup,
-    )
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.queries import (
-        q_jaccard_pairs,
-    )
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.queries_ops import (
-        q_rollup_refresh,
-    )
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.sources.files import (
-        read_table,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog again and again"),
-            (2, "the quick brown fox jumps over the lazy dog again and again"),
-            (3, "a completely different document about spark query planning"),
-            (4, "the quick brown fox jumps over the lazy cat again and again"),
-        ],
-        ["doc_id", "text"],
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], ["id_a", "id_b"]
-    )
-    return {
-        "jaccard_pairs": _rows(neardup.jaccard_pairs(docs, threshold=0.3)),
-        "simhash_pairs": _rows(neardup.simhash_pairs(docs)),
-        "connected_components": _rows(connected_components(pairs)),
-        "semantic_dedup": _rows(
-            semantic_dedup(
-                read_table(spark, sf, "embeddings"), k=8, iters=0, threshold=0.4
-            )
-        ),
-        "q_rollup_refresh": _rows(q_rollup_refresh(spark, sf)),
-        "q_jaccard_pairs": _rows(q_jaccard_pairs(spark, sf)),
-    }
-
-
-def _child(ckpt: str, fault_dir: str, sf: str, out: str) -> None:
-    from pyspark import TaskContext
-    from pyspark.sql import functions as F
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from bigbookapi_etl_with_airflow_and_snowflake_spark import queries
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="checkpoint-tier",
-        master="local[2,2]",
-        shuffle_partitions=2,
-        extra_conf={"spark.checkpoint.dir": ckpt},
-    )
-    assert spark.sparkContext.getCheckpointDir(), "spark.checkpoint.dir not applied"
-
-    def no_local(*_a, **_k):
-        raise AssertionError("executor-local pin on a reliable-tier session")
-
-    DataFrame.localCheckpoint = no_local
-    res = _cases(spark, sf)
-
-    # A fault that fails the first attempt of partition 0 of every stage
-    # that scans the documents table; the retry must give the same rows.
-    def first_attempt_fault(_doc_id):
-        tc = TaskContext.get()
-        if tc.partitionId() == 0 and tc.attemptNumber() == 0:
-            open(os.path.join(fault_dir, f"stage-{tc.stageId()}"), "w").close()
-            raise RuntimeError("injected first-attempt fault")
-        return True
-
-    fault = F.udf(first_attempt_fault, "boolean")
-    read = queries._t
-    queries._t = lambda spark, sf, name, **kw: read(spark, sf, name, **kw).filter(
-        fault(F.col("doc_id"))
-    )
-    try:
-        res["q_jaccard_pairs_retried"] = _rows(queries.q_jaccard_pairs(spark, sf))
-    finally:
-        queries._t = read
-    with open(out, "w") as fh:
-        json.dump(res, fh)
-    spark.stop()
-
-
-def test_reliable_tier_by_configuration_matches_local_tier(spark, sf_dir, tmp_path):
-    ckpt, fault_dir = tmp_path / "ckpt", tmp_path / "faults"
-    fault_dir.mkdir()
-    out = tmp_path / "reliable.json"
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="2g")
-    env["PYTHONPATH"] = os.pathsep.join(
-        p for p in (REPO, env.get("PYTHONPATH")) if p
-    )
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), str(ckpt), str(fault_dir),
-         sf_dir, str(out)],
-        env=env, cwd=REPO, capture_output=True, text=True, timeout=900,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    reliable = json.loads(out.read_text())
+def test_reliable_tier_by_configuration_matches_local_tier(
+    spark, sf_dir, reliable_tier_run
+):
+    reliable = reliable_tier_run["rows"]
 
     assert spark.sparkContext.getCheckpointDir() is None  # shared session: local tier
-    local = _cases(spark, sf_dir)
+    local = cases(spark, sf_dir)
     assert local["jaccard_pairs"] and local["simhash_pairs"]
     assert local["q_jaccard_pairs"]
     for name, rows in local.items():
         assert reliable[name] == rows, name
     assert reliable["q_jaccard_pairs_retried"] == local["q_jaccard_pairs"]
     # the fault fired (so the retried path really ran) ...
-    assert os.listdir(fault_dir)
+    assert os.listdir(reliable_tier_run["fault_dir"])
     # ... and the pins wrote reliable checkpoint files under the dir
-    written = [f for _, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")]
-    assert written
-
-
-if __name__ == "__main__":
-    _child(*sys.argv[1:5])
+    assert checkpoint_files(reliable_tier_run["ckpt"])

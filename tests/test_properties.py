@@ -212,6 +212,21 @@ def test_connected_components_matches_union_find(spark, seed):
     assert got == want
 
 
+def test_connected_components_reliable_checkpoint_path(spark, reliable_tier_run):
+    """A session built with spark.checkpoint.dir flips every per-round
+    materialization to reliable .checkpoint(); labels must be identical
+    to the local tier and checkpoint files must land under the dir."""
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators.dedup import (
+        connected_components,
+    )
+    from reliable_tier import PAIRS, checkpoint_files, rows
+
+    pairs = spark.createDataFrame(PAIRS, ["id_a", "id_b"])
+    local = rows(connected_components(pairs))
+    assert local and reliable_tier_run["rows"]["connected_components"] == local
+    assert checkpoint_files(reliable_tier_run["ckpt"])
+
+
 def test_passage_dedup_matches_naive(spark):
     """passage_dedup must equal the obvious single-threaded keep-first
     over k-word windows: global first occurrence survives, later ones

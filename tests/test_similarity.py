@@ -355,6 +355,22 @@ def test_ivf_training_sample_partition_invariant(emb, spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
+def test_jaccard_pairs_reliable_checkpoint_path(spark, reliable_tier_run):
+    """A session built with spark.checkpoint.dir switches lineage
+    truncation to the fault-tolerant reliable .checkpoint(); jaccard and
+    simhash pairs must be identical to the local tier and checkpoint
+    files must actually land under the directory."""
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.operators import neardup
+    from reliable_tier import DOCS, checkpoint_files, rows
+
+    df = spark.createDataFrame(DOCS, ["doc_id", "text"])
+    reliable = reliable_tier_run["rows"]
+    local = rows(neardup.jaccard_pairs(df, threshold=0.3))
+    assert local and reliable["jaccard_pairs"] == local
+    assert reliable["simhash_pairs"] == rows(neardup.simhash_pairs(df))
+    assert checkpoint_files(reliable_tier_run["ckpt"])
+
+
 def test_semantic_dedup_matches_bruteforce(spark):
     """semantic_dedup == the naive per-cluster pairwise prune computed
     in numpy from the operator's own assignments: planted near-copies
