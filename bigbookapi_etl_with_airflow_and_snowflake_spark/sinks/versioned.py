@@ -1525,6 +1525,25 @@ def _scoped_cond(predicate, partition_scope: dict | None):
     return cond
 
 
+def _refuse_nondeterministic(scan: DataFrame, cond, op: str) -> None:
+    """Copy-on-write DML evaluates its condition twice: once in the
+    aggregation that finds and counts the touched files, and again in
+    the rewrite. A nondeterministic condition (``rand() < 0.5``) would
+    pick different rows each time, so the committed file set and
+    ``n_rows`` would not describe the rows the rewrite kept. Refuse it
+    before any job runs. The verdict is Catalyst's ``deterministic`` of
+    the ANALYZED condition: a function named in a SQL string or an
+    unresolved Column is only known once it is resolved. Analysis
+    launches no job."""
+    analyzed = scan.filter(cond)._jdf.queryExecution().analyzed()
+    if not analyzed.condition().deterministic():
+        raise ValueError(
+            f"{op}: copy-on-write evaluates the condition twice, so it must "
+            f"be deterministic; got {analyzed.condition().sql()} (use "
+            "mode='mor', which evaluates it once)"
+        )
+
+
 def write_version(
     spark: SparkSession,
     df: DataFrame,
@@ -2636,7 +2655,10 @@ def delete_version(
       matching row are REWRITTEN without their matching rows; with a
       clustered layout (:mod:`operators/zorder`) a selective delete
       touches few files. Cost O(rows in touched files) — right when
-      deletes are bulky or reads must stay scan-pure.
+      deletes are bulky or reads must stay scan-pure. It evaluates the
+      predicate twice (find the touched files, then rewrite them), so a
+      nondeterministic predicate such as ``rand() < 0.5`` raises
+      ``ValueError`` before any job runs.
     - ``"mor"`` (merge-on-read, deletion vectors): NO data file is
       rewritten — the matching rows' physical coordinates (file, row
       position) land in a DV sidecar parquet under ``_dv/``, an
@@ -2701,6 +2723,7 @@ def delete_version(
         # partition candidates (out-of-scope files can't match the
         # scoped predicate by construction)
         cur = _live_scan(spark, base, files=sorted(scan_files), identity=True)
+        _refuse_nondeterministic(cur, cond, "delete_version")
         schema_json = base.get("schema") or _recorded_reader(
             spark, base
         ).parquet(*base["files"]).schema.json()
@@ -2760,9 +2783,8 @@ def delete_version(
         finally:
             scope.unpersist()
     elif touched:
-        # the rewrite evaluates the predicate again, so the count above
-        # holds for a deterministic predicate (the change_files path
-        # persists one evaluation instead)
+        # the rewrite evaluates the predicate again; the count above
+        # still holds because only a deterministic predicate got here
         scope = _live_scan(spark, base, files=sorted(touched))
         kept = scope.filter(~F.coalesce(cond, F.lit(False)))
         new_files, _, new_stats = _write_data_files(
@@ -3311,7 +3333,8 @@ def update_version(
     - ``"cow"``: files holding ≥1 matching live row are rewritten with
       the assignments applied; every other file is carried by
       reference. O(rows in touched files) — with a clustered layout a
-      selective update touches few files.
+      selective update touches few files. Like COW delete, it refuses a
+      nondeterministic predicate (``ValueError``, before any job runs).
     - ``"mor"``: NO existing file is rewritten — the matched rows'
       coordinates land in a DV sidecar (hiding the old images) and the
       updated images append as new data files, one commit. This is how
@@ -3496,6 +3519,7 @@ def update_version(
 
     if scan_files:
         cur = _live_scan(spark, base, files=sorted(scan_files), identity=True)
+        _refuse_nondeterministic(cur, cond, "update_version")
         # ONE aggregation finds the touched files and counts each one's
         # matching rows (a NULL predicate matches nothing); the collect
         # is bounded by the scanned FILE count

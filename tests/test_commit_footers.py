@@ -330,6 +330,42 @@ def test_update_with_null_predicate_rows(spark, table):
     assert read_version(spark, table).filter("s = 'U'").count() == want
 
 
+@pytest.mark.parametrize("form", ["column", "sql"])
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_cow_dml_refuses_a_nondeterministic_condition(spark, table, op, form):
+    """COW delete and update evaluate the condition twice (touched-file
+    aggregation, then rewrite), so a nondeterministic one is refused
+    before any job runs; MOR evaluates it once and accepts it."""
+    pred = F.rand() < 0.5 if form == "column" else "rand() < 0.5"
+    write_version(spark, _rows(spark, 0, 300).repartitionByRange(3, "k"), table)
+    data_dirs = set(os.listdir(os.path.join(table, "data")))
+    dml = {
+        "delete": lambda **kw: delete_version(spark, table, predicate=pred, **kw),
+        "update": lambda **kw: update_version(
+            spark, table, predicate=pred, assignments={"s": F.lit("U")}, **kw
+        ),
+    }[op]
+    refused = []
+
+    def cow():
+        try:
+            dml()
+        except ValueError as exc:
+            refused.append(str(exc))
+
+    n_jobs, _ = _jobs(spark, f"cow-{op}-rand", cow)
+    assert refused and "deterministic" in refused[0] and "rand(" in refused[0]
+    assert n_jobs == 0
+    assert load_manifest(table, None)["version"] == 1
+    assert set(os.listdir(os.path.join(table, "data"))) == data_dirs
+    res = dml(mode="mor")
+    m = _consistent(spark, table)
+    assert m["version"] == res["version"] == 2
+    n = res["n_deleted"] if op == "delete" else res["n_updated"]
+    assert 0 < n < 300
+    assert m["n_rows"] == (300 - n if op == "delete" else 300)
+
+
 def test_cow_delete_emptying_a_file_stages_nothing(spark, table):
     write_version(
         spark, _rows(spark, 0, 300).repartitionByRange(3, "k"), table,
