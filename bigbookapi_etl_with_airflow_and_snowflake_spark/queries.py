@@ -2547,22 +2547,15 @@ REGISTRY.update(OPS_REGISTRY)
 # entries 1-50), so insertion order is a validation budget; testdata
 # regenerates between rounds, so green rows age. The window spends the
 # budget, in order, on:
-#   (1) RE-CERTIFICATION of every oracled entry that reaches a
-#       materialization point which moved to ``session.materialize``
-#       (operators graph, bpe, sampling, dedup, similarity, neardup and
-#       lm, and queries_ext's direct pins; traced by wrapping the pin
-#       and running every entry), plus image_dhash_pairs, which dropped
-#       its signature pin. The mechanically converted scratch-dir /
-#       pin sites in queries_ops.py and queries.py are covered instead
-#       by an output-identity proof: every registry entry's
-#       fingerprint (row count + order-insensitive row hash) was equal
-#       before and after the conversion at sf0.001, and this window's
-#       at sf0.01;
-#   (2) the 28 STALEST remaining oracled entries by the deterministic
-#       criterion of r12-r16 ((last green round, penultimate green
-#       round, total green rows) ascending over CORRECTNESS_r*.json,
-#       with the previous window counted as green in round 16, then
-#       alphabetical).
+#   (1) RE-CERTIFICATION of the 41 entries that commit to a versioned
+#       lake table: every commit path in ``sinks/versioned.py`` moved
+#       to one body builder and one commit helper (traced by wrapping
+#       the manifest commit and running every entry). Every registry
+#       entry's fingerprint (row count + order-insensitive row hash)
+#       was equal before and after the change at sf0.001, and this
+#       window's at sf0.01;
+#   (2) the 9 STALEST remaining oracled entries (last green round in
+#       CORRECTNESS_r*.json ascending, then registry order).
 # The eight no-oracle entries (approx/seeded/iterative by design) are
 # EXCLUDED from the first 50 — they can only ever produce a rows-only
 # row; their hard-oracled exact twins carry the signal
@@ -2571,58 +2564,58 @@ REGISTRY.update(OPS_REGISTRY)
 # tests/test_oracle_parity.py.
 # ---------------------------------------------------------------------------
 _DRIVER_PRIORITY = [
-    # -- (1) entries whose materialization point moved: re-certification ------
-    "image_dhash_pairs",
-    "image_neardup_keep",
-    "image_corpus_manifest",
-    "jaccard_pairs",
-    "jaccard_pairs_capped",
-    "minhash_band_pairs",
-    "simhash_pairs",
-    "near_dedup_keep",
-    "dedup_clusters",
-    "incremental_dedup",
-    "minhash_jaccard_est",
-    "semantic_dedup",
-    "semantic_dedup_scaled",
-    "pagerank_2iter",
-    "bpe_encode",
-    "stable_row_ids",
-    "pps_sample_orders",
-    "dsir_sample",
-    "seq_pack",
-    "lm_quality",
-    "ccnet_buckets",
-    "corpus_manifest",
-    # -- (2) the 28 stalest remaining oracled rows -------------------------------
-    "large_orders",
-    "length_histogram",
-    "pii_scrub",
-    "priority_line_counts",
-    "product_profit",
-    "region_nation_matrix",
-    "repetition_stats",
-    "returned_vs_kept_custkeys",
-    "small_qty_revenue",
-    "streaming_session",
-    "supplier_part_counts",
-    "top_revenue_supplier",
-    "vocab_coverage",
-    "audio_decode",
-    "cosine_topk",
-    "dedup_keep_first",
-    "image_decode",
-    "lang_id",
-    "minhash_signatures",
-    "multimodal_bytes",
-    "rollup_refresh",
-    "salted_agg_events",
-    "streaming_tumbling",
-    "topk_recent_events",
-    "bm25_topk",
-    "doc_chunks",
-    "exact_substr_scrub",
-    "exact_substr_spans",
+    # -- (1) entries that commit to a versioned lake table: re-certification --
+    "cdc_replicate",
+    "expectations_quarantine",
+    "maintenance_advisor",
+    "rollup_from_changes",
+    "scd2_from_changes",
+    "streaming_cdf_rewrites",
+    "streaming_curated_ingest",
+    "streaming_exactly_once_ingest",
+    "streaming_merge_cdf",
+    "streaming_quarantine_ingest",
+    "streaming_versioned_changes",
+    "table_constraints",
+    "table_fsck",
+    "table_history",
+    "versioned_branch_publish",
+    "versioned_changes",
+    "versioned_changes_recorded",
+    "versioned_clone",
+    "versioned_column_mapping",
+    "versioned_concurrent",
+    "versioned_generated_partition",
+    "versioned_index_compaction",
+    "versioned_merge_delete",
+    "versioned_mor_delete",
+    "versioned_nested_mapping",
+    "versioned_nested_stats",
+    "versioned_optimize",
+    "versioned_optimize_incremental",
+    "versioned_partition_prune",
+    "versioned_partition_rename",
+    "versioned_pruned_read",
+    "versioned_rename_stats",
+    "versioned_replace_where",
+    "versioned_restore",
+    "versioned_schema_evolution",
+    "versioned_scoped_dml",
+    "versioned_stats_skip",
+    "versioned_tag_read",
+    "versioned_time_travel",
+    "versioned_update",
+    "wap_drift_gate",
+    # -- (2) the 9 stalest remaining oracled rows ------------------------------
+    "excess_supply",
+    "idle_customers",
+    "embedding_norms",
+    "embedding_quantize",
+    "ohlc_daily",
+    "winsorize_events",
+    "mp4_samples",
+    "streaming_sliding",
+    "asof_join",
 ]
 
 REGISTRY = {name: REGISTRY[name] for name in _DRIVER_PRIORITY} | {

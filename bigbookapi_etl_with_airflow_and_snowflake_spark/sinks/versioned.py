@@ -40,6 +40,7 @@ import re
 import time
 import uuid
 from collections.abc import Callable, Sequence
+from typing import NamedTuple
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -326,8 +327,10 @@ def create_branch(table_dir: str, name: str, version: int | None = None) -> int:
     pattern: stage risky writes on a branch, validate them with real
     reads, then :func:`publish_branch` the head back to main as one
     atomic fast-forward commit. The fork is metadata-only (the branch's
-    v1 manifest references the SAME data files — zero data movement);
-    branch commits go through :func:`write_version` ``branch=...`` and
+    v1 manifest references the SAME data files — zero data movement —
+    and carries the table's contract, so branch commits are held to
+    main's constraints and generated columns); branch commits go
+    through :func:`write_version` ``branch=...`` and
     never perturb main's chain, numbering, or O(1) metadata listings.
 
     Branch surface: ``write_version`` (overwrite/append, schema-on-write
@@ -350,19 +353,19 @@ def create_branch(table_dir: str, name: str, version: int | None = None) -> int:
     manifest = {
         "version": 1,
         "committed_at": time.time(),
-        "mode": "branch-fork",
-        "files": m["files"],
-        "n_rows": m["n_rows"],
-        "schema": m.get("schema"),
-        "dv_files": m.get("dv_files") or [],
-        **_carried_mapping(m),
-        "branch": name,
-        "forked_from": m["version"],
-        # incarnation id: publish's crash self-heal must distinguish
-        # THIS fork from an earlier same-named branch whose publish is
-        # main's latest (name alone would let a re-forked branch
-        # fast-forward over commits it never saw)
-        "fork_id": uuid.uuid4().hex,
+        **_child_body(
+            m,
+            mode="branch-fork",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            branch=name,
+            forked_from=m["version"],
+            # incarnation id: publish's crash self-heal must distinguish
+            # THIS fork from an earlier same-named branch whose publish
+            # is main's latest (name alone would let a re-forked branch
+            # fast-forward over commits it never saw)
+            fork_id=uuid.uuid4().hex,
+        ),
     }
     if not _atomic_link_json(_manifest_path(table_dir, 1, name), manifest):
         raise ValueError(
@@ -426,40 +429,36 @@ def publish_branch(table_dir: str, name: str) -> int:
     if os.path.exists(pub):
         with open(pub) as fh:
             base = json.load(fh)["main_version"]
-
-    def build(prior: dict | None) -> dict:
-        cur = prior["version"] if prior else 0
-        # self-heal the crash window between a publish's main commit and
-        # its published.json update: main's latest being OUR OWN earlier
-        # publish is a valid fast-forward base even if the marker is
-        # stale or lost — any other intervening commit still refuses.
-        # Matched on the fork INCARNATION id, not the name: a deleted-
-        # and-re-forked branch must not fast-forward over commits the
-        # new incarnation never saw
-        ours = (
-            prior is not None
-            and fork_id is not None
-            and prior.get("published_fork") == fork_id
-        )
-        if cur != base and not ours:
-            raise CommitConflict(
-                f"main is at v{cur} but branch {name!r} is based on "
-                f"v{base} — fast-forward publish refused; re-create the "
-                "branch from current main to pick up the new commits"
-            )
-        return {
-            "mode": "publish",
-            "files": head["files"],
-            "n_rows": head["n_rows"],
-            "schema": head.get("schema"),
-            "dv_files": head.get("dv_files") or [],
-            **_carried_mapping(head),
-            "published_branch": name,
-            "published_fork": fork_id,
-            "branch_version": head["version"],
-        }
-
-    v = _commit(table_dir, build)
+    # self-heal the crash window between a publish's main commit and
+    # its published.json update: main's latest being OUR OWN earlier
+    # publish is a valid fast-forward base even if the marker is stale
+    # or lost — any other intervening commit still refuses. Matched on
+    # the fork INCARNATION id, not the name: a deleted-and-re-forked
+    # branch must not fast-forward over commits it never saw
+    mains = _version_numbers(table_dir)
+    if (
+        fork_id is not None
+        and mains
+        and load_manifest(table_dir, mains[-1]).get("published_fork") == fork_id
+    ):
+        base = mains[-1]
+    v = _commit_ops(
+        table_dir,
+        _child_body(
+            head,
+            mode="publish",
+            files=head["files"],
+            n_rows=head["n_rows"],
+            published_branch=name,
+            published_fork=fork_id,
+            branch_version=head["version"],
+        ),
+        base_version=base,
+        conflict=(
+            f"fast-forward publish of branch {name!r} refused; re-create "
+            "the branch from current main to pick up the new commits"
+        ),
+    )
     tmp = pub + f".tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         json.dump({"main_version": v, "branch_version": head["version"]}, fh)
@@ -682,11 +681,6 @@ def _phys_path(mapping: dict | None, col: str) -> str:
     if top is None:
         return col
     return top["physical"] + "." + _phys_rel(_nested_of(top), parts[1:])
-
-
-def _carried_mapping(base: dict | None) -> dict:
-    cm = _col_mapping(base)
-    return {"column_mapping": cm} if cm else {}
 
 
 def _refuse_repeated_leaf(schema, cols, what: str) -> None:
@@ -1085,6 +1079,12 @@ def _write_change_files(
     # under column mapping change files store physical names, exactly
     # like data files (_change_type is unmapped and passes through)
     _to_physical(changes, mapping).write.parquet(out)
+    return _parquet_files(out)
+
+
+def _parquet_files(out: str) -> list[str]:
+    """The canonical paths of the parquet part files one write job
+    staged under ``out``, sorted."""
     return sorted(
         _canon(os.path.join(out, f))
         for f in os.listdir(out)
@@ -1181,29 +1181,35 @@ def _live_scan(
     return df if identity else df.drop(_DV_FILE, _DV_POS)
 
 
-def _resolve_index_geometry(
+def _rebuild_bloom_index(
+    spark: SparkSession,
     table_dir: str,
     key_col: str,
-    prior_version: int,
-    explicit: tuple[int, int] | None,
-) -> tuple[int, int] | None:
-    """Geometry for a full (re)build: an explicit ``index_geometry``
-    entry wins; otherwise INHERIT the most recent recorded (m_bits, k)
-    at or before ``prior_version`` — an overwrite commit on a table
-    with a tuned index must not silently reset it to defaults, and the
-    walk-back (newest usable index dir, one listdir) means an
-    unindexed intermediate commit cannot break the inheritance either.
-    None = no prior index anywhere, no override: library defaults."""
-    if explicit is not None:
-        return int(explicit[0]), int(explicit[1])
-    idx_root = os.path.join(table_dir, "_index", f"bloom_{key_col}")
-    for pv in reversed(_entry_versions(idx_root)):
-        if pv > prior_version:
-            continue
-        p = _usable_index_params(table_dir, key_col, pv)
-        if p is not None:
-            return int(p["m_bits"]), int(p["k"])
-    return None
+    version: int,
+    geometry: tuple[int, int] | None = None,
+) -> str:
+    """Full index (re)build for ``version``: an explicit ``geometry``
+    wins; otherwise INHERIT the most recent recorded (m_bits, k) before
+    ``version`` — an overwrite or restore on a table with a tuned index
+    must not silently reset it to defaults, and the walk-back (newest
+    usable index dir, one listdir) means an unindexed intermediate
+    commit cannot break the inheritance either. No prior index and no
+    override: library defaults."""
+    if geometry is None:
+        m = load_manifest(table_dir, version)
+        kphys = _phys_path(_col_mapping(m), key_col)
+        idx_root = os.path.join(table_dir, "_index", f"bloom_{kphys}")
+        for pv in reversed([x for x in _entry_versions(idx_root) if x < version]):
+            p = _usable_index_params(table_dir, kphys, pv)
+            if p is not None:
+                geometry = p["m_bits"], p["k"]
+                break
+        else:
+            return write_bloom_index(spark, table_dir, key_col, version=version)
+    return write_bloom_index(
+        spark, table_dir, key_col, version=version,
+        m_bits=int(geometry[0]), k=int(geometry[1]),
+    )
 
 
 def _last_txn_version(
@@ -1291,25 +1297,6 @@ def _phys_stats_cols(m: dict | None) -> list[str]:
     return [_phys_path(cm, c) for c in m["stats_cols"]]
 
 
-def _carried_stats(
-    base: dict | None, files: Sequence[str], new_stats: dict | None = None
-) -> dict:
-    """Manifest stats fields for a child commit that carries prior
-    files: prior entries for SURVIVING files ride by value, and the
-    commit's new files add ``new_stats`` — the envelopes their writer
-    read from their own footers (:func:`_write_data_files`, under
-    :func:`_phys_stats_cols`). Empty dict when the table records no
-    stats."""
-    if not base or not base.get("stats_cols"):
-        return {}
-    keep = set(files)
-    stats = {
-        f: e for f, e in (base.get("stats") or {}).items() if f in keep
-    }
-    stats.update(new_stats or {})
-    return {"stats_cols": base["stats_cols"], "stats": stats}
-
-
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _PART_SHADOW = "__part_"
 _PART_MAX_VALUES = 4096
@@ -1342,7 +1329,8 @@ def _stage_partitioned(
     leaf files (how every snapshot scan works here) stay uniform with
     unpartitioned commits, and partition discovery never has to run.
     The per-file value map is parsed back from the staged paths (hive
-    %-escaping undone; the hive null sentinel maps to ``None``).
+    %-escaping undone; the hive null sentinel maps to ``None``). A
+    refused layout (too many value tuples) removes ``data_dir``.
 
     ``cols`` are LOGICAL names; the shadow dir keys AND the returned
     value map are keyed by the columns' frozen PHYSICAL names — the
@@ -1382,6 +1370,9 @@ def _stage_partitioned(
     files.sort()
     n_values = len({tuple(v.items()) for v in parts.values()})
     if n_values > _PART_MAX_VALUES:
+        import shutil
+
+        shutil.rmtree(data_dir, ignore_errors=True)
         raise ValueError(
             f"partition_by produced {n_values} distinct value tuples "
             f"(max {_PART_MAX_VALUES}) — hive partitioning is for "
@@ -1422,46 +1413,6 @@ def _validate_partition_cols(df: DataFrame, cols: Sequence[str]) -> None:
                 "— partition values must dir-encode losslessly "
                 "(string/integral/boolean/date)"
             )
-
-
-def _carried_partitions(base: dict | None, files: Sequence[str]) -> dict:
-    """Manifest partition fields for a child commit: entries for
-    SURVIVING files ride by value; files the commit rewrote or added
-    outside the partitioned write path simply have no entry, and the
-    partition pruning pass keeps unmapped files (conservative, never
-    wrong — the same degrade contract as recorded stats). An OPTIMIZE
-    or fresh partitioned append re-records coverage."""
-    if not base or not base.get("partition_cols"):
-        return {}
-    keep = set(files)
-    return {
-        "partition_cols": base["partition_cols"],
-        "partitions": {
-            f: v
-            for f, v in (base.get("partitions") or {}).items()
-            if f in keep
-        },
-    }
-
-
-def _carried_generated(base: dict | None) -> dict:
-    """Manifest generated-column field for a child commit — recorded
-    derivations ride every commit verbatim, same policy (and same
-    deep-FSCK backstop) as CHECK constraints."""
-    if not base or not base.get("generated_cols"):
-        return {}
-    return {"generated_cols": dict(base["generated_cols"])}
-
-
-def _carried_constraints(base: dict | None) -> dict:
-    """Manifest constraint field for a child commit: the recorded CHECK
-    set is the TABLE's contract and rides every commit verbatim. DML
-    paths carry it without re-validating their rewritten rows (an
-    UPDATE assignment could in principle break a CHECK) —
-    :func:`verify_table` ``deep=True`` is the documented backstop."""
-    if not base or not base.get("constraints"):
-        return {}
-    return {"constraints": dict(base["constraints"])}
 
 
 def _partition_candidates(m: dict, scope: dict | None) -> list[str] | None:
@@ -1542,6 +1493,61 @@ def _refuse_nondeterministic(scan: DataFrame, cond, op: str) -> None:
             f"be deterministic; got {analyzed.condition().sql()} (use "
             "mode='mor', which evaluates it once)"
         )
+
+
+def _contract_refusal(
+    reader,
+    files: Sequence[str],
+    constraints: dict[str, str],
+    generated: Sequence[tuple[str, str]],
+) -> str | None:
+    """Enforce the table contract on a commit's STAGED files in ONE
+    aggregation: per CHECK constraint the rows where it is FALSE **or
+    NULL** (SQL CHECK semantics), and per caller-supplied generated
+    column the rows that disagree with its derivation (a wrong ``dt``
+    would silently corrupt partition pruning). ``reader`` reads the
+    staged files under the commit's logical names. Returns the refusal
+    message for :func:`_commit_ops` ``refuse``, or None."""
+    cc_items = sorted(constraints.items())
+    if not files or not (cc_items or generated):
+        return None
+    from pyspark.sql import functions as F
+
+    aggs = [
+        F.sum(F.when(F.coalesce(F.expr(cexpr), F.lit(False)), 0).otherwise(1))
+        .cast("long")
+        .alias(f"__viol_{i}")
+        for i, (_, cexpr) in enumerate(cc_items)
+    ] + [
+        F.sum(F.when(F.col(gname).eqNullSafe(F.expr(gexpr)), 0).otherwise(1))
+        .cast("long")
+        .alias(f"__gen_{i}")
+        for i, (gname, gexpr) in enumerate(generated)
+    ]
+    row = reader.parquet(*files).agg(*aggs).first()
+    bad = {
+        cname: int(row[f"__viol_{i}"])
+        for i, (cname, _) in enumerate(cc_items)
+        if row[f"__viol_{i}"]
+    }
+    gen_bad = {
+        gname: int(row[f"__gen_{i}"])
+        for i, (gname, _) in enumerate(generated)
+        if row[f"__gen_{i}"]
+    }
+    msgs = []
+    if bad:
+        msgs.append(
+            f"CHECK constraint violation: {bad} (constraints: "
+            f"{ {c: constraints[c] for c in bad} })"
+        )
+    if gen_bad:
+        derivations = dict(generated)
+        msgs.append(
+            f"generated-column mismatch: {gen_bad} (derivations: "
+            f"{ {g: derivations[g] for g in gen_bad} })"
+        )
+    return "commit refused, nothing staged — " + "; ".join(msgs) if msgs else None
 
 
 def write_version(
@@ -1725,22 +1731,25 @@ def write_version(
         )
     if (txn_app is None) != (txn_version is None):
         raise ValueError("txn_app and txn_version come together")
-    head0 = 0
     if txn_app is not None:
         applied = _last_txn_version(table_dir, txn_app, branch)
         if applied is not None and int(txn_version) <= applied:
             # replay of an already-committed batch: indistinguishable
             # success, nothing staged
             return _version_numbers(table_dir, branch)[-1]
-        nums0 = _version_numbers(table_dir, branch)
-        head0 = nums0[-1] if nums0 else 0
+    # the head manifest, read ONCE: every inherited property (generated
+    # columns, schema, partition layout, constraints, mapping, stats
+    # columns) and the start of the txn race window come from it
+    nums = _version_numbers(table_dir, branch)
+    head = load_manifest(table_dir, nums[-1], branch) if nums else None
+    head0 = head["version"] if head else 0
     if branch is not None:
         if index_cols:
             raise ValueError(
                 "index_cols on a branch commit — Bloom indexes are "
                 "main-lineage; build them when the branch publishes"
             )
-        if not _version_numbers(table_dir, branch):
+        if head is None:
             raise ValueError(
                 f"branch {branch!r} not found (have "
                 f"{sorted(branches(table_dir))}) — create_branch() first"
@@ -1748,17 +1757,7 @@ def write_version(
     # generated columns: explicit set when given ({} clears), else
     # inherited; DERIVE missing ones onto df before any schema check
     # or staging sees it (present ones validate in the staging agg)
-    nums_g = _version_numbers(table_dir, branch)
-    recorded_gen = dict(
-        (
-            load_manifest(table_dir, nums_g[-1], branch).get(
-                "generated_cols"
-            )
-            if nums_g
-            else None
-        )
-        or {}
-    )
+    recorded_gen = dict((head or {}).get("generated_cols") or {})
     if generated_cols is None:
         eff_gen = recorded_gen
     else:
@@ -1781,8 +1780,7 @@ def write_version(
     if record_changes:
         # refuse BEFORE anything stages (vacuum never reclaims an
         # uncommitted staging); the overwrite base-pin + reshape check
-        # happens below, on the head manifest the mapping block already
-        # loads once
+        # happens below, against the head manifest
         _refuse_change_clash(df.columns)
     # dotted stats/index paths validate BEFORE staging too (loud-early;
     # inherited stats_cols were validated at their own record time)
@@ -1790,28 +1788,20 @@ def write_version(
     _refuse_repeated_leaf(df.schema, index_cols, "index_cols")
     rc_base: dict | None = None
     rc_renames: dict[str, str] = {}
-    if mode == "append":
+    if mode == "append" and (head or {}).get("schema") is not None:
         # fail-fast schema check against the current latest BEFORE any
         # data stages; build() re-derives against the commit-time prior
-        nums = _version_numbers(table_dir, branch)
-        if nums:
-            prior_schema = load_manifest(table_dir, nums[-1], branch).get(
-                "schema"
-            )
-            if prior_schema is not None:
-                _evolved_schema(prior_schema, df.schema, merge_schema)
+        _evolved_schema(head["schema"], df.schema, merge_schema)
     # effective partition columns: explicit list, else inherited from
     # the table's recorded layout (None = explicitly unpartitioned);
     # appends may not silently re-partition the table
     eff_part_by = list(partition_by) if partition_by else []
-    nums_pc = _version_numbers(table_dir, branch)
-    pc_m = load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
-    recorded_pc = list((pc_m or {}).get("partition_cols") or [])
+    recorded_pc = list((head or {}).get("partition_cols") or [])
     # the recorded layout (partition_cols + per-file value maps) is
     # keyed by frozen PHYSICAL names — rename_column never touches it;
     # the API speaks logical, so translate through the head mapping
-    _pc_logi = _logical_names(_col_mapping(pc_m))
-    _pc_phys = _phys_names(_col_mapping(pc_m))
+    _pc_logi = _logical_names(_col_mapping(head))
+    _pc_phys = _phys_names(_col_mapping(head))
     if partition_by is not None and not eff_part_by:
         eff_part_by = [_pc_logi.get(p, p) for p in recorded_pc]
     if (
@@ -1827,19 +1817,11 @@ def write_version(
         )
     if eff_part_by:
         _validate_partition_cols(df, eff_part_by)
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_dir, "data", commit_id)
+    data_dir = os.path.join(table_dir, "data", uuid.uuid4().hex)
     # effective CHECK constraints: explicit set when given ({} clears),
     # else inherited from the recorded contract (appends and OPTIMIZE
     # overwrites must not silently shed the table's invariants)
-    recorded_cc = dict(
-        (
-            load_manifest(table_dir, nums_pc[-1], branch).get("constraints")
-            if nums_pc
-            else None
-        )
-        or {}
-    )
+    recorded_cc = dict((head or {}).get("constraints") or {})
     if check_constraints is None:
         eff_cc = recorded_cc
     else:
@@ -1855,15 +1837,14 @@ def write_version(
     # extend it (new columns get fresh field ids), overwrites rebuild
     # it carrying ids for persisting logical names; staged data files
     # store PHYSICAL names either way
-    head_m = load_manifest(table_dir, nums_pc[-1], branch) if nums_pc else None
-    if record_changes and mode == "overwrite" and head_m is not None:
+    if record_changes and mode == "overwrite" and head is not None:
         # pin the base: the recorded delete set is computed against it,
         # so a racing commit must CommitConflict, not rebase — and a
         # reshaping overwrite (names OR types) has no well-defined
         # row-level change set, so it refuses loudly BEFORE staging
         # (an un-refused reshape would fail the change-set union later
         # with the staging already on disk and unreclaimable)
-        rc_base = head_m
+        rc_base = head
         if rc_base.get("schema") is not None:
             prior_list = json.loads(rc_base["schema"])["fields"]
             new_list = json.loads(df.schema.json())["fields"]
@@ -1919,8 +1900,8 @@ def write_version(
                         "snapshots with read_changes() instead, or "
                         "conform the frame first"
                     )
-    prior_map = _col_mapping(head_m)
-    if rc_renames and prior_map is None and head_m.get("schema"):
+    prior_map = _col_mapping(head)
+    if rc_renames and prior_map is None and head.get("schema"):
         from pyspark.sql.types import StructType as _PST0
 
         # the rename-overwrite needs field ids to carry identity across
@@ -1928,15 +1909,15 @@ def write_version(
         # like rename_column's auto-enable (physical = prior logical,
         # which is what every existing file stores)
         prior_map = _init_mapping(
-            _PST0.fromJson(json.loads(head_m["schema"]))
+            _PST0.fromJson(json.loads(head["schema"]))
         )
     if prior_map is not None:
         from pyspark.sql.types import StructField as _PSF
         from pyspark.sql.types import StructType as _PST
 
         prior_schema = (
-            _PST.fromJson(json.loads(head_m["schema"]))
-            if head_m.get("schema")
+            _PST.fromJson(json.loads(head["schema"]))
+            if head.get("schema")
             else None
         )
         if rc_renames:
@@ -1967,35 +1948,17 @@ def write_version(
     else:
         eff_map = None
     if eff_part_by:
-        try:
-            new_files, new_parts = _stage_partitioned(
-                df, data_dir, eff_part_by, eff_map
-            )
-        except ValueError:
-            import shutil
-
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
+        new_files, new_parts = _stage_partitioned(
+            df, data_dir, eff_part_by, eff_map
+        )
     else:
         _to_physical(df, eff_map).write.parquet(data_dir)
-        new_files = sorted(
-            _canon(os.path.join(data_dir, f))
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        new_parts = {}
+        new_files, new_parts = _parquet_files(data_dir), {}
     # stats columns: explicit, else inherited from the table's latest
     # recorded list (coverage must not decay because one writer forgot)
-    eff_stats_cols = list(stats_cols)
-    if not eff_stats_cols:
-        nums_sc = _version_numbers(table_dir, branch)
-        if nums_sc:
-            eff_stats_cols = list(
-                load_manifest(table_dir, nums_sc[-1], branch).get(
-                    "stats_cols"
-                )
-                or []
-            )
+    eff_stats_cols = list(stats_cols) or list(
+        (head or {}).get("stats_cols") or []
+    )
     # the row count and the footer envelopes both come from the staged
     # files' own footers, read on the driver — no Spark job. Envelopes
     # are recorded under PHYSICAL names/dotted paths (staged files
@@ -2005,70 +1968,15 @@ def write_version(
     n_new, new_stats = _staged_footers(
         new_files, [_phys_path(eff_map, c) for c in eff_stats_cols]
     )
-    cc_items = sorted(eff_cc.items())
-    if new_files and (cc_items or gen_validate):
-        from pyspark.sql import functions as F
-
-        # constraint enforcement is ONE aggregation over the staged
-        # increment: every per-constraint violation count (FALSE **or
-        # NULL** violates — SQL CHECK semantics) and, in the same pass,
-        # every caller-supplied generated column's mismatch count (a
-        # wrong dt would silently corrupt partition pruning)
-        aggs = [
-            F.sum(
-                F.when(F.coalesce(F.expr(cexpr), F.lit(False)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__viol_{i}")
-            for i, (_, cexpr) in enumerate(cc_items)
-        ]
-        aggs += [
-            F.sum(
-                F.when(F.col(gname).eqNullSafe(F.expr(gexpr)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__gen_{i}")
-            for i, (gname, gexpr) in enumerate(gen_validate)
-        ]
-        # mapped read when column mapping is on: staged files hold
-        # physical names, constraint/generated exprs logical ones
-        staged_reader = (
-            _recorded_reader(
-                spark,
-                {"schema": df.schema.json(), "column_mapping": eff_map},
-            )
-            if eff_map
-            else spark.read
-        )
-        row = staged_reader.parquet(*new_files).agg(*aggs).first()
-        bad = {
-            cname: int(row[f"__viol_{i}"])
-            for i, (cname, _) in enumerate(cc_items)
-            if row[f"__viol_{i}"]
-        }
-        gen_bad = {
-            gname: int(row[f"__gen_{i}"])
-            for i, (gname, _) in enumerate(gen_validate)
-            if row[f"__gen_{i}"]
-        }
-        if bad or gen_bad:
-            _discard_staged(new_files)
-            msgs = []
-            if bad:
-                msgs.append(
-                    f"CHECK constraint violation: {bad} (constraints: "
-                    f"{ {c: eff_cc[c] for c in bad} })"
-                )
-            if gen_bad:
-                msgs.append(
-                    f"generated-column mismatch: {gen_bad} (derivations: "
-                    f"{ {g: eff_gen[g] for g in gen_bad} })"
-                )
-            raise ValueError(
-                "commit refused, nothing staged — " + "; ".join(msgs)
-            )
+    schema_json = df.schema.json()
+    # mapped read when column mapping is on: staged files hold physical
+    # names, constraint/generated/change-set exprs logical ones
+    staged_reader = _recorded_reader(
+        spark, {"schema": schema_json, "column_mapping": eff_map}
+    )
+    refusal = _contract_refusal(staged_reader, new_files, eff_cc, gen_validate)
     staged_cf: list[str] | None = None
-    if record_changes:
+    if record_changes and refusal is None:
         from pyspark.sql import functions as F
 
         pieces = []
@@ -2076,16 +1984,8 @@ def write_version(
             # read the STAGED files back (not df) so the recorded
             # inserts are exactly the committed rows even under a
             # nondeterministic incoming frame
-            rdr = (
-                _recorded_reader(
-                    spark,
-                    {"schema": df.schema.json(), "column_mapping": eff_map},
-                )
-                if eff_map
-                else spark.read.schema(df.schema)
-            )
             pieces.append(
-                rdr.parquet(*new_files).withColumn(
+                staged_reader.parquet(*new_files).withColumn(
                     "_change_type", F.lit("insert")
                 )
             )
@@ -2111,7 +2011,8 @@ def write_version(
             staged_cf = _write_change_files(spark, ch, table_dir, eff_map)
         else:
             staged_cf = []
-    schema_json = df.schema.json()
+    if change_files is not None:
+        staged_cf = list(change_files)
 
     def build(prior: dict | None) -> dict:
         if txn_app is not None:
@@ -2131,101 +2032,61 @@ def write_version(
                         f"txn ({txn_app!r}, {txn_version}) already applied "
                         f"by v{rv}"
                     )
-        files, n_rows, schema = new_files, n_new, schema_json
-        dvs: list[str] = []
-        if mode == "append" and prior is not None:
-            files = prior["files"] + new_files
-            n_rows = prior["n_rows"] + n_new
-            # carried files keep needing their deletion vectors; an
-            # overwrite commits dv-free (its snapshot is exactly df —
-            # which is how compacting a MOR table folds DVs away)
-            dvs = prior.get("dv_files") or []
-            if prior.get("schema") is not None:
-                schema = _evolved_schema(
-                    prior["schema"], df.schema, merge_schema
-                )
-        body = {
-            "mode": mode,
-            "files": files,
-            "n_rows": n_rows,
-            "schema": schema,
-            "dv_files": dvs,
-        }
-        if txn_app is not None:
-            body["txn"] = {"app": txn_app, "version": int(txn_version)}
-        if eff_stats_cols:
-            stats = dict(new_stats)
-            if mode == "append" and prior is not None:
-                # carried files keep their recorded envelopes by value
-                stats = {**(prior.get("stats") or {}), **new_stats}
-            body["stats_cols"] = eff_stats_cols
-            body["stats"] = stats
-        if eff_part_by:
-            parts = dict(new_parts)
-            if mode == "append" and prior is not None:
-                # carried files keep their recorded partition values
-                parts = {**(prior.get("partitions") or {}), **new_parts}
+        # an append carries the prior head (files, DVs, their stats and
+        # partition entries); an overwrite carries nothing — its
+        # snapshot is exactly df, which is how compacting a MOR table
+        # folds DVs away. The contract is the effective one either way.
+        base = prior if mode == "append" else None
+        schema = schema_json
+        if (base or {}).get("schema") is not None:
+            schema = _evolved_schema(base["schema"], df.schema, merge_schema)
+        _ppn = _phys_names(eff_map)
+        return _child_body(
+            base,
+            mode=mode,
+            files=(base["files"] if base else []) + new_files,
+            n_rows=(base["n_rows"] if base else 0) + n_new,
+            schema=schema,
+            column_mapping=eff_map,
+            stats_cols=eff_stats_cols,
+            new_stats=new_stats,
             # recorded layout is PHYSICAL-keyed (frozen across renames)
-            _ppn = _phys_names(eff_map)
-            body["partition_cols"] = [
-                _ppn.get(c, c) for c in eff_part_by
-            ]
-            body["partitions"] = parts
-        if eff_cc:
-            body["constraints"] = eff_cc
-        if eff_gen:
-            body["generated_cols"] = eff_gen
-        if eff_map is not None:
-            body["column_mapping"] = eff_map
-        if change_files is not None:
-            body["change_files"] = list(change_files)
-        if staged_cf is not None:
-            if mode == "overwrite" and (
-                (prior["version"] if prior else 0)
-                != (rc_base["version"] if rc_base else 0)
-            ):
-                raise CommitConflict(
-                    "table advanced past "
-                    f"v{rc_base['version'] if rc_base else 0} while "
-                    "record_changes computed the overwrite's delete set "
-                    "— re-run the write"
-                )
-            body["change_files"] = staged_cf
-        return body
+            partition_cols=[_ppn.get(c, c) for c in eff_part_by],
+            new_parts=new_parts,
+            constraints=eff_cc,
+            generated_cols=eff_gen,
+            txn=(
+                {"app": txn_app, "version": int(txn_version)}
+                if txn_app is not None
+                else None
+            ),
+            change_files=staged_cf,
+        )
 
     try:
-        v = _commit(table_dir, build, branch=branch)
+        return _commit_ops(
+            table_dir,
+            build,
+            # record_changes pins the overwrite's base: its recorded
+            # delete set is computed against it
+            base_version=(
+                (rc_base["version"] if rc_base else 0)
+                if record_changes and mode == "overwrite"
+                else None
+            ),
+            staged=(new_files, staged_cf if record_changes else None),
+            spark=spark,
+            index=_Index(
+                index_cols,
+                new_files if mode == "append" else None,
+                index_geometry,
+                index_max_chain,
+            ),
+            branch=branch,
+            refuse=refusal,
+        )
     except _TxnAlreadyApplied:
-        _discard_staged(new_files)
-        if staged_cf:
-            _discard_staged(staged_cf)
         return _version_numbers(table_dir, branch)[-1]
-    except (ValueError, CommitConflict):
-        _discard_staged(new_files)
-        if staged_cf:
-            _discard_staged(staged_cf)
-        raise
-    for col in index_cols:
-        explicit = (index_geometry or {}).get(col)
-        if mode == "append" and v > 1:
-            # append carries prior files verbatim → index maintenance
-            # is O(increment): prior rows ∪ build over new files only
-            maintain_bloom_index(
-                spark, table_dir, col, version=v,
-                new_files=new_files, prior_version=v - 1,
-                max_chain=index_max_chain, geometry=explicit,
-            )
-        else:
-            geo = _resolve_index_geometry(
-                table_dir, _phys_path(eff_map, col), v - 1, explicit
-            )
-            if geo is None:
-                write_bloom_index(spark, table_dir, col, version=v)
-            else:
-                write_bloom_index(
-                    spark, table_dir, col, version=v, m_bits=geo[0], k=geo[1]
-                )
-    return v
 
 
 def _commit(
@@ -2240,9 +2101,10 @@ def _commit(
     EEXIST if another writer won the version number (the loser loops
     and rebuilds against the longer chain), and readers can never
     observe a half-written manifest because content is durable before
-    the name exists. ``build`` may raise :class:`CommitConflict` to
-    abort instead of rebasing (copy-on-write ops do). ``branch``
-    commits into that branch's own chain with identical atomicity."""
+    the name exists. ``build`` may raise to abort instead of rebasing
+    (:func:`_commit_ops`, the only caller, raises :class:`CommitConflict`
+    for a stale copy-on-write base). ``branch`` commits into that
+    branch's own chain with identical atomicity."""
     os.makedirs(_manifest_root(table_dir, branch), exist_ok=True)
     while True:
         nums = _version_numbers(table_dir, branch)
@@ -2255,6 +2117,138 @@ def _commit(
         return next_v
 
 
+def _child_body(
+    base: dict | None,
+    *,
+    mode: str,
+    files: Sequence[str],
+    n_rows: int,
+    new_stats: dict | None = None,
+    new_parts: dict | None = None,
+    **changes,
+) -> dict:
+    """The manifest body of a commit that descends from ``base``: every
+    TABLE property of ``base`` rides along unless ``changes`` names it.
+    The properties are the tuple below: the recorded schema and column
+    mapping, the deletion vectors, the stats and partition layouts, the
+    CHECK constraints and the generated columns. A property added to
+    that tuple is carried by every commit. ``stats`` and ``partitions``
+    keep only the entries of surviving ``files`` (a rewritten file's
+    entry goes with it; the readers treat a missing entry as "cannot
+    skip"), and ``new_stats``/``new_parts`` add the commit's own new
+    files. A property passed as None leaves the body (an overwrite that
+    de-partitions, a drop that empties ``stats_cols``). Any other key of
+    ``changes`` describes this one commit (``txn``, ``change_files``,
+    the ``renamed``/``dropped``/``published_*``/``cloned_from``/
+    ``restored_from`` markers), is never carried, and is omitted when
+    None."""
+    props = {
+        k: changes.pop(k) if k in changes else (base or {}).get(k)
+        for k in (
+            "schema", "column_mapping", "dv_files", "stats_cols", "stats",
+            "partition_cols", "partitions", "constraints", "generated_cols",
+        )
+    }
+    keep = set(files)
+    body = {
+        "mode": mode,
+        "files": list(files),
+        "n_rows": n_rows,
+        "schema": props["schema"],
+        "dv_files": list(props["dv_files"] or []),
+    }
+    if props["column_mapping"]:
+        body["column_mapping"] = props["column_mapping"]
+    for cols, entries, new in (
+        ("stats_cols", "stats", new_stats),
+        ("partition_cols", "partitions", new_parts),
+    ):
+        if props[cols]:
+            body[cols] = list(props[cols])
+            body[entries] = {
+                f: e for f, e in (props[entries] or {}).items() if f in keep
+            } | (new or {})
+    for k in ("constraints", "generated_cols"):
+        if props[k]:
+            body[k] = dict(props[k])
+    body.update((k, v) for k, v in changes.items() if v is not None)
+    return body
+
+
+class _Index(NamedTuple):
+    """Bloom-index upkeep after a commit (:func:`_commit_ops`): for each
+    of ``cols``, chain a link holding ``new_files`` onto ``prior`` (by
+    default the version the commit replaced) — O(increment) — or, with
+    ``new_files=None``, rebuild the index at the inherited geometry."""
+
+    cols: Sequence[str]
+    new_files: Sequence[str] | None
+    geometry: dict[str, tuple[int, int]] | None = None
+    max_chain: int = 8
+    prior: int | None = None
+
+
+def _commit_ops(
+    table_dir: str,
+    build: dict | Callable[[dict | None], dict],
+    *,
+    base_version: int | None = None,
+    staged: Sequence[Sequence[str] | None] = (),
+    spark: SparkSession | None = None,
+    index: _Index | None = None,
+    branch: str | None = None,
+    refuse: str | None = None,
+    conflict: str = "re-run the operation against the new head",
+) -> int:
+    """The one commit path of every lake operation; returns the new
+    version. ``build`` is the manifest body, or a function of the prior
+    head that returns it (an append rebases onto whatever head it lands
+    on). Owns three things:
+
+    - optimistic concurrency: with ``base_version`` (0 = no table yet)
+      the commit refuses with :class:`CommitConflict` when the head is
+      not that version — a copy-on-write body computed against a stale
+      snapshot never lands;
+    - the staged lifecycle: ``staged`` lists the commit's staged data,
+      DV and change-file lists; a conflict, a ``ValueError`` (``refuse``
+      raises one before the commit: a contract violation found on the
+      staged files) or a replayed txn discards them all, because no
+      manifest will ever reference them and vacuum sweeps only what
+      manifests name;
+    - index maintenance after the commit (``index``, see
+      :class:`_Index`)."""
+
+    def checked(prior: dict | None) -> dict:
+        cur = prior["version"] if prior else 0
+        if base_version is not None and cur != base_version:
+            raise CommitConflict(
+                f"table advanced past v{base_version} (latest: v{cur}) — "
+                + conflict
+            )
+        return build(prior) if callable(build) else build
+
+    try:
+        if refuse is not None:
+            raise ValueError(refuse)
+        v = _commit(table_dir, checked, branch)
+    except (CommitConflict, ValueError, _TxnAlreadyApplied):
+        for files in staged:
+            _discard_staged(files)
+        raise
+    for col in index.cols if index else ():
+        geometry = (index.geometry or {}).get(col)
+        if index.new_files is not None and v > 1:
+            maintain_bloom_index(
+                spark, table_dir, col, version=v,
+                new_files=index.new_files,
+                prior_version=v - 1 if index.prior is None else index.prior,
+                max_chain=index.max_chain, geometry=geometry,
+            )
+        else:
+            _rebuild_bloom_index(spark, table_dir, col, v, geometry)
+    return v
+
+
 def _local_path(uri: str) -> str:
     """``_metadata.file_path`` is a URI (``file:///x/y``); manifests
     store canonical OS paths (see :func:`_canon`). Normalize for set
@@ -2263,7 +2257,7 @@ def _local_path(uri: str) -> str:
     return _canon(unquote(p.path) if p.scheme else uri)
 
 
-def _carried_files(base_files: Sequence[str], touched: set[str]) -> list[str]:
+def _untouched_files(base_files: Sequence[str], touched: set[str]) -> list[str]:
     """Carried = base files not rewritten. Every scanned file came from
     ``base_files``, so a touched path that fails canonical membership
     means the path normalization broke — fail loudly rather than carry
@@ -2283,11 +2277,16 @@ def _discard_staged(files: Sequence[str]) -> None:
     """Remove a conflict-aborted commit's staged data subdirectory —
     nothing references it (the manifest never committed) and vacuum()
     only sweeps files dropped manifests reference, so without this the
-    orphans would never be reclaimable."""
+    orphans would never be reclaimable. A partitioned staging keeps its
+    files in ``__part_<col>=<value>`` subdirectories: the whole commit
+    dir above them goes."""
     import shutil
 
     if files:
-        shutil.rmtree(os.path.dirname(files[0]), ignore_errors=True)
+        d = os.path.dirname(files[0])
+        while os.path.basename(d).startswith(_PART_SHADOW):
+            d = os.path.dirname(d)
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _write_data_files(
@@ -2315,11 +2314,7 @@ def _write_data_files(
     partition_scope=...)``: every scanned row dies, zero survivors)."""
     data_dir = os.path.join(table_dir, "data", uuid.uuid4().hex)
     _to_physical(df, mapping).write.parquet(data_dir)
-    files = sorted(
-        _canon(os.path.join(data_dir, f))
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
+    files = _parquet_files(data_dir)
     n, stats = _staged_footers(files, stats_cols)
     if files and n == 0:
         import shutil
@@ -2525,7 +2520,7 @@ def merge_version(
         # already-empty snapshot (a delete removed every row and staged
         # no part files): the merge is a pure insert against zero rows
         touched, n_touched = set(), 0
-    carried = _carried_files(base["files"], touched)
+    carried = _untouched_files(base["files"], touched)
     if rank_attached:
         inc = incoming.withColumnRenamed("__cdc_rank", "__src")
     else:
@@ -2580,58 +2575,35 @@ def merge_version(
     finally:
         if change_files:
             merged.unpersist()
-    schema_json = merged.schema.json()
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} "
-                f"(latest: v{prior['version'] if prior else 0}) — re-run the merge"
-            )
-        body = {
-            "mode": "merge",
-            "files": carried + new_files,
-            "n_rows": base["n_rows"] - n_touched + n_new,
-            "schema": schema_json,
-            **({"column_mapping": eff_map} if eff_map else {}),
-            **_carried_stats(base, carried + new_files, new_stats),
-            **_carried_partitions(base, carried + new_files),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-            # carried files keep needing their DVs; entries addressing
-            # the rewritten files go stale-but-harmless (fresh uuid
-            # paths never reuse a dead identity) — compaction reclaims
-            "dv_files": base.get("dv_files") or [],
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
+    # carried files keep needing their DVs; entries addressing the
+    # rewritten files go stale-but-harmless (fresh uuid paths never
+    # reuse a dead identity) — compaction reclaims
+    v = _commit_ops(
+        table_dir,
+        _child_body(
+            base,
+            mode="merge",
+            files=carried + new_files,
+            n_rows=base["n_rows"] - n_touched + n_new,
+            schema=merged.schema.json(),
+            column_mapping=eff_map,
+            new_stats=new_stats,
+            change_files=cf,
+        ),
+        base_version=base["version"],
+        staged=(new_files, cf),
+        spark=spark,
         # copy-on-write commit: carried files keep their prior index
         # rows, only the rewritten increment is hashed
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
-        )
-    result = {
+        index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+    )
+    return {
         "version": v,
         "files_rewritten": len(touched),
         "files_carried": len(carried),
         "n_rows": base["n_rows"] - n_touched + n_new,
+        **({} if cf is None else {"change_files_added": len(cf)}),
     }
-    if cf is not None:
-        result["change_files_added"] = len(cf)
-    return result
 
 
 def delete_version(
@@ -2746,7 +2718,7 @@ def delete_version(
         # staged no part files): the delete is a no-op commit
         schema_json = base.get("schema")
         touched, n_deleted = set(), 0
-    carried = _carried_files(base["files"], touched)
+    carried = _untouched_files(base["files"], touched)
     cf: list[str] | None = None
     if change_files:
         _refuse_change_clash(
@@ -2793,57 +2765,33 @@ def delete_version(
     else:
         new_files, new_stats = [], {}
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} "
-                f"(latest: v{prior['version'] if prior else 0}) — re-run the delete"
-            )
-        body = {
-            "mode": "delete",
-            "files": carried + new_files,
-            "n_rows": base["n_rows"] - n_deleted,
-            "schema": schema_json,
-            **_carried_mapping(base),
-            **_carried_stats(base, carried + new_files, new_stats),
-            **_carried_partitions(base, carried + new_files),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-            # carried files keep their DVs; rewritten files' entries go
-            # stale-but-harmless (see merge_version)
-            "dv_files": base.get("dv_files") or [],
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
-        # copy-on-write commit: carried files keep their prior index
-        # rows, only the rewritten increment is hashed
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
-        )
-    result = {
+    # carried files keep their DVs; rewritten files' entries go
+    # stale-but-harmless (see merge_version)
+    v = _commit_ops(
+        table_dir,
+        _child_body(
+            base,
+            mode="delete",
+            files=carried + new_files,
+            n_rows=base["n_rows"] - n_deleted,
+            schema=schema_json,
+            new_stats=new_stats,
+            change_files=cf,
+        ),
+        base_version=base["version"],
+        staged=(new_files, cf),
+        spark=spark,
+        index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+    )
+    return {
         "version": v,
         "files_rewritten": len(touched),
         "files_carried": len(carried),
         "files_scanned": len(scan_files),
         "n_deleted": n_deleted,
         "n_rows": base["n_rows"] - n_deleted,
+        **({} if cf is None else {"change_files_added": len(cf)}),
     }
-    if cf is not None:
-        result["change_files_added"] = len(cf)
-    return result
 
 
 def overwrite_partitions(
@@ -2991,6 +2939,25 @@ def overwrite_partitions(
         for f in base["files"]
         if f not in set(replaced) and f not in set(unmapped)
     ]
+    # stage the replacement through the partitioned writer (map entries
+    # for the new files) FIRST: a refused layout then has nothing else
+    # to discard. The recorded CHECK/generated contract is enforced on
+    # it in one aggregation (mapped reader: staged files hold physical
+    # names, constraint exprs logical ones)
+    sc = _phys_stats_cols(base)
+    new_files, new_parts = _stage_partitioned(
+        df,
+        os.path.join(table_dir, "data", uuid.uuid4().hex),
+        p_logical,
+        _col_mapping(base),
+    )
+    n_new, new_stats = _staged_footers(new_files, sc)
+    refusal = _contract_refusal(
+        _recorded_reader(spark, base),
+        new_files,
+        base.get("constraints") or {},
+        gen_validate,
+    )
     # live rows leaving the table: the replaced partitions' (cheap —
     # exactly the files being dropped) plus unmapped in-scope rows
     n_replaced = (
@@ -2999,86 +2966,18 @@ def overwrite_partitions(
         else 0
     )
     rw_files: list[str] = []
-    rw_n = 0
-    rw_stats: dict = {}
-    n_unmapped_live = 0
     if unmapped:
         um = _live_scan(spark, base, files=sorted(unmapped))
         n_unmapped_live = um.count()
         keep = um.filter(~F.coalesce(scope_cond, F.lit(False)))
+        # the unmapped rewrite's envelopes come back from its own writer
         rw_files, rw_n, rw_stats = _write_data_files(
-            keep, table_dir, _col_mapping(base), _phys_stats_cols(base)
+            keep, table_dir, _col_mapping(base), sc
         )
         n_replaced += n_unmapped_live - rw_n
-    # stage the replacement through the partitioned writer (map entries
-    # for the new files) and enforce the recorded CHECK contract
-    data_dir = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    try:
-        new_files, new_parts = _stage_partitioned(
-            df, data_dir, p_logical, _col_mapping(base)
-        )
-    except ValueError:
-        # over-cardinality (or shadow-clash) raised AFTER the unmapped
-        # rewrite staged — discard both stagings, leak nothing
-        import shutil
-
-        shutil.rmtree(data_dir, ignore_errors=True)
-        _discard_staged(rw_files)
-        raise
-    n_new = 0
-    if new_files:
-        cc_items = sorted((base.get("constraints") or {}).items())
-        aggs = [F.count(F.lit(1)).alias("__n")] + [
-            F.sum(
-                F.when(F.coalesce(F.expr(cexpr), F.lit(False)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__viol_{i}")
-            for i, (_, cexpr) in enumerate(cc_items)
-        ] + [
-            F.sum(
-                F.when(F.col(gname).eqNullSafe(F.expr(gexpr)), 0).otherwise(1)
-            )
-            .cast("long")
-            .alias(f"__gen_{i}")
-            for i, (gname, gexpr) in enumerate(gen_validate)
-        ]
-        # mapped reader: staged files hold physical names, constraint
-        # exprs reference logical ones (identity read when unmapped)
-        row = (
-            _recorded_reader(spark, base)
-            .parquet(*new_files)
-            .agg(*aggs)
-            .first()
-        )
-        n_new = row["__n"]
-        bad = {
-            cname: int(row[f"__viol_{i}"])
-            for i, (cname, _) in enumerate(cc_items)
-            if row[f"__viol_{i}"]
-        }
-        gen_bad = {
-            gname: int(row[f"__gen_{i}"])
-            for i, (gname, _) in enumerate(gen_validate)
-            if row[f"__gen_{i}"]
-        }
-        if bad or gen_bad:
-            _discard_staged(new_files)
-            _discard_staged(rw_files)
-            raise ValueError(
-                "replace refused, nothing staged — CHECK/generated "
-                f"violations: { {**bad, **gen_bad} }"
-            )
-    files = carried + rw_files + new_files
-    # the partitioned writer's files describe themselves here; the
-    # unmapped rewrite's envelopes came back from its own writer
-    sc = _phys_stats_cols(base)
-    new_stats = {
-        **rw_stats,
-        **(_staged_footers(new_files, sc)[1] if sc else {}),
-    }
+        new_stats = {**rw_stats, **new_stats}
     cf: list[str] | None = None
-    if change_files:
+    if change_files and refusal is None:
         cf = []
         # outgoing rows: the dropped partitions' live rows (exactly the
         # files being replaced) + unmapped in-scope live rows; incoming
@@ -3111,54 +3010,32 @@ def overwrite_partitions(
             cf = _write_change_files(
                 spark, changes, table_dir, _col_mapping(base)
             )
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} — re-run the replace"
-            )
-        body = {
-            "mode": "replace_where",
-            "files": files,
-            "n_rows": base["n_rows"] - n_replaced + n_new,
-            "schema": base.get("schema"),
-            # carried files keep needing their DVs; entries addressing
-            # dropped/rewritten files go stale-but-harmless
-            "dv_files": base.get("dv_files") or [],
-            **_carried_mapping(base),
-            **_carried_stats(base, files, new_stats),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        parts = {
-            f: v for f, v in pmap.items() if f in {_canon(x) for x in carried}
-        }
-        body["partition_cols"] = pcols
-        body["partitions"] = {**parts, **new_parts}
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        _discard_staged(rw_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
+    v = _commit_ops(
+        table_dir,
+        # carried files keep needing their DVs; entries addressing
+        # dropped/rewritten files go stale-but-harmless
+        _child_body(
+            base,
+            mode="replace_where",
+            files=carried + rw_files + new_files,
+            n_rows=base["n_rows"] - n_replaced + n_new,
+            new_stats=new_stats,
+            new_parts=new_parts,
+            change_files=cf,
+        ),
+        base_version=base["version"],
+        staged=(new_files, rw_files, cf),
+        spark=spark,
         # carried files keep their prior index rows; only the commit's
         # rewritten + replacement files hash (O(increment), same
         # contract as the COW DML paths). Rows indexed for dropped
         # files go stale-but-harmless, as everywhere.
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=rw_files + new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
-        )
-    result = {
+        index=_Index(
+            index_cols, rw_files + new_files, index_geometry, index_max_chain
+        ),
+        refuse=refusal,
+    )
+    return {
         "version": v,
         "files_replaced": len(replaced),
         "files_carried": len(carried),
@@ -3166,10 +3043,8 @@ def overwrite_partitions(
         "files_added": len(new_files),
         "n_replaced": n_replaced,
         "n_rows": base["n_rows"] - n_replaced + n_new,
+        **({} if cf is None else {"change_files_added": len(cf)}),
     }
-    if cf is not None:
-        result["change_files_added"] = len(cf)
-    return result
 
 
 def _delete_version_mor(
@@ -3193,8 +3068,6 @@ def _delete_version_mor(
     MOR deletes natively from the sidecars, but a uniform change-file
     history lets :func:`read_changes` stay on its O(changed rows) fast
     path across every commit in a range)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     cf: list[str] | None = None
@@ -3206,7 +3079,6 @@ def _delete_version_mor(
         cf = []
     dv_new: list[str] = []
     n_deleted = 0
-    dv_dir = None
     scoped = list(base["files"] if scan_files is None else scan_files)
     if scoped:
         # existing DVs applied: a row deleted by a PRIOR MOR commit
@@ -3220,23 +3092,8 @@ def _delete_version_mor(
             # one scan feeds two writes (DV coordinates + change rows)
             hit = hit.persist()
         try:
-            matched = hit.select(
-                F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
-            )
-            dv_dir = os.path.join(table_dir, _DV_DIR, uuid.uuid4().hex)
-            matched.write.parquet(dv_dir)
-            dv_new = sorted(
-                _canon(os.path.join(dv_dir, f))
-                for f in os.listdir(dv_dir)
-                if f.endswith(".parquet")
-            )
-            n_deleted = _staged_footers(dv_new)[0]
-            if n_deleted == 0:
-                # nothing matched: drop the staged empty sidecar so reads
-                # never pay an anti-join for a no-op delete
-                shutil.rmtree(dv_dir, ignore_errors=True)
-                dv_new, dv_dir = [], None
-            elif change_files:
+            dv_new, n_deleted = _write_dv_files(hit, table_dir)
+            if dv_new and change_files:
                 cf = _write_change_files(
                     spark,
                     hit.drop(_DV_FILE, _DV_POS).withColumn(
@@ -3248,50 +3105,27 @@ def _delete_version_mor(
         finally:
             if change_files:
                 hit.unpersist()
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} "
-                f"(latest: v{prior['version'] if prior else 0}) — re-run the delete"
-            )
-        body = {
-            "mode": "delete_mor",
-            "files": base["files"],
-            "n_rows": base["n_rows"] - n_deleted,
-            "schema": base.get("schema"),
-            "dv_files": (base.get("dv_files") or []) + dv_new,
-            **_carried_mapping(base),
-            **_carried_stats(base, base["files"]),
-            **_carried_partitions(base, base["files"]),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        if dv_dir is not None:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
+    v = _commit_ops(
+        table_dir,
+        _child_body(
+            base,
+            mode="delete_mor",
+            files=base["files"],
+            n_rows=base["n_rows"] - n_deleted,
+            dv_files=(base.get("dv_files") or []) + dv_new,
+            change_files=cf,
+        ),
+        base_version=base["version"],
+        staged=(dv_new, cf),
+        spark=spark,
         # file set unchanged → the index chains a zero-new-files link
         # (O(1)); probes stay correct because Bloom pruning is
         # file-level and conservative — a file whose every matching
-        # row is DV-deleted still qualifies, and the exact filter +
-        # DV anti-join discard its rows
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=[], prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
-        )
-    result = {
+        # row is DV-deleted still qualifies, and the exact filter + DV
+        # anti-join discard its rows
+        index=_Index(index_cols, [], index_geometry, index_max_chain),
+    )
+    return {
         "version": v,
         "files_rewritten": 0,
         "files_carried": len(base["files"]),
@@ -3299,10 +3133,30 @@ def _delete_version_mor(
         "n_deleted": n_deleted,
         "n_rows": base["n_rows"] - n_deleted,
         "dv_files_added": len(dv_new),
+        **({} if cf is None else {"change_files_added": len(cf)}),
     }
-    if cf is not None:
-        result["change_files_added"] = len(cf)
-    return result
+
+
+def _write_dv_files(matched: DataFrame, table_dir: str) -> tuple[list[str], int]:
+    """Stage one deletion-vector sidecar — the (file, pos) coordinates
+    of ``matched``'s rows (identity columns kept) — under a fresh
+    ``_dv/<uuid>/`` in one write job; returns (files, rows), the count
+    read from the footers. A sidecar that matched nothing is removed,
+    so reads never pay an anti-join for a no-op, and returns ([], 0)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    dv_dir = os.path.join(table_dir, _DV_DIR, uuid.uuid4().hex)
+    matched.select(
+        F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
+    ).write.parquet(dv_dir)
+    files = _parquet_files(dv_dir)
+    n = _staged_footers(files)[0]
+    if n == 0:
+        shutil.rmtree(dv_dir, ignore_errors=True)
+        return [], 0
+    return files, n
 
 
 def update_version(
@@ -3404,8 +3258,6 @@ def update_version(
         return df.select(*cols)
 
     if mode == "mor":
-        import shutil
-
         # one scan feeds two writes (DV coordinates + updated images):
         # persist the matched slice so the full-table filter runs once;
         # the scan is scoped to the partition candidates (out-of-scope
@@ -3417,21 +3269,10 @@ def update_version(
             if scan_files
             else _live_scan(spark, base, identity=True).filter(F.lit(False)).persist()
         )
+        new_files, new_stats = [], {}
         try:
-            dv_dir = os.path.join(table_dir, _DV_DIR, uuid.uuid4().hex)
-            matched.select(
-                F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
-            ).write.parquet(dv_dir)
-            dv_new = sorted(
-                _canon(os.path.join(dv_dir, f))
-                for f in os.listdir(dv_dir)
-                if f.endswith(".parquet")
-            )
-            n_updated = _staged_footers(dv_new)[0]
-            if n_updated == 0:
-                shutil.rmtree(dv_dir, ignore_errors=True)
-                dv_new, new_files, new_stats = [], [], {}
-            else:
+            dv_new, n_updated = _write_dv_files(matched, table_dir)
+            if dv_new:
                 updated = apply_assignments(
                     matched.drop(_DV_FILE, _DV_POS), F.lit(True)
                 )
@@ -3465,46 +3306,24 @@ def update_version(
                         updated.unpersist()
         finally:
             matched.unpersist()
-
-        def build(prior: dict | None) -> dict:
-            if prior is None or prior["version"] != base["version"]:
-                raise CommitConflict(
-                    f"table advanced past v{base['version']} — re-run the update"
-                )
-            body = {
-                "mode": "update_mor",
-                "files": base["files"] + new_files,
-                "n_rows": base["n_rows"],
-                "schema": schema_json,
-                "dv_files": (base.get("dv_files") or []) + dv_new,
-                **_carried_mapping(base),
-                **_carried_stats(
-                    base, base["files"] + new_files, new_stats
-                ),
-                **_carried_partitions(base, base["files"] + new_files),
-                **_carried_constraints(base),
-            **_carried_generated(base),
-            }
-            if cf is not None:
-                body["change_files"] = cf
-            return body
-
-        try:
-            v = _commit(table_dir, build)
-        except CommitConflict:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            _discard_staged(new_files)
-            if cf:
-                _discard_staged(cf)
-            raise
-        for col in index_cols:
-            maintain_bloom_index(
-                spark, table_dir, col, version=v,
-                new_files=new_files, prior_version=base["version"],
-                max_chain=index_max_chain,
-                geometry=(index_geometry or {}).get(col),
-            )
-        result = {
+        v = _commit_ops(
+            table_dir,
+            _child_body(
+                base,
+                mode="update_mor",
+                files=base["files"] + new_files,
+                n_rows=base["n_rows"],
+                schema=schema_json,
+                dv_files=(base.get("dv_files") or []) + dv_new,
+                new_stats=new_stats,
+                change_files=cf,
+            ),
+            base_version=base["version"],
+            staged=(dv_new, new_files, cf),
+            spark=spark,
+            index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+        )
+        return {
             "version": v,
             "files_rewritten": 0,
             "files_carried": len(base["files"]),
@@ -3512,10 +3331,8 @@ def update_version(
             "files_scanned": len(scan_files),
             "n_updated": n_updated,
             "n_rows": base["n_rows"],
+            **({} if cf is None else {"change_files_added": len(cf)}),
         }
-        if cf is not None:
-            result["change_files_added"] = len(cf)
-        return result
 
     if scan_files:
         cur = _live_scan(spark, base, files=sorted(scan_files), identity=True)
@@ -3529,7 +3346,7 @@ def update_version(
     else:
         # every file is out of scope: no row can match — no-op commit
         touched, n_updated = set(), 0
-    carried = _carried_files(base["files"], touched)
+    carried = _untouched_files(base["files"], touched)
     if touched and change_files:
         # one evaluation of the updated images, PERSISTED, feeds both
         # the rewritten data files and the recorded change set — a
@@ -3572,43 +3389,23 @@ def update_version(
         )
     else:
         new_files, new_stats = [], {}
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != base["version"]:
-            raise CommitConflict(
-                f"table advanced past v{base['version']} — re-run the update"
-            )
-        body = {
-            "mode": "update",
-            "files": carried + new_files,
-            "n_rows": base["n_rows"],
-            "schema": schema_json,
-            "dv_files": base.get("dv_files") or [],
-            **_carried_mapping(base),
-            **_carried_stats(base, carried + new_files, new_stats),
-            **_carried_partitions(base, carried + new_files),
-            **_carried_constraints(base),
-            **_carried_generated(base),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        if cf:
-            _discard_staged(cf)
-        raise
-    for col in index_cols:
-        maintain_bloom_index(
-            spark, table_dir, col, version=v,
-            new_files=new_files, prior_version=base["version"],
-            max_chain=index_max_chain,
-            geometry=(index_geometry or {}).get(col),
-        )
-    result = {
+    v = _commit_ops(
+        table_dir,
+        _child_body(
+            base,
+            mode="update",
+            files=carried + new_files,
+            n_rows=base["n_rows"],
+            schema=schema_json,
+            new_stats=new_stats,
+            change_files=cf,
+        ),
+        base_version=base["version"],
+        staged=(new_files, cf),
+        spark=spark,
+        index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+    )
+    return {
         "version": v,
         "files_rewritten": len(touched),
         "files_carried": len(carried),
@@ -3616,10 +3413,8 @@ def update_version(
         "files_scanned": len(scan_files),
         "n_updated": n_updated,
         "n_rows": base["n_rows"],
+        **({} if cf is None else {"change_files_added": len(cf)}),
     }
-    if cf is not None:
-        result["change_files_added"] = len(cf)
-    return result
 
 
 def replicate_changes(
@@ -4041,7 +3836,7 @@ def _optimize_incremental(
             "avg_point_reads_before": before_reads,
             "avg_point_reads_after": before_reads,
         }
-    carried = _carried_files(m["files"], {_canon(f) for f in selected})
+    carried = _untouched_files(m["files"], {_canon(f) for f in selected})
     bytes_sel = sum(
         os.path.getsize(f) for f in selected if os.path.exists(f)
     )
@@ -4051,41 +3846,23 @@ def _optimize_incremental(
     new_files, _n_new, new_stats = _write_data_files(
         rewritten, table_dir, _col_mapping(m), _phys_stats_cols(m)
     )
-    cf: list[str] | None = [] if change_files else None
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run the optimize"
-            )
-        body = {
-            "mode": "optimize_incremental",
-            "files": carried + new_files,
+    v = _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="optimize_incremental",
+            files=carried + new_files,
             # live rows of the selected files rewrote 1:1 (DV'd rows
             # fold away and were never in n_rows) — content unchanged
-            "n_rows": m["n_rows"],
-            "schema": m.get("schema"),
-            "dv_files": m.get("dv_files") or [],
-            **_carried_mapping(m),
-            **_carried_stats(m, carried + new_files, new_stats),
-            **_carried_partitions(m, carried + new_files),
-            **_carried_constraints(m),
-            **_carried_generated(m),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        return body
-
-    try:
-        v = _commit(table_dir, build)
-    except CommitConflict:
-        _discard_staged(new_files)
-        raise
-    for c in index_cols:
-        maintain_bloom_index(
-            spark, table_dir, c, version=v,
-            new_files=new_files, prior_version=m["version"],
-        )
+            n_rows=m["n_rows"],
+            new_stats=new_stats,
+            change_files=[] if change_files else None,
+        ),
+        base_version=m["version"],
+        staged=(new_files,),
+        spark=spark,
+        index=_Index(index_cols, new_files),
+    )
     after = layout_report(table_dir, col, version=v)["avg_point_reads"]
     return {
         "version": v,
@@ -4344,73 +4121,35 @@ def restore_version(
             else None
         )
         cf = _write_change_files(spark, undo, table_dir, syn_map)
-
-    def build(prior: dict | None) -> dict:
-        if cf is not None and (prior is None or prior["version"] != head):
-            # the recorded undo set was computed against `head`; a
-            # commit that raced in between would make it wrong — refuse
-            # rather than record a stale change set
-            raise CommitConflict(
-                f"table advanced past v{head} while the restore's change "
-                "set was being computed — re-run the restore"
-            )
-        body = {
-            "mode": "restore",
-            "restored_from": version,
-            "files": list(target["files"]),
-            "n_rows": target["n_rows"],
-            "schema": target.get("schema"),
-            "dv_files": list(target.get("dv_files") or []),
-            **_carried_mapping(target),
-        }
-        if cf is not None:
-            body["change_files"] = cf
-        if target.get("stats_cols"):
-            body["stats_cols"] = target["stats_cols"]
-            body["stats"] = target.get("stats") or {}
-        if target.get("partition_cols"):
-            body["partition_cols"] = target["partition_cols"]
-            body["partitions"] = target.get("partitions") or {}
-        if target.get("constraints"):
-            body["constraints"] = dict(target["constraints"])
-        if target.get("generated_cols"):
-            body["generated_cols"] = dict(target["generated_cols"])
-        return body
-
-    try:
-        v = _commit(table_dir, build, branch=branch)
-    except CommitConflict:
-        if cf:
-            _discard_staged(cf)
-        raise
-    index_result: dict[str, str] = {}
+    # per column: when the TARGET has a usable index it covers exactly
+    # the restored file set, so the new head chains a zero-increment
+    # link onto it (O(1); the undone versions' links fall out of the
+    # reference graph and vacuum reclaims them); otherwise a rebuild
     _rmap = _col_mapping(target)
-    for col in index_cols:
-        if (
-            _resolve_probe_index(table_dir, target, _phys_path(_rmap, col))
-            is not None
-        ):
-            # the target's index covers exactly the restored file set —
-            # chain a zero-increment link onto it (O(1)); the undone
-            # versions' links fall out of the reference graph and
-            # vacuum reclaims them
-            maintain_bloom_index(
-                spark, table_dir, col, version=v,
-                new_files=[], prior_version=version,
-                max_chain=index_max_chain,
-            )
-            index_result[col] = "chained"
-        else:
-            geo = _resolve_index_geometry(
-                table_dir, _phys_path(_rmap, col), v - 1, None
-            )
-            if geo is None:
-                write_bloom_index(spark, table_dir, col, version=v)
-            else:
-                write_bloom_index(
-                    spark, table_dir, col, version=v, m_bits=geo[0], k=geo[1]
-                )
-            index_result[col] = "rebuilt"
+    index_result = {
+        col: "chained"
+        if _resolve_probe_index(table_dir, target, _phys_path(_rmap, col))
+        else "rebuilt"
+        for col in index_cols
+    }
+    v = _commit_ops(
+        table_dir,
+        _child_body(
+            target,
+            mode="restore",
+            files=target["files"],
+            n_rows=target["n_rows"],
+            restored_from=version,
+            change_files=cf,
+        ),
+        # the recorded undo set was computed against `head`; a commit
+        # that raced in between would make it wrong
+        base_version=head if cf is not None else None,
+        staged=(cf,),
+        spark=spark,
+        index=_Index(index_cols, [], max_chain=index_max_chain, prior=version),
+        branch=branch,
+    )
     return {
         "version": v,
         "restored_from": version,
@@ -4418,37 +4157,6 @@ def restore_version(
         "data_files_written": 0,
         "index": index_result,
     }
-
-
-def _metadata_only_body(m: dict, mode: str) -> dict:
-    """Manifest body that carries an existing snapshot verbatim (files,
-    rows, schema, DVs, stats, partitions, constraints) under a new
-    ``mode`` — the shape of every metadata-only commit (constraint
-    add/drop)."""
-    body = {
-        "mode": mode,
-        "files": list(m["files"]),
-        "n_rows": m["n_rows"],
-        "schema": m.get("schema"),
-        "dv_files": list(m.get("dv_files") or []),
-        **_carried_mapping(m),
-        # a metadata-only commit changes ZERO rows, so its exact change
-        # set is the empty set — record it unconditionally, otherwise
-        # one rename/constraint commit knocks every straddling range
-        # off read_changes' recorded fast path forever
-        "change_files": [],
-    }
-    if m.get("stats_cols"):
-        body["stats_cols"] = m["stats_cols"]
-        body["stats"] = m.get("stats") or {}
-    if m.get("partition_cols"):
-        body["partition_cols"] = m["partition_cols"]
-        body["partitions"] = m.get("partitions") or {}
-    if m.get("constraints"):
-        body["constraints"] = dict(m["constraints"])
-    if m.get("generated_cols"):
-        body["generated_cols"] = dict(m["generated_cols"])
-    return body
 
 
 def add_constraint(
@@ -4488,17 +4196,22 @@ def add_constraint(
                 "validation is for)"
             )
     cc[name] = expr
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run add_constraint"
-            )
-        body = _metadata_only_body(m, "add_constraint")
-        body["constraints"] = cc
-        return body
-
-    return _commit(table_dir, build)
+    # a metadata-only commit changes ZERO rows, so its exact change set
+    # is the empty set — recorded unconditionally (every ALTER below
+    # does the same), otherwise one rename/constraint commit knocks
+    # every straddling range off read_changes' recorded fast path
+    return _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="add_constraint",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            constraints=cc,
+            change_files=[],
+        ),
+        base_version=m["version"],
+    )
 
 
 def drop_constraint(table_dir: str, name: str) -> int:
@@ -4512,20 +4225,18 @@ def drop_constraint(table_dir: str, name: str) -> int:
             f"constraint {name!r} not recorded (have {sorted(cc)})"
         )
     del cc[name]
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run drop_constraint"
-            )
-        body = _metadata_only_body(m, "drop_constraint")
-        if cc:
-            body["constraints"] = cc
-        else:
-            body.pop("constraints", None)
-        return body
-
-    return _commit(table_dir, build)
+    return _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="drop_constraint",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            constraints=cc,
+            change_files=[],
+        ),
+        base_version=m["version"],
+    )
 
 
 _RESERVED_COLUMN_NAMES = {
@@ -4590,19 +4301,20 @@ def enable_column_mapping(table_dir: str) -> int:
             f"{table_dir!r} has no recorded schema — column mapping "
             "needs one to freeze physical names from"
         )
-    mapping = _init_mapping(StructType.fromJson(json.loads(m["schema"])))
-
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run "
-                "enable_column_mapping"
-            )
-        body = _metadata_only_body(m, "enable_column_mapping")
-        body["column_mapping"] = mapping
-        return body
-
-    return _commit(table_dir, build)
+    return _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="enable_column_mapping",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            column_mapping=_init_mapping(
+                StructType.fromJson(json.loads(m["schema"]))
+            ),
+            change_files=[],
+        ),
+        base_version=m["version"],
+    )
 
 
 def _rename_in_dtype(dtype, parts: list[str], new_leaf: str):
@@ -4738,35 +4450,36 @@ def _rename_nested(
         ]
     )
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run rename_column"
-            )
-        body = _metadata_only_body(m, "rename_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        new_path = ".".join([top] + parts[1:-1] + [new])
-        body["renamed"] = {"from": old, "to": new_path, "id": rec["id"]}
-        scs = body.get("stats_cols") or []
+    new_path = ".".join([top] + parts[1:-1] + [new])
 
-        def _under(c: str) -> bool:
-            # a literal-dotted top-level name is its own column and
-            # never rewrites by prefix (mirrors _phys_path dispatch)
-            if c in fields:
-                return False
-            return c == old or c.startswith(old + ".")
+    def _under(c: str) -> bool:
+        # a literal-dotted top-level name is its own column and never
+        # rewrites by prefix (mirrors _phys_path dispatch)
+        if c in fields:
+            return False
+        return c == old or c.startswith(old + ".")
 
-        if any(_under(c) for c in scs):
-            # dotted stats_cols entries are LOGICAL paths and follow
-            # the rename; per-file envelopes are physical-keyed and
-            # stay valid untouched
-            body["stats_cols"] = [
-                new_path + c[len(old):] if _under(c) else c for c in scs
-            ]
-        return body
-
-    return _commit(table_dir, build)
+    return _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="rename_column",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            schema=new_schema.json(),
+            column_mapping=new_mapping,
+            # dotted stats_cols entries are LOGICAL paths and follow the
+            # rename; per-file envelopes are physical-keyed and stay
+            # valid untouched
+            stats_cols=[
+                new_path + c[len(old):] if _under(c) else c
+                for c in m.get("stats_cols") or []
+            ],
+            renamed={"from": old, "to": new_path, "id": rec["id"]},
+            change_files=[],
+        ),
+        base_version=m["version"],
+    )
 
 
 def rename_column(table_dir: str, old: str, new: str) -> int:
@@ -4840,34 +4553,34 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
         ]
     )
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run rename_column"
-            )
-        body = _metadata_only_body(m, "rename_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        body["renamed"] = {"from": old, "to": new, "id": entry["id"]}
-        scs = body.get("stats_cols") or []
+    def _under(c: str) -> bool:
+        # exact match, or a dotted NESTED path under the renamed column
+        # (a literal-dotted top-level name never rewrites by prefix — it
+        # is its own column)
+        return c == old or (
+            c.startswith(old + ".") and c not in mapping["fields"]
+        )
 
-        def _under(c: str) -> bool:
-            # exact match, or a dotted NESTED path under the renamed
-            # column (a literal-dotted top-level name never rewrites
-            # by prefix — it is its own column)
-            return c == old or (
-                c.startswith(old + ".") and c not in mapping["fields"]
-            )
-
-        if any(_under(c) for c in scs):
+    return _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="rename_column",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            schema=new_schema.json(),
+            column_mapping=new_mapping,
             # the logical list follows the rename; per-file envelopes
             # are physical-keyed and stay valid untouched
-            body["stats_cols"] = [
-                new + c[len(old):] if _under(c) else c for c in scs
-            ]
-        return body
-
-    return _commit(table_dir, build)
+            stats_cols=[
+                new + c[len(old):] if _under(c) else c
+                for c in m.get("stats_cols") or []
+            ],
+            renamed={"from": old, "to": new, "id": entry["id"]},
+            change_files=[],
+        ),
+        base_version=m["version"],
+    )
 
 
 def _drop_nested(table_dir: str, m: dict, schema, name: str) -> int:
@@ -4925,45 +4638,28 @@ def _drop_nested(table_dir: str, m: dict, schema, name: str) -> int:
         ]
     )
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run drop_column"
-            )
-        body = _metadata_only_body(m, "drop_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        body["dropped"] = {"name": name, "id": dropped_id}
-        scs = body.get("stats_cols") or []
-        gone = {
-            c
-            for c in scs
-            if c not in fields
-            and (c == name or c.startswith(name + "."))
-        }
-        if gone:
-            # a dotted stats leaf under the dropped path leaves the
-            # contract; envelopes scrub by the frozen PHYSICAL path
-            full_phys = entry["physical"] + "." + phys_path
-            rest = [c for c in scs if c not in gone]
-            scrubbed = {
-                f: {
-                    c: e
-                    for c, e in ent.items()
-                    if c != full_phys
-                    and not c.startswith(full_phys + ".")
-                }
-                for f, ent in (body.get("stats") or {}).items()
-            }
-            if rest:
-                body["stats_cols"] = rest
-                body["stats"] = {f: e for f, e in scrubbed.items() if e}
-            else:
-                body.pop("stats_cols", None)
-                body.pop("stats", None)
-        return body
-
-    return _commit(table_dir, build)
+    scs = m.get("stats_cols") or []
+    gone = {
+        c for c in scs if c not in fields and (c == name or c.startswith(name + "."))
+    }
+    # a dotted stats leaf under the dropped path leaves the contract;
+    # envelopes scrub by the frozen PHYSICAL path
+    stats = _scrubbed_stats(m, scs, gone, entry["physical"] + "." + phys_path)
+    return _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="drop_column",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            schema=new_schema.json(),
+            column_mapping=new_mapping,
+            dropped={"name": name, "id": dropped_id},
+            change_files=[],
+            **stats,
+        ),
+        base_version=m["version"],
+    )
 
 
 def drop_column(table_dir: str, name: str) -> int:
@@ -5012,47 +4708,54 @@ def drop_column(table_dir: str, name: str) -> int:
     }
     new_schema = StructType([f for f in schema.fields if f.name != name])
 
-    def build(prior: dict | None) -> dict:
-        if prior is None or prior["version"] != m["version"]:
-            raise CommitConflict(
-                f"table advanced past v{m['version']} — re-run drop_column"
-            )
-        body = _metadata_only_body(m, "drop_column")
-        body["schema"] = new_schema.json()
-        body["column_mapping"] = new_mapping
-        body["dropped"] = {"name": name, "id": entry["id"]}
-        scs_d = body.get("stats_cols") or []
+    scs = m.get("stats_cols") or []
+    gone = {
+        c
+        for c in scs
+        if c == name or (c.startswith(name + ".") and c not in mapping["fields"])
+    }
+    # the dropped column leaves the stats contract (dotted leaf entries
+    # under it too); its physical-keyed per-file envelopes scrub with
+    # it (a stale key would fail the fsck stats_envelopes audit)
+    stats = _scrubbed_stats(m, scs, gone, entry["physical"])
+    return _commit_ops(
+        table_dir,
+        _child_body(
+            m,
+            mode="drop_column",
+            files=m["files"],
+            n_rows=m["n_rows"],
+            schema=new_schema.json(),
+            column_mapping=new_mapping,
+            dropped={"name": name, "id": entry["id"]},
+            change_files=[],
+            **stats,
+        ),
+        base_version=m["version"],
+    )
 
-        def _under(c: str) -> bool:
-            return c == name or (
-                c.startswith(name + ".") and c not in mapping["fields"]
-            )
 
-        if any(_under(c) for c in scs_d):
-            # the dropped column leaves the stats contract (dotted
-            # leaf entries under it too); its physical-keyed per-file
-            # envelopes scrub with it (a stale key would fail the
-            # fsck stats_envelopes audit)
-            rest = [c for c in scs_d if not _under(c)]
-            phys_pref = entry["physical"] + "."
-            scrubbed = {
-                f: {
-                    c: e
-                    for c, e in ent.items()
-                    if c != entry["physical"]
-                    and not c.startswith(phys_pref)
-                }
-                for f, ent in (body.get("stats") or {}).items()
-            }
-            if rest:
-                body["stats_cols"] = rest
-                body["stats"] = {f: e for f, e in scrubbed.items() if e}
-            else:
-                body.pop("stats_cols", None)
-                body.pop("stats", None)
-        return body
-
-    return _commit(table_dir, build)
+def _scrubbed_stats(m: dict, scs: list[str], gone: set[str], phys: str) -> dict:
+    """The stats change of a column DROP: when ``gone`` (the
+    ``stats_cols`` entries the drop removes) is non-empty, the rest of
+    the list and the per-file envelopes without the dropped physical
+    path ``phys`` and anything under it (None when nothing is left);
+    otherwise no change."""
+    if not gone:
+        return {}
+    rest = [c for c in scs if c not in gone]
+    scrubbed = {
+        f: {
+            c: e
+            for c, e in ent.items()
+            if c != phys and not c.startswith(phys + ".")
+        }
+        for f, ent in (m.get("stats") or {}).items()
+    }
+    return {
+        "stats_cols": rest or None,
+        "stats": {f: e for f, e in scrubbed.items() if e} if rest else None,
+    }
 
 
 def clone_table(
@@ -5102,30 +4805,16 @@ def clone_table(
             "new table; point it at an empty directory"
         )
     src = load_manifest(src_dir, version)
-
-    def build(prior: dict | None) -> dict:
-        body = {
-            "mode": "clone",
-            "cloned_from": {"table": _canon(src_dir), "version": src["version"]},
-            "files": list(src["files"]),
-            "n_rows": src["n_rows"],
-            "schema": src.get("schema"),
-            "dv_files": list(src.get("dv_files") or []),
-            **_carried_mapping(src),
-        }
-        if src.get("stats_cols"):
-            body["stats_cols"] = src["stats_cols"]
-            body["stats"] = src.get("stats") or {}
-        if src.get("partition_cols"):
-            body["partition_cols"] = src["partition_cols"]
-            body["partitions"] = src.get("partitions") or {}
-        if src.get("constraints"):
-            body["constraints"] = dict(src["constraints"])
-        if src.get("generated_cols"):
-            body["generated_cols"] = dict(src["generated_cols"])
-        return body
-
-    v = _commit(dst_dir, build)
+    v = _commit_ops(
+        dst_dir,
+        _child_body(
+            src,
+            mode="clone",
+            files=src["files"],
+            n_rows=src["n_rows"],
+            cloned_from={"table": _canon(src_dir), "version": src["version"]},
+        ),
+    )
     return {
         "version": v,
         "cloned_from": {"table": _canon(src_dir), "version": src["version"]},
@@ -5924,7 +5613,8 @@ def maintain_bloom_index(
     Geometry safety: new rows are built with the prior index's
     recorded (m_bits, k) — a mixed-geometry chain has false negatives
     on probe. If the prior version has no usable index, fall back to a
-    full rebuild (at ``geometry`` when given, else defaults). Passing
+    full rebuild (at ``geometry`` when given, else the geometry last
+    recorded before ``version``, else defaults). Passing
     an explicit ``geometry`` that DIFFERS from the prior recorded one
     also forces a full rebuild at the new geometry — the chain resets,
     which is the only safe way to re-tune a live index. Returns the
@@ -5950,12 +5640,7 @@ def maintain_bloom_index(
         # no usable prior index to chain onto: full rebuild, at the
         # explicit geometry when given, else whatever the table last
         # recorded (walk-back inheritance), else library defaults
-        geo = _resolve_index_geometry(table_dir, kphys, prior_version, geometry)
-        if geo is None:
-            return write_bloom_index(spark, table_dir, key_col, version=version)
-        return write_bloom_index(
-            spark, table_dir, key_col, version=version, m_bits=geo[0], k=geo[1]
-        )
+        return _rebuild_bloom_index(spark, table_dir, key_col, version, geometry)
     m_bits, k = int(params["m_bits"]), int(params["k"])
     if geometry is not None and (int(geometry[0]), int(geometry[1])) != (m_bits, k):
         # explicit re-tune: a chain must be geometry-uniform, so the

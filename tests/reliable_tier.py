@@ -77,7 +77,7 @@ def cases(spark, sf: str) -> dict[str, list[list[str]]]:
 
 
 def _child(ckpt: str, fault_dir: str, sf: str, out: str) -> None:
-    from pyspark import TaskContext
+    from faults import flaky_udf
     from pyspark.sql import functions as F
     from pyspark.sql.classic.dataframe import DataFrame
 
@@ -100,14 +100,7 @@ def _child(ckpt: str, fault_dir: str, sf: str, out: str) -> None:
 
     # A fault that fails the first attempt of partition 0 of every stage
     # that scans the documents table; the retry must give the same rows.
-    def first_attempt_fault(_doc_id):
-        tc = TaskContext.get()
-        if tc.partitionId() == 0 and tc.attemptNumber() == 0:
-            open(os.path.join(fault_dir, f"stage-{tc.stageId()}"), "w").close()
-            raise RuntimeError("injected first-attempt fault")
-        return True
-
-    fault = F.udf(first_attempt_fault, "boolean")
+    fault = flaky_udf(lambda _doc_id: True, "boolean", marker_dir=fault_dir)
     read = queries._t
     queries._t = lambda spark, sf, name, **kw: read(spark, sf, name, **kw).filter(
         fault(F.col("doc_id"))

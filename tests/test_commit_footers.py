@@ -387,38 +387,18 @@ def test_cow_delete_emptying_a_file_stages_nothing(spark, table):
 
 _RETRY_DRIVER = """
 import glob, json, os, sys
-sys.path.insert(0, {repo!r})
+sys.path[:0] = [{repo!r}, {tests!r}]
 from bigbookapi_etl_with_airflow_and_snowflake_spark.session import get_spark
 from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks import versioned as V
+from faults import flaky_frame, flaky_udf
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 spark = get_spark(master="local[2,2]", shuffle_partitions=2)
 table = {table!r}
-
-
-def flaky(batches):
-    # partition 0's FIRST attempt writes its rows, then dies
-    from pyspark import TaskContext
-
-    tc = TaskContext.get()
-    yield from batches
-    if tc.partitionId() == 0 and tc.attemptNumber() == 0:
-        raise RuntimeError("injected first-attempt failure")
-
-
-def flaky_frame(df):
-    return df.repartition(2).mapInPandas(flaky, df.schema)
-
-
-@F.udf(BooleanType())
-def flaky_hit(k, m):
-    from pyspark import TaskContext
-
-    tc = TaskContext.get()
-    if tc.partitionId() == 0 and tc.attemptNumber() == 0:
-        raise RuntimeError("injected first-attempt failure")
-    return k % m == 0
+# partition 0's FIRST attempt writes its rows (flaky_frame) or starts
+# evaluating the predicate (flaky_hit), then dies
+flaky_hit = flaky_udf(lambda k, m: k % m == 0, BooleanType())
 
 
 def rows(lo, hi):
@@ -489,7 +469,9 @@ def test_footer_counts_survive_task_retries(tmp_path):
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
     out = subprocess.run(
         [sys.executable, "-c", textwrap.dedent(
-            _RETRY_DRIVER.format(repo=REPO, table=table)
+            _RETRY_DRIVER.format(
+                repo=REPO, tests=os.path.join(REPO, "tests"), table=table
+            )
         )],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )

@@ -116,3 +116,49 @@ def test_one_scratch_helper_one_pin_one_manifest_reader():
 
         scan(ast.parse(src), None)
     assert not offenders, offenders
+
+
+def test_one_commit_path_in_the_lake():
+    """Every lake commit goes through ``_commit_ops`` (the base-version
+    conflict check, the discard of staged files, index upkeep) and
+    builds its manifest with ``_child_body`` (every table property
+    carried by default). A direct ``_commit(`` call, a hand-written
+    conflict check or discard, or a per-property carry helper fails
+    here."""
+    import ast
+    import pathlib
+
+    import bigbookapi_etl_with_airflow_and_snowflake_spark as pkg
+
+    path = pathlib.Path(pkg.__file__).parent / "sinks" / "versioned.py"
+    offenders = []
+
+    def scan(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if child.name.startswith("_carried_") or child.name == (
+                    "_metadata_only_body"
+                ):
+                    offenders.append(f"{child.lineno}: def {child.name}")
+                scan(child, child.name if owner is None else owner)
+                continue
+            if isinstance(child, ast.Name) and (
+                child.id.startswith("_carried_")
+                or child.id == "_metadata_only_body"
+            ):
+                offenders.append(f"{child.lineno}: {child.id}")
+            if owner != "_commit_ops":
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Name)
+                    and child.func.id in ("_commit", "_discard_staged")
+                ):
+                    offenders.append(f"{child.lineno}: {child.func.id}(")
+                if isinstance(child, ast.Raise) and "CommitConflict" in ast.dump(
+                    child
+                ):
+                    offenders.append(f"{child.lineno}: raise CommitConflict")
+            scan(child, owner)
+
+    scan(ast.parse(path.read_text()), None)
+    assert not offenders, offenders

@@ -177,6 +177,44 @@ def test_loud_errors(spark, table):
         create_branch(table, "bad/name")
 
 
+def test_wap_round_trip_keeps_the_table_contract(spark, table):
+    """The fork carries the table's contract: a branch append is held
+    to main's CHECK constraint and derives main's generated column, and
+    after publish main still records the constraint, the generated
+    column, the stats and the partition layout."""
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
+        load_manifest,
+        verify_table,
+    )
+
+    write_version(
+        spark, _df(spark, 0, 30), table,
+        check_constraints={"id_nonneg": "id >= 0"},
+        generated_cols={"half": "id % 2"},
+        stats_cols=["id"],
+        partition_by=["g"],
+    )
+    contract = {
+        k: load_manifest(table, None)[k]
+        for k in ("constraints", "generated_cols", "stats_cols", "partition_cols")
+    }
+    create_branch(table, "audit")
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        write_version(spark, _df(spark, -5, 0), table, mode="append", branch="audit")
+    # the increment omits the generated column: the branch derives it
+    write_version(spark, _df(spark, 30, 40), table, mode="append", branch="audit")
+    staged = read_version(spark, table, branch="audit")
+    assert staged.count() == 40
+    assert staged.filter("half IS NULL OR half != id % 2").count() == 0
+    publish_branch(table, "audit")
+    m = load_manifest(table, None)
+    assert {k: m.get(k) for k in contract} == contract
+    assert set(m["stats"]) == set(m["files"]) == set(m["partitions"])
+    assert verify_table(spark, table, deep=True)["ok"]
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        write_version(spark, _df(spark, -5, 0), table, mode="append")
+
+
 def test_vacuum_retains_branch_referenced_files(spark, table):
     write_version(spark, _df(spark), table)  # v1 — the fork carries these files
     create_branch(table, "pin")

@@ -26,6 +26,7 @@ from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
     delete_version,
     load_manifest,
     optimize_table,
+    overwrite_partitions,
     read_version,
     read_version_pruned,
     vacuum,
@@ -516,6 +517,34 @@ def test_constraints_enforced_on_append(spark, sf_dir, table):
     assert load_manifest(table, v)["constraints"] == {
         "price_pos": "o_totalprice > 0"
     }
+
+
+def test_refused_partitioned_commits_leave_no_staging(spark, table):
+    """A refused commit on a partitioned table discards its WHOLE
+    staging dir, every partition subdirectory included — vacuum only
+    sweeps files that manifests name, so a leftover is never reclaimed."""
+
+    def staged():
+        return sorted(
+            os.path.relpath(os.path.join(root, n), table)
+            for root, dirs, names in os.walk(os.path.join(table, "data"))
+            for n in names + dirs
+        )
+
+    rows = spark.range(0, 30).select("id", (F.col("id") % 3).alias("g"))
+    write_version(
+        spark, rows, table, partition_by=["g"],
+        check_constraints={"nonneg": "id >= 0"},
+    )
+    before = staged()
+    bad = spark.range(-6, 0).select("id", (F.col("id") % 3).alias("g"))
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        write_version(spark, bad, table, mode="append")
+    assert staged() == before
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        overwrite_partitions(spark, bad, table)
+    assert staged() == before
+    assert load_manifest(table, None)["version"] == 1
 
 
 def test_append_cannot_change_contract(spark, sf_dir, table):
