@@ -34,6 +34,15 @@ def jdbc_append_options(
     (``df.write.format("jdbc").options(**these).mode("append")``).
     Spark's PostgresDialect maps ArrayType(StringType) → TEXT[] natively,
     covering the reference's array columns (dags/bigbookapi.py:172-176).
+
+    Delivery is at least once: an append is not idempotent. Spark
+    inserts each partition in one transaction and rolls back a failed
+    attempt, but rows committed by an attempt that Spark then runs
+    again (a task lost after its commit, a speculative duplicate, a
+    re-run stage, or any retry with ``isolationLevel`` ``NONE`` or on a
+    database without transactions) are inserted twice, and re-running
+    the whole job duplicates every row. Where a retry must converge,
+    load through :class:`JdbcUpsertWriter` on a key.
     """
     return {
         "url": url,

@@ -2943,21 +2943,25 @@ def overwrite_partitions(
     # for the new files) FIRST: a refused layout then has nothing else
     # to discard. The recorded CHECK/generated contract is enforced on
     # it in one aggregation (mapped reader: staged files hold physical
-    # names, constraint exprs logical ones)
-    sc = _phys_stats_cols(base)
+    # names, constraint exprs logical ones); a refusal discards the
+    # staging through the commit path before any live-row count or
+    # rewrite runs
     new_files, new_parts = _stage_partitioned(
         df,
         os.path.join(table_dir, "data", uuid.uuid4().hex),
         p_logical,
         _col_mapping(base),
     )
-    n_new, new_stats = _staged_footers(new_files, sc)
     refusal = _contract_refusal(
         _recorded_reader(spark, base),
         new_files,
         base.get("constraints") or {},
         gen_validate,
     )
+    if refusal is not None:
+        _commit_ops(table_dir, {}, staged=(new_files,), refuse=refusal)
+    sc = _phys_stats_cols(base)
+    n_new, new_stats = _staged_footers(new_files, sc)
     # live rows leaving the table: the replaced partitions' (cheap —
     # exactly the files being dropped) plus unmapped in-scope rows
     n_replaced = (
@@ -2977,7 +2981,7 @@ def overwrite_partitions(
         n_replaced += n_unmapped_live - rw_n
         new_stats = {**rw_stats, **new_stats}
     cf: list[str] | None = None
-    if change_files and refusal is None:
+    if change_files:
         cf = []
         # outgoing rows: the dropped partitions' live rows (exactly the
         # files being replaced) + unmapped in-scope live rows; incoming
@@ -3033,7 +3037,6 @@ def overwrite_partitions(
         index=_Index(
             index_cols, rw_files + new_files, index_geometry, index_max_chain
         ),
-        refuse=refusal,
     )
     return {
         "version": v,

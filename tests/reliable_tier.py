@@ -8,7 +8,8 @@ on a running session, and setting one on the shared pytest session
 would move every later test to the reliable tier, so the reliable side
 runs in a child process: this module run as a script. The child builds
 its own session with the checkpoint directory and master ``local[2,2]``
-(task retries on), computes ``cases`` below, and writes their rows as
+(task retries on), computes ``cases`` below and the JDBC upsert with and
+without a task fault (``jdbc_upserts``), and writes their rows as
 JSON. Tests compare them with the same cases on the shared
 (executor-local tier) session; the ``reliable_tier_run`` fixture in
 ``conftest.py`` runs the child once per test session.
@@ -33,6 +34,9 @@ DOCS = [
     (4, "the quick brown fox jumps over the lazy cat again and again"),
 ]
 PAIRS = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
+MODEL_COLS = [("model_id", "TEXT"), ("pipeline_tag", "TEXT")]
+MODELS_BEFORE = [(f"org/m{i}", "old") for i in range(4)]
+MODELS_UPSERT = [(f"org/m{i}", f"tag{i % 3}") for i in range(10)]
 
 
 def rows(df) -> list[list[str]]:
@@ -76,6 +80,55 @@ def cases(spark, sf: str) -> dict[str, list[list[str]]]:
     }
 
 
+def _sqlite_factory(db: str):
+    def connect():
+        import sqlite3
+
+        return sqlite3.connect(db, timeout=60)
+
+    return connect
+
+
+def jdbc_upserts(spark, work: str, marker_dir: str) -> dict:
+    """The P3 upsert (``sinks.jdbc.JdbcUpsertWriter``, ``batch_size=2``)
+    of 10 models over a sqlite table holding 4 of them, once plainly and
+    once through ``faults.flaky_frame``: partition 0's first attempt
+    fails after producing all of its rows, so that attempt never
+    commits, and the retry sends the partition again. Returns each
+    final table's rows and the fault markers."""
+    import sqlite3
+
+    from faults import flaky_frame
+
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.jdbc import (
+        JdbcUpsertWriter,
+    )
+
+    os.makedirs(marker_dir, exist_ok=True)
+    schema = "model_id string, pipeline_tag string"
+    before = spark.createDataFrame(MODELS_BEFORE, schema)
+    upsert = spark.createDataFrame(MODELS_UPSERT, schema)
+    res = {}
+    for name, frame in (
+        ("jdbc_upsert", upsert.repartition(2)),
+        ("jdbc_upsert_retried", flaky_frame(upsert, marker_dir)),
+    ):
+        db = os.path.join(work, f"{name}.db")
+        writer = JdbcUpsertWriter(
+            _sqlite_factory(db), table="ai_models", key_cols=["model_id"],
+            batch_size=2, paramstyle="?", ensure_columns=MODEL_COLS,
+        )
+        writer.write(before)
+        writer.write(frame)
+        con = sqlite3.connect(db)
+        res[name] = sorted(
+            list(r) for r in con.execute("SELECT * FROM ai_models").fetchall()
+        )
+        con.close()
+    res["jdbc_upsert_fault_markers"] = sorted(os.listdir(marker_dir))
+    return res
+
+
 def _child(ckpt: str, fault_dir: str, sf: str, out: str) -> None:
     from faults import flaky_udf
     from pyspark.sql import functions as F
@@ -109,6 +162,8 @@ def _child(ckpt: str, fault_dir: str, sf: str, out: str) -> None:
         res["q_jaccard_pairs_retried"] = rows(queries.q_jaccard_pairs(spark, sf))
     finally:
         queries._t = read
+    work = os.path.dirname(os.path.abspath(out))
+    res.update(jdbc_upserts(spark, work, os.path.join(work, "jdbc_faults")))
     with open(out, "w") as fh:
         json.dump(res, fh)
     spark.stop()

@@ -99,6 +99,19 @@ def test_jdbc_upsert_idempotent_and_updating(spark, tmp_path):
     con.close()
 
 
+def test_jdbc_upsert_converges_under_task_fault(reliable_tier_run):
+    """The upsert under a first-attempt task fault (``reliable_tier.py``
+    ``jdbc_upserts``, run in the ``local[2,2]`` child): the fault fired,
+    and the retried partition re-sends its batches, so the final table
+    equals the no-fault upsert: 4 rows updated, 6 inserted."""
+    from reliable_tier import MODELS_UPSERT
+
+    rows = reliable_tier_run["rows"]
+    assert rows["jdbc_upsert_fault_markers"]
+    assert rows["jdbc_upsert"] == sorted(list(r) for r in MODELS_UPSERT)
+    assert rows["jdbc_upsert_retried"] == rows["jdbc_upsert"]
+
+
 def test_upsert_empty_input_is_noop(spark, tmp_path):
     db = str(tmp_path / "empty.db")
     writer = JdbcUpsertWriter(

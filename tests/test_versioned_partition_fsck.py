@@ -519,32 +519,94 @@ def test_constraints_enforced_on_append(spark, sf_dir, table):
     }
 
 
-def test_refused_partitioned_commits_leave_no_staging(spark, table):
-    """A refused commit on a partitioned table discards its WHOLE
-    staging dir, every partition subdirectory included — vacuum only
-    sweeps files that manifests name, so a leftover is never reclaimed."""
+def _staged_tree(table):
+    """Every file and directory under the table's data dir."""
+    return sorted(
+        os.path.relpath(os.path.join(root, n), table)
+        for root, dirs, names in os.walk(os.path.join(table, "data"))
+        for n in names + dirs
+    )
 
-    def staged():
-        return sorted(
-            os.path.relpath(os.path.join(root, n), table)
-            for root, dirs, names in os.walk(os.path.join(table, "data"))
-            for n in names + dirs
-        )
 
+def _checked_groups(spark, table):
+    """A table partitioned on ``g`` with CHECK ``id >= 0``, and a frame
+    of rows that violate it."""
     rows = spark.range(0, 30).select("id", (F.col("id") % 3).alias("g"))
     write_version(
         spark, rows, table, partition_by=["g"],
         check_constraints={"nonneg": "id >= 0"},
     )
-    before = staged()
-    bad = spark.range(-6, 0).select("id", (F.col("id") % 3).alias("g"))
+    return spark.range(-6, 0).select("id", (F.col("id") % 3).alias("g"))
+
+
+def test_refused_partitioned_commits_leave_no_staging(spark, table):
+    """A refused commit on a partitioned table discards its WHOLE
+    staging dir, every partition subdirectory included — vacuum only
+    sweeps files that manifests name, so a leftover is never reclaimed."""
+    bad = _checked_groups(spark, table)
+    before = _staged_tree(table)
     with pytest.raises(ValueError, match="CHECK constraint violation"):
         write_version(spark, bad, table, mode="append")
-    assert staged() == before
+    assert _staged_tree(table) == before
     with pytest.raises(ValueError, match="CHECK constraint violation"):
         overwrite_partitions(spark, bad, table)
-    assert staged() == before
+    assert _staged_tree(table) == before
     assert load_manifest(table, None)["version"] == 1
+
+
+def test_refused_overwrite_partitions_stops_before_live_scans(
+    spark, table, monkeypatch
+):
+    """A contract refusal found on the staged replacement ends the call
+    at once: no live-row count of the replaced or unmapped files and no
+    rewrite of the unmapped file run (a COW update leaves one unmapped
+    file here), and the staging is discarded. Checked by spying on
+    ``_live_scan`` and ``_write_data_files`` and by the Python actions
+    of the call's job group: only the derived scope (``collect``), the
+    scope check (``count``) and the contract aggregation (``first``)
+    remain."""
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks import versioned
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
+        update_version,
+    )
+
+    bad = _checked_groups(spark, table)
+    update_version(
+        spark, table, predicate=F.col("id") == 4, assignments={"id": F.lit(40)}
+    )
+    head = load_manifest(table, None)
+    assert set(head["files"]) - set(head["partitions"]), "no unmapped file"
+    before = _staged_tree(table)
+    called = []
+    for name in ("_live_scan", "_write_data_files"):
+        real = getattr(versioned, name)
+        monkeypatch.setattr(
+            versioned, name,
+            lambda *a, _n=name, _f=real, **k: called.append(_n) or _f(*a, **k),
+        )
+    sc = spark.sparkContext
+    group = "refused-overwrite-partitions"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="CHECK constraint violation"):
+            overwrite_partitions(spark, bad, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    st = sc.statusTracker()
+    sites = {
+        info.name
+        for j in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(j).stageIds
+        for info in [st.getStageInfo(sid)]
+        if info is not None and "versioned.py:" in info.name
+    }
+    actions = sorted(site.split(" at ", 1)[0] for site in sites)
+    assert called == []
+    assert set(actions) <= {"collect", "count", "first"}, actions
+    assert actions.count("count") <= 1, actions
+    assert _staged_tree(table) == before
+    assert load_manifest(table, None)["version"] == head["version"]
 
 
 def test_append_cannot_change_contract(spark, sf_dir, table):
