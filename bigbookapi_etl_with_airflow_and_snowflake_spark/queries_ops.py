@@ -2568,29 +2568,22 @@ def q_versioned_restore(spark, sf):
         read_version,
         read_version_pruned,
         restore_version,
+        write_bloom_index,
         write_version,
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
     with scratch_dir("q_versioned_restore_") as d:
         t = os.path.join(d, "orders_v")
-        write_version(
-            spark,
-            o.repartitionByRange(8, "o_orderkey"),
-            t,
-            index_cols=["o_orderkey"],
-        )
+        write_version(spark, o.repartitionByRange(8, "o_orderkey"), t)
+        write_bloom_index(spark, t, "o_orderkey")
         delete_version(
             spark,
             t,
             (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 3 == 0),
-            index_cols=["o_orderkey"],
         )
-        delete_version(
-            spark, t, F.col("o_orderkey") % 7 == 0, mode="mor",
-            index_cols=["o_orderkey"],
-        )
-        r = restore_version(spark, t, 1, index_cols=["o_orderkey"])
+        delete_version(spark, t, F.col("o_orderkey") % 7 == 0, mode="mor")
+        r = restore_version(spark, t, 1)
         m1, m4 = load_manifest(t, 1), load_manifest(t, 4)
         restore_zero_copy = (
             r["data_files_written"] == 0 and m4["files"] == m1["files"]
@@ -2887,17 +2880,16 @@ def q_versioned_optimize(spark, sf):
         optimize_table,
         read_version,
         read_version_pruned,
+        write_bloom_index,
         write_version,
     )
 
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
     with scratch_dir("q_versioned_optimize_") as d:
         t = os.path.join(d, "orders_v")
-        write_version(spark, o.repartition(32), t, index_cols=["o_orderkey"])
-        delete_version(
-            spark, t, F.col("o_orderkey") % 7 == 0, mode="mor",
-            index_cols=["o_orderkey"],
-        )
+        write_version(spark, o.repartition(32), t)
+        write_bloom_index(spark, t, "o_orderkey")
+        delete_version(spark, t, F.col("o_orderkey") % 7 == 0, mode="mor")
         bytes_now = sum(
             os.path.getsize(f) for f in load_manifest(t, 2)["files"]
         )
@@ -2906,7 +2898,6 @@ def q_versioned_optimize(spark, sf):
             t,
             cluster_by=["o_orderkey"],
             target_file_bytes=max(1, bytes_now // 8),
-            index_cols=["o_orderkey"],
         )
         compacted = r["files_after"] < r["files_before"] == 32
         dvs_folded = r["dv_files_folded"] >= 1 and not load_manifest(
@@ -3622,8 +3613,8 @@ def q_streaming_curated_ingest(spark, sf):
     (``maxFilesPerTrigger=1`` over a 4-file range-clustered stage),
     each batch flows through the batch-identical Gopher repetition
     screens inside ``foreachBatch``, survivors append-commit into a
-    versioned table WITH ``index_cols=['doc_id']`` (Bloom index
-    maintenance riding the write path), and the final read is a
+    versioned table whose first commit declares a Bloom index on
+    ``doc_id`` (every later commit maintains it), and the final read is a
     ``keys=`` probe through :func:`read_version_pruned`. Three things
     are locked at once: streaming/batch gate parity (the kept set must
     equal the oracle's batch SQL), multi-batch append semantics
@@ -3651,6 +3642,7 @@ def q_streaming_curated_ingest(spark, sf):
         index_params,
         read_version_pruned,
         versions,
+        write_bloom_index,
         write_version,
     )
     from .streaming import read_documents_stream
@@ -3672,9 +3664,8 @@ def q_streaming_curated_ingest(spark, sf):
             kept = batch.join(passing, "doc_id").select(
                 "doc_id", "source", "n_chars"
             )
-            write_version(
-                spark, kept, tdir, mode="append", index_cols=["doc_id"]
-            )
+            if write_version(spark, kept, tdir, mode="append") == 1:
+                write_bloom_index(spark, tdir, "doc_id")
 
         q = (
             read_documents_stream(spark, stage, max_files_per_trigger=1)
@@ -3923,20 +3914,22 @@ def q_versioned_index_compaction(spark, sf):
     build → chain → compact → re-chain → pruned probe, with a
     non-default tuned geometry that must survive every phase.
 
-    Six commits with ``index_max_chain=3``: v1 full build at an
-    explicit ``index_geometry`` (m_bits=2^20, k=5 — NOT the library
-    default, so any phase that silently falls back to defaults is
-    observable); v2–v4 appends chain incrementally (chain=[1], [1,2],
-    [1,2,3]); v5's append would chain 4 links > max_chain → COMPACTION:
-    a full rebuild whose recorded chain resets to [] and whose geometry
-    must equal the RECORDED tuning, not defaults
-    (sinks/versioned.py maintain_bloom_index's compaction branch);
-    v6 appends again and must chain onto the compacted v5.
+    Eleven commits at the lake's chain limit of 8 links: v1 holds the
+    ``event_id % 6 = 0`` rows and declares the index with
+    ``write_bloom_index`` at m_bits=2^20, k=5 (NOT the library default,
+    so any phase that silently falls back to defaults is observable);
+    ten appends follow, one per other residue of ``event_id % 12``.
+    v2–v9 chain incrementally (chain=[1], [1,2], … [1..8]); v10's
+    append would chain 9 links > 8 → COMPACTION: a full rebuild whose
+    recorded chain resets to [] and whose geometry must equal the
+    RECORDED tuning, not defaults (sinks/versioned.py
+    maintain_bloom_index's compaction branch); v11 appends again and
+    must chain onto the compacted v10.
 
     Four metadata literals pin each phase (all oracle-pinned TRUE):
-    ``compacted`` (v5's recorded chain is []), ``chained_after``
-    (v6's recorded chain is exactly [5]), ``geometry_kept`` (v5 AND v6
-    record the tuned (m_bits, k)), and ``pruned`` (the final keys=
+    ``compacted`` (v10's recorded chain is []), ``chained_after``
+    (v11's recorded chain is exactly [10]), ``geometry_kept`` (v10 AND
+    v11 record the tuned (m_bits, k)), and ``pruned`` (the final keys=
     probe reads fewer files than the manifest lists — the probe keys
     all live in v1's commit, so the post-compaction index must still
     skip other commits' files). The aggregate itself is computed off
@@ -3949,6 +3942,7 @@ def q_versioned_index_compaction(spark, sf):
         index_params,
         read_version_pruned,
         versions,
+        write_bloom_index,
         write_version,
     )
 
@@ -3957,30 +3951,24 @@ def q_versioned_index_compaction(spark, sf):
     with scratch_dir("q_vidx_compact_") as d:
         t = os.path.join(d, "events_v")
         write_version(
-            spark,
-            e.filter(F.col("event_id") % 6 == 0).repartition(2),
-            t,
-            index_cols=["event_id"],
-            index_geometry={"event_id": geo},
-            index_max_chain=3,
+            spark, e.filter(F.col("event_id") % 6 == 0).repartition(2), t
         )
-        for i in range(1, 6):
+        write_bloom_index(spark, t, "event_id", m_bits=geo[0], k=geo[1])
+        for r in (1, 2, 3, 4, 5, 7, 8, 9, 10, 11):
             write_version(
                 spark,
-                e.filter(F.col("event_id") % 6 == i).repartition(2),
+                e.filter(F.col("event_id") % 12 == r).repartition(2),
                 t,
                 mode="append",
-                index_cols=["event_id"],
-                index_max_chain=3,
             )
-        assert len(versions(t)) == 6
-        p5 = index_params(t, "event_id", version=5)
-        p6 = index_params(t, "event_id", version=6)
-        compacted = p5 is not None and p5["chain"] == []
-        chained_after = p6 is not None and [int(c) for c in p6["chain"]] == [5]
+        assert len(versions(t)) == 11
+        p10 = index_params(t, "event_id", version=10)
+        p11 = index_params(t, "event_id", version=11)
+        compacted = p10 is not None and p10["chain"] == []
+        chained_after = p11 is not None and [int(c) for c in p11["chain"]] == [10]
         geometry_kept = all(
             p is not None and (int(p["m_bits"]), int(p["k"])) == geo
-            for p in (p5, p6)
+            for p in (p10, p11)
         )
         probe_keys = list(range(0, 120, 6))  # all ≡ 0 (mod 6): v1's commit
         df, info = read_version_pruned(spark, t, keys={"event_id": probe_keys})
@@ -6233,6 +6221,7 @@ def q_versioned_rename_stats(spark, sf):
         optimize_table,
         read_version_pruned,
         rename_column,
+        write_bloom_index,
         write_version,
     )
 
@@ -6248,8 +6237,8 @@ def q_versioned_rename_stats(spark, sf):
             evens.repartitionByRange(4, "o_orderkey"),
             t,
             stats_cols=["o_orderkey"],
-            index_cols=["o_orderkey"],
         )  # v1 — the SAME column is stats-covered AND Bloom-indexed
+        write_bloom_index(spark, t, "o_orderkey")
         rename_column(t, "o_orderkey", "order_id")  # v2
         rename_column(t, "o_custkey", "cust_id")  # v3
         write_version(
@@ -6261,11 +6250,9 @@ def q_versioned_rename_stats(spark, sf):
             ).repartition(2),
             t,
             mode="append",
-            index_cols=["order_id"],
         )  # v4 — hash-scattered on purpose
         opt = optimize_table(
-            spark, t, cluster_by=["order_id"], incremental=True,
-            index_cols=["order_id"],
+            spark, t, cluster_by=["order_id"], incremental=True
         )  # v5
         optimize_partial = (
             opt["files_rewritten"] > 0 and opt["files_carried"] > 0

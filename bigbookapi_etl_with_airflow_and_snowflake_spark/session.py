@@ -197,6 +197,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # the SQL UDF path adds this to its workers' environment and the
+        # RDD path does not; Spark starts one worker daemon per distinct
+        # environment, so setting it for every worker makes it one daemon
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     extra_conf = dict(extra_conf or {})
     if master.startswith("local") and sys.version_info < (3, 12):

@@ -415,8 +415,10 @@ def publish_branch(table_dir: str, name: str) -> int:
     main has advanced past the branch's base (its fork point, or the
     main version its last publish created): a fast-forward would
     silently discard main's intervening commits. There is no rebase —
-    re-create the branch from current main and re-stage. Returns the
-    new main version number."""
+    re-create the branch from current main and re-stage. The publish
+    commit builds no Bloom index (it takes no session); the next main
+    commit that changes the file set rebuilds the table's indexes at
+    their recorded geometry. Returns the new main version number."""
     bvs = _version_numbers(table_dir, name)
     if not bvs:
         raise ValueError(
@@ -684,7 +686,7 @@ def _phys_path(mapping: dict | None, col: str) -> str:
 
 
 def _refuse_repeated_leaf(schema, cols, what: str) -> None:
-    """Dotted ``stats_cols`` / ``index_cols`` must reach an ATOMIC
+    """Dotted ``stats_cols`` / Bloom index paths must reach an ATOMIC
     struct leaf through STRUCT levels only. A path crossing an array
     (or map) level, or ending on a non-atomic node, records metadata
     no probe can ever use — parquet keys repeated leaves under the
@@ -730,21 +732,6 @@ def _refuse_repeated_leaf(schema, cols, what: str) -> None:
                     f"({cur.simpleString()[:40]}) — dotted {what} "
                     "paths must end on a scalar struct leaf"
                 )
-
-
-def _refuse_repeated_leaf_m(m: dict | None, cols, what: str) -> None:
-    """:func:`_refuse_repeated_leaf` against a manifest's recorded
-    LOGICAL schema (no-op without one) — the early guard for the DML
-    and index entry points, which must refuse BEFORE staging or
-    committing (an index maintenance raise after commit would leave a
-    committed version with its index chain silently unmaintained)."""
-    if not cols or not m or not m.get("schema"):
-        return
-    from pyspark.sql.types import StructType
-
-    _refuse_repeated_leaf(
-        StructType.fromJson(json.loads(m["schema"])), cols, what
-    )
 
 
 def _qcol(name: str):
@@ -1181,37 +1168,6 @@ def _live_scan(
     return df if identity else df.drop(_DV_FILE, _DV_POS)
 
 
-def _rebuild_bloom_index(
-    spark: SparkSession,
-    table_dir: str,
-    key_col: str,
-    version: int,
-    geometry: tuple[int, int] | None = None,
-) -> str:
-    """Full index (re)build for ``version``: an explicit ``geometry``
-    wins; otherwise INHERIT the most recent recorded (m_bits, k) before
-    ``version`` — an overwrite or restore on a table with a tuned index
-    must not silently reset it to defaults, and the walk-back (newest
-    usable index dir, one listdir) means an unindexed intermediate
-    commit cannot break the inheritance either. No prior index and no
-    override: library defaults."""
-    if geometry is None:
-        m = load_manifest(table_dir, version)
-        kphys = _phys_path(_col_mapping(m), key_col)
-        idx_root = os.path.join(table_dir, "_index", f"bloom_{kphys}")
-        for pv in reversed([x for x in _entry_versions(idx_root) if x < version]):
-            p = _usable_index_params(table_dir, kphys, pv)
-            if p is not None:
-                geometry = p["m_bits"], p["k"]
-                break
-        else:
-            return write_bloom_index(spark, table_dir, key_col, version=version)
-    return write_bloom_index(
-        spark, table_dir, key_col, version=version,
-        m_bits=int(geometry[0]), k=int(geometry[1]),
-    )
-
-
 def _last_txn_version(
     table_dir: str, app: str, branch: str | None = None
 ) -> int | None:
@@ -1555,9 +1511,6 @@ def write_version(
     df: DataFrame,
     table_dir: str,
     mode: str = "overwrite",
-    index_cols: Sequence[str] = (),
-    index_geometry: dict[str, tuple[int, int]] | None = None,
-    index_max_chain: int = 8,
     merge_schema: bool = False,
     branch: str | None = None,
     txn_app: str | None = None,
@@ -1578,9 +1531,14 @@ def write_version(
     ``branch``: commit onto that branch's chain instead of main
     (:func:`create_branch` first — an unknown name is loud, never an
     implicit fork). Append priors, schema-on-write, and conflict
-    semantics all apply against the BRANCH head. Bloom ``index_cols``
-    are refused on branch commits (indexes are main-lineage; build them
-    on the publish commit).
+    semantics all apply against the BRANCH head.
+
+    Bloom indexes are table state, not a write option: after a
+    main-line commit, every index the table declared with
+    :func:`write_bloom_index` is maintained at its recorded geometry —
+    an append chains an O(increment) link, an overwrite rebuilds (see
+    :func:`_commit_ops`). Branch commits build none; the first main
+    commit after :func:`publish_branch` rebuilds them.
 
     Schema-on-write: an append whose schema differs from the table's
     recorded schema is REFUSED (see :func:`_evolved_schema`) unless
@@ -1589,23 +1547,6 @@ def write_version(
     the recorded-schema scan; per-column type changes are always
     refused. Overwrites replace the schema outright (the snapshot is
     exactly ``df``).
-
-    ``index_cols``: columns to build the at-rest per-file Bloom index
-    for after the commit (index maintenance riding the write path, the
-    Delta/Iceberg pattern) — :func:`read_version_pruned` then prunes
-    equality lookups on them with zero extra read-side work.
-
-    ``index_geometry``: optional ``{col: (m_bits, k)}`` Bloom tuning
-    per index column. Without it, a rebuild (overwrite or first
-    commit) INHERITS the prior version's recorded geometry when one
-    exists — a tuned index survives every commit mode, not just
-    append/merge/delete chaining. Passing a geometry that differs from
-    the recorded one on an append deliberately forces a full rebuild
-    at the new geometry (a chain must be geometry-uniform to probe
-    correctly), which is the supported re-tune path.
-
-    ``index_max_chain``: compaction threshold for chained incremental
-    maintenance (see :func:`maintain_bloom_index`).
 
     ``stats_cols``: record per-file min/max envelopes for these
     NUMERIC columns IN THE MANIFEST (the Delta add-file-stats pattern):
@@ -1743,17 +1684,11 @@ def write_version(
     nums = _version_numbers(table_dir, branch)
     head = load_manifest(table_dir, nums[-1], branch) if nums else None
     head0 = head["version"] if head else 0
-    if branch is not None:
-        if index_cols:
-            raise ValueError(
-                "index_cols on a branch commit — Bloom indexes are "
-                "main-lineage; build them when the branch publishes"
-            )
-        if head is None:
-            raise ValueError(
-                f"branch {branch!r} not found (have "
-                f"{sorted(branches(table_dir))}) — create_branch() first"
-            )
+    if branch is not None and head is None:
+        raise ValueError(
+            f"branch {branch!r} not found (have "
+            f"{sorted(branches(table_dir))}) — create_branch() first"
+        )
     # generated columns: explicit set when given ({} clears), else
     # inherited; DERIVE missing ones onto df before any schema check
     # or staging sees it (present ones validate in the staging agg)
@@ -1782,10 +1717,9 @@ def write_version(
         # uncommitted staging); the overwrite base-pin + reshape check
         # happens below, against the head manifest
         _refuse_change_clash(df.columns)
-    # dotted stats/index paths validate BEFORE staging too (loud-early;
+    # dotted stats paths validate BEFORE staging too (loud-early;
     # inherited stats_cols were validated at their own record time)
     _refuse_repeated_leaf(df.schema, stats_cols, "stats_cols")
-    _refuse_repeated_leaf(df.schema, index_cols, "index_cols")
     rc_base: dict | None = None
     rc_renames: dict[str, str] = {}
     if mode == "append" and (head or {}).get("schema") is not None:
@@ -2076,12 +2010,7 @@ def write_version(
             ),
             staged=(new_files, staged_cf if record_changes else None),
             spark=spark,
-            index=_Index(
-                index_cols,
-                new_files if mode == "append" else None,
-                index_geometry,
-                index_max_chain,
-            ),
+            index=_Index(new_files if mode == "append" else None),
             branch=branch,
             refuse=refusal,
         )
@@ -2176,15 +2105,12 @@ def _child_body(
 
 
 class _Index(NamedTuple):
-    """Bloom-index upkeep after a commit (:func:`_commit_ops`): for each
-    of ``cols``, chain a link holding ``new_files`` onto ``prior`` (by
-    default the version the commit replaced) — O(increment) — or, with
-    ``new_files=None``, rebuild the index at the inherited geometry."""
+    """How a commit's Bloom-index upkeep runs (:func:`_commit_ops`):
+    chain a link holding ``new_files`` onto ``prior`` (by default the
+    version the commit replaced) — O(increment) — or, with
+    ``new_files=None``, rebuild in full."""
 
-    cols: Sequence[str]
-    new_files: Sequence[str] | None
-    geometry: dict[str, tuple[int, int]] | None = None
-    max_chain: int = 8
+    new_files: Sequence[str] | None = None
     prior: int | None = None
 
 
@@ -2195,7 +2121,7 @@ def _commit_ops(
     base_version: int | None = None,
     staged: Sequence[Sequence[str] | None] = (),
     spark: SparkSession | None = None,
-    index: _Index | None = None,
+    index: _Index = _Index(),
     branch: str | None = None,
     refuse: str | None = None,
     conflict: str = "re-run the operation against the new head",
@@ -2215,8 +2141,18 @@ def _commit_ops(
       staged files) or a replayed txn discards them all, because no
       manifest will ever reference them and vacuum sweeps only what
       manifests name;
-    - index maintenance after the commit (``index``, see
-      :class:`_Index`)."""
+    - Bloom index upkeep: after a main-line commit whose file set
+      differs from its base's, every index the table has
+      (:func:`_declared_indexes`) is maintained the way ``index`` says.
+      A table without ``_index`` pays one ``isdir``. A commit that
+      keeps the file set (metadata-only, MOR delete) writes no dir: its
+      probes walk back to the last one (:func:`_resolve_probe_index`).
+      Branch commits never touch ``_index`` (it is keyed by main's
+      version numbers), and a commit without a session
+      (:func:`publish_branch`) builds nothing — the next main commit
+      finds no link to chain onto and rebuilds at the recorded
+      geometry."""
+    landed: dict = {}
 
     def checked(prior: dict | None) -> dict:
         cur = prior["version"] if prior else 0
@@ -2225,7 +2161,9 @@ def _commit_ops(
                 f"table advanced past v{base_version} (latest: v{cur}) — "
                 + conflict
             )
-        return build(prior) if callable(build) else build
+        landed["prior"] = prior
+        landed["body"] = build(prior) if callable(build) else build
+        return landed["body"]
 
     try:
         if refuse is not None:
@@ -2235,17 +2173,24 @@ def _commit_ops(
         for files in staged:
             _discard_staged(files)
         raise
-    for col in index.cols if index else ():
-        geometry = (index.geometry or {}).get(col)
-        if index.new_files is not None and v > 1:
-            maintain_bloom_index(
-                spark, table_dir, col, version=v,
-                new_files=index.new_files,
-                prior_version=v - 1 if index.prior is None else index.prior,
-                max_chain=index.max_chain, geometry=geometry,
-            )
-        else:
-            _rebuild_bloom_index(spark, table_dir, col, v, geometry)
+    prior = landed["prior"]
+    if (
+        branch is None
+        and spark is not None
+        and os.path.isdir(os.path.join(table_dir, "_index"))
+        and set(landed["body"]["files"]) != set((prior or {}).get("files", ()))
+    ):
+        for col, kphys in _declared_indexes(table_dir, landed["body"]).items():
+            if index.new_files is None or prior is None:
+                write_bloom_index(
+                    spark, table_dir, col, v,
+                    *_recorded_geometry(table_dir, kphys, v),
+                )
+            else:
+                maintain_bloom_index(
+                    spark, table_dir, col, v, index.new_files,
+                    v - 1 if index.prior is None else index.prior,
+                )
     return v
 
 
@@ -2331,9 +2276,6 @@ def merge_version(
     keys: Sequence[str],
     order_by: Sequence = (),
     base_version: int | None = None,
-    index_cols: Sequence[str] = (),
-    index_geometry: dict[str, tuple[int, int]] | None = None,
-    index_max_chain: int = 8,
     merge_schema: bool = False,
     delete_col: str | None = None,
     change_files: bool = False,
@@ -2354,8 +2296,8 @@ def merge_version(
     ``base_version`` (default: latest at read time) before the commit —
     optimistic concurrency, nothing is half-applied.
 
-    ``index_geometry`` / ``index_max_chain``: Bloom-index tuning and
-    compaction threshold, see :func:`write_version`.
+    The table's Bloom indexes chain an O(increment) link over the
+    rewritten files (see :func:`write_version`).
 
     Schema-on-write applies here exactly as on append: an incoming
     frame whose columns differ from the table's recorded schema is
@@ -2434,11 +2376,7 @@ def merge_version(
             first = incoming.filter(F.col("__cdc_rank") == 0).drop(
                 "__cdc_rank"
             )
-        v = write_version(
-            spark, first, table_dir, index_cols=index_cols,
-            index_geometry=index_geometry, index_max_chain=index_max_chain,
-            record_changes=change_files,
-        )
+        v = write_version(spark, first, table_dir, record_changes=change_files)
         m = load_manifest(table_dir, v)
         result = {
             "version": v,
@@ -2450,7 +2388,6 @@ def merge_version(
             result["change_files_added"] = len(m.get("change_files") or [])
         return result
     base = load_manifest(table_dir, base_version)
-    _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     # schema-on-write (same gate as write_version's append): refuse a
     # divergent increment unless merge_schema=True, then conform BOTH
     # sides to the union schema — without this, select(*incoming.columns)
@@ -2595,7 +2532,7 @@ def merge_version(
         spark=spark,
         # copy-on-write commit: carried files keep their prior index
         # rows, only the rewritten increment is hashed
-        index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+        index=_Index(new_files),
     )
     return {
         "version": v,
@@ -2612,9 +2549,6 @@ def delete_version(
     predicate=None,
     base_version: int | None = None,
     mode: str = "cow",
-    index_cols: Sequence[str] = (),
-    index_geometry: dict[str, tuple[int, int]] | None = None,
-    index_max_chain: int = 8,
     partition_scope: dict[str, Sequence] | None = None,
     change_files: bool = False,
 ) -> dict:
@@ -2644,9 +2578,11 @@ def delete_version(
       manifest references.
 
     Same optimistic-concurrency commit as :func:`merge_version` either
-    way. ``index_geometry`` / ``index_max_chain``: see
-    :func:`write_version`; a MOR commit's index maintenance is the
-    zero-new-files chain link (the file set is unchanged).
+    way. A COW commit chains the table's Bloom indexes over its
+    rewritten files; a MOR commit keeps the file set, so it writes no
+    index dir and its probes reuse the prior one (Bloom pruning is
+    file-level and conservative — the DV anti-join drops the deleted
+    rows).
 
     ``partition_scope`` (``{col: [values...]}``): partition-DML file
     skipping (how Delta executes ``DELETE WHERE dt = ...``): the scope
@@ -2678,13 +2614,11 @@ def delete_version(
         raise ValueError(f"mode must be cow|mor, got {mode!r}")
     cond = _scoped_cond(predicate, partition_scope)
     base = load_manifest(table_dir, base_version)
-    _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     cand = _partition_candidates(base, partition_scope)
     scan_files = base["files"] if cand is None else cand
     if mode == "mor":
         return _delete_version_mor(
             spark, table_dir, cond, base,
-            index_cols, index_geometry, index_max_chain,
             scan_files=scan_files,
             change_files=change_files,
         )
@@ -2781,7 +2715,7 @@ def delete_version(
         base_version=base["version"],
         staged=(new_files, cf),
         spark=spark,
-        index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+        index=_Index(new_files),
     )
     return {
         "version": v,
@@ -2800,9 +2734,6 @@ def overwrite_partitions(
     table_dir: str,
     partition_scope: dict[str, Sequence] | None = None,
     base_version: int | None = None,
-    index_cols: Sequence[str] = (),
-    index_geometry: dict[str, tuple[int, int]] | None = None,
-    index_max_chain: int = 8,
     change_files: bool = False,
 ) -> dict:
     """Dynamic partition overwrite (Delta ``replaceWhere`` / Hive
@@ -2830,9 +2761,9 @@ def overwrite_partitions(
     constraints are enforced on the staged increment (same single-pass
     accounting as write_version); stats/partition-map coverage is
     re-recorded for the new files; carried files keep their entries
-    and their DV applicability. ``index_cols`` maintain the at-rest
-    Bloom index as an O(increment) chain link over the rewritten +
-    replacement files, exactly like the COW DML paths. Same
+    and their DV applicability. The table's Bloom indexes chain an
+    O(increment) link over the rewritten + replacement files, exactly
+    like the COW DML paths. Same
     optimistic-concurrency commit as every DML (stale base →
     :class:`CommitConflict`, staging discarded).
 
@@ -2848,7 +2779,6 @@ def overwrite_partitions(
     from pyspark.sql import functions as F
 
     base = load_manifest(table_dir, base_version)
-    _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     pcols = list(base.get("partition_cols") or [])
     if not pcols:
         raise ValueError(
@@ -3034,9 +2964,7 @@ def overwrite_partitions(
         # rewritten + replacement files hash (O(increment), same
         # contract as the COW DML paths). Rows indexed for dropped
         # files go stale-but-harmless, as everywhere.
-        index=_Index(
-            index_cols, rw_files + new_files, index_geometry, index_max_chain
-        ),
+        index=_Index(rw_files + new_files),
     )
     return {
         "version": v,
@@ -3055,9 +2983,6 @@ def _delete_version_mor(
     table_dir: str,
     cond,
     base: dict,
-    index_cols: Sequence[str],
-    index_geometry: dict[str, tuple[int, int]] | None,
-    index_max_chain: int,
     scan_files: Sequence[str] | None = None,
     change_files: bool = False,
 ) -> dict:
@@ -3119,14 +3044,12 @@ def _delete_version_mor(
             change_files=cf,
         ),
         base_version=base["version"],
-        staged=(dv_new, cf),
-        spark=spark,
-        # file set unchanged → the index chains a zero-new-files link
-        # (O(1)); probes stay correct because Bloom pruning is
+        # file set unchanged → no index dir: probes walk back to the
+        # prior one, which stays correct because Bloom pruning is
         # file-level and conservative — a file whose every matching
         # row is DV-deleted still qualifies, and the exact filter + DV
         # anti-join discard its rows
-        index=_Index(index_cols, [], index_geometry, index_max_chain),
+        staged=(dv_new, cf),
     )
     return {
         "version": v,
@@ -3169,9 +3092,6 @@ def update_version(
     assignments: dict,
     base_version: int | None = None,
     mode: str = "cow",
-    index_cols: Sequence[str] = (),
-    index_geometry: dict[str, tuple[int, int]] | None = None,
-    index_max_chain: int = 8,
     partition_scope: dict[str, Sequence] | None = None,
     change_files: bool = False,
 ) -> dict:
@@ -3201,7 +3121,9 @@ def update_version(
       overwrite/compaction folds the DVs away.
 
     Existing DVs are honored on both paths: a MOR-deleted row never
-    matches, never resurrects, and never re-records.
+    matches, never resurrects, and never re-records. Both paths chain
+    the table's Bloom indexes over the commit's new files (see
+    :func:`write_version`).
     ``partition_scope``: partition-DML file skipping, same contract as
     :func:`delete_version` — the scope is ANDed into the predicate and
     files whose recorded partition value can't match are never opened.
@@ -3221,7 +3143,6 @@ def update_version(
         raise ValueError("update_version: empty assignments")
     cond = _scoped_cond(predicate, partition_scope)
     base = load_manifest(table_dir, base_version)
-    _refuse_repeated_leaf_m(base, index_cols, "index_cols")
     cand = _partition_candidates(base, partition_scope)
     scan_files = base["files"] if cand is None else cand
     if not base["files"]:
@@ -3324,7 +3245,7 @@ def update_version(
             base_version=base["version"],
             staged=(dv_new, new_files, cf),
             spark=spark,
-            index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+            index=_Index(new_files),
         )
         return {
             "version": v,
@@ -3406,7 +3327,7 @@ def update_version(
         base_version=base["version"],
         staged=(new_files, cf),
         spark=spark,
-        index=_Index(index_cols, new_files, index_geometry, index_max_chain),
+        index=_Index(new_files),
     )
     return {
         "version": v,
@@ -3651,7 +3572,6 @@ def optimize_table(
     table_dir: str,
     cluster_by: Sequence[str] = (),
     target_file_bytes: int = 128 * 1024 * 1024,
-    index_cols: Sequence[str] = (),
     change_files: bool = False,
     incremental: bool = False,
     width_frac_threshold: float | None = None,
@@ -3662,8 +3582,8 @@ def optimize_table(
     re-clusters on ``cluster_by`` (range layout — file skipping works
     again after appends/merges hash-scattered the keys), FOLDS
     accumulated deletion vectors away (an overwrite materializes live
-    rows only), and rebuilds the Bloom indexes for ``index_cols`` at
-    their recorded geometry. Time travel to pre-optimize versions is
+    rows only), and rebuilds the table's Bloom indexes at their
+    recorded geometry. Time travel to pre-optimize versions is
     untouched (their manifests still reference the old files until
     :func:`vacuum`); concurrent readers see either the old or the new
     snapshot, never a mix — it is an ordinary commit.
@@ -3713,13 +3633,12 @@ def optimize_table(
     from pyspark.sql import functions as F
 
     m = load_manifest(table_dir, None)
-    _refuse_repeated_leaf_m(m, index_cols, "index_cols")
     if not m["files"] or not m["n_rows"]:
         raise ValueError("optimize on an empty snapshot — nothing to pack")
     if incremental:
         return _optimize_incremental(
             spark, table_dir, m, cluster_by, target_file_bytes,
-            index_cols, change_files, width_frac_threshold,
+            change_files, width_frac_threshold,
         )
     bytes_before = sum(os.path.getsize(f) for f in m["files"])
     n_out = max(1, -(-bytes_before // int(target_file_bytes)))
@@ -3729,7 +3648,7 @@ def optimize_table(
     else:
         live = live.repartition(n_out)
     v = write_version(
-        spark, live, table_dir, mode="overwrite", index_cols=index_cols,
+        spark, live, table_dir, mode="overwrite",
         change_files=[] if change_files else None,
     )
     m2 = load_manifest(table_dir, v)
@@ -3749,7 +3668,6 @@ def _optimize_incremental(
     m: dict,
     cluster_by: Sequence[str],
     target_file_bytes: int,
-    index_cols: Sequence[str],
     change_files: bool,
     width_frac_threshold: float | None,
 ) -> dict:
@@ -3864,7 +3782,7 @@ def _optimize_incremental(
         base_version=m["version"],
         staged=(new_files,),
         spark=spark,
-        index=_Index(index_cols, new_files),
+        index=_Index(new_files),
     )
     after = layout_report(table_dir, col, version=v)["avg_point_reads"]
     return {
@@ -4002,8 +3920,6 @@ def restore_version(
     spark: SparkSession,
     table_dir: str,
     version: int | None = None,
-    index_cols: Sequence[str] = (),
-    index_max_chain: int = 8,
     branch: str | None = None,
     tag: str | None = None,
     change_files: bool = False,
@@ -4039,13 +3955,13 @@ def restore_version(
     back too, exactly like an overwrite replaces it (time travel and
     restore must agree on what v_target looked like).
 
-    ``index_cols``: per column, when the TARGET version has a usable
-    Bloom index, the new head's index is a zero-new-files chain link
-    onto the target's (O(1) — the restored file set IS the target's,
-    so the target's index is complete and fresh for it; links from the
-    undone versions are simply not referenced). Without one, a full
-    rebuild at the recorded/inherited geometry. Refused on branches,
-    like every index build (indexes are main-lineage).
+    Bloom indexes: for each index the table has, when the TARGET
+    version has a usable one, the new head's index is a zero-new-files
+    chain link onto the target's (O(1) — the restored file set IS the
+    target's, so the target's index is complete and fresh for it;
+    links from the undone versions are simply not referenced). Without
+    one, a full rebuild at the recorded geometry. A branch restore
+    builds none (indexes are main-lineage).
 
     ``change_files=True`` records the restore's exact row-level UNDO
     set (the inverse of :func:`read_changes` between the target and the
@@ -4057,13 +3973,8 @@ def restore_version(
     Returns ``{"version", "restored_from", "files_restored",
     "data_files_written", "index"}`` with ``data_files_written`` always
     0 (the literal the registry entry pins; change files are sidecars,
-    not data files) and ``index`` mapping each requested column to
-    ``"chained"`` or ``"rebuilt"``."""
-    if branch is not None and index_cols:
-        raise ValueError(
-            "index_cols on a branch restore — Bloom indexes are "
-            "main-lineage; build them when the branch publishes"
-        )
+    not data files) and ``index`` mapping each indexed column to
+    ``"chained"`` or ``"rebuilt"`` (empty on a branch)."""
     if (version is None) == (tag is None):
         raise ValueError(
             "restore_version takes exactly one of version= or tag="
@@ -4079,7 +3990,6 @@ def restore_version(
             )
         version = pinned[tag]
     target = load_manifest(table_dir, version, branch)
-    _refuse_repeated_leaf_m(target, index_cols, "index_cols")
     cf: list[str] | None = None
     if change_files:
         if branch is not None:
@@ -4124,16 +4034,16 @@ def restore_version(
             else None
         )
         cf = _write_change_files(spark, undo, table_dir, syn_map)
-    # per column: when the TARGET has a usable index it covers exactly
+    # per index: when the TARGET has a usable one it covers exactly
     # the restored file set, so the new head chains a zero-increment
     # link onto it (O(1); the undone versions' links fall out of the
     # reference graph and vacuum reclaims them); otherwise a rebuild
-    _rmap = _col_mapping(target)
+    declared = _declared_indexes(table_dir, target) if branch is None else {}
     index_result = {
         col: "chained"
-        if _resolve_probe_index(table_dir, target, _phys_path(_rmap, col))
+        if _resolve_probe_index(table_dir, target, kphys)
         else "rebuilt"
-        for col in index_cols
+        for col, kphys in declared.items()
     }
     v = _commit_ops(
         table_dir,
@@ -4150,7 +4060,7 @@ def restore_version(
         base_version=head if cf is not None else None,
         staged=(cf,),
         spark=spark,
-        index=_Index(index_cols, [], max_chain=index_max_chain, prior=version),
+        index=_Index([], prior=version),
         branch=branch,
     )
     return {
@@ -4781,7 +4691,8 @@ def clone_table(
     the clone's pruned reads skip files with zero footer I/O from day
     one). What does NOT carry: Bloom index dirs (they live under the
     source's ``_index`` namespace and vacuum(src) owns their lifecycle
-    — the clone reads unpruned on key lookups until it builds its own),
+    — the clone reads unpruned on key lookups until it declares its own
+    with :func:`write_bloom_index`),
     tags, branches, txn watermarks, and the source's HISTORY (the clone
     has no v0..v_n to time-travel into; its feed starts at its own v1).
 
@@ -5497,6 +5408,62 @@ def index_params(
     return hit[1] if hit is not None else None
 
 
+_INDEX_MAX_CHAIN = 8  # chained links before maintenance compacts
+
+
+def _index_paths(schema, prefix: str = ""):
+    """Every column a Bloom index can address in a LOGICAL schema: each
+    top-level name, and each dotted path that reaches an atomic leaf
+    through structs only (what :func:`_refuse_repeated_leaf` admits)."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    for f in schema.fields:
+        path = prefix + f.name
+        if isinstance(f.dataType, StructType):
+            yield from _index_paths(f.dataType, path + ".")
+        if not prefix or not isinstance(f.dataType, (ArrayType, MapType, StructType)):
+            yield path
+
+
+def _declared_indexes(table_dir: str, m: dict) -> dict[str, str]:
+    """The Bloom indexes the table HAS at snapshot ``m``, as ``{logical:
+    physical}``. An index is declared by its ``_index/bloom_<physical>``
+    directory (:func:`write_bloom_index` creates it) and stays declared
+    across every later commit; physical names map to ``m``'s logical
+    ones through its column mapping, and a physical ``m``'s schema no
+    longer holds (a dropped column) is skipped."""
+    from pyspark.sql.types import StructType
+
+    root = os.path.join(table_dir, "_index")
+    if not os.path.isdir(root):
+        return {}
+    phys = {e[len("bloom_"):] for e in os.listdir(root) if e.startswith("bloom_")}
+    if not m.get("schema"):
+        return {p: p for p in sorted(phys)}
+    mapping = _col_mapping(m)
+    return {
+        col: p
+        for col in _index_paths(StructType.fromJson(json.loads(m["schema"])))
+        if (p := _phys_path(mapping, col)) in phys
+    }
+
+
+def _recorded_geometry(
+    table_dir: str, key_phys: str, version: int
+) -> tuple[int, int]:
+    """The (m_bits, k) the newest usable index dir below ``version``
+    recorded, else the library defaults. A full rebuild keeps a tuned
+    index's geometry this way even when the version just before it has
+    no dir of its own (a ``publish_branch`` commit, which takes no
+    session, or a crash between a commit and its index upkeep)."""
+    idx_root = os.path.join(table_dir, "_index", f"bloom_{key_phys}")
+    for pv in reversed([x for x in _entry_versions(idx_root) if x < version]):
+        p = _usable_index_params(table_dir, key_phys, pv)
+        if p is not None:
+            return int(p["m_bits"]), int(p["k"])
+    return 1 << 16, 3
+
+
 def write_bloom_index(
     spark: SparkSession,
     table_dir: str,
@@ -5505,12 +5472,18 @@ def write_bloom_index(
     m_bits: int = 1 << 16,
     k: int = 3,
 ) -> str:
-    """Build and persist the per-file Bloom index for ``key_col`` over
-    one version's manifest (default: latest) — the at-rest half of
-    equality-predicate file skipping. Run it after a commit (the
-    Delta/Iceberg pattern: index maintenance rides the write path, so
-    reads stay metadata-only); :func:`read_version_pruned` picks it up
-    automatically for ``keys=`` predicates on that version.
+    """DECLARE (or re-tune) the per-file Bloom index on ``key_col`` and
+    build it in full over one version's manifest (default: latest) —
+    the at-rest half of equality-predicate file skipping;
+    :func:`read_version_pruned` picks it up automatically for ``keys=``
+    predicates. Declare once, after the table's first commit: from then
+    on every main-line commit that changes the file set maintains the
+    index itself at its recorded geometry (:func:`_commit_ops`), so no
+    write call names its indexes. Calling it again on the latest
+    version with a different (m_bits, k) is the re-tune: the chain
+    resets to a full index at the new geometry, which later commits
+    inherit. Branch commits never touch the index (its dirs are keyed
+    by main's version numbers).
 
     One pass over the key column (map-side-combined groupBy, sparse
     ``(file, word, bits)`` rows — at most ``m_bits/64`` per file);
@@ -5522,16 +5495,21 @@ def write_bloom_index(
     has false NEGATIVES, which would silently drop qualifying files.
     Returns the index directory path.
 
-    Under column mapping, ``key_col`` (logical) resolves to its frozen
-    PHYSICAL name here — the index dir is physical-keyed and the build
-    hashes the physical column the data files store, so
-    :func:`rename_column` never invalidates an index.
+    A dotted ``key_col`` must reach an atomic leaf through structs
+    only (refused otherwise). Under column mapping, ``key_col``
+    (logical) resolves to its frozen PHYSICAL name here — the index dir
+    is physical-keyed and the build hashes the physical column the data
+    files store, so :func:`rename_column` never invalidates an index.
     """
-    from ..operators.lake import build_file_bloom_index
+    from pyspark.sql.types import StructType
 
     m = load_manifest(table_dir, version)
     v = m["version"]
-    _refuse_repeated_leaf_m(m, [key_col], "index_cols")
+    if m.get("schema"):
+        _refuse_repeated_leaf(
+            StructType.fromJson(json.loads(m["schema"])), [key_col],
+            "Bloom index column",
+        )
     key_col = _phys_path(_col_mapping(m), key_col)
     # Chained indexes carry this version's dir BY REFERENCE
     # (maintain_bloom_index): a later version probes the union of its
@@ -5545,8 +5523,7 @@ def write_bloom_index(
     # or compaction on a long-lived table with thousands of retained
     # versions stays metadata-cheap, matching the O(increment) story.
     idx_root = os.path.join(table_dir, "_index", f"bloom_{key_col}")
-    later_versions = [x for x in _entry_versions(idx_root) if x > v]
-    for lv in later_versions:
+    for lv in [x for x in _entry_versions(idx_root) if x > v]:
         p = _usable_index_params(table_dir, key_col, lv)
         if p is None or v not in (int(c) for c in p.get("chain", [])):
             continue
@@ -5560,23 +5537,37 @@ def write_bloom_index(
                 "the LATEST version with the new geometry instead (its "
                 "chain resets), or pass the recorded geometry."
             )
-    out = _bloom_index_dir(table_dir, key_col, v)
-    if not m["files"]:
-        # an empty snapshot (delete-all / empty-df overwrite) still
-        # records its geometry with one empty part file: the dir stays
-        # USABLE, so later commits keep inheriting the tuned (m_bits,
-        # k) and index_params() keeps answering audits — dropping the
-        # params here would silently reset tuning at the next rebuild
-        from ..operators.lake import BLOOM_INDEX_SCHEMA
+    # an empty snapshot (delete-all / empty-df overwrite) still records
+    # its geometry with one empty part file: the dir stays USABLE, so
+    # later commits keep inheriting the tuned (m_bits, k) and
+    # index_params() keeps answering audits
+    return _write_index_dir(spark, table_dir, v, key_col, m["files"], m_bits, k, [])
 
-        idx = spark.createDataFrame([], BLOOM_INDEX_SCHEMA).repartition(1)
+
+def _write_index_dir(
+    spark: SparkSession,
+    table_dir: str,
+    version: int,
+    key_phys: str,
+    files: Sequence[str],
+    m_bits: int,
+    k: int,
+    chain: list[int],
+) -> str:
+    """Write ``version``'s index dir: rows for ``files`` plus the
+    recorded params. Zero files still write one empty part file
+    (repartition(1) forces a part even from a 0-partition frame), so
+    the dir stays usable."""
+    from ..operators.lake import BLOOM_INDEX_SCHEMA, build_file_bloom_index
+
+    out = _bloom_index_dir(table_dir, key_phys, version)
+    if files:
+        idx = build_file_bloom_index(spark, files, key_phys, m_bits=m_bits, k=k)
     else:
-        idx = build_file_bloom_index(
-            spark, m["files"], key_col, m_bits=m_bits, k=k
-        )
+        idx = spark.createDataFrame([], BLOOM_INDEX_SCHEMA).repartition(1)
     idx.write.mode("overwrite").parquet(out)
     with open(os.path.join(out, "_params.json"), "w") as fh:
-        json.dump({"m_bits": m_bits, "k": k, "chain": []}, fh)
+        json.dump({"m_bits": m_bits, "k": k, "chain": chain}, fh)
     return out
 
 
@@ -5587,18 +5578,17 @@ def maintain_bloom_index(
     version: int,
     new_files: Sequence[str],
     prior_version: int,
-    max_chain: int = 8,
-    geometry: tuple[int, int] | None = None,
 ) -> str:
     """TRUE O(increment) index maintenance for a commit that carries
-    prior data files verbatim: the new version's index dir stores rows
-    for ONLY the commit's new files, plus a ``chain`` in its recorded
-    params naming the prior versions whose dirs complete it — prior
-    index parquet is carried BY REFERENCE (the log-structured pattern),
-    never read or rewritten at commit time. Per-commit cost is
-    hash-the-increment + one params read, regardless of table size —
-    a continuous ingest stream pays the same bounded cost per
-    micro-batch forever.
+    prior data files verbatim — what :func:`_commit_ops` runs for each
+    declared index after such a commit: the new version's index dir
+    stores rows for ONLY the commit's new files, plus a ``chain`` in
+    its recorded params naming the prior versions whose dirs complete
+    it — prior index parquet is carried BY REFERENCE (the
+    log-structured pattern), never read or rewritten at commit time.
+    Per-commit cost is hash-the-increment + one params read, regardless
+    of table size — a continuous ingest stream pays the same bounded
+    cost per micro-batch forever.
 
     Copy-on-write merge/delete use the same path WITHOUT filtering the
     prior rows: a chained link may contain rows for files the commit
@@ -5608,75 +5598,45 @@ def maintain_bloom_index(
     get fresh uuid paths, never reusing a dead identity). Stale rows
     only cost probe time, and compaction reclaims them.
 
-    Compaction: when the chain would exceed ``max_chain`` links, fall
-    back to a full :func:`write_bloom_index` rebuild (chain resets to
-    []) — amortized O(table / max_chain) per commit, bounding both
-    probe-time read amplification and stale-row accumulation.
+    Compaction: when the chain would exceed 8 links
+    (``_INDEX_MAX_CHAIN``), fall back to a full :func:`write_bloom_index`
+    rebuild (chain resets to []) — amortized O(table / 8) per commit,
+    bounding both probe-time read amplification and stale-row
+    accumulation.
 
     Geometry safety: new rows are built with the prior index's
     recorded (m_bits, k) — a mixed-geometry chain has false negatives
-    on probe. If the prior version has no usable index, fall back to a
-    full rebuild (at ``geometry`` when given, else the geometry last
-    recorded before ``version``, else defaults). Passing
-    an explicit ``geometry`` that DIFFERS from the prior recorded one
-    also forces a full rebuild at the new geometry — the chain resets,
-    which is the only safe way to re-tune a live index. Returns the
-    version's index dir.
-
-    Under column mapping the chain lives under the column's frozen
-    PHYSICAL name (translated here via the commit's manifest; the
-    full-rebuild fallbacks pass the LOGICAL name through —
-    :func:`write_bloom_index` translates exactly once itself).
-    """
-    from ..operators.lake import build_file_bloom_index
-
-    _m_here = load_manifest(table_dir, version)
-    _refuse_repeated_leaf_m(_m_here, [key_col], "index_cols")
-    kphys = _phys_path(_col_mapping(_m_here), key_col)
+    on probe — and compaction keeps it. If the prior version has no
+    usable index, fall back to a full rebuild at the geometry last
+    recorded before ``version`` (else defaults). Returns the version's
+    index dir. Under column mapping the chain lives under the column's
+    frozen PHYSICAL name."""
+    kphys = _phys_path(_col_mapping(load_manifest(table_dir, version)), key_col)
     # resolve the prior link through metadata-only commits (a rename /
     # constraint commit between two appends must not force a rebuild)
     hit = _resolve_probe_index(
         table_dir, load_manifest(table_dir, prior_version), kphys
     )
-    link_v, params = hit if hit is not None else (prior_version, None)
-    if params is None:
-        # no usable prior index to chain onto: full rebuild, at the
-        # explicit geometry when given, else whatever the table last
-        # recorded (walk-back inheritance), else library defaults
-        return _rebuild_bloom_index(spark, table_dir, key_col, version, geometry)
-    m_bits, k = int(params["m_bits"]), int(params["k"])
-    if geometry is not None and (int(geometry[0]), int(geometry[1])) != (m_bits, k):
-        # explicit re-tune: a chain must be geometry-uniform, so the
-        # new geometry starts a fresh full index (chain resets)
+    if hit is None:
+        # no usable prior index to chain onto: full rebuild at whatever
+        # the table last recorded (else library defaults)
         return write_bloom_index(
-            spark, table_dir, key_col, version=version,
-            m_bits=int(geometry[0]), k=int(geometry[1]),
+            spark, table_dir, key_col, version,
+            *_recorded_geometry(table_dir, kphys, version),
         )
+    link_v, params = hit
+    m_bits, k = int(params["m_bits"]), int(params["k"])
     chain = [int(c) for c in params["chain"]] + [link_v]
-    if len(chain) > max_chain or _index_chain_dirs(
+    if len(chain) > _INDEX_MAX_CHAIN or _index_chain_dirs(
         table_dir, kphys, link_v, params
     ) is None:
         # compaction / missing-link rebuild keeps the RECORDED geometry:
         # resetting a tuned index to defaults would silently raise the
-        # false-positive rate every max_chain commits
-        return write_bloom_index(
-            spark, table_dir, key_col, version=version, m_bits=m_bits, k=k
-        )
-    out = _bloom_index_dir(table_dir, kphys, version)
-    if new_files:
-        idx = build_file_bloom_index(
-            spark, new_files, kphys, m_bits=m_bits, k=k
-        )
-    else:
-        # zero new files: one empty part file keeps the dir usable
-        # (repartition(1) forces a part even from a 0-partition frame)
-        from ..operators.lake import BLOOM_INDEX_SCHEMA
-
-        idx = spark.createDataFrame([], BLOOM_INDEX_SCHEMA).repartition(1)
-    idx.write.mode("overwrite").parquet(out)
-    with open(os.path.join(out, "_params.json"), "w") as fh:
-        json.dump({"m_bits": m_bits, "k": k, "chain": chain}, fh)
-    return out
+        # false-positive rate every compaction
+        return write_bloom_index(spark, table_dir, key_col, version, m_bits, k)
+    return _write_index_dir(
+        spark, table_dir, version, kphys, new_files, m_bits, k, chain
+    )
 
 
 def read_version_pruned(

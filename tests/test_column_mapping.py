@@ -26,6 +26,7 @@ from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
     update_version,
     vacuum,
     verify_table,
+    write_bloom_index,
     write_version,
 )
 
@@ -408,7 +409,8 @@ def test_indexed_column_renames_and_prunes(spark, table):
         read_version_pruned,
     )
 
-    write_version(spark, _df(spark).repartition(4), table, index_cols=["id"])
+    write_version(spark, _df(spark).repartition(4), table)
+    write_bloom_index(spark, table, "id")
     rename_column(table, "id", "key")
     assert index_params(table, "key") is not None  # resolves via mapping
     df, info = read_version_pruned(spark, table, keys={"key": [7]})
@@ -420,7 +422,6 @@ def test_indexed_column_renames_and_prunes(spark, table):
         _df(spark, 500, 520).withColumnRenamed("id", "key").coalesce(1),
         table,
         mode="append",
-        index_cols=["key"],
     )
     p = index_params(table, "key")
     assert p is not None and p["chain"]  # chained, not rebuilt
@@ -1264,7 +1265,8 @@ def test_vacuum_keeps_walkback_index_dir(spark, table):
         vacuum,
     )
 
-    write_version(spark, _df(spark).repartition(4), table, index_cols=["id"])
+    write_version(spark, _df(spark).repartition(4), table)
+    write_bloom_index(spark, table, "id")
     rename_column(table, "v", "value")  # v2 metadata-only
     add_constraint(spark, table, "pos", "id >= 0")  # v3 metadata-only
     vacuum(table, keep_last=2)  # retains v2+v3 only — v1 drops
@@ -1356,8 +1358,9 @@ def test_round14_features_compose_in_one_lifecycle(spark, table):
 
     write_version(
         spark, frame(0, 600), table, partition_by=["cat"],
-        stats_cols=["meta.price"], index_cols=["meta.sku"],
+        stats_cols=["meta.price"],
     )  # v1
+    write_bloom_index(spark, table, "meta.sku")
     rename_column(table, "cat", "category")          # v2 metadata-only
     rename_column(table, "meta.price", "cost")       # v3 metadata-only
     rename_column(table, "meta", "info")             # v4 enclosing
@@ -1378,7 +1381,6 @@ def test_round14_features_compose_in_one_lifecycle(spark, table):
         ),
         table,
         mode="append",
-        index_cols=["info.sku"],
     )  # v5 — inherits layout + stats under the new names, chains index
     repl = (
         spark.range(0, 50)

@@ -162,3 +162,37 @@ def test_one_commit_path_in_the_lake():
 
     scan(ast.parse(path.read_text()), None)
     assert not offenders, offenders
+
+
+def test_bloom_indexes_are_table_state():
+    """A table's Bloom indexes are declared once with
+    ``write_bloom_index`` and every commit maintains them: no function
+    in the lake takes a per-call index option, and the commit path's
+    ``_Index`` carries only the chain-or-rebuild choice."""
+    import ast
+    import pathlib
+
+    import bigbookapi_etl_with_airflow_and_snowflake_spark as pkg
+
+    path = pathlib.Path(pkg.__file__).parent / "sinks" / "versioned.py"
+    tree = ast.parse(path.read_text())
+    banned = {"index_cols", "index_geometry", "index_max_chain"}
+    offenders = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                if arg.arg in banned:
+                    offenders.append(f"{node.lineno}: {node.name}({arg.arg})")
+        if isinstance(node, ast.ClassDef) and node.name == "_Index":
+            fields = {
+                s.target.id
+                for s in node.body
+                if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+            }
+            assert fields, "_Index lost its fields"
+            offenders += [
+                f"{node.lineno}: _Index.{f}"
+                for f in sorted(fields & {"cols", "geometry", "max_chain"})
+            ]
+    assert not offenders, offenders

@@ -582,45 +582,80 @@ def test_vacuum_drops_at_rest_indexes_of_dropped_versions(spark, table):
     assert os.path.isdir(v2_idx)       # retained version keeps its index
 
 
-def test_index_cols_ride_the_write_path(spark, table):
-    """index_cols= on write/merge/delete builds the version's at-rest
-    Bloom index as part of the commit, so a subsequent keys= pruned
-    read needs zero read-side index work."""
+def _partitioned_batch(spark, lo, hi, parts):
+    from pyspark.sql import functions as F
+
+    return _tagged_batch(spark, lo, hi, parts).withColumn("g", F.col("id") % 2)
+
+
+def _lifecycle_ops(spark, table):
+    """Append, merge, MOR delete, COW update, overwrite_partitions,
+    optimize and restore on a table whose v1 is a
+    :func:`_partitioned_batch`; yields after each commit."""
     from pyspark.sql import functions as F
 
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         delete_version,
+        load_manifest,
         merge_version,
-        read_version_pruned,
+        optimize_table,
+        overwrite_partitions,
+        restore_version,
+        update_version,
     )
 
-    df = (
-        spark.range(800)
-        .withColumn("val", (F.col("id") * 3).cast("long"))
-        .withColumn("tag", F.pmod(F.col("id") * F.lit(2654435761), F.lit(100003)))
-        .repartitionByRange(8, "id")
-    )
-    write_version(spark, df, table, index_cols=["tag"])
-    t = (400 * 2654435761) % 100003
-    got, info = read_version_pruned(spark, table, keys={"tag": [t]})
-    assert info["files_read"] < info["files_total"]
-    assert sorted(r["id"] for r in got.collect()) == [400]
-
-    # merge commits v2 and refreshes the index for v2
+    write_version(spark, _partitioned_batch(spark, 400, 480, 2), table, mode="append")
+    yield "append"
     inc = spark.createDataFrame(
-        [(5000, 0, int(t))], "id long, val long, tag long"
+        [(5000, 0, 7, 0)], "id long, val long, tag long, g long"
     )
-    merge_version(spark, inc, table, keys=["id"], index_cols=["tag"])
-    got2, info2 = read_version_pruned(spark, table, keys={"tag": [t]})
-    ids2 = sorted(r["id"] for r in got2.collect())
-    assert ids2 == [400, 5000]
-    assert info2["files_read"] < info2["files_total"]
+    merge_version(spark, inc, table, keys=["id"])
+    yield "merge"
+    delete_version(spark, table, F.col("id") == 7, mode="mor")
+    yield "delete_mor"
+    update_version(spark, table, F.col("id") == 3, {"val": F.lit(-1)})
+    yield "update_cow"
+    overwrite_partitions(
+        spark, _partitioned_batch(spark, 0, 400, 4).filter("g = 1"), table
+    )
+    yield "overwrite_partitions"
+    size = sum(os.path.getsize(f) for f in load_manifest(table, None)["files"])
+    optimize_table(spark, table, cluster_by=["id"], target_file_bytes=size // 4)
+    yield "optimize"
+    restore_version(spark, table, 1)
+    yield "restore"
 
-    # delete commits v3 with its own index
-    delete_version(spark, table, F.col("id") == 400, index_cols=["tag"])
-    got3, info3 = read_version_pruned(spark, table, keys={"tag": [t]})
-    assert sorted(r["id"] for r in got3.collect()) == [5000]
-    assert info3["files_read"] < info3["files_total"]
+
+def test_declared_index_is_maintained_by_every_commit(spark, table, tmp_path):
+    """An index declared ONCE with write_bloom_index is table state:
+    every later commit keeps it usable at the declared geometry with no
+    per-call option, and key probes keep skipping files. A table that
+    never declared one gets no _index dir from the same operations."""
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
+        index_params,
+        read_version_pruned,
+        write_bloom_index,
+    )
+
+    write_version(
+        spark, _partitioned_batch(spark, 0, 400, 4), table, partition_by=["g"]
+    )
+    write_bloom_index(spark, table, "tag", m_bits=1 << 12, k=2)
+    t100 = (100 * 2654435761) % 100003
+    for op in _lifecycle_ops(spark, table):
+        p = index_params(table, "tag")
+        assert p is not None and (p["m_bits"], p["k"]) == (1 << 12, 2), op
+        got, info = read_version_pruned(spark, table, keys={"tag": [t100]})
+        assert [r["id"] for r in got.collect()] == [100], op
+        assert info["files_read"] < info["files_total"], op
+
+    plain = str(tmp_path / "plain")
+    write_version(
+        spark, _partitioned_batch(spark, 0, 400, 4), plain, partition_by=["g"]
+    )
+    for _op in _lifecycle_ops(spark, plain):
+        pass
+    assert not os.path.exists(os.path.join(plain, "_index"))
 
 
 def test_append_index_maintenance_is_incremental_and_equivalent(spark, table):
@@ -651,10 +686,9 @@ def test_append_index_maintenance_is_incremental_and_equivalent(spark, table):
             .repartitionByRange(4, "id")
         )
 
-    write_version(spark, batch(0, 400), table, index_cols=["tag"])
-    v2 = write_version(
-        spark, batch(400, 800), table, mode="append", index_cols=["tag"]
-    )
+    write_version(spark, batch(0, 400), table)
+    write_bloom_index(spark, table, "tag")
+    v2 = write_version(spark, batch(400, 800), table, mode="append")
     assert v2 == 2
     params = _usable_index_params(table, "tag", 2)
     assert params["chain"] == [1]  # prior carried by reference
@@ -686,35 +720,34 @@ def test_append_index_maintenance_is_incremental_and_equivalent(spark, table):
 
 
 def test_append_index_falls_back_to_full_rebuild_without_prior(spark, table):
-    """Appending with index_cols onto a version that never built an
-    index cannot union with anything — it must fall back to a full
-    rebuild covering carried AND new files."""
-    from pyspark.sql import functions as F
+    """A crash between a commit and its index upkeep leaves the head
+    without an index dir. The next commit has no link to chain onto:
+    it must rebuild in full, over carried AND new files, at the
+    geometry the table recorded — not the library defaults."""
+    import shutil
 
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
+        _bloom_index_dir,
+        index_params,
         read_version_pruned,
-        write_version,
+        write_bloom_index,
     )
 
-    def batch(lo, hi):
-        return (
-            spark.range(lo, hi)
-            .withColumn("val", (F.col("id") * 3).cast("long"))
-            .withColumn(
-                "tag", F.pmod(F.col("id") * F.lit(2654435761), F.lit(100003))
-            )
-            .repartitionByRange(4, "id")
-        )
-
-    write_version(spark, batch(0, 400), table)  # no index on v1
-    write_version(spark, batch(400, 800), table, mode="append", index_cols=["tag"])
-
-    # keys from BOTH the carried and the new half must prune and stay exact
-    for probe_id in (100, 600):
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag", m_bits=1 << 12, k=2)
+    write_version(spark, _tagged_batch(spark, 200, 400), table, mode="append")
+    assert index_params(table, "tag")["chain"] == [1]
+    shutil.rmtree(_bloom_index_dir(table, "tag", 2))  # the crash
+    assert index_params(table, "tag") is None
+    write_version(spark, _tagged_batch(spark, 400, 600), table, mode="append")
+    p3 = index_params(table, "tag", version=3)
+    assert (p3["m_bits"], p3["k"], p3["chain"]) == (1 << 12, 2, [])
+    # keys from every commit must prune and stay exact
+    for probe_id in (100, 300, 500):
         t = (probe_id * 2654435761) % 100003
         got, info = read_version_pruned(spark, table, keys={"tag": [t]})
         assert sorted(r["id"] for r in got.collect()) == [probe_id]
-        assert info["files_read"] < info["files_total"] == 8
+        assert info["files_read"] < info["files_total"] == 6
 
 
 def test_merge_delete_index_maintenance_is_incremental_and_equivalent(
@@ -748,12 +781,13 @@ def test_merge_delete_index_maintenance_is_incremental_and_equivalent(
         .withColumn("tag", F.pmod(F.col("id") * F.lit(2654435761), F.lit(100003)))
         .repartitionByRange(8, "id")
     )
-    write_version(spark, df, table, index_cols=["tag"])
+    write_version(spark, df, table)
+    write_bloom_index(spark, table, "tag")
 
     t400 = (400 * 2654435761) % 100003
     inc = spark.createDataFrame([(5000, 0, int(t400))], "id long, val long, tag long")
-    merge_version(spark, inc, table, keys=["id"], index_cols=["tag"])
-    delete_version(spark, table, F.col("id") == 400, index_cols=["tag"])
+    merge_version(spark, inc, table, keys=["id"])
+    delete_version(spark, table, F.col("id") == 400)
 
     # pruned read through the chained indexes BEFORE any rebuild
     got, info = read_version_pruned(spark, table, keys={"tag": [t400]})
@@ -784,16 +818,18 @@ def test_merge_delete_index_maintenance_is_incremental_and_equivalent(
         assert chained_live[v] == rebuilt, f"v{v} live-row mismatch"
 
 
-def test_index_chain_compacts_at_max_chain(spark, table):
-    """A chain that would exceed max_chain triggers a full rebuild
+def test_index_chain_compacts_at_max_chain(spark, table, monkeypatch):
+    """A chain that would exceed the chain limit triggers a full rebuild
     (chain resets to []) — the log-structured compaction that bounds
     probe-time read amplification and stale-row accumulation."""
     from pyspark.sql import functions as F
 
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks import versioned
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         _usable_index_params,
         maintain_bloom_index,
         read_version_pruned,
+        write_bloom_index,
         write_version,
     )
 
@@ -807,16 +843,17 @@ def test_index_chain_compacts_at_max_chain(spark, table):
             .repartitionByRange(2, "id")
         )
 
-    write_version(spark, batch(0, 200), table, index_cols=["tag"])
-    write_version(spark, batch(200, 400), table, mode="append", index_cols=["tag"])
-    write_version(spark, batch(400, 600), table, mode="append", index_cols=["tag"])
+    write_version(spark, batch(0, 200), table)
+    write_bloom_index(spark, table, "tag")
+    write_version(spark, batch(200, 400), table, mode="append")
+    write_version(spark, batch(400, 600), table, mode="append")
     assert _usable_index_params(table, "tag", 3)["chain"] == [1, 2]
 
-    # re-maintain v3 with a tight bound: the chain would be [1, 2] —
-    # 2 prior links > max_chain=1 → full rebuild, self-contained
+    # re-maintain v3 with a tight limit: the chain would be [1, 2] —
+    # 2 prior links > 1 → full rebuild, self-contained
+    monkeypatch.setattr(versioned, "_INDEX_MAX_CHAIN", 1)
     maintain_bloom_index(
-        spark, table, "tag", version=3, new_files=[], prior_version=2,
-        max_chain=1,
+        spark, table, "tag", version=3, new_files=[], prior_version=2
     )
     assert _usable_index_params(table, "tag", 3)["chain"] == []
     for probe_id in (100, 500):
@@ -840,6 +877,7 @@ def test_vacuum_preserves_chain_referenced_index_dirs(spark, table):
         _bloom_index_dir,
         read_version_pruned,
         vacuum,
+        write_bloom_index,
         write_version,
     )
 
@@ -853,9 +891,10 @@ def test_vacuum_preserves_chain_referenced_index_dirs(spark, table):
             .repartitionByRange(2, "id")
         )
 
-    write_version(spark, batch(0, 200), table, index_cols=["tag"])
-    write_version(spark, batch(200, 400), table, mode="append", index_cols=["tag"])
-    write_version(spark, batch(400, 600), table, mode="append", index_cols=["tag"])
+    write_version(spark, batch(0, 200), table)
+    write_bloom_index(spark, table, "tag")
+    write_version(spark, batch(200, 400), table, mode="append")
+    write_version(spark, batch(400, 600), table, mode="append")
 
     stats = vacuum(table, keep_last=2)  # drops v1 the version…
     assert stats["versions_dropped"] == 1
@@ -868,37 +907,6 @@ def test_vacuum_preserves_chain_referenced_index_dirs(spark, table):
         got, info = read_version_pruned(spark, table, keys={"tag": [t]})
         assert sorted(r["id"] for r in got.collect()) == [probe_id]
         assert info["files_read"] < info["files_total"] == 6
-
-
-def test_merge_into_empty_table_builds_requested_index(spark, table):
-    """merge_version on a table with NO versions is a pure write — but
-    index_cols must still ride that first commit (it used to be
-    silently dropped on this path)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        _bloom_index_dir,
-        merge_version,
-        read_version_pruned,
-    )
-
-    df = (
-        spark.range(200)
-        .withColumn("val", (F.col("id") * 3).cast("long"))
-        .withColumn("tag", F.pmod(F.col("id") * F.lit(2654435761), F.lit(100003)))
-        .repartitionByRange(4, "id")
-    )
-    merge_version(spark, df, table, keys=["id"], index_cols=["tag"])
-    idx = _bloom_index_dir(table, "tag", 1)
-    assert os.path.isdir(idx) and any(
-        f.endswith(".parquet") for f in os.listdir(idx)
-    )
-    t = (100 * 2654435761) % 100003
-    got, info = read_version_pruned(spark, table, keys={"tag": [t]})
-    assert sorted(r["id"] for r in got.collect()) == [100]
-    assert info["files_read"] < info["files_total"] == 4
 
 
 def test_bloom_probe_uses_recorded_index_geometry(spark, table):
@@ -941,10 +949,10 @@ def test_rebuild_of_chained_link_requires_matching_geometry(spark, table):
         write_bloom_index,
     )
 
-    write_version(spark, _tagged_batch(spark, 0, 200), table, index_cols=["tag"])
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag")
     write_version(
-        spark, _tagged_batch(spark, 200, 400), table,
-        mode="append", index_cols=["tag"],
+        spark, _tagged_batch(spark, 200, 400), table, mode="append"
     )  # v2's chain carries v1's dir by reference
 
     with pytest.raises(ValueError, match="false negatives"):
@@ -962,11 +970,12 @@ def test_rebuild_of_chained_link_requires_matching_geometry(spark, table):
         assert info["files_read"] < info["files_total"] == 4
 
 
-def test_index_compaction_keeps_recorded_geometry(spark, table):
-    """The compaction rebuild (chain > max_chain) must rebuild with the
+def test_index_compaction_keeps_recorded_geometry(spark, table, monkeypatch):
+    """The compaction rebuild (chain > the limit) must rebuild with the
     index's RECORDED (m_bits, k), not the defaults — silently resetting
-    a tuned index's geometry every max_chain commits would raise the
+    a tuned index's geometry at every compaction would raise the
     false-positive rate ~(tuned/default)x and quietly stop pruning."""
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks import versioned
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         _usable_index_params,
         maintain_bloom_index,
@@ -976,18 +985,15 @@ def test_index_compaction_keeps_recorded_geometry(spark, table):
 
     write_version(spark, _tagged_batch(spark, 0, 200), table)
     write_bloom_index(spark, table, "tag", m_bits=1 << 12, k=2)  # tuned v1
-    write_version(
-        spark, _tagged_batch(spark, 200, 400), table,
-        mode="append", index_cols=["tag"],
-    )
+    write_version(spark, _tagged_batch(spark, 200, 400), table, mode="append")
     p2 = _usable_index_params(table, "tag", 2)
     # the append increment inherited the tuned geometry and chained v1
     assert (p2["m_bits"], p2["k"], p2["chain"]) == (1 << 12, 2, [1])
 
-    # force compaction: the chain would be [1, 2] > max_chain=1
+    # force compaction: the chain would be [1] > a limit of 0
+    monkeypatch.setattr(versioned, "_INDEX_MAX_CHAIN", 0)
     maintain_bloom_index(
-        spark, table, "tag", version=2, new_files=[], prior_version=1,
-        max_chain=0,
+        spark, table, "tag", version=2, new_files=[], prior_version=1
     )
     p2c = _usable_index_params(table, "tag", 2)
     assert (p2c["m_bits"], p2c["k"], p2c["chain"]) == (1 << 12, 2, [])
@@ -1010,19 +1016,18 @@ def test_vacuum_sweeps_orphaned_chain_link_dirs(spark, table):
         write_bloom_index,
     )
 
-    write_version(spark, _tagged_batch(spark, 0, 200), table, index_cols=["tag"])
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag")
     for lo in (200, 400):
         write_version(
-            spark, _tagged_batch(spark, lo, lo + 200), table,
-            mode="append", index_cols=["tag"],
+            spark, _tagged_batch(spark, lo, lo + 200), table, mode="append"
         )
     vacuum(table, keep_last=2)  # drops v1's manifest; its dir is a live link
     assert os.path.isdir(_bloom_index_dir(table, "tag", 1))
 
     write_bloom_index(spark, table, "tag")  # compact latest: v3 chain -> []
     write_version(
-        spark, _tagged_batch(spark, 600, 800), table,
-        mode="append", index_cols=["tag"],
+        spark, _tagged_batch(spark, 600, 800), table, mode="append"
     )  # v4 chains [3]
     stats = vacuum(table, keep_last=2)  # retains v3+v4, drops v2
     # BOTH v2's dir and v1's previously-orphaned link dir are reclaimed
@@ -1122,85 +1127,63 @@ def test_footer_stats_decimal_outward_and_text_stats_unusable(spark, tmp_path):
 
 
 def test_overwrite_inherits_tuned_index_geometry(spark, table):
-    """A mode='overwrite' commit (and any other full rebuild) INHERITS
-    the prior version's recorded (m_bits, k) — the one commit mode that
-    used to silently reset a tuned index to defaults. Explicit
-    index_geometry still overrides."""
+    """A mode='overwrite' commit (and any other full rebuild) keeps the
+    recorded (m_bits, k) — the one commit mode that used to silently
+    reset a tuned index to defaults. Re-declaring on the head with
+    write_bloom_index re-tunes, and later rebuilds keep the new one."""
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         index_params,
+        write_bloom_index,
     )
 
-    write_version(
-        spark, _tagged_batch(spark, 0, 200), table,
-        index_cols=["tag"], index_geometry={"tag": (1 << 12, 2)},
-    )
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag", m_bits=1 << 12, k=2)
     p1 = index_params(table, "tag", version=1)
     assert (p1["m_bits"], p1["k"], p1["chain"]) == (1 << 12, 2, [])
 
-    # overwrite with no geometry: tuned values survive, not defaults
+    # overwrite: tuned values survive, not defaults
     write_version(
-        spark, _tagged_batch(spark, 200, 400), table,
-        mode="overwrite", index_cols=["tag"],
+        spark, _tagged_batch(spark, 200, 400), table, mode="overwrite"
     )
     p2 = index_params(table, "tag", version=2)
     assert (p2["m_bits"], p2["k"], p2["chain"]) == (1 << 12, 2, [])
 
-    # explicit override still wins (the deliberate re-tune path)
+    # the deliberate re-tune, then an overwrite that inherits it
+    write_bloom_index(spark, table, "tag", m_bits=1 << 14, k=4)
     write_version(
-        spark, _tagged_batch(spark, 400, 600), table,
-        mode="overwrite", index_cols=["tag"],
-        index_geometry={"tag": (1 << 14, 4)},
+        spark, _tagged_batch(spark, 400, 600), table, mode="overwrite"
     )
     p3 = index_params(table, "tag", version=3)
     assert (p3["m_bits"], p3["k"], p3["chain"]) == (1 << 14, 4, [])
 
 
-def test_explicit_geometry_on_append_forces_retune_rebuild(spark, table):
-    """An append that passes a geometry DIFFERENT from the prior
-    recorded one cannot chain (mixed-geometry chains have Bloom false
-    negatives) — it must full-rebuild at the new geometry with a reset
-    chain, and the rebuilt index must cover BOTH commits' files."""
+def test_retune_between_appends_resets_chain(spark, table):
+    """Re-declaring a chained index at a new geometry rebuilds the head
+    in full (mixed-geometry chains have Bloom false negatives): the
+    chain resets, the rebuilt index covers every commit's files, and
+    the next append chains onto it at the new geometry."""
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         index_params,
         read_version_pruned,
+        write_bloom_index,
     )
 
-    write_version(
-        spark, _tagged_batch(spark, 0, 200), table,
-        index_cols=["tag"], index_geometry={"tag": (1 << 12, 2)},
-    )
-    write_version(
-        spark, _tagged_batch(spark, 200, 400), table,
-        mode="append", index_cols=["tag"],
-        index_geometry={"tag": (1 << 14, 4)},
-    )
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag", m_bits=1 << 12, k=2)
+    write_version(spark, _tagged_batch(spark, 200, 400), table, mode="append")
+    assert index_params(table, "tag")["chain"] == [1]
+    write_bloom_index(spark, table, "tag", m_bits=1 << 14, k=4)
     p2 = index_params(table, "tag", version=2)
     assert (p2["m_bits"], p2["k"], p2["chain"]) == (1 << 14, 4, [])
-    # the fresh full index covers v1's carried files too: probes on
-    # keys from both commits find their rows and still prune
-    for probe_id in (100, 300):
+    write_version(spark, _tagged_batch(spark, 400, 600), table, mode="append")
+    p3 = index_params(table, "tag", version=3)
+    assert (p3["m_bits"], p3["k"], p3["chain"]) == (1 << 14, 4, [2])
+    # keys from every commit find their rows and still prune
+    for probe_id in (100, 300, 500):
         t = (probe_id * 2654435761) % 100003
         got, info = read_version_pruned(spark, table, keys={"tag": [t]})
         assert sorted(r["id"] for r in got.collect()) == [probe_id]
-        assert info["files_read"] < info["files_total"] == 4
-
-
-def test_append_fallback_rebuild_honours_explicit_geometry(spark, table):
-    """When the prior version has NO usable index, the append-path
-    fallback full rebuild must use the caller's index_geometry, not
-    library defaults."""
-    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
-        index_params,
-    )
-
-    write_version(spark, _tagged_batch(spark, 0, 200), table)  # no index
-    write_version(
-        spark, _tagged_batch(spark, 200, 400), table,
-        mode="append", index_cols=["tag"],
-        index_geometry={"tag": (1 << 12, 2)},
-    )
-    p2 = index_params(table, "tag", version=2)
-    assert (p2["m_bits"], p2["k"], p2["chain"]) == (1 << 12, 2, [])
+        assert info["files_read"] < info["files_total"] == 6
 
 
 def test_pruned_read_degrades_unpruned_when_index_vanishes_mid_probe(
@@ -1214,13 +1197,12 @@ def test_pruned_read_degrades_unpruned_when_index_vanishes_mid_probe(
     from bigbookapi_etl_with_airflow_and_snowflake_spark.operators import lake
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         read_version_pruned,
+        write_bloom_index,
     )
 
-    write_version(spark, _tagged_batch(spark, 0, 200), table, index_cols=["tag"])
-    write_version(
-        spark, _tagged_batch(spark, 200, 400), table,
-        mode="append", index_cols=["tag"],
-    )
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag")
+    write_version(spark, _tagged_batch(spark, 200, 400), table, mode="append")
 
     def gone(*a, **kw):
         raise Exception("[PATH_NOT_FOUND] Path does not exist: _index/...")
@@ -1244,88 +1226,83 @@ def test_index_params_accessor_reports_chain_state(spark, table):
     version without a usable index, loud on an empty table."""
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         index_params,
+        write_bloom_index,
     )
 
     with pytest.raises(ValueError, match="no committed versions"):
         index_params(table, "tag")
     write_version(spark, _tagged_batch(spark, 0, 200), table)  # no index
     assert index_params(table, "tag") is None
-    write_version(
-        spark, _tagged_batch(spark, 200, 400), table,
-        mode="append", index_cols=["tag"],
-    )
-    p = index_params(table, "tag")  # latest = v2 (fallback full build)
+    write_version(spark, _tagged_batch(spark, 200, 400), table, mode="append")
+    write_bloom_index(spark, table, "tag")  # declared at v2: a full build
+    p = index_params(table, "tag")
     assert p is not None and p["chain"] == []
-    write_version(
-        spark, _tagged_batch(spark, 400, 600), table,
-        mode="append", index_cols=["tag"],
-    )
+    write_version(spark, _tagged_batch(spark, 400, 600), table, mode="append")
     assert index_params(table, "tag")["chain"] == [2]
     assert index_params(table, "tag", version=2)["chain"] == []
+    assert index_params(table, "tag", version=1) is None
 
 
 def test_geometry_inheritance_survives_unindexed_intermediate_commit(
     spark, table
 ):
-    """Walk-back inheritance: an intermediate commit WITHOUT index_cols
-    must not break the geometry chain-of-custody — the next indexed
-    rebuild inherits the most recent recorded (m_bits, k), not library
-    defaults (review finding: one-version-back lookup silently reset
-    tuning across any unindexed commit)."""
+    """The one main-line commit that builds no index is a publish (it
+    takes no session): its version has no dir, and the walk-back cannot
+    cross it (its file set differs). The next main commit must rebuild
+    at the geometry recorded BEFORE the publish, not library defaults,
+    and later appends chain onto that rebuild."""
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
+        create_branch,
         index_params,
+        publish_branch,
+        read_version_pruned,
+        write_bloom_index,
     )
 
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag", m_bits=1 << 12, k=2)
+    create_branch(table, "dev")
     write_version(
-        spark, _tagged_batch(spark, 0, 200), table,
-        index_cols=["tag"], index_geometry={"tag": (1 << 12, 2)},
+        spark, _tagged_batch(spark, 200, 400), table, mode="append", branch="dev"
     )
-    write_version(spark, _tagged_batch(spark, 200, 400), table)  # no index
+    assert publish_branch(table, "dev") == 2
     assert index_params(table, "tag", version=2) is None
-    write_version(
-        spark, _tagged_batch(spark, 400, 600), table,
-        mode="overwrite", index_cols=["tag"],
-    )
+    write_version(spark, _tagged_batch(spark, 400, 600), table, mode="append")
     p3 = index_params(table, "tag", version=3)
     assert (p3["m_bits"], p3["k"], p3["chain"]) == (1 << 12, 2, [])
-    # the append path's no-usable-prior fallback inherits too
-    write_version(
-        spark, _tagged_batch(spark, 600, 800), table,
-        mode="append", index_cols=["tag"],
-    )
-    write_version(spark, _tagged_batch(spark, 800, 900), table)  # unindexed
-    write_version(
-        spark, _tagged_batch(spark, 900, 1000), table,
-        mode="append", index_cols=["tag"],
-    )
-    p6 = index_params(table, "tag", version=6)
-    assert (p6["m_bits"], p6["k"], p6["chain"]) == (1 << 12, 2, [])
+    write_version(spark, _tagged_batch(spark, 600, 800), table, mode="append")
+    p4 = index_params(table, "tag", version=4)
+    assert (p4["m_bits"], p4["k"], p4["chain"]) == (1 << 12, 2, [3])
+    for probe_id in (100, 300, 700):
+        t = (probe_id * 2654435761) % 100003
+        got, info = read_version_pruned(spark, table, keys={"tag": [t]})
+        assert sorted(r["id"] for r in got.collect()) == [probe_id]
+        assert info["files_read"] < info["files_total"] == 8
 
 
-def test_empty_snapshot_index_keeps_recorded_geometry(spark, table):
-    """A delete-all (empty snapshot) commit with index_cols still
+def test_empty_snapshot_index_keeps_recorded_geometry(spark, table, monkeypatch):
+    """A delete-all (empty snapshot) commit on an indexed table still
     records its geometry with one empty part file: the dir stays
     usable, audits keep answering, and the next commit inherits the
     tuning instead of silently rebuilding at defaults (review finding:
     the empty-manifest branch returned a bare dir with no params)."""
     from pyspark.sql import functions as F
 
+    from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks import versioned
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         delete_version,
         index_params,
         read_version,
         read_version_pruned,
+        write_bloom_index,
     )
 
-    write_version(
-        spark, _tagged_batch(spark, 0, 200), table,
-        index_cols=["tag"], index_geometry={"tag": (1 << 12, 2)},
-    )
-    # chain would exceed max_chain=0 → the delete compacts via a full
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag", m_bits=1 << 12, k=2)
+    # chain would exceed a limit of 0 → the delete compacts via a full
     # rebuild over an EMPTY manifest (every row deleted)
-    delete_version(
-        spark, table, F.lit(True), index_cols=["tag"], index_max_chain=0,
-    )
+    monkeypatch.setattr(versioned, "_INDEX_MAX_CHAIN", 0)
+    delete_version(spark, table, F.lit(True))
     assert read_version(spark, table).count() == 0
     p2 = index_params(table, "tag", version=2)
     assert (p2["m_bits"], p2["k"], p2["chain"]) == (1 << 12, 2, [])
@@ -1334,10 +1311,7 @@ def test_empty_snapshot_index_keeps_recorded_geometry(spark, table):
     got, info = read_version_pruned(spark, table, keys={"tag": [t]})
     assert got.count() == 0 and info["files_read"] == 0
     # the table refills; tuning survived the empty snapshot
-    write_version(
-        spark, _tagged_batch(spark, 0, 100), table,
-        mode="append", index_cols=["tag"],
-    )
+    write_version(spark, _tagged_batch(spark, 0, 100), table, mode="append")
     p3 = index_params(table, "tag", version=3)
     assert (p3["m_bits"], p3["k"]) == (1 << 12, 2)
 
@@ -1353,11 +1327,11 @@ def test_tags_pin_snapshots_and_survive_vacuum(spark, table):
         read_version_pruned,
         tag_version,
         tags,
+        write_bloom_index,
     )
 
-    write_version(
-        spark, _tagged_batch(spark, 0, 200), table, index_cols=["tag"]
-    )
+    write_version(spark, _tagged_batch(spark, 0, 200), table)
+    write_bloom_index(spark, table, "tag")
     assert tag_version(table, "baseline") == 1
     write_version(spark, _tagged_batch(spark, 200, 400), table)  # v2 overwrite
     write_version(spark, _tagged_batch(spark, 400, 600), table)  # v3 overwrite

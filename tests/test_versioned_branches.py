@@ -164,8 +164,6 @@ def test_loud_errors(spark, table):
         create_branch(table, "dev")
     with pytest.raises(ValueError, match="not found"):
         write_version(spark, _df(spark), table, branch="nope")
-    with pytest.raises(ValueError, match="main-lineage"):
-        write_version(spark, _df(spark), table, branch="dev", index_cols=["id"])
     with pytest.raises(ValueError, match="not found"):
         publish_branch(table, "nope")
     with pytest.raises(ValueError, match="not found"):

@@ -6,7 +6,9 @@ stats, a deletion vector and a Bloom index. Each commit operation runs
 on its own copy of that table, and its new manifest is compared with
 the manifest it descends from: each property the operation does not
 change must come through unchanged, stats and partition entries of
-surviving files included (``sinks.versioned._child_body``).
+surviving files included (``sinks.versioned._child_body``). The index
+is declared once, and no operation names it: every main-line commit
+must leave a usable index at the head.
 """
 
 from __future__ import annotations
@@ -45,40 +47,36 @@ def template(spark, tmp_path_factory):
     table = str(tmp_path_factory.mktemp("contract") / "tbl")
     V.write_version(
         spark, _rows(spark, 0, 60).repartition(2), table,
-        partition_by=["g"], stats_cols=["id"], index_cols=["id"],
+        partition_by=["g"], stats_cols=["id"],
         check_constraints={"id_nonneg": "id >= 0"},
         generated_cols={"half": "id % 2"},
     )
+    V.write_bloom_index(spark, table, "id")
     V.enable_column_mapping(table)
-    V.delete_version(spark, table, "id = 5", mode="mor", index_cols=["id"])
+    V.delete_version(spark, table, "id = 5", mode="mor")
     return table
 
 
 def _append(spark, t, _tmp):
-    V.write_version(
-        spark, _rows(spark, 60, 70), t, mode="append", index_cols=["id"]
-    )
+    V.write_version(spark, _rows(spark, 60, 70), t, mode="append")
     return t, ()
 
 
 def _replace(spark, t, _tmp):
-    V.overwrite_partitions(
-        spark, _rows(spark, 300, 306).filter("g = 0"), t,
-        index_cols=["id"],
-    )
+    V.overwrite_partitions(spark, _rows(spark, 300, 306).filter("g = 0"), t)
     return t, ()
 
 
 def _merge(spark, t, _tmp):
     inc = _rows(spark, 55, 65, half=True)
-    V.merge_version(spark, inc, t, keys=["id"], index_cols=["id"])
+    V.merge_version(spark, inc, t, keys=["id"])
     # a merge records the merged frame's schema (nullable columns)
     return t, ("schema",)
 
 
 def _delete(mode):
     def op(spark, t, _tmp):
-        V.delete_version(spark, t, "id = 7", mode=mode, index_cols=["id"])
+        V.delete_version(spark, t, "id = 7", mode=mode)
         return t, ()
 
     return op
@@ -86,9 +84,7 @@ def _delete(mode):
 
 def _update(mode):
     def op(spark, t, _tmp):
-        V.update_version(
-            spark, t, "id = 8", {"v": "'x'"}, mode=mode, index_cols=["id"]
-        )
+        V.update_version(spark, t, "id = 8", {"v": "'x'"}, mode=mode)
         return t, ()
 
     return op
@@ -97,7 +93,7 @@ def _update(mode):
 def _optimize(spark, t, _tmp):
     V.optimize_table(
         spark, t, cluster_by=["id"], incremental=True,
-        width_frac_threshold=0.0, index_cols=["id"],
+        width_frac_threshold=0.0,
     )
     return t, ()
 
@@ -127,7 +123,7 @@ def _restore(spark, t, _tmp):
     # first and restore the template head
     target = V.load_manifest(t, None)["version"]
     V.write_version(spark, _rows(spark, 60, 70), t, mode="append")
-    V.restore_version(spark, t, target, index_cols=["id"])
+    V.restore_version(spark, t, target)
     return t, ()
 
 
@@ -168,7 +164,8 @@ OPS = {
     "publish": _publish,
 }
 # Bloom indexes are main-lineage and do not carry into a clone or a
-# branch; a publish commits the branch's file set without one
+# branch; a publish commits the branch's file set without one (the
+# next main commit rebuilds it)
 NO_INDEX = {"clone", "fork", "publish"}
 
 

@@ -27,6 +27,7 @@ from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
     tag_version,
     vacuum,
     versions,
+    write_bloom_index,
     write_version,
 )
 
@@ -191,9 +192,7 @@ def test_mor_commit_conflict_discards_staged_sidecar(spark, table):
 
         base = V.load_manifest(table, 1)
         write_version(spark, _df(spark, 10), table)  # v2 wins the race
-        V._delete_version_mor(
-            spark, table, F.expr("id < 5"), base, (), None, 8
-        )
+        V._delete_version_mor(spark, table, F.expr("id < 5"), base)
     # the staged sidecar was discarded — nothing references it
     dv_root = os.path.join(table, "_dv")
     assert not os.path.isdir(dv_root) or not os.listdir(dv_root)
@@ -201,13 +200,9 @@ def test_mor_commit_conflict_discards_staged_sidecar(spark, table):
 
 
 def test_pruned_read_applies_dvs(spark, table):
-    write_version(
-        spark,
-        _df(spark).repartitionByRange(4, "id"),
-        table,
-        index_cols=["id"],
-    )
-    delete_version(spark, table, "id = 17", mode="mor", index_cols=["id"])
+    write_version(spark, _df(spark).repartitionByRange(4, "id"), table)
+    write_bloom_index(spark, table, "id")
+    delete_version(spark, table, "id = 17", mode="mor")
     df, info = read_version_pruned(spark, table, keys={"id": [17, 18]})
     assert sorted(r["id"] for r in df.collect()) == [18]
     assert info["files_read"] < info["files_total"]

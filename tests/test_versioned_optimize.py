@@ -14,6 +14,7 @@ from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
     optimize_table,
     read_version,
     read_version_pruned,
+    write_bloom_index,
     write_version,
 )
 
@@ -49,9 +50,9 @@ def test_optimize_packs_folds_and_preserves_rows(spark, table):
 def test_optimize_recluster_restores_skipping(spark, table):
     # hash-scattered layout: every file covers the whole id range
     write_version(spark, _df(spark).repartition(8, "g"), table)
+    write_bloom_index(spark, table, "id")
     r = optimize_table(
-        spark, table, cluster_by=["id"], target_file_bytes=8 * 1024,
-        index_cols=["id"],
+        spark, table, cluster_by=["id"], target_file_bytes=8 * 1024
     )
     assert r["files_after"] > 1  # small target -> multiple range files
     df, info = read_version_pruned(spark, table, ranges={"id": (10, 20)})

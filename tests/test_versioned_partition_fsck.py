@@ -937,22 +937,20 @@ def test_generated_column_fsck_backstop_and_clone_carry(spark, sf_dir, tmp_path)
 def test_replace_where_maintains_bloom_index(spark, sf_dir, table):
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         overwrite_partitions,
+        write_bloom_index,
     )
 
     e = _events(spark, sf_dir)
     write_version(
-        spark,
-        e.repartition("event_type"),
-        table,
-        partition_by=["event_type"],
-        index_cols=["event_id"],
+        spark, e.repartition("event_type"), table, partition_by=["event_type"]
     )
+    write_bloom_index(spark, table, "event_id")
     backfill = (
         e.filter(F.col("event_type") == "click")
         .withColumn("value", F.lit(0.0))
         .repartition("event_type")
     )
-    overwrite_partitions(spark, backfill, table, index_cols=["event_id"])
+    overwrite_partitions(spark, backfill, table)
     # a key probe on the new head still prunes via the chained index
     k = e.filter(F.col("event_type") == "click").agg(
         F.min("event_id")

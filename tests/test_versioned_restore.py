@@ -26,6 +26,7 @@ from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
     read_version_pruned,
     restore_version,
     vacuum,
+    write_bloom_index,
     write_version,
 )
 
@@ -137,12 +138,10 @@ def test_cdf_across_restore_is_the_undo_set_and_scoped(spark, table):
 
 
 def test_restore_chains_index_from_target(spark, table):
-    write_version(
-        spark, _df(spark, 5000).repartitionByRange(4, "id"), table,
-        index_cols=["id"],
-    )
-    delete_version(spark, table, "id % 100 = 0", mode="mor", index_cols=["id"])
-    r = restore_version(spark, table, 1, index_cols=["id"])
+    write_version(spark, _df(spark, 5000).repartitionByRange(4, "id"), table)
+    write_bloom_index(spark, table, "id")
+    delete_version(spark, table, "id % 100 = 0")  # COW: the file set moves
+    r = restore_version(spark, table, 1)
     assert r["index"] == {"id": "chained"}
     idx = os.path.join(table, "_index", "bloom_id", f"v{r['version']:08d}")
     with open(os.path.join(idx, "_params.json")) as fh:
@@ -155,11 +154,9 @@ def test_restore_chains_index_from_target(spark, table):
 
 def test_restore_rebuilds_index_when_target_has_none(spark, table):
     write_version(spark, _df(spark, 2000).repartitionByRange(4, "id"), table)
-    write_version(
-        spark, _df(spark, 2000).repartitionByRange(4, "id"), table,
-        index_cols=["id"],
-    )
-    r = restore_version(spark, table, 1, index_cols=["id"])
+    write_version(spark, _df(spark, 2000).repartitionByRange(4, "id"), table)
+    write_bloom_index(spark, table, "id")  # declared at v2: v1 has none
+    r = restore_version(spark, table, 1)
     assert r["index"] == {"id": "rebuilt"}
     df, info = read_version_pruned(spark, table, keys={"id": [7]})
     assert [row["id"] for row in df.collect()] == [7]
@@ -190,5 +187,3 @@ def test_restore_on_branch(spark, table):
     assert r["version"] == 3
     assert _ids(spark, table, branch="wip") == list(range(100))
     assert _ids(spark, table) == list(range(100))  # main untouched at v1
-    with pytest.raises(ValueError, match="main-lineage"):
-        restore_version(spark, table, 1, branch="wip", index_cols=["id"])

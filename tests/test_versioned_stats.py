@@ -275,17 +275,18 @@ def test_nested_leaf_stats_drop_scrubs(spark, table):
 
 
 # ---------------------------------------------------------------------------
-# round 14: nested-leaf Bloom indexes (dotted index_cols)
+# round 14: nested-leaf Bloom indexes (dotted key columns)
 # ---------------------------------------------------------------------------
 
 
 def test_nested_leaf_bloom_index_prunes_and_survives_rename(spark, table):
-    """index_cols accepts a dotted struct-leaf path: the at-rest Bloom
+    """A Bloom index declares on a dotted struct-leaf path: the at-rest Bloom
     chain builds over the leaf's frozen physical path, equality probes
     under the dotted name prune files, and both the leaf rename and the
     chained append keep working."""
     from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
         rename_column,
+        write_bloom_index,
     )
 
     df = spark.range(2000).select(
@@ -295,7 +296,8 @@ def test_nested_leaf_bloom_index_prunes_and_survives_rename(spark, table):
             F.lit("x").alias("tag"),
         ).alias("meta"),
     )
-    write_version(spark, df.repartition(6), table, index_cols=["meta.sku"])
+    write_version(spark, df.repartition(6), table)
+    write_bloom_index(spark, table, "meta.sku")
     out, info = read_version_pruned(spark, table, keys={"meta.sku": [7]})
     assert info["files_read"] < info["files_total"]
     assert out.count() == 1
@@ -310,10 +312,7 @@ def test_nested_leaf_bloom_index_prunes_and_survives_rename(spark, table):
             F.lit("y").alias("tag"),
         ).alias("meta"),
     )
-    write_version(
-        spark, inc.repartition(2), table, mode="append",
-        index_cols=["meta.item"],
-    )
+    write_version(spark, inc.repartition(2), table, mode="append")
     out3, info3 = read_version_pruned(spark, table, keys={"meta.item": [3]})
     assert info3["files_read"] < info3["files_total"]
     assert out3.count() == 2  # 3*7^-1 mod 1999 appears once per range
@@ -339,8 +338,6 @@ def test_repeated_leaf_paths_refuse_loud_early(spark, table):
     )
     with pytest.raises(ValueError, match="crosses a repeated level"):
         write_version(spark, df, table, stats_cols=["authors.aid"])
-    with pytest.raises(ValueError, match="crosses a repeated level"):
-        write_version(spark, df, table, index_cols=["authors.aid"])
     with pytest.raises(ValueError, match="non-atomic node"):
         write_version(spark, df, table, stats_cols=["meta.tags"])
     # nothing staged by the refusals
@@ -348,16 +345,10 @@ def test_repeated_leaf_paths_refuse_loud_early(spark, table):
 
     assert not os.path.exists(table)
     write_version(spark, df, table, stats_cols=["meta.sku"])
-    # direct index build and the DML entry points refuse EARLY too
-    # (an index raise after commit would strand the chain)
+    # declaring an index refuses too, before it builds anything
     with pytest.raises(ValueError, match="crosses a repeated level"):
         write_bloom_index(spark, table, "authors.aid")
-    v_before = load_manifest(table, None)["version"]
-    with pytest.raises(ValueError, match="crosses a repeated level"):
-        delete_version(
-            spark, table, F.col("id") < 5, index_cols=["authors.aid"]
-        )
-    assert load_manifest(table, None)["version"] == v_before
+    assert not os.path.exists(os.path.join(table, "_index"))
     # the valid dotted leaf records and probes fine alongside
     _, info = read_version_pruned(
         spark, table, ranges={"meta.sku": (0.0, 1.0)}

@@ -21,6 +21,7 @@ from bigbookapi_etl_with_airflow_and_snowflake_spark.sinks.versioned import (
     read_version_pruned,
     update_version,
     version_as_of,
+    write_bloom_index,
     write_version,
 )
 
@@ -140,15 +141,11 @@ def test_update_preserves_column_types(spark, table):
 
 
 def test_update_maintains_index_for_probes(spark, table):
-    write_version(
-        spark, _df(spark, 5000).repartitionByRange(4, "id"), table,
-        index_cols=["v"],
-    )
+    write_version(spark, _df(spark, 5000).repartitionByRange(4, "id"), table)
+    write_bloom_index(spark, table, "v")
     # move one row's v to a value that never existed: the rewritten
     # file's fresh index rows must make it probe-able
-    update_version(
-        spark, table, "id = 4321", {"v": F.lit(999_999)}, index_cols=["v"]
-    )
+    update_version(spark, table, "id = 4321", {"v": F.lit(999_999)})
     df, info = read_version_pruned(spark, table, keys={"v": [999_999]})
     assert [r["id"] for r in df.collect()] == [4321]
     assert info["files_read"] < info["files_total"]

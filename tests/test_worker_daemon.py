@@ -57,6 +57,32 @@ def worker_cpu_s():
         todo.extend(kids.get(p, ()))
     return ticks / os.sysconf("SC_CLK_TCK")
 
+def daemons():
+    # the worker daemons below this driver: processes running the daemon
+    # module whose parent does not (its forked workers share its cmdline)
+    cmd, parent = {{}}, {{}}
+    for e in os.listdir("/proc"):
+        if not e.isdigit():
+            continue
+        try:
+            with open(f"/proc/{{e}}/stat") as fh:
+                parent[int(e)] = int(fh.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{{e}}/cmdline") as fh:
+                cmd[int(e)] = fh.read().split("\0")
+        except OSError:
+            continue
+    def runs_daemon(p):
+        return "spark_graft_daemon" in cmd.get(p, [])[1:3]
+    kids = {{}}
+    for p, pp in parent.items():
+        kids.setdefault(pp, []).append(p)
+    found, todo = 0, list(kids.get(os.getpid(), ()))
+    while todo:
+        p = todo.pop()
+        found += runs_daemon(p) and not runs_daemon(parent[p])
+        todo.extend(kids.get(p, ()))
+    return found
+
 def probe():
     import os, sys, zipimport
     zips = [a for a in zipimport._zip_directory_cache if a.endswith("pyspark.zip")]
@@ -88,6 +114,7 @@ def mark(_):
 for _ in range(3):
     sc.parallelize(range(4), 4).foreachPartition(mark)
 out["foreach"] = [tuple(int(x) for x in n.split("-")) for n in os.listdir(marks)]
+out["daemons"] = daemons()
 noop = sc.parallelize(range(4), 4)
 noop.foreachPartition(lambda _: None)
 c0 = worker_cpu_s()
@@ -108,7 +135,10 @@ def test_daemon_workers_keep_one_pyspark_zip_directory(tmp_path):
     outside the repository and ``PYTHONPATH`` is stripped, as in
     ``test_commit_footers.py::test_footer_kernel_ships_by_value``), and a
     warm no-op ``foreachPartition`` of 4 tasks costs well under the
-    ~0.85-1 worker CPU-s measured without the daemon."""
+    ~0.85-1 worker CPU-s measured without the daemon. The RDD and the
+    SQL (``mapInPandas``) paths share ONE daemon: Spark keys a daemon by
+    the workers' environment, and ``get_spark`` gives both paths the
+    ``SPARK_SIMPLIFIED_TRACEBACK`` the SQL path sets (two without it)."""
     marks = tmp_path / "marks"
     marks.mkdir()
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -129,6 +159,7 @@ def test_daemon_workers_keep_one_pyspark_zip_directory(tmp_path):
             ids.setdefault(pid, set()).add(cache)
         assert all(len(v) == 1 for v in ids.values()), (path, ids)
     assert out["noop_worker_cpu_s"] <= 0.4, out["noop_worker_cpu_s"]
+    assert out["daemons"] == 1, out["daemons"]
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
